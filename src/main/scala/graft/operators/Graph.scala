@@ -914,7 +914,8 @@ object Graph {
     // Llm.componentLabels — star contraction + the size-gated local
     // union-find finisher (distributed min-label fallback above the
     // budget) — which computes the same fixpoint in ~2 jobs instead of
-    // K scheduling rounds (the r8 ClusterPhases lesson: O(diameter)
+    // K scheduling rounds (the round-8 lesson, BASELINE.md's
+    // llm_dedup_cluster investigation: O(diameter)
     // rounds over node-sized tables are pure job overhead; 49.6 s -> see
     // BASELINE.md round 9). The two sides agree IFF K rounds converge —
     // GraphSpec pins convergence to union-find on this corpus.

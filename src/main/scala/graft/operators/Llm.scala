@@ -304,8 +304,9 @@ object Llm {
       // machine, then solve it exactly). Union-find with min-id roots
       // over the collected remainder — O(nRem α(nRem)) driver work, a
       // few ms — replaces O(diameter) distributed rounds that were pure
-      // job-scheduling overhead at this size (ClusterPhases r8: 4
-      // rounds x ~2 jobs over <1k rows = ~2-4 s of the key's ~6-9 s).
+      // job-scheduling overhead at this size (BASELINE.md, round-8
+      // llm_dedup_cluster investigation: 4 rounds x ~2 jobs over <1k
+      // rows = ~2-4 s of the key's ~6-9 s).
       // The size gate keeps the 100 TB story honest: a remainder bigger
       // than the budget (~tens of MB collected) falls through to the
       // distributed propagation loop unchanged.
@@ -345,7 +346,8 @@ object Llm {
           .select(col("d1").as("doc_id"), col("nmin"))
         // convergence rides the checkpointed row as a `changed` flag, so
         // the probe is one scan of the label table — not a second
-        // labels-vs-next join per round (ClusterPhases r8: the probe join
+        // labels-vs-next join per round (round-8 measurement, fix recorded
+        // in BASELINE.md's llm_dedup_cluster investigation: the probe join
         // was ~0.15 s of every ~0.5 s round)
         val next = labels.join(nbrMin, Seq("doc_id"), "left")
           .select(col("doc_id"),

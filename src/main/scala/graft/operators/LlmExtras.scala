@@ -268,239 +268,493 @@ object LlmExtras {
     (a.localCheckpoint(), b.localCheckpoint())
   }
 
-  /** Full-corpus NSW adjacency (llm_ann_nsw's graph, built exactly as the
-    * key's former in-plan build: sign-LSH buckets ∪ Hamming-1 pool →
-    * top-[[NswM]] exact edges → 2 hash shortcuts, symmetrized). */
-  private[graft] def nswAdj(s: SparkSession, d: String): DataFrame =
-    materializeIndex {
-      graft.functions.VectorExprs.register(s)
-      import graft.functions.VectorExprs.{sdotl, sl2}
-      val emb = T.embeddings(s, d)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("e"),
-          col("embedding"))
-      val signArr = nswSignArrays
-      val bucket = (0 until NswPlanes).map(p =>
-        when(sdotl(col("embedding"), signArr(p)) > 0, lit(1L << p))
-          .otherwise(0L)).reduce(_ + _)
-      val sigs = emb.select(col("vec_id"), bucket.as("bucket"))
-        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-      // Hamming-1 candidate pool via a MAP-SIDE flip explode (round 16
-      // optimization, guide §2.4): bucket^f over the 1+NswPlanes literal
-      // flips is exploded per row — per row the flips are distinct, and
-      // the old (distinct buckets × flips → distinct → join) dictionary
-      // produced exactly one (bucket, nb) pair per flip too, so the pool
-      // multiset is IDENTICAL while two distinct exchanges, a crossJoin
-      // and a broadcast join drop out of the build.
-      val flipArr = array((0L +: (0 until NswPlanes).map(p => 1L << p))
-        .map(f => col("bucket").bitwiseXOR(lit(f))): _*)
-      val pool = sigs.select(col("vec_id").as("s"), explode(flipArr).as("nb"))
-        .join(sigs.select(col("vec_id").as("t"), col("bucket").as("nb")), "nb")
-        .where(col("t") =!= col("s"))
-        .select(col("s"), col("t"))
-      val pd = pool
-        .join(embBcast(d)(emb.select(col("vec_id").as("s"), col("e").as("es"))), "s")
-        .join(embBcast(d)(emb.select(col("vec_id").as("t"), col("e").as("et"))), "t")
-        .select(col("s"), col("t"), sl2(col("es"), col("et")).as("d2"))
-      val knn = pd
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("s").orderBy(col("d2"), col("t"))))
-        .where(col("rn") <= NswM)
-        .select(col("s"), col("t"))
-      val nn = emb.agg(count(lit(1)).as("n"))
-      val sc = emb.select(col("vec_id").as("s"))
-        .select(col("s"), explode(array(lit(0L), lit(1L))).as("h"))
-        .crossJoin(broadcast(nn))
-        .select(col("s"),
-          (hash32(concat(lit("nsw:"), col("h").cast("string"), lit(":"),
-            col("s").cast("string"))) % col("n")).as("t"))
-        .where(col("t") =!= col("s"))
-      knn.unionAll(knn.select(col("t").as("s"), col("s").as("t")))
-        .unionAll(sc)
-        .unionAll(sc.select(col("t").as("s"), col("s").as("t")))
-        .distinct()
-    }
+  /** `vec_id`, the double-cast vector `e` the scaled-long L2 reads, and
+    * the raw float `embedding` the sign buckets and cosines read. */
+  private def withE(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("e"),
+      col("embedding"))
 
-  /** Even-id-half NSW adjacency (llm_ann_batch_nsw's index graph; dense
-    * member ranks make shortcut targets pure arithmetic — 2·(hash % n)). */
-  private[graft] def bnswAdj(s: SparkSession, d: String): DataFrame =
-    materializeIndex {
-      graft.functions.VectorExprs.register(s)
-      import graft.functions.VectorExprs.{sdotl, sl2}
-      val emb = T.embeddings(s, d)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("e"),
-          col("embedding"))
-      val idx = emb.where(col("vec_id") % 2 === 0)
-      val signArr = nswSignArrays
-      val bucket = (0 until NswPlanes).map(p =>
-        when(sdotl(col("embedding"), signArr(p)) > 0, lit(1L << p))
-          .otherwise(0L)).reduce(_ + _)
-      val sigs = idx.select(col("vec_id"), bucket.as("bucket"))
-        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-      // map-side flip explode — identical pool multiset, two distinct
-      // exchanges + a crossJoin + a broadcast join removed (see nswAdj)
-      val flipArr = array((0L +: (0 until NswPlanes).map(p => 1L << p))
-        .map(f => col("bucket").bitwiseXOR(lit(f))): _*)
-      val pool = sigs.select(col("vec_id").as("s"), explode(flipArr).as("nb"))
-        .join(sigs.select(col("vec_id").as("t"), col("bucket").as("nb")), "nb")
-        .where(col("t") =!= col("s"))
-        .select("s", "t")
-      val pd = pool
-        .join(embBcast(d)(idx.select(col("vec_id").as("s"), col("e").as("es"))), "s")
-        .join(embBcast(d)(idx.select(col("vec_id").as("t"), col("e").as("et"))), "t")
-        .select(col("s"), col("t"), sl2(col("es"), col("et")).as("d2"))
-      val knn = pd.withColumn("rn", row_number().over(
-          Window.partitionBy("s").orderBy(col("d2"), col("t"))))
-        .where(col("rn") <= NswM).select("s", "t")
-      val nn = sigs.agg(count(lit(1)).as("n"))
-      val sc = sigs.select(col("vec_id").as("s"))
-        .select(col("s"), explode(array(lit(0L), lit(1L))).as("h"))
-        .crossJoin(broadcast(nn))
-        .select(col("s"), (lit(2) * (hash32(concat(lit("bnsw:sc:"),
-          col("h").cast("string"), lit(":"), col("s").cast("string")))
-          % col("n"))).as("t"))
-        .where(col("t") =!= col("s"))
-      knn.unionAll(knn.select(col("t").as("s"), col("s").as("t")))
-        .unionAll(sc).unionAll(sc.select(col("t").as("s"), col("s").as("t")))
-        .distinct()
-    }
-
-  /** Layered HNSW graph over a member frame: ONE pool/knn/shortcut pass
-    * keyed by `layer` (identical edge sets to per-layer builds — the
-    * round-14 one-build lever), returning (adjacency = (layer, s, t),
-    * member ranks = (layer, vec_id, rk)). `scSalt` is the shortcut hash
-    * salt ("hnsw:sc:" flat / "bhnsw:sc:" batched — the two keys'
-    * distinct derandomized wirings). */
-  private def hnswLayerBuild(s: SparkSession, d: String, members: DataFrame,
-      emb: DataFrame, scSalt: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorExprs.register(s)
-    import graft.functions.VectorExprs.sl2
-    val mAll = members.select(col("vec_id"), col("bucket"),
-        explode(sequence(lit(0), col("l"))).as("layer"))
-      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    // map-side flip explode — identical per-layer pool multiset, two
-    // distinct exchanges + a crossJoin + a broadcast join removed (see
-    // nswAdj)
-    val flipArr = array((0L +: (0 until NswPlanes).map(p => 1L << p))
-      .map(f => col("bucket").bitwiseXOR(lit(f))): _*)
-    val pool = mAll
-      .select(col("layer"), col("vec_id").as("s"), explode(flipArr).as("nb"))
-      .join(mAll.select(col("layer"), col("vec_id").as("t"),
-        col("bucket").as("nb")), Seq("layer", "nb"))
-      .where(col("t") =!= col("s"))
-      .select("layer", "s", "t")
-    val pd = pool
-      .join(embBcast(d)(emb.select(col("vec_id").as("s"), col("e").as("es"))), "s")
-      .join(embBcast(d)(emb.select(col("vec_id").as("t"), col("e").as("et"))), "t")
-      .select(col("layer"), col("s"), col("t"),
-        sl2(col("es"), col("et")).as("d2"))
-    val knn = pd.withColumn("rn", row_number().over(
-        Window.partitionBy("layer", "s").orderBy(col("d2"), col("t"))))
-      .where(col("rn") <= NswM).select("layer", "s", "t")
-    val ranked = mAll.select("layer", "vec_id").withColumn("rk",
-      row_number().over(Window.partitionBy("layer").orderBy("vec_id"))
-        .cast("long") - 1)
-    val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
-    val sc = mAll.select(col("layer"), col("vec_id"))
-      .select(col("layer"), col("vec_id"),
-        explode(array(lit(0L), lit(1L))).as("h"))
-      .join(broadcast(nnl), "layer")
-      .select(col("layer"), col("vec_id").as("s2"),
-        (hash32(concat(lit(scSalt), col("h").cast("string"), lit(":"),
-          col("vec_id").cast("string"))) % col("n")).as("trk"))
-      .join(ranked.select(col("layer"), col("vec_id").as("t"),
-        col("rk").as("trk")), Seq("layer", "trk"))
-      .where(col("t") =!= col("s2"))
-      .select(col("layer"), col("s2").as("s"), col("t"))
-    val adjAll = knn
-      .unionAll(knn.select(col("layer"), col("t").as("s"), col("s").as("t")))
-      .unionAll(sc)
-      .unionAll(sc.select(col("layer"), col("t").as("s"), col("s").as("t")))
-      .distinct()
-    (adjAll, ranked)
+  /** Cosine of two float-vector columns from scaled-long dots: every
+    * ranking double derives from exact integers (sdotl), identical on
+    * both engines — the llm_ann_lsh ranking law. */
+  private def scaledCos(a: String, b: String): Column = {
+    import graft.functions.VectorExprs.sdotl
+    def dot(x: String, y: String) = sdotl(col(x), col(y)).cast("double") / lit(1e14)
+    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
-  /** Full-corpus (query-excluded) layered HNSW graph — llm_ann_hnsw. */
-  private[graft] def hnswGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    materializeIndexPair {
-      graft.functions.VectorExprs.register(s)
-      import graft.functions.VectorExprs.sdotl
-      val emb = T.embeddings(s, d)
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("e"),
-          col("embedding"))
-        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-      val signArr = nswSignArrays
-      val bucket = (0 until NswPlanes).map(p =>
-        when(sdotl(col("embedding"), signArr(p)) > 0, lit(1L << p))
-          .otherwise(0L)).reduce(_ + _)
-      val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
-      val sigs = emb.select(col("vec_id"), bucket.as("bucket"),
-        when(pmod(hl, lit(16)) === 0, 2)
-          .when(pmod(hl, lit(4)) === 0, 1).otherwise(0).as("l"))
-      hnswLayerBuild(s, d, sigs, emb, "hnsw:sc:")
-    }
-
-  /** Even-id-half layered HNSW graph — llm_ann_batch_hnsw. */
-  private[graft] def bhnswGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    materializeIndexPair {
-      graft.functions.VectorExprs.register(s)
-      import graft.functions.VectorExprs.sdotl
-      val emb = T.embeddings(s, d)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("e"),
-          col("embedding"))
-        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-      val idx = emb.where(col("vec_id") % 2 === 0)
-      val signArr = nswSignArrays
-      val bucket = (0 until NswPlanes).map(p =>
-        when(sdotl(col("embedding"), signArr(p)) > 0, lit(1L << p))
-          .otherwise(0L)).reduce(_ + _)
-      val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
-      val sigs = idx.select(col("vec_id"), bucket.as("bucket"),
-        when(pmod(hl, lit(16)) === 0, 2)
-          .when(pmod(hl, lit(4)) === 0, 1).otherwise(0).as("l"))
-      hnswLayerBuild(s, d, sigs, idx, "bhnsw:sc:")
-    }
-
-  /** BASE-member layered HNSW graph for the incremental-insert key
-    * (llm_ann_hnsw_upsert): the llm_ann_ivf_upsert hash split
-    * (hash32('upsert:'||vec_id) % 4 — ~25% delta) over the non-query
-    * corpus, frozen graph wired on the ~75% base members only with its
-    * own shortcut salt. Levels reuse the 'hnsw:lvl:' rule, so a base
-    * member keeps the same level it has in the full graph. */
-  private[graft] def uhnswGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    materializeIndexPair {
-      graft.functions.VectorExprs.register(s)
-      import graft.functions.VectorExprs.sdotl
-      val base = T.embeddings(s, d)
-        .where(col("vec_id") =!= 0 &&
-          hash32(concat(lit("upsert:"), col("vec_id").cast("string"))) % 4 =!= 0)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("e"),
-          col("embedding"))
-        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-      val signArr = nswSignArrays
-      val bucket = (0 until NswPlanes).map(p =>
-        when(sdotl(col("embedding"), signArr(p)) > 0, lit(1L << p))
-          .otherwise(0L)).reduce(_ + _)
-      val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
-      val sigs = base.select(col("vec_id"), bucket.as("bucket"),
-        when(pmod(hl, lit(16)) === 0, 2)
-          .when(pmod(hl, lit(4)) === 0, 1).otherwise(0).as("l"))
-      hnswLayerBuild(s, d, sigs, base, "uhnsw:sc:")
-    }
-
-  /** Plan-time ±1f sign arrays of the [[NswPlanes]] LSH planes, folded
-    * from [[Det.hash32Scala]] (shared by llm_ann_nsw and llm_ann_hnsw —
-    * the hierarchy reuses the flat rung's bucket geometry verbatim). */
-  private def nswSignArrays: Seq[Column] =
+  /** The [[NswPlanes]]-bit sign-LSH bucket of `embedding`: one scaled-long
+    * dot per plane against plan-time ±1f sign arrays folded from
+    * [[Det.hash32Scala]] (literals, not per-element hashes). All five
+    * graph-ANN keys (llm_ann_nsw, _batch_nsw, _hnsw, _batch_hnsw,
+    * _hnsw_upsert) bucket with it — the hierarchy reuses the flat rung's
+    * geometry verbatim. */
+  private def nswBucket: Column = {
+    import graft.functions.VectorExprs.sdotl
     (0 until NswPlanes).map { p =>
-      array((0 until NswDims).map(j =>
+      val signs = array((0 until NswDims).map(j =>
         lit(if (Det.hash32Scala(s"$p:$j") % 2 == 0) 1.0f else -1.0f)): _*)
+      when(sdotl(col("embedding"), signs) > 0, lit(1L << p)).otherwise(0L)
+    }.reduce(_ + _)
+  }
+
+  /** Top-[[NswM]] exact edges per member within its bucket ∪ Hamming-1
+    * buckets, grouped by `keys` (none for a flat graph, `layer` for the
+    * layered one). `sigs` holds (keys, vec_id, bucket), `emb` the
+    * members' (vec_id, e). The Hamming-1 pool is a MAP-SIDE flip explode
+    * (round 16 optimization, guide §2.4): bucket^f over the 1+NswPlanes
+    * literal flips is exploded per row — per row the flips are distinct,
+    * and the old (distinct buckets × flips → distinct → join) dictionary
+    * produced exactly one (bucket, nb) pair per flip too, so the pool
+    * multiset is IDENTICAL while two distinct exchanges, a crossJoin and
+    * a broadcast join drop out of the build. */
+  private def nswKnn(d: String, sigs: DataFrame, emb: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    import graft.functions.VectorExprs.sl2
+    val k = keys.map(col)
+    val flips = array((0L +: (0 until NswPlanes).map(p => 1L << p))
+      .map(f => col("bucket").bitwiseXOR(lit(f))): _*)
+    val pool = sigs.select(k ++ Seq(col("vec_id").as("s"), explode(flips).as("nb")): _*)
+      .join(sigs.select(k ++ Seq(col("vec_id").as("t"), col("bucket").as("nb")): _*),
+        keys :+ "nb")
+      .where(col("t") =!= col("s"))
+      .select(k ++ Seq(col("s"), col("t")): _*)
+    pool
+      .join(embBcast(d)(emb.select(col("vec_id").as("s"), col("e").as("es"))), "s")
+      .join(embBcast(d)(emb.select(col("vec_id").as("t"), col("e").as("et"))), "t")
+      .select(k ++ Seq(col("s"), col("t"), sl2(col("es"), col("et")).as("d2")): _*)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(k :+ col("s"): _*).orderBy(col("d2"), col("t"))))
+      .where(col("rn") <= NswM)
+      .select(k ++ Seq(col("s"), col("t")): _*)
+  }
+
+  /** knn ∪ knnᵀ ∪ sc ∪ scᵀ, deduplicated: the undirected edge set. */
+  private def undirected(knn: DataFrame, sc: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    def rev(e: DataFrame) =
+      e.select(keys.map(col) ++ Seq(col("t").as("s"), col("s").as("t")): _*)
+    knn.unionAll(rev(knn)).unionAll(sc).unionAll(rev(sc)).distinct()
+  }
+
+  /** Flat NSW adjacency over `members` (vec_id, e, embedding), built in
+    * plan per invocation: sign-LSH buckets ∪ Hamming-1 pool →
+    * top-[[NswM]] exact edges ([[nswKnn]]) ∪ the 2 hash shortcuts per
+    * node that `shortcuts` wires from the bucketed members, symmetrized.
+    * llm_ann_nsw indexes the full corpus, llm_ann_batch_nsw the even-id
+    * half. */
+  private def nswAdj(s: SparkSession, d: String, members: DataFrame)(
+      shortcuts: DataFrame => DataFrame): DataFrame =
+    materializeIndex {
+      graft.functions.VectorExprs.register(s)
+      val sigs = members.select(col("vec_id"), nswBucket.as("bucket"))
+        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+      undirected(nswKnn(d, sigs, members, Nil), shortcuts(sigs), Nil)
     }
+
+  /** The 2 small-world shortcuts per node of `src` (vec_id): target rank
+    * hash32(salt||h||':'||s) % n, mapped to a vec_id by `rankToId`
+    * (identity on the dense full corpus, 2·r on the even-id half). */
+  private def nswShortcuts(src: DataFrame, salt: String,
+      rankToId: Column => Column): DataFrame = {
+    val nn = src.agg(count(lit(1)).as("n"))
+    src.select(col("vec_id").as("s"))
+      .select(col("s"), explode(array(lit(0L), lit(1L))).as("h"))
+      .crossJoin(broadcast(nn))
+      .select(col("s"), rankToId(hash32(concat(lit(salt), col("h").cast("string"),
+        lit(":"), col("s").cast("string"))) % col("n")).as("t"))
+      .where(col("t") =!= col("s"))
+  }
+
+  /** Layered HNSW graph over `members` (vec_id, e, embedding): the
+    * geometric 'hnsw:lvl:' levels, then ONE pool/knn/shortcut pass keyed
+    * by `layer` (identical edge sets to per-layer builds — the round-14
+    * one-build lever), materialized together as (adjacency = (layer, s,
+    * t), member ranks = (layer, vec_id, rk)). `scSalt` is the shortcut
+    * hash salt — "hnsw:sc:" (llm_ann_hnsw), "bhnsw:sc:"
+    * (llm_ann_batch_hnsw) or "uhnsw:sc:" (llm_ann_hnsw_upsert), each
+    * key's distinct derandomized wiring. */
+  private def hnswLayers(s: SparkSession, d: String, members: DataFrame,
+      scSalt: String): (DataFrame, DataFrame) =
+    materializeIndexPair {
+      graft.functions.VectorExprs.register(s)
+      val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
+      val mAll = members.select(col("vec_id"), nswBucket.as("bucket"),
+          when(pmod(hl, lit(16)) === 0, 2)
+            .when(pmod(hl, lit(4)) === 0, 1).otherwise(0).as("l"))
+        .select(col("vec_id"), col("bucket"),
+          explode(sequence(lit(0), col("l"))).as("layer"))
+        .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+      val knn = nswKnn(d, mAll, members, Seq("layer"))
+      val ranked = mAll.select("layer", "vec_id").withColumn("rk",
+        row_number().over(Window.partitionBy("layer").orderBy("vec_id"))
+          .cast("long") - 1)
+      val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
+      val sc = mAll.select(col("layer"), col("vec_id"))
+        .select(col("layer"), col("vec_id"),
+          explode(array(lit(0L), lit(1L))).as("h"))
+        .join(broadcast(nnl), "layer")
+        .select(col("layer"), col("vec_id").as("s2"),
+          (hash32(concat(lit(scSalt), col("h").cast("string"), lit(":"),
+            col("vec_id").cast("string"))) % col("n")).as("trk"))
+        .join(ranked.select(col("layer"), col("vec_id").as("t"),
+          col("rk").as("trk")), Seq("layer", "trk"))
+        .where(col("t") =!= col("s2"))
+        .select(col("layer"), col("s2").as("s"), col("t"))
+      (undirected(knn, sc, Seq("layer")), ranked)
+    }
+
+  /** Per-layer adjacency lookup over a cached layered graph. */
+  private def layerAdj(adjAll: DataFrame): Int => DataFrame = {
+    val cached = adjAll.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    l => cached.where(col("layer") === l).select("s", "t")
+  }
+
+  /** The shared top-layer entry: the layer-2 member of rank
+    * hash32(salt) % |layer 2|. */
+  private def hnswEntry(ranked: DataFrame, salt: String): DataFrame = {
+    val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
+    ranked.where(col("layer") === 2)
+      .join(broadcast(nnl.where(col("layer") === 2).select(col("n"))),
+        col("rk") === hash32(lit(salt)) % col("n"))
+      .select(col("vec_id").as("v"))
+  }
+
+  /** Fixed-width graph beam search, one checkpointed frontier⋈adjacency
+    * round at a time. Each round checkpoints: leaving a multi-round
+    * lineage lazy was MEASURED catastrophic (llm_ann_hnsw 33 s steady vs
+    * 5 — each downstream consumer re-plans and re-executes the whole
+    * un-cut walk, the localCheckpoint-stats pathology class), so the
+    * per-round cut is load-bearing, not optional. */
+  private trait BeamSearch {
+    /** The `b` visited nodes nearest the query (ties by id). */
+    def nearest(vis: DataFrame, b: Int): DataFrame
+    /** One round: the visited set ∪ the beam's neighbors, checkpointed. */
+    def expand(vis: DataFrame, beam: DataFrame, adj: DataFrame): DataFrame
+
+    def search(seed: DataFrame, adj: DataFrame, steps: Int, b: Int): DataFrame = {
+      var vis = seed
+      var beam = seed
+      for (_ <- 1 to steps) {
+        vis = expand(vis, beam, adj)
+        beam = nearest(vis, b)
+      }
+      vis
+    }
+
+    /** HNSW descent [Malkov & Yashunin 2018]: `stepsU` rounds at beam
+      * `beamU` on layers 2 and 1, each lower layer seeded by the nearest
+      * node the layer above visited, then `steps0` rounds at `beam0` on
+      * layer 0. Returns the three layers' visited sets, unioned. Seeds
+      * stay lazy (they fold into the next checkpointed round's job). */
+    def descend(seed: DataFrame, adjL: Int => DataFrame, stepsU: Int,
+        beamU: Int, steps0: Int, beam0: Int): DataFrame = {
+      val v2 = search(seed, adjL(2), stepsU, beamU)
+      val v1 = search(nearest(v2, 1), adjL(1), stepsU, beamU)
+      val v0 = search(nearest(v1, 1), adjL(0), steps0, beam0)
+      v2.unionAll(v1).unionAll(v0)
+    }
+  }
+
+  /** Single-query search state: the visited set (v). `embv` holds the
+    * searched members' (v, e), `qArr` the 1-row query vector (qe).
+    * Query distance is VISITED-restricted (round 14, VERDICT r13 item
+    * 9): instead of a cached full-corpus qd table (n sl2 evals — the
+    * n-sized scratch a 100 TB index cannot afford), each beam pick
+    * broadcast-semi-joins the ≤400-row visited set against the embedding
+    * scan and evaluates sl2 only on the matches. Derived LAZILY from the
+    * round's checkpointed visited frame, so the two jobs per round fold
+    * into one — the beam recomputes inside the next round's checkpoint
+    * job (deterministic total order → any recomputation yields identical
+    * rows). */
+  private final class QueryBeam(embv: DataFrame, qArr: DataFrame)
+      extends BeamSearch {
+    def nearest(vis: DataFrame, b: Int): DataFrame = {
+      import graft.functions.VectorExprs.sl2
+      embv.join(broadcast(vis), "v")
+        .crossJoin(broadcast(qArr))
+        .select(col("v"), sl2(col("e"), col("qe")).as("d2"))
+        .orderBy(col("d2"), col("v"))
+        .limit(b)
+        .select(col("v"))
+    }
+    // repartition(1, v) before the distinct: the visited set is ≤ a few
+    // hundred rows, so a 32-wide dedup exchange per round is pure
+    // scheduler overhead (the graph_mst_boruvka single-partition-exchange
+    // discipline; hash partitioning on v at ANY width satisfies the
+    // dedup's distribution). Each checkpointed frame then carries one
+    // partition into the next round's joins.
+    def expand(vis: DataFrame, beam: DataFrame, adj: DataFrame): DataFrame =
+      vis.unionAll(
+          beam.join(adj, beam("v") === adj("s")).select(col("t").as("v")))
+        .repartition(1, col("v"))
+        .distinct()
+        .localCheckpoint()
+  }
+
+  /** Batched search state keyed by query: (qid, v, d2). `embv` holds the
+    * index members' (v, e), `qv` the queries' (qid, qe). The state
+    * CARRIES its query distance, so each round evaluates sl2 only on the
+    * ~beam×degree EXPANSION rows instead of re-scoring the whole visited
+    * set, and the beam pick is a pure per-query window over the state —
+    * no joins. */
+  private final class BatchBeam(d: String, embv: DataFrame, qv: DataFrame)
+      extends BeamSearch {
+    def withD2(vdf: DataFrame): DataFrame = {
+      import graft.functions.VectorExprs.sl2
+      vdf.join(embBcast(d)(embv), "v")
+        .join(embBcast(d)(qv), "qid")
+        .select(col("qid"), col("v"), sl2(col("e"), col("qe")).as("d2"))
+    }
+    def nearest(vis: DataFrame, b: Int): DataFrame =
+      vis.withColumn("rn", row_number().over(
+          Window.partitionBy("qid").orderBy(col("d2"), col("v"))))
+        .where(col("rn") <= b)
+        .select("qid", "v", "d2")
+    // ONE exchange per round (round 16 optimization, guide §2.4): the
+    // state shuffles by qid once; the (qid, v) dedup — spelled as GROUP
+    // BY (qid, v) MIN(d2), identical to a distinct because d2 is a
+    // deterministic function of (qid, v) — and the beam-pick window both
+    // run on that partitioning without their own exchanges. Round 17 A/B
+    // (VERDICT r16 #4): a per-TWO-rounds checkpoint cadence was tried on
+    // llm_ann_hnsw_upsert and REJECTED — AQE submits one job per exchange
+    // STAGE, not per action, so the job count was unchanged (142 -> 140)
+    // and steady time within noise, while the skipped round's dedup
+    // aggregate executes twice under the reused exchange.
+    def expand(vis: DataFrame, beam: DataFrame, adj: DataFrame): DataFrame =
+      vis.unionAll(withD2(
+          beam.join(adj, beam("v") === adj("s"))
+            .select(beam("qid"), col("t").as("v"))))
+        .repartition(col("qid"))
+        .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
+        .localCheckpoint()
+  }
+
+  /** Single-query graded finish (llm_ann_nsw, llm_ann_hnsw): the 10
+    * visited candidates (`cand`: vec_id) nearest vec_id 0 by exact
+    * scaled-long cosine, each with its membership in the EXACT top-10
+    * and the visited budget. */
+  private def queryTopTen(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
+    val nv = cand.agg(count(lit(1)).as("n_visited"))
+    val cos = scaledCos("embedding", "qe2")
+    val qRaw = T.embeddings(s, d).where(col("vec_id") === 0)
+      .select(col("embedding").as("qe2"))
+    val topx = T.embeddings(s, d).where(col("vec_id") =!= 0)
+      .crossJoin(broadcast(qRaw))
+      .withColumn("c", cos)
+      .orderBy(col("c").desc, col("vec_id"))
+      .limit(10)
+      .select(col("vec_id"), lit(1L).as("hit"))
+    T.embeddings(s, d).join(cand, "vec_id")
+      .crossJoin(broadcast(qRaw))
+      .withColumn("cc", cos)
+      .orderBy(col("cc").desc, col("vec_id"))
+      .limit(10) // global top-k FIRST; the rank window then spans 10 rows
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col("cc").desc, col("vec_id"))).cast("long"))
+      .join(broadcast(topx), Seq("vec_id"), "left")
+      .crossJoin(broadcast(nv))
+      .select(col("rk"), col("vec_id"), s6(col("cc")).as("cos_sim"),
+        coalesce(col("hit"), lit(0L)).as("in_exact10"), col("n_visited"))
+      .orderBy("rk")
+  }
+
+  /** Batched graded finish (llm_ann_batch_nsw, llm_ann_batch_hnsw): per
+    * query, the top-10 of its visited set `vis` (qid, v) by exact
+    * scaled-long cosine, plus the visited budget. n_visited rides the
+    * SAME window pass as the top-10 pick (round 17, guide §2.4): the
+    * broadcast joins are 1:1 (every visited v is an index member, every
+    * qid a query), so a full-frame count(*) over the rank window's own
+    * spec equals a separate groupBy(qid) aggregate — one Window operator
+    * instead of an aggregate + broadcast-join pass over the visited set. */
+  private def batchTopTen(d: String, vis: DataFrame, idx: DataFrame,
+      qs: DataFrame): DataFrame = {
+    val wTop = Window.partitionBy("qid").orderBy(col("cc").desc, col("v"))
+    vis.join(embBcast(d)(idx.select(col("vec_id").as("v"), col("embedding"))), "v")
+      .join(embBcast(d)(qs.select(col("qid"), col("qemb"))), "qid")
+      .withColumn("cc", scaledCos("embedding", "qemb"))
+      .withColumn("rk", row_number().over(wTop).cast("long"))
+      .withColumn("n_visited", count(lit(1)).over(
+        wTop.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .where(col("rk") <= 10)
+      .select(col("qid").as("query_id"), col("rk"), col("v").as("vec_id"),
+        s6(col("cc")).as("cos_sim"), col("n_visited"))
+      .orderBy("query_id", "rk")
+  }
+
+  // DuckDB oracle pieces of the sign-LSH and graph-ANN keys. Their only
+  // arguments are the real differences between the keys (plane count,
+  // CTE suffix, salt, visited-CTE name).
+
+  /** The per-element unnest every ANN oracle starts from. */
+  private val UxSql =
+    "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
+      "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), "
+
+  /** The single query (vec_id 0) and its scaled-long squared norm. */
+  private val QuerySql =
+    "q AS (SELECT i, x AS qx FROM ux WHERE vec_id = 0), " +
+      "nq AS (SELECT SUM(CAST(FLOOR(qx * qx * 1e14 + 0.5) AS BIGINT)) AS nl FROM q), "
+
+  /** Sign-LSH over ux: the `projs` select list of `planes` scaled-long
+    * projections p0.. (±1 signs from the hash32(plane:pos) parity) and
+    * the bucket sum over their signs — 8 planes for llm_ann_lsh and
+    * llm_ann_recall_eval, [[NswPlanes]] for the graph keys. */
+  private def signSql(planes: Int): (String, String) = {
+    def sgn(p: Int) =
+      s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
+    ((0 until planes).map(p =>
+      s"SUM(CAST(FLOOR(x * ${sgn(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", "),
+      (0 until planes).map(p =>
+        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + "))
+  }
+
+  /** Each bucket's Hamming-≤1 neighbor buckets. */
+  private def nbfSql: String = {
+    val flips = (0 until NswPlanes).map(p => 1L << p).mkString("[0,", ",", "]")
+    "nbf AS (SELECT DISTINCT bucket, xor(bucket, f) AS nb FROM bkt, " +
+      s"(SELECT CAST(UNNEST($flips) AS BIGINT) AS f) fl), "
+  }
+
+  /** pool`l` → exact d2 → top-[[NswM]] edges knn`l`. */
+  private def knnSql(l: String): String =
+    s"pdn$l AS MATERIALIZED (SELECT p.s, p.t, " +
+      "SUM(CAST(FLOOR((a.x - b.x) * (a.x - b.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
+      s"FROM pool$l p JOIN ux a ON a.vec_id = p.s JOIN ux b ON b.vec_id = p.t AND b.i = a.i GROUP BY p.s, p.t), " +
+      s"knn$l AS (SELECT s, t FROM (SELECT s, t, " +
+      s"ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2, t) AS rn FROM pdn$l) WHERE rn <= $NswM), "
+
+  /** knn`l` ∪ sc`l`, both directions, deduplicated. */
+  private def adjSql(l: String): String =
+    s"adj$l AS MATERIALIZED (SELECT DISTINCT s, t FROM (" +
+      s"SELECT s, t FROM knn$l UNION ALL SELECT t, s FROM knn$l " +
+      s"UNION ALL SELECT s, t FROM sc$l UNION ALL SELECT t, s FROM sc$l))"
+
+  /** The 'hnsw:lvl:' levels of the members in `from`. */
+  private def lvlSql(from: String): String =
+    "lvl AS (SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2 WHEN h % 4 = 0 THEN 1 ELSE 0 END AS l " +
+      "FROM (SELECT vec_id, " + sqlHash32("'hnsw:lvl:' || CAST(vec_id AS VARCHAR)") + " AS h " +
+      s"FROM $from)), "
+
+  /** Layer `l`'s graph CTEs ([[hnswLayers]] per layer, shortcut salt
+    * `salt`). */
+  private def layerSql(l: Int, salt: String): String =
+    s"m$l AS (SELECT b.vec_id, b.bucket FROM bkt b JOIN lvl ON lvl.vec_id = b.vec_id AND lvl.l >= $l), " +
+      s"pool$l AS (SELECT a.vec_id AS s, c.vec_id AS t FROM m$l a " +
+      s"JOIN nbf ON nbf.bucket = a.bucket JOIN m$l c ON c.bucket = nbf.nb AND c.vec_id <> a.vec_id), " +
+      knnSql(s"$l") +
+      s"rkm$l AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS rk FROM m$l), " +
+      s"nn$l AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM m$l), " +
+      s"sc$l AS (SELECT a.vec_id AS s, r.vec_id AS t FROM (SELECT vec_id, " +
+      sqlHash32(s"'$salt' || CAST(h AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)") +
+      s" % (SELECT n FROM nn$l) AS trk FROM m$l, (SELECT UNNEST([0,1]) AS h) hh) a " +
+      s"JOIN rkm$l r ON r.rk = a.trk WHERE r.vec_id <> a.vec_id), " +
+      adjSql(s"$l")
+
+  /** The whole layered graph over bkt: levels of the members in `from`,
+    * then layers 2, 1 and 0. */
+  private def layersSql(from: String, salt: String): String =
+    lvlSql(from) + nbfSql +
+      layerSql(2, salt) + ", " + layerSql(1, salt) + ", " + layerSql(0, salt) + ", "
+
+  /** The flat graph's exact edges over bkt: pool → knn. */
+  private def flatKnnSql: String =
+    nbfSql +
+      "pool AS (SELECT a.vec_id AS s, b.vec_id AS t FROM bkt a " +
+      "JOIN nbf ON nbf.bucket = a.bucket JOIN bkt b ON b.bucket = nbf.nb " +
+      "AND b.vec_id <> a.vec_id), " +
+      knnSql("")
+
+  /** Single-query search over `adj` from `seed`, rounds unrolled as
+    * v`pfx`t/b`pfx`t; `guard` filters the expansion. */
+  private def querySearchSql(pfx: String, adj: String, seed: String, steps: Int,
+      beam: Int, guard: String = ""): String =
+    s"v${pfx}0 AS (SELECT v FROM $seed), b${pfx}0 AS (SELECT v FROM $seed), " +
+      (1 to steps).map { t =>
+        s"v$pfx$t AS MATERIALIZED (SELECT DISTINCT v FROM (SELECT v FROM v$pfx${t - 1} " +
+          s"UNION ALL SELECT $adj.t AS v FROM b$pfx${t - 1} b JOIN $adj ON $adj.s = b.v$guard)), " +
+          s"b$pfx$t AS (SELECT v FROM (SELECT vv.v, ROW_NUMBER() OVER (ORDER BY qd.d2, vv.v) AS rn " +
+          s"FROM v$pfx$t vv JOIN qd ON qd.vec_id = vv.v) WHERE rn <= $beam)"
+      }.mkString(", ")
+
+  /** Single-query finish over the visited set `cand` (vec_id): top-10 by
+    * exact cosine, exact-top-10 membership, visited budget. */
+  private val QueryTopTenSql =
+    "nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_visited FROM cand), " +
+      "cd AS (SELECT u.vec_id, " +
+      "SUM(CAST(FLOOR(u.x * q.qx * 1e14 + 0.5) AS BIGINT)) AS dotl, " +
+      "SUM(CAST(FLOOR(u.x * u.x * 1e14 + 0.5) AS BIGINT)) AS nl " +
+      "FROM ux u JOIN q ON u.i = q.i JOIN cand c ON c.vec_id = u.vec_id GROUP BY u.vec_id), " +
+      "cosd AS (SELECT vec_id, (CAST(dotl AS DOUBLE) / 1e14) / " +
+      "(SQRT(CAST(nl AS DOUBLE) / 1e14) * SQRT((SELECT CAST(nl AS DOUBLE) FROM nq) / 1e14)) AS cc FROM cd), " +
+      "alld AS (SELECT u.vec_id, " +
+      "SUM(CAST(FLOOR(u.x * q.qx * 1e14 + 0.5) AS BIGINT)) AS dotl, " +
+      "SUM(CAST(FLOOR(u.x * u.x * 1e14 + 0.5) AS BIGINT)) AS nl " +
+      "FROM ux u JOIN q ON u.i = q.i WHERE u.vec_id <> 0 GROUP BY u.vec_id), " +
+      "topx AS (SELECT vec_id FROM (SELECT vec_id, (CAST(dotl AS DOUBLE) / 1e14) / " +
+      "(SQRT(CAST(nl AS DOUBLE) / 1e14) * SQRT((SELECT CAST(nl AS DOUBLE) FROM nq) / 1e14)) AS c " +
+      "FROM alld) ORDER BY c DESC, vec_id LIMIT 10), " +
+      "ranked AS (SELECT vec_id, cc, ROW_NUMBER() OVER (ORDER BY cc DESC, vec_id) AS rk FROM cosd) " +
+      "SELECT CAST(rk AS BIGINT) AS rk, vec_id, " + sqlS6("cc") + " AS cos_sim, " +
+      "CAST(CASE WHEN vec_id IN (SELECT vec_id FROM topx) THEN 1 ELSE 0 END AS BIGINT) AS in_exact10, " +
+      "(SELECT n_visited FROM nv) AS n_visited " +
+      "FROM ranked WHERE rk <= 10 ORDER BY rk"
+
+  /** Odd-id query × even-id index distances of the batched keys. */
+  private val BatchQdSql =
+    "qd AS MATERIALIZED (SELECT q.vec_id AS qid, u.vec_id AS v, " +
+      "SUM(CAST(FLOOR((u.x - q.x) * (u.x - q.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
+      "FROM ux u JOIN ux q ON q.i = u.i AND u.vec_id % 2 = 0 AND q.vec_id % 2 = 1 " +
+      "GROUP BY qid, v), "
+
+  /** Batched search rounds over `adj`, unrolled as v`pfx`t/b`pfx`t from
+    * v`pfx`0/b`pfx`0: per-query beam state. */
+  private def batchRoundsSql(pfx: String, adj: String, steps: Int, beam: Int): String =
+    (1 to steps).map { t =>
+      s"v$pfx$t AS MATERIALIZED (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM v$pfx${t - 1} " +
+        s"UNION ALL SELECT b.qid, $adj.t AS v FROM b$pfx${t - 1} b JOIN $adj ON $adj.s = b.v)), " +
+        s"b$pfx$t AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
+        "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
+        s"FROM v$pfx$t vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn <= $beam)"
+    }.mkString(", ")
+
+  /** Batched HNSW descent from `seed2` (qid, v) over adj2/adj1/adj0 into
+    * the visited set `cand` (qid, v). */
+  private def batchDescentSql: String = {
+    def layer(pfx: String, adj: String, seed: String, steps: Int, beam: Int) =
+      s"v${pfx}0 AS (SELECT qid, v FROM $seed), b${pfx}0 AS (SELECT qid, v FROM $seed), " +
+        batchRoundsSql(pfx, adj, steps, beam)
+    def bestOf(name: String, src: String) =
+      s"$name AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
+        "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
+        s"FROM $src vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn = 1)"
+    layer("a", "adj2", "seed2", BhnswStepsU, BhnswBeamU) + ", " +
+      bestOf("s1", s"va$BhnswStepsU") + ", " +
+      layer("b", "adj1", "s1", BhnswStepsU, BhnswBeamU) + ", " +
+      bestOf("s0", s"vb$BhnswStepsU") + ", " +
+      layer("c", "adj0", "s0", BhnswSteps0, BnswBeam) + ", " +
+      s"cand AS (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM va$BhnswStepsU " +
+      s"UNION ALL SELECT qid, v FROM vb$BhnswStepsU " +
+      s"UNION ALL SELECT qid, v FROM vc$BhnswSteps0)), "
+  }
+
+  /** Batched finish over the visited CTE `vis` (qid, v): per-query top-10
+    * by exact cosine plus the visited budget. */
+  private def batchTopTenSql(vis: String): String =
+    s"nvq AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_visited FROM $vis GROUP BY qid), " +
+      "nrm AS (SELECT vec_id, SUM(CAST(FLOOR(x * x * 1e14 + 0.5) AS BIGINT)) AS nl " +
+      "FROM ux GROUP BY vec_id), " +
+      "dq AS (SELECT c.qid, c.v, SUM(CAST(FLOOR(u.x * q.x * 1e14 + 0.5) AS BIGINT)) AS dotl " +
+      s"FROM $vis c JOIN ux u ON u.vec_id = c.v " +
+      "JOIN ux q ON q.vec_id = c.qid AND q.i = u.i GROUP BY c.qid, c.v), " +
+      "cosd AS (SELECT dq.qid, dq.v, (CAST(dq.dotl AS DOUBLE) / 1e14) / " +
+      "(SQRT(CAST(ni.nl AS DOUBLE) / 1e14) * SQRT(CAST(nq2.nl AS DOUBLE) / 1e14)) AS cc " +
+      "FROM dq JOIN nrm ni ON ni.vec_id = dq.v JOIN nrm nq2 ON nq2.vec_id = dq.qid) " +
+      "SELECT x.qid AS query_id, CAST(x.rk AS BIGINT) AS rk, x.v AS vec_id, " +
+      sqlS6("x.cc") + " AS cos_sim, nvq.n_visited " +
+      "FROM (SELECT qid, v, cc, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cc DESC, v) AS rk " +
+      "FROM cosd) x JOIN nvq ON nvq.qid = x.qid WHERE x.rk <= 10 ORDER BY query_id, rk"
 
   /** HNSW geometry (round 14, VERDICT r13 item 4) [Malkov & Yashunin
     * 2018, §4]: geometric layer assignment hash-derandomized at p=1/4
@@ -1609,14 +1863,8 @@ object LlmExtras {
     // chain as llm_ann_ivf); recall vs the brute-force llm_cosine_topk
     // stays property-tested.
     Q("llm_ann_lsh", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until 8).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until 8).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
-      "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
-        "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
+      val (projCols, bucketExpr) = signSql(8)
+      UxSql +
         s"projs AS (SELECT vec_id, $projCols FROM ux GROUP BY vec_id), " +
         s"bkt AS (SELECT vec_id, CAST($bucketExpr AS BIGINT) AS bucket FROM projs), " +
         "q AS (SELECT i, x AS qx FROM ux WHERE vec_id = 0), " +
@@ -1651,13 +1899,10 @@ object LlmExtras {
           .agg(projCols.head, projCols.tail: _*)
           .select(col("vec_id"), bucket.as("bucket"))
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.sdotl
         val e = T.embeddings(s, d).join(sigs, "vec_id")
         val q = e.where(col("vec_id") === 0)
           .select(col("bucket").as("qbucket"), col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         e.where(col("vec_id") =!= 0)
           .join(broadcast(q), col("bucket") === col("qbucket"))
           .withColumn("cos_raw", cos)
@@ -1696,7 +1941,7 @@ object LlmExtras {
         "ORDER BY c DESC, vec_id LIMIT 3"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
+        import graft.functions.VectorExprs.sl2
         val ux = T.embeddings(s, d)
           .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("pos", "xf")))
           .withColumn("x", col("xf").cast("double"))
@@ -1716,9 +1961,7 @@ object LlmExtras {
           .select(col("clabel").as("label"))
         val q = T.embeddings(s, d).where(col("vec_id") === 0)
           .select(col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         T.embeddings(s, d)
           .join(broadcast(probes), "label")
           .where(col("vec_id") =!= 0)
@@ -1798,7 +2041,7 @@ object LlmExtras {
         "LEFT JOIN qh ON qh.clabel = cells.clabel ORDER BY cells.clabel"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
+        import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d).where(col("vec_id") =!= 0)
           .select(col("vec_id"), col("label"), col("embedding"),
             (when(hash32(concat(lit("upsert:"), col("vec_id").cast("string")))
@@ -1842,9 +2085,7 @@ object LlmExtras {
           .orderBy(col("d2"), col("clabel"))
           .limit(2)
           .select(col("clabel"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         val qh = asg.join(broadcast(probes), "clabel")
           .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
           .crossJoin(broadcast(qArr.select(col("qe"))))
@@ -1931,12 +2172,9 @@ object LlmExtras {
         " AS recall6 FROM k"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.sdotl
         val emb = T.embeddings(s, d)
         val q = emb.where(col("vec_id") === 0).select(col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         val cosAll = emb.where(col("vec_id") =!= 0)
           .crossJoin(broadcast(q))
           .select(col("vec_id"), cos.as("c"))
@@ -2007,7 +2245,7 @@ object LlmExtras {
         "ORDER BY r.c DESC, r.vec_id LIMIT 10"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
+        import graft.functions.VectorExprs.sl2
         val ux = T.embeddings(s, d)
           .select(col("vec_id"), col("label"),
             posexplode(col("embedding")).as(Seq("pos", "xf")))
@@ -2032,9 +2270,7 @@ object LlmExtras {
           .select("vec_id")
         val q = T.embeddings(s, d).where(col("vec_id") === 0)
           .select(col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         T.embeddings(s, d)
           .join(shortl, "vec_id")
           .crossJoin(broadcast(q))
@@ -2058,12 +2294,7 @@ object LlmExtras {
     // (this corpus IS the slice) while the candidate laws are
     // metadata-cheap — the standard recall-eval protocol.
     Q("llm_ann_recall_eval", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until 8).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until 8).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
+      val (projCols, bucketExpr) = signSql(8)
       "WITH ux AS (SELECT vec_id, label, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
         "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
         "q AS (SELECT i, x AS qx FROM ux WHERE vec_id = 0), " +
@@ -2095,12 +2326,10 @@ object LlmExtras {
     },
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
+        import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d)
         val q = emb.where(col("vec_id") === 0).select(col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         val top10 = emb.where(col("vec_id") =!= 0)
           .crossJoin(broadcast(q))
           .withColumn("c", cos)
@@ -2179,155 +2408,49 @@ object LlmExtras {
     // nsw-hits ≥ ivf-hits). The query-distance table qd is one map-side
     // broadcast-query pass (restrict it to visited nodes at scale).
     Q("llm_ann_nsw", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until NswPlanes).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until NswPlanes).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
-      val flips = (0 until NswPlanes).map(p => 1L << p).mkString("[0,", ",", "]")
-      val steps = (1 to NswSteps).map { t =>
-        s"v$t AS MATERIALIZED (SELECT DISTINCT v FROM (SELECT v FROM v${t - 1} " +
-          s"UNION ALL SELECT adj.t AS v FROM b${t - 1} b JOIN adj ON adj.s = b.v WHERE adj.t <> 0)), " +
-          s"b$t AS (SELECT v FROM (SELECT vv.v, ROW_NUMBER() OVER (ORDER BY qd.d2, vv.v) AS rn " +
-          s"FROM v$t vv JOIN qd ON qd.vec_id = vv.v) WHERE rn <= $NswBeam)"
-      }.mkString(", ")
-      "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
-        "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
-        "q AS (SELECT i, x AS qx FROM ux WHERE vec_id = 0), " +
-        "nq AS (SELECT SUM(CAST(FLOOR(qx * qx * 1e14 + 0.5) AS BIGINT)) AS nl FROM q), " +
+      val (projCols, bucketExpr) = signSql(NswPlanes)
+      UxSql + QuerySql +
         "nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings), " +
         s"projs AS (SELECT vec_id, $projCols FROM ux GROUP BY vec_id), " +
         s"bkt AS MATERIALIZED (SELECT vec_id, CAST($bucketExpr AS BIGINT) AS bucket FROM projs), " +
-        s"nbf AS (SELECT DISTINCT bucket, xor(bucket, f) AS nb FROM bkt, " +
-        s"(SELECT CAST(UNNEST($flips) AS BIGINT) AS f) fl), " +
-        "pool AS (SELECT a.vec_id AS s, b.vec_id AS t FROM bkt a " +
-        "JOIN nbf ON nbf.bucket = a.bucket JOIN bkt b ON b.bucket = nbf.nb " +
-        "AND b.vec_id <> a.vec_id), " +
-        "pdn AS MATERIALIZED (SELECT p.s, p.t, " +
-        "SUM(CAST(FLOOR((a.x - b.x) * (a.x - b.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-        "FROM pool p JOIN ux a ON a.vec_id = p.s JOIN ux b ON b.vec_id = p.t AND b.i = a.i " +
-        "GROUP BY p.s, p.t), " +
-        "knn AS (SELECT s, t FROM (SELECT s, t, " +
-        s"ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2, t) AS rn FROM pdn) WHERE rn <= $NswM), " +
+        flatKnnSql +
         "sc AS (SELECT s, t FROM (SELECT vec_id AS s, " +
         sqlHash32("'nsw:' || CAST(h AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)") +
         " % (SELECT n FROM nn) AS t FROM embeddings, " +
         s"(SELECT UNNEST([0,1]) AS h) hh) x WHERE t <> s), " +
-        "adj AS MATERIALIZED (SELECT DISTINCT s, t FROM (" +
-        "SELECT s, t FROM knn UNION ALL SELECT t, s FROM knn " +
-        "UNION ALL SELECT s, t FROM sc UNION ALL SELECT t, s FROM sc)), " +
+        adjSql("") + ", " +
         "qd AS MATERIALIZED (SELECT u.vec_id, " +
         "SUM(CAST(FLOOR((u.x - q.qx) * (u.x - q.qx) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
         "FROM ux u JOIN q ON u.i = q.i GROUP BY u.vec_id), " +
         "ent AS (SELECT CASE WHEN e0 <> 0 THEN e0 ELSE e1 END AS v FROM (SELECT " +
         sqlHash32("'nsw:entry:0'") + " % (SELECT n FROM nn) AS e0, " +
         sqlHash32("'nsw:entry:1'") + " % (SELECT n FROM nn) AS e1)), " +
-        "v0 AS (SELECT v FROM ent), b0 AS (SELECT v FROM ent), " +
-        steps + ", " +
+        querySearchSql("", "adj", "ent", NswSteps, NswBeam, " WHERE adj.t <> 0") + ", " +
         s"cand AS (SELECT v AS vec_id FROM v$NswSteps WHERE v <> 0), " +
-        "nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_visited FROM cand), " +
-        "cd AS (SELECT u.vec_id, " +
-        "SUM(CAST(FLOOR(u.x * q.qx * 1e14 + 0.5) AS BIGINT)) AS dotl, " +
-        "SUM(CAST(FLOOR(u.x * u.x * 1e14 + 0.5) AS BIGINT)) AS nl " +
-        "FROM ux u JOIN q ON u.i = q.i JOIN cand c ON c.vec_id = u.vec_id GROUP BY u.vec_id), " +
-        "cosd AS (SELECT vec_id, (CAST(dotl AS DOUBLE) / 1e14) / " +
-        "(SQRT(CAST(nl AS DOUBLE) / 1e14) * SQRT((SELECT CAST(nl AS DOUBLE) FROM nq) / 1e14)) AS cc FROM cd), " +
-        "alld AS (SELECT u.vec_id, " +
-        "SUM(CAST(FLOOR(u.x * q.qx * 1e14 + 0.5) AS BIGINT)) AS dotl, " +
-        "SUM(CAST(FLOOR(u.x * u.x * 1e14 + 0.5) AS BIGINT)) AS nl " +
-        "FROM ux u JOIN q ON u.i = q.i WHERE u.vec_id <> 0 GROUP BY u.vec_id), " +
-        "topx AS (SELECT vec_id FROM (SELECT vec_id, (CAST(dotl AS DOUBLE) / 1e14) / " +
-        "(SQRT(CAST(nl AS DOUBLE) / 1e14) * SQRT((SELECT CAST(nl AS DOUBLE) FROM nq) / 1e14)) AS c " +
-        "FROM alld) ORDER BY c DESC, vec_id LIMIT 10), " +
-        "ranked AS (SELECT vec_id, cc, ROW_NUMBER() OVER (ORDER BY cc DESC, vec_id) AS rk FROM cosd) " +
-        "SELECT CAST(rk AS BIGINT) AS rk, vec_id, " + sqlS6("cc") + " AS cos_sim, " +
-        "CAST(CASE WHEN vec_id IN (SELECT vec_id FROM topx) THEN 1 ELSE 0 END AS BIGINT) AS in_exact10, " +
-        "(SELECT n_visited FROM nv) AS n_visited " +
-        "FROM ranked WHERE rk <= 10 ORDER BY rk"
+        QueryTopTenSql
     },
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
-        val emb = T.embeddings(s, d)
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("e"),
-            col("embedding"))
+        val emb = withE(T.embeddings(s, d))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // index graph built in-plan per invocation ([[nswAdj]]:
-        // driver-folded sign projections, bucket pool, top-M exact
-        // edges, hash shortcuts), materialized once so the search
-        // rounds don't re-execute the build subtree.
-        val adj = nswAdj(s, d).transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+        // index graph built in-plan per invocation ([[nswAdj]]),
+        // materialized once so the search rounds don't re-execute the
+        // build subtree
+        val adj = nswAdj(s, d, emb)(_ => nswShortcuts(emb, "nsw:", identity))
+          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // the lazy broadcast n scalar (SCALING.md principle 3)
         val nn = emb.agg(count(lit(1)).as("n"))
         val qArr = emb.where(col("vec_id") === 0).select(col("e").as("qe"))
-        // query-distance is VISITED-restricted (round 14, VERDICT r13
-        // item 9): instead of a cached full-corpus qd table (n sl2 evals
-        // — the n-sized scratch a 100 TB index cannot afford), each beam
-        // pick broadcast-semi-joins the ≤400-row visited set against the
-        // embedding scan and evaluates sl2 only on the matches. Derived
-        // LAZILY from the round's checkpointed visited frame, so the two
-        // jobs per round fold into one — the beam recomputes inside the
-        // next round's checkpoint job (deterministic total order → any
-        // recomputation yields identical rows).
-        val embv = emb.select(col("vec_id").as("v"), col("e"))
-        def beamOf(vdf: DataFrame): DataFrame =
-          embv.join(broadcast(vdf), "v")
-            .crossJoin(broadcast(qArr))
-            .select(col("v"), sl2(col("e"), col("qe")).as("d2"))
-            .orderBy(col("d2"), col("v"))
-            .limit(NswBeam)
-            .select(col("v"))
         val ent = nn.select(
           when(hash32(lit("nsw:entry:0")) % col("n") =!= 0,
             hash32(lit("nsw:entry:0")) % col("n"))
             .otherwise(hash32(lit("nsw:entry:1")) % col("n")).as("v"))
-        var vis = ent.localCheckpoint()
-        var beam = vis
-        for (_ <- 1 to NswSteps) {
-          // repartition(1, v) before the distinct: the visited set is
-          // ≤ a few hundred rows, so a 32-wide dedup exchange per round
-          // is pure scheduler overhead (the graph_mst_boruvka
-          // single-partition-exchange discipline; hash partitioning on v
-          // at ANY width satisfies the dedup's distribution). Each
-          // checkpointed frame then carries one partition into the next
-          // round's joins.
-          vis = vis.unionAll(
-              beam.join(adj, beam("v") === adj("s"))
-                .where(col("t") =!= 0)
-                .select(col("t").as("v")))
-            .repartition(1, col("v"))
-            .distinct()
-            .localCheckpoint()
-          beam = beamOf(vis)
-        }
+        // the query is in the graph: expansion never re-enters vec_id 0
+        val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr)
+          .search(ent.localCheckpoint(), adj.where(col("t") =!= 0), NswSteps, NswBeam)
         val cand = vis.where(col("v") =!= 0).select(col("v").as("vec_id"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val nv = cand.agg(count(lit(1)).as("n_visited"))
-        val cos = (sdotl(col("embedding"), col("qe2")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe2"), col("qe2")).cast("double") / lit(1e14)))
-        val qRaw = T.embeddings(s, d).where(col("vec_id") === 0)
-          .select(col("embedding").as("qe2"))
-        val topx = T.embeddings(s, d).where(col("vec_id") =!= 0)
-          .crossJoin(broadcast(qRaw))
-          .withColumn("c", cos)
-          .orderBy(col("c").desc, col("vec_id"))
-          .limit(10)
-          .select(col("vec_id"), lit(1L).as("hit"))
-        T.embeddings(s, d).join(cand, "vec_id")
-          .crossJoin(broadcast(qRaw))
-          .withColumn("cc", cos)
-          .orderBy(col("cc").desc, col("vec_id"))
-          .limit(10) // global top-k FIRST; the rank window then spans 10 rows
-          .withColumn("rk", row_number().over(
-            Window.orderBy(col("cc").desc, col("vec_id"))).cast("long"))
-          .join(broadcast(topx), Seq("vec_id"), "left")
-          .crossJoin(broadcast(nv))
-          .select(col("rk"), col("vec_id"), s6(col("cc")).as("cos_sim"),
-            coalesce(col("hit"), lit(0L)).as("in_exact10"), col("n_visited"))
-          .orderBy("rk")
+        queryTopTen(s, d, cand)
       }),
 
     // BATCHED multi-query IVF ANN (round 14, VERDICT r13 item 1) — the
@@ -2378,7 +2501,7 @@ object LlmExtras {
         "WHERE rk <= 10 ORDER BY query_id, rk"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
+        import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d)
         val idx = emb.where(col("vec_id") % 2 === 0)
         val qs = emb.where(col("vec_id") % 2 === 1)
@@ -2402,9 +2525,7 @@ object LlmExtras {
             Window.partitionBy("qid").orderBy(col("d2"), col("clabel"))))
           .where(col("pr") <= 2)
           .select(col("qid"), col("clabel").as("label"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         idx.select(col("vec_id"), col("label"), col("embedding"))
           .join(embBcast(d)(probes.join(qs.select(col("qid"), col("qe")), "qid")),
             "label")
@@ -2480,7 +2601,7 @@ object LlmExtras {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
+        import graft.functions.VectorExprs.sl2
         val subvecs = pqSubvecs(s, d)
         // Lloyd codes + codebook trained in-plan per invocation
         // ([[bpqLloydTrained]]); then LUT build + ADC scan + rerank
@@ -2532,9 +2653,7 @@ object LlmExtras {
         val emb = T.embeddings(s, d)
         val qs = emb.where(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         short
           .join(embBcast(d)(emb.select(col("vec_id"), col("embedding"))), "vec_id")
           .join(embBcast(d)(qs), "qid")
@@ -2558,140 +2677,49 @@ object LlmExtras {
     // vec_id 2r, no rank table). Graded per query: top-10 among
     // visited by exact scaled-long cosine + the visited budget.
     Q("llm_ann_batch_nsw", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until NswPlanes).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until NswPlanes).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
-      val flips = (0 until NswPlanes).map(p => 1L << p).mkString("[0,", ",", "]")
-      val steps = (1 to BnswSteps).map { t =>
-        s"v$t AS MATERIALIZED (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM v${t - 1} " +
-          s"UNION ALL SELECT b.qid, adj.t AS v FROM b${t - 1} b JOIN adj ON adj.s = b.v)), " +
-          s"b$t AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
-          "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
-          s"FROM v$t vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn <= $BnswBeam)"
-      }.mkString(", ")
-      "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
-        "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
+      val (projCols, bucketExpr) = signSql(NswPlanes)
+      UxSql +
         s"projs AS (SELECT vec_id, $projCols FROM ux WHERE vec_id % 2 = 0 GROUP BY vec_id), " +
         s"bkt AS MATERIALIZED (SELECT vec_id, CAST($bucketExpr AS BIGINT) AS bucket FROM projs), " +
-        s"nbf AS (SELECT DISTINCT bucket, xor(bucket, f) AS nb FROM bkt, " +
-        s"(SELECT CAST(UNNEST($flips) AS BIGINT) AS f) fl), " +
-        "pool AS (SELECT a.vec_id AS s, b.vec_id AS t FROM bkt a " +
-        "JOIN nbf ON nbf.bucket = a.bucket JOIN bkt b ON b.bucket = nbf.nb " +
-        "AND b.vec_id <> a.vec_id), " +
-        "pdn AS MATERIALIZED (SELECT p.s, p.t, " +
-        "SUM(CAST(FLOOR((a.x - b.x) * (a.x - b.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-        "FROM pool p JOIN ux a ON a.vec_id = p.s JOIN ux b ON b.vec_id = p.t AND b.i = a.i " +
-        "GROUP BY p.s, p.t), " +
-        "knn AS (SELECT s, t FROM (SELECT s, t, " +
-        s"ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2, t) AS rn FROM pdn) WHERE rn <= $NswM), " +
+        flatKnnSql +
         "nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM bkt), " +
         "sc AS (SELECT s, t FROM (SELECT vec_id AS s, 2 * (" +
         sqlHash32("'bnsw:sc:' || CAST(h AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)") +
         " % (SELECT n FROM nn)) AS t FROM bkt, (SELECT UNNEST([0,1]) AS h) hh) x WHERE t <> s), " +
-        "adj AS MATERIALIZED (SELECT DISTINCT s, t FROM (" +
-        "SELECT s, t FROM knn UNION ALL SELECT t, s FROM knn " +
-        "UNION ALL SELECT s, t FROM sc UNION ALL SELECT t, s FROM sc)), " +
-        "qd AS MATERIALIZED (SELECT q.vec_id AS qid, u.vec_id AS v, " +
-        "SUM(CAST(FLOOR((u.x - q.x) * (u.x - q.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-        "FROM ux u JOIN ux q ON q.i = u.i AND u.vec_id % 2 = 0 AND q.vec_id % 2 = 1 " +
-        "GROUP BY qid, v), " +
+        adjSql("") + ", " +
+        BatchQdSql +
         "ent AS (SELECT 2 * (" + sqlHash32("'bnsw:entry:0'") + " % (SELECT n FROM nn)) AS v), " +
         "v0 AS (SELECT q.vec_id AS qid, e.v FROM " +
         "(SELECT DISTINCT vec_id FROM ux WHERE vec_id % 2 = 1) q, ent e), " +
         "b0 AS (SELECT qid, v FROM v0), " +
-        steps + ", " +
-        s"nvq AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_visited FROM v$BnswSteps GROUP BY qid), " +
-        "nrm AS (SELECT vec_id, SUM(CAST(FLOOR(x * x * 1e14 + 0.5) AS BIGINT)) AS nl " +
-        "FROM ux GROUP BY vec_id), " +
-        s"dq AS (SELECT c.qid, c.v, SUM(CAST(FLOOR(u.x * q.x * 1e14 + 0.5) AS BIGINT)) AS dotl " +
-        s"FROM v$BnswSteps c JOIN ux u ON u.vec_id = c.v " +
-        "JOIN ux q ON q.vec_id = c.qid AND q.i = u.i GROUP BY c.qid, c.v), " +
-        "cosd AS (SELECT dq.qid, dq.v, (CAST(dq.dotl AS DOUBLE) / 1e14) / " +
-        "(SQRT(CAST(ni.nl AS DOUBLE) / 1e14) * SQRT(CAST(nq2.nl AS DOUBLE) / 1e14)) AS cc " +
-        "FROM dq JOIN nrm ni ON ni.vec_id = dq.v JOIN nrm nq2 ON nq2.vec_id = dq.qid) " +
-        "SELECT x.qid AS query_id, CAST(x.rk AS BIGINT) AS rk, x.v AS vec_id, " +
-        sqlS6("x.cc") + " AS cos_sim, nvq.n_visited " +
-        "FROM (SELECT qid, v, cc, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cc DESC, v) AS rk " +
-        "FROM cosd) x JOIN nvq ON nvq.qid = x.qid WHERE x.rk <= 10 ORDER BY query_id, rk"
+        batchRoundsSql("", "adj", BnswSteps, BnswBeam) + ", " +
+        batchTopTenSql(s"v$BnswSteps")
     },
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
-        val emb = T.embeddings(s, d)
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("e"),
-            col("embedding"))
+        val emb = withE(T.embeddings(s, d))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val idx = emb.where(col("vec_id") % 2 === 0)
         val qs = emb.where(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("qid"), col("e").as("qe"),
             col("embedding").as("qemb"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // index graph built in-plan per invocation ([[bnswAdj]]),
-        // materialized once for the batched search rounds
-        val adj = bnswAdj(s, d).transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+        // index graph built in-plan per invocation ([[nswAdj]]; dense
+        // member ranks make shortcut targets pure arithmetic: member r ↔
+        // vec_id 2r), materialized once for the batched search rounds
+        val adj = nswAdj(s, d, idx)(nswShortcuts(_, "bnsw:sc:", lit(2) * _))
+          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // the lazy broadcast n scalar (index-half cardinality — the same
         // count the former sigs frame carried)
         val nn = idx.agg(count(lit(1)).as("n"))
         val ent = nn.select(
           (lit(2) * (hash32(lit("bnsw:entry:0")) % col("n"))).as("v"))
-        val embv = idx.select(col("vec_id").as("v"), col("e"))
-        // the checkpointed state CARRIES its query distance (qid, v, d2):
-        // each round evaluates sl2 only on the ~beam×degree EXPANSION
-        // rows instead of re-scoring the whole visited set, and the beam
-        // pick is a pure window over the state — no joins. d2 is a
-        // deterministic function of (qid, v), so the batch-wide distinct
-        // over the carried triple dedups exactly like (qid, v).
-        def withD2(vdf: DataFrame): DataFrame =
-          vdf.join(embBcast(d)(embv), "v")
-            .join(embBcast(d)(qs.select(col("qid"), col("qe"))), "qid")
-            .select(col("qid"), col("v"), sl2(col("e"), col("qe")).as("d2"))
-        var vis = withD2(qs.select(col("qid")).crossJoin(broadcast(ent)))
-          .localCheckpoint()
-        var beam = vis
-        for (_ <- 1 to BnswSteps) {
-          // ONE exchange per round (round 16 optimization, guide §2.4):
-          // the state shuffles by qid once; the (qid, v) dedup — spelled
-          // as GROUP BY (qid, v) MIN(d2), identical to the old distinct
-          // because d2 is a deterministic function of (qid, v) — and the
-          // beam-pick window both run on that partitioning without their
-          // own exchanges (hash(qid) clusters every (qid, v) group and
-          // every qid window). The old shape paid a distinct exchange on
-          // (qid, v, d2) AND a window exchange on qid per round.
-          vis = vis.unionAll(withD2(
-              beam.join(adj, beam("v") === adj("s"))
-                .select(beam("qid"), col("t").as("v"))))
-            .repartition(col("qid"))
-            .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
-            .localCheckpoint()
-          beam = vis.withColumn("rn", row_number().over(
-              Window.partitionBy("qid").orderBy(col("d2"), col("v"))))
-            .where(col("rn") <= BnswBeam)
-            .select("qid", "v", "d2")
-        }
-        val cos = (sdotl(col("embedding"), col("qemb")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qemb"), col("qemb")).cast("double") / lit(1e14)))
-        // n_visited rides the SAME window pass as the top-10 pick (round
-        // 17, guide §2.4): the broadcast joins are 1:1 (every visited v
-        // is an index member, every qid a query), so a full-frame
-        // count(*) over the rank window's own spec equals the old
-        // separate groupBy(qid) aggregate — one Window operator instead
-        // of an aggregate + broadcast-join pass over the visited set.
-        val wTop = Window.partitionBy("qid").orderBy(col("cc").desc, col("v"))
-        vis.join(embBcast(d)(idx.select(col("vec_id").as("v"), col("embedding"))), "v")
-          .join(embBcast(d)(qs.select(col("qid"), col("qemb"))), "qid")
-          .withColumn("cc", cos)
-          .withColumn("rk", row_number().over(wTop).cast("long"))
-          .withColumn("n_visited", count(lit(1)).over(
-            wTop.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-          .where(col("rk") <= 10)
-          .select(col("qid").as("query_id"), col("rk"), col("v").as("vec_id"),
-            s6(col("cc")).as("cos_sim"), col("n_visited"))
-          .orderBy("query_id", "rk")
+        val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
+          qs.select(col("qid"), col("qe")))
+        val vis = beam.search(
+          beam.withD2(qs.select(col("qid")).crossJoin(broadcast(ent))).localCheckpoint(),
+          adj, BnswSteps, BnswBeam)
+        batchTopTen(d, vis, idx, qs)
       }),
 
     // Hierarchical NSW (round 14) — see the [[HnswStepsU]] scaladoc for
@@ -2702,175 +2730,48 @@ object LlmExtras {
     // assignment and the descent. Oracle = per-layer graph CTEs + the
     // unrolled 2/2/4-round descent (the llm_ann_nsw pattern).
     Q("llm_ann_hnsw", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until NswPlanes).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until NswPlanes).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
-      val flips = (0 until NswPlanes).map(p => 1L << p).mkString("[0,", ",", "]")
-      def layerCtes(l: Int): String =
-        s"m$l AS (SELECT b.vec_id, b.bucket FROM bkt b JOIN lvl ON lvl.vec_id = b.vec_id AND lvl.l >= $l), " +
-          s"pool$l AS (SELECT a.vec_id AS s, c.vec_id AS t FROM m$l a " +
-          s"JOIN nbf ON nbf.bucket = a.bucket JOIN m$l c ON c.bucket = nbf.nb AND c.vec_id <> a.vec_id), " +
-          s"pdn$l AS MATERIALIZED (SELECT p.s, p.t, " +
-          "SUM(CAST(FLOOR((a.x - b.x) * (a.x - b.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-          s"FROM pool$l p JOIN ux a ON a.vec_id = p.s JOIN ux b ON b.vec_id = p.t AND b.i = a.i GROUP BY p.s, p.t), " +
-          s"knn$l AS (SELECT s, t FROM (SELECT s, t, " +
-          s"ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2, t) AS rn FROM pdn$l) WHERE rn <= $NswM), " +
-          s"rkm$l AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS rk FROM m$l), " +
-          s"nn$l AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM m$l), " +
-          s"sc$l AS (SELECT a.vec_id AS s, r.vec_id AS t FROM (SELECT vec_id, " +
-          sqlHash32("'hnsw:sc:' || CAST(h AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)") +
-          s" % (SELECT n FROM nn$l) AS trk FROM m$l, (SELECT UNNEST([0,1]) AS h) hh) a " +
-          s"JOIN rkm$l r ON r.rk = a.trk WHERE r.vec_id <> a.vec_id), " +
-          s"adj$l AS MATERIALIZED (SELECT DISTINCT s, t FROM (" +
-          s"SELECT s, t FROM knn$l UNION ALL SELECT t, s FROM knn$l " +
-          s"UNION ALL SELECT s, t FROM sc$l UNION ALL SELECT t, s FROM sc$l))"
-      def layerSearch(pfx: String, adj: String, seed: String, steps: Int,
-          beam: Int): String = {
-        val rounds = (1 to steps).map { t =>
-          s"v$pfx$t AS MATERIALIZED (SELECT DISTINCT v FROM (SELECT v FROM v$pfx${t - 1} " +
-            s"UNION ALL SELECT $adj.t AS v FROM b$pfx${t - 1} b JOIN $adj ON $adj.s = b.v)), " +
-            s"b$pfx$t AS (SELECT v FROM (SELECT vv.v, ROW_NUMBER() OVER (ORDER BY qd.d2, vv.v) AS rn " +
-            s"FROM v$pfx$t vv JOIN qd ON qd.vec_id = vv.v) WHERE rn <= $beam)"
-        }.mkString(", ")
-        s"v${pfx}0 AS (SELECT v FROM $seed), b${pfx}0 AS (SELECT v FROM $seed), " + rounds
-      }
+      val (projCols, bucketExpr) = signSql(NswPlanes)
       def bestOf(name: String, src: String): String =
         s"$name AS (SELECT v FROM (SELECT vv.v, ROW_NUMBER() OVER (ORDER BY qd.d2, vv.v) AS rn " +
           s"FROM $src vv JOIN qd ON qd.vec_id = vv.v) WHERE rn = 1)"
-      "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
-        "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
-        "q AS (SELECT i, x AS qx FROM ux WHERE vec_id = 0), " +
-        "nq AS (SELECT SUM(CAST(FLOOR(qx * qx * 1e14 + 0.5) AS BIGINT)) AS nl FROM q), " +
+      UxSql + QuerySql +
         s"projs AS (SELECT vec_id, $projCols FROM ux WHERE vec_id <> 0 GROUP BY vec_id), " +
         s"bkt AS MATERIALIZED (SELECT vec_id, CAST($bucketExpr AS BIGINT) AS bucket FROM projs), " +
-        "lvl AS (SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2 WHEN h % 4 = 0 THEN 1 ELSE 0 END AS l " +
-        "FROM (SELECT vec_id, " + sqlHash32("'hnsw:lvl:' || CAST(vec_id AS VARCHAR)") + " AS h " +
-        "FROM embeddings WHERE vec_id <> 0)), " +
-        s"nbf AS (SELECT DISTINCT bucket, xor(bucket, f) AS nb FROM bkt, " +
-        s"(SELECT CAST(UNNEST($flips) AS BIGINT) AS f) fl), " +
-        layerCtes(2) + ", " + layerCtes(1) + ", " + layerCtes(0) + ", " +
+        layersSql("embeddings WHERE vec_id <> 0", "hnsw:sc:") +
         "qd AS MATERIALIZED (SELECT u.vec_id, " +
         "SUM(CAST(FLOOR((u.x - q.qx) * (u.x - q.qx) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
         "FROM ux u JOIN q ON u.i = q.i WHERE u.vec_id <> 0 GROUP BY u.vec_id), " +
         "ent AS (SELECT r.vec_id AS v FROM rkm2 r WHERE r.rk = " +
         sqlHash32("'hnsw:entry:0'") + " % (SELECT n FROM nn2)), " +
-        layerSearch("a", "adj2", "ent", HnswStepsU, HnswBeamU) + ", " +
+        querySearchSql("a", "adj2", "ent", HnswStepsU, HnswBeamU) + ", " +
         bestOf("s1", s"va$HnswStepsU") + ", " +
-        layerSearch("b", "adj1", "s1", HnswStepsU, HnswBeamU) + ", " +
+        querySearchSql("b", "adj1", "s1", HnswStepsU, HnswBeamU) + ", " +
         bestOf("s0", s"vb$HnswStepsU") + ", " +
-        layerSearch("c", "adj0", "s0", HnswSteps0, NswBeam) + ", " +
+        querySearchSql("c", "adj0", "s0", HnswSteps0, NswBeam) + ", " +
         s"cand AS (SELECT DISTINCT v AS vec_id FROM (SELECT v FROM va$HnswStepsU " +
         s"UNION ALL SELECT v FROM vb$HnswStepsU UNION ALL SELECT v FROM vc$HnswSteps0)), " +
-        "nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_visited FROM cand), " +
-        "cd AS (SELECT u.vec_id, " +
-        "SUM(CAST(FLOOR(u.x * q.qx * 1e14 + 0.5) AS BIGINT)) AS dotl, " +
-        "SUM(CAST(FLOOR(u.x * u.x * 1e14 + 0.5) AS BIGINT)) AS nl " +
-        "FROM ux u JOIN q ON u.i = q.i JOIN cand c ON c.vec_id = u.vec_id GROUP BY u.vec_id), " +
-        "cosd AS (SELECT vec_id, (CAST(dotl AS DOUBLE) / 1e14) / " +
-        "(SQRT(CAST(nl AS DOUBLE) / 1e14) * SQRT((SELECT CAST(nl AS DOUBLE) FROM nq) / 1e14)) AS cc FROM cd), " +
-        "alld AS (SELECT u.vec_id, " +
-        "SUM(CAST(FLOOR(u.x * q.qx * 1e14 + 0.5) AS BIGINT)) AS dotl, " +
-        "SUM(CAST(FLOOR(u.x * u.x * 1e14 + 0.5) AS BIGINT)) AS nl " +
-        "FROM ux u JOIN q ON u.i = q.i WHERE u.vec_id <> 0 GROUP BY u.vec_id), " +
-        "topx AS (SELECT vec_id FROM (SELECT vec_id, (CAST(dotl AS DOUBLE) / 1e14) / " +
-        "(SQRT(CAST(nl AS DOUBLE) / 1e14) * SQRT((SELECT CAST(nl AS DOUBLE) FROM nq) / 1e14)) AS c " +
-        "FROM alld) ORDER BY c DESC, vec_id LIMIT 10), " +
-        "ranked AS (SELECT vec_id, cc, ROW_NUMBER() OVER (ORDER BY cc DESC, vec_id) AS rk FROM cosd) " +
-        "SELECT CAST(rk AS BIGINT) AS rk, vec_id, " + sqlS6("cc") + " AS cos_sim, " +
-        "CAST(CASE WHEN vec_id IN (SELECT vec_id FROM topx) THEN 1 ELSE 0 END AS BIGINT) AS in_exact10, " +
-        "(SELECT n_visited FROM nv) AS n_visited " +
-        "FROM ranked WHERE rk <= 10 ORDER BY rk"
+        QueryTopTenSql
     },
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
-        val emb = T.embeddings(s, d)
-          .where(col("vec_id") =!= 0)
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("e"),
-            col("embedding"))
+        val emb = withE(T.embeddings(s, d).where(col("vec_id") =!= 0))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // layered graph + member-rank dictionary built in-plan per
-        // invocation ([[hnswGraph]], ONE pass for all layers; identical
+        // invocation ([[hnswLayers]], ONE pass for all layers; identical
         // edge sets to per-layer builds, the oracle's per-layer CTEs
         // unchanged), materialized once for the descent rounds
-        val (adjAllM, ranked) = hnswGraph(s, d)
-        val adjAll = adjAllM.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
-        def adjL(l: Int): DataFrame =
-          adjAll.where(col("layer") === l).select("s", "t")
-        val (adj2, adj1, adj0) = (adjL(2), adjL(1), adjL(0))
+        val (adjAll, ranked) = hnswLayers(s, d, emb, "hnsw:sc:")
         val qArr = T.embeddings(s, d).where(col("vec_id") === 0)
           .select(transform(col("embedding"), x => x.cast("double")).as("qe"))
-        val embv = emb.select(col("vec_id").as("v"), col("e"))
         // visited-restricted query distances + one checkpoint per round
         // (the round-14 llm_ann_nsw discipline)
-        def beamOf(vdf: DataFrame, b: Int): DataFrame =
-          embv.join(broadcast(vdf), "v")
-            .crossJoin(broadcast(qArr))
-            .select(col("v"), sl2(col("e"), col("qe")).as("d2"))
-            .orderBy(col("d2"), col("v"))
-            .limit(b)
-            .select(col("v"))
-        val ent = ranked.where(col("layer") === 2)
-          .join(broadcast(nnl.where(col("layer") === 2).select(col("n"))),
-            col("rk") === hash32(lit("hnsw:entry:0")) % col("n"))
-          .select(col("vec_id").as("v"))
-        // seeds stay LAZY (each layer's 1-row seed and the entry pick fold
-        // into the next checkpointed round's job), but every ROUND
-        // checkpoints: leaving the upper layers' multi-round lineage lazy
-        // was MEASURED catastrophic (33 s steady vs 5 — each downstream
-        // consumer re-plans and re-executes the whole un-cut walk, the
-        // localCheckpoint-stats pathology class), so the per-round cut is
-        // load-bearing, not optional.
-        def searchLayer(seed: DataFrame, adj: DataFrame, steps: Int,
-            b: Int): DataFrame = {
-          var vis = seed
-          var beam = seed
-          for (_ <- 1 to steps) {
-            vis = vis.unionAll(
-                beam.join(adj, beam("v") === adj("s")).select(col("t").as("v")))
-              .repartition(1, col("v"))
-              .distinct()
-              .localCheckpoint()
-            beam = beamOf(vis, b)
-          }
-          vis
-        }
-        val v2 = searchLayer(ent, adj2, HnswStepsU, HnswBeamU)
-        val v1 = searchLayer(beamOf(v2, 1), adj1, HnswStepsU, HnswBeamU)
-        val v0 = searchLayer(beamOf(v1, 1), adj0, HnswSteps0, NswBeam)
-        val cand = v2.unionAll(v1).unionAll(v0)
-          .repartition(1, col("v")).distinct()
+        val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr)
+          .descend(hnswEntry(ranked, "hnsw:entry:0"), layerAdj(adjAll),
+            HnswStepsU, HnswBeamU, HnswSteps0, NswBeam)
+        val cand = vis.repartition(1, col("v")).distinct()
           .select(col("v").as("vec_id"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val nv = cand.agg(count(lit(1)).as("n_visited"))
-        val cos = (sdotl(col("embedding"), col("qe2")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe2"), col("qe2")).cast("double") / lit(1e14)))
-        val qRaw = T.embeddings(s, d).where(col("vec_id") === 0)
-          .select(col("embedding").as("qe2"))
-        val topx = T.embeddings(s, d).where(col("vec_id") =!= 0)
-          .crossJoin(broadcast(qRaw))
-          .withColumn("c", cos)
-          .orderBy(col("c").desc, col("vec_id"))
-          .limit(10)
-          .select(col("vec_id"), lit(1L).as("hit"))
-        T.embeddings(s, d).join(cand, "vec_id")
-          .crossJoin(broadcast(qRaw))
-          .withColumn("cc", cos)
-          .orderBy(col("cc").desc, col("vec_id"))
-          .limit(10)
-          .withColumn("rk", row_number().over(
-            Window.orderBy(col("cc").desc, col("vec_id"))).cast("long"))
-          .join(broadcast(topx), Seq("vec_id"), "left")
-          .crossJoin(broadcast(nv))
-          .select(col("rk"), col("vec_id"), s6(col("cc")).as("cos_sim"),
-            coalesce(col("hit"), lit(0L)).as("in_exact10"), col("n_visited"))
-          .orderBy("rk")
+        queryTopTen(s, d, cand)
       }),
 
     // BATCHED hierarchical NSW (round 15, VERDICT r14 item 3) — the
@@ -2884,97 +2785,25 @@ object LlmExtras {
     // Geometry + measured recall/budget at [[BhnswSteps0]]. Broadcasts
     // on corpus-proportional sides are size-gated ([[embBcast]]).
     Q("llm_ann_batch_hnsw", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until NswPlanes).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until NswPlanes).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
-      val flips = (0 until NswPlanes).map(p => 1L << p).mkString("[0,", ",", "]")
+      val (projCols, bucketExpr) = signSql(NswPlanes)
       // per-layer graph CTEs: llm_ann_hnsw's wiring verbatim (membership
       // joins the same lvl rule) restricted to the even-id index, with
       // batch-specific shortcut salt
-      def layerCtes(l: Int): String =
-        s"m$l AS (SELECT b.vec_id, b.bucket FROM bkt b JOIN lvl ON lvl.vec_id = b.vec_id AND lvl.l >= $l), " +
-          s"pool$l AS (SELECT a.vec_id AS s, c.vec_id AS t FROM m$l a " +
-          s"JOIN nbf ON nbf.bucket = a.bucket JOIN m$l c ON c.bucket = nbf.nb AND c.vec_id <> a.vec_id), " +
-          s"pdn$l AS MATERIALIZED (SELECT p.s, p.t, " +
-          "SUM(CAST(FLOOR((a.x - b.x) * (a.x - b.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-          s"FROM pool$l p JOIN ux a ON a.vec_id = p.s JOIN ux b ON b.vec_id = p.t AND b.i = a.i GROUP BY p.s, p.t), " +
-          s"knn$l AS (SELECT s, t FROM (SELECT s, t, " +
-          s"ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2, t) AS rn FROM pdn$l) WHERE rn <= $NswM), " +
-          s"rkm$l AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS rk FROM m$l), " +
-          s"nn$l AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM m$l), " +
-          s"sc$l AS (SELECT a.vec_id AS s, r.vec_id AS t FROM (SELECT vec_id, " +
-          sqlHash32("'bhnsw:sc:' || CAST(h AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)") +
-          s" % (SELECT n FROM nn$l) AS trk FROM m$l, (SELECT UNNEST([0,1]) AS h) hh) a " +
-          s"JOIN rkm$l r ON r.rk = a.trk WHERE r.vec_id <> a.vec_id), " +
-          s"adj$l AS MATERIALIZED (SELECT DISTINCT s, t FROM (" +
-          s"SELECT s, t FROM knn$l UNION ALL SELECT t, s FROM knn$l " +
-          s"UNION ALL SELECT s, t FROM sc$l UNION ALL SELECT t, s FROM sc$l))"
-      // batched layer search: per-query beam state, rounds unrolled
-      def blayer(pfx: String, adj: String, seed: String, steps: Int,
-          beam: Int): String = {
-        val rounds = (1 to steps).map { t =>
-          s"v$pfx$t AS MATERIALIZED (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM v$pfx${t - 1} " +
-            s"UNION ALL SELECT b.qid, $adj.t AS v FROM b$pfx${t - 1} b JOIN $adj ON $adj.s = b.v)), " +
-            s"b$pfx$t AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
-            "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
-            s"FROM v$pfx$t vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn <= $beam)"
-        }.mkString(", ")
-        s"v${pfx}0 AS (SELECT qid, v FROM $seed), b${pfx}0 AS (SELECT qid, v FROM $seed), " + rounds
-      }
-      def bestOf(name: String, src: String): String =
-        s"$name AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
-          "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
-          s"FROM $src vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn = 1)"
-      "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
-        "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
+      UxSql +
         s"projs AS (SELECT vec_id, $projCols FROM ux WHERE vec_id % 2 = 0 GROUP BY vec_id), " +
         s"bkt AS MATERIALIZED (SELECT vec_id, CAST($bucketExpr AS BIGINT) AS bucket FROM projs), " +
-        "lvl AS (SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2 WHEN h % 4 = 0 THEN 1 ELSE 0 END AS l " +
-        "FROM (SELECT vec_id, " + sqlHash32("'hnsw:lvl:' || CAST(vec_id AS VARCHAR)") + " AS h " +
-        "FROM embeddings WHERE vec_id % 2 = 0)), " +
-        s"nbf AS (SELECT DISTINCT bucket, xor(bucket, f) AS nb FROM bkt, " +
-        s"(SELECT CAST(UNNEST($flips) AS BIGINT) AS f) fl), " +
-        layerCtes(2) + ", " + layerCtes(1) + ", " + layerCtes(0) + ", " +
-        "qd AS MATERIALIZED (SELECT q.vec_id AS qid, u.vec_id AS v, " +
-        "SUM(CAST(FLOOR((u.x - q.x) * (u.x - q.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-        "FROM ux u JOIN ux q ON q.i = u.i AND u.vec_id % 2 = 0 AND q.vec_id % 2 = 1 " +
-        "GROUP BY qid, v), " +
+        layersSql("embeddings WHERE vec_id % 2 = 0", "bhnsw:sc:") +
+        BatchQdSql +
         "ent AS (SELECT r.vec_id AS v FROM rkm2 r WHERE r.rk = " +
         sqlHash32("'bhnsw:entry:0'") + " % (SELECT n FROM nn2)), " +
         "seed2 AS (SELECT q.vec_id AS qid, e.v FROM " +
         "(SELECT DISTINCT vec_id FROM ux WHERE vec_id % 2 = 1) q, ent e), " +
-        blayer("a", "adj2", "seed2", BhnswStepsU, BhnswBeamU) + ", " +
-        bestOf("s1", s"va$BhnswStepsU") + ", " +
-        blayer("b", "adj1", "s1", BhnswStepsU, BhnswBeamU) + ", " +
-        bestOf("s0", s"vb$BhnswStepsU") + ", " +
-        blayer("c", "adj0", "s0", BhnswSteps0, BnswBeam) + ", " +
-        s"cand AS (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM va$BhnswStepsU " +
-        s"UNION ALL SELECT qid, v FROM vb$BhnswStepsU " +
-        s"UNION ALL SELECT qid, v FROM vc$BhnswSteps0)), " +
-        "nvq AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_visited FROM cand GROUP BY qid), " +
-        "nrm AS (SELECT vec_id, SUM(CAST(FLOOR(x * x * 1e14 + 0.5) AS BIGINT)) AS nl " +
-        "FROM ux GROUP BY vec_id), " +
-        "dq AS (SELECT c.qid, c.v, SUM(CAST(FLOOR(u.x * q.x * 1e14 + 0.5) AS BIGINT)) AS dotl " +
-        "FROM cand c JOIN ux u ON u.vec_id = c.v " +
-        "JOIN ux q ON q.vec_id = c.qid AND q.i = u.i GROUP BY c.qid, c.v), " +
-        "cosd AS (SELECT dq.qid, dq.v, (CAST(dq.dotl AS DOUBLE) / 1e14) / " +
-        "(SQRT(CAST(ni.nl AS DOUBLE) / 1e14) * SQRT(CAST(nq2.nl AS DOUBLE) / 1e14)) AS cc " +
-        "FROM dq JOIN nrm ni ON ni.vec_id = dq.v JOIN nrm nq2 ON nq2.vec_id = dq.qid) " +
-        "SELECT x.qid AS query_id, CAST(x.rk AS BIGINT) AS rk, x.v AS vec_id, " +
-        sqlS6("x.cc") + " AS cos_sim, nvq.n_visited " +
-        "FROM (SELECT qid, v, cc, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cc DESC, v) AS rk " +
-        "FROM cosd) x JOIN nvq ON nvq.qid = x.qid WHERE x.rk <= 10 ORDER BY query_id, rk"
+        batchDescentSql +
+        batchTopTenSql("cand")
     },
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.{sdotl, sl2}
-        val emb = T.embeddings(s, d)
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("e"),
-            col("embedding"))
+        val emb = withE(T.embeddings(s, d))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val idx = emb.where(col("vec_id") % 2 === 0)
         val qs = emb.where(col("vec_id") % 2 === 1)
@@ -2982,89 +2811,29 @@ object LlmExtras {
             col("embedding").as("qemb"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // layered graph + member-rank dictionary built in-plan per
-        // invocation ([[bhnswGraph]], ONE pass for all layers),
+        // invocation ([[hnswLayers]], ONE pass for all layers),
         // materialized once for the batched descent rounds
-        val (adjAllM, ranked) = bhnswGraph(s, d)
-        val adjAll = adjAllM.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
-        def adjL(l: Int): DataFrame =
-          adjAll.where(col("layer") === l).select("s", "t")
-        val (adj2, adj1, adj0) = (adjL(2), adjL(1), adjL(0))
-        val embv = idx.select(col("vec_id").as("v"), col("e"))
-        // the state CARRIES its query distance (qid, v, d2), so each
-        // round scores only the expansion rows and the beam pick is a
-        // pure per-query window over the state (the batch_nsw shape)
-        def withD2(vdf: DataFrame): DataFrame =
-          vdf.join(embBcast(d)(embv), "v")
-            .join(embBcast(d)(qs.select(col("qid"), col("qe"))), "qid")
-            .select(col("qid"), col("v"), sl2(col("e"), col("qe")).as("d2"))
-        def beamPick(vis: DataFrame, b: Int): DataFrame =
-          vis.withColumn("rn", row_number().over(
-              Window.partitionBy("qid").orderBy(col("d2"), col("v"))))
-            .where(col("rn") <= b)
-            .select("qid", "v", "d2")
+        val (adjAll, ranked) = hnswLayers(s, d, idx, "bhnsw:sc:")
+        val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
+          qs.select(col("qid"), col("qe")))
         // every round checkpoints (the hnsw lesson, re-confirmed by A/B
         // here: fusing the upper layers' two beam-1 rounds into one cut
         // measured 15.1 s steady vs ~13 — exchange reuse does not absorb
         // the duplicated intra-layer subtree across the checkpoint-free
-        // rounds; BASELINE.md round-15 entry)
-        def bsearch(seed: DataFrame, adj: DataFrame, steps: Int,
-            b: Int): DataFrame = {
-          var vis = seed
-          var beam = seed
-          for (_ <- 1 to steps) {
-            // ONE exchange per round (round 16 optimization, guide
-            // §2.4): shuffle the state by qid once; the (qid, v) dedup
-            // (GROUP BY + MIN(d2) — identical to the old distinct, d2
-            // being a deterministic function of (qid, v)) and the
-            // beam-pick window both reuse that partitioning.
-            vis = vis.unionAll(withD2(
-                beam.join(adj, beam("v") === adj("s"))
-                  .select(beam("qid"), col("t").as("v"))))
-              .repartition(col("qid"))
-              .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
-              .localCheckpoint()
-            beam = beamPick(vis, b)
-          }
-          vis
-        }
-        val ent = ranked.where(col("layer") === 2)
-          .join(broadcast(nnl.where(col("layer") === 2).select(col("n"))),
-            col("rk") === hash32(lit("bhnsw:entry:0")) % col("n"))
-          .select(col("vec_id").as("v"))
-        // seed stays lazy — the 1-row entry pick and the seed distances
-        // fold into the first round's checkpointed job
-        val seed2 = withD2(qs.select(col("qid")).crossJoin(broadcast(ent)))
-        val v2 = bsearch(seed2, adj2, BhnswStepsU, BhnswBeamU)
-        val v1 = bsearch(beamPick(v2, 1), adj1, BhnswStepsU, BhnswBeamU)
-        val v0 = bsearch(beamPick(v1, 1), adj0, BhnswSteps0, BnswBeam)
-        val vis = v2.unionAll(v1).unionAll(v0)
+        // rounds; BASELINE.md round-15 entry). The seed stays lazy — the
+        // 1-row entry pick and the seed distances fold into the first
+        // round's checkpointed job.
+        val seed2 = beam.withD2(qs.select(col("qid"))
+          .crossJoin(broadcast(hnswEntry(ranked, "bhnsw:entry:0"))))
+        val vis = beam.descend(seed2, layerAdj(adjAll),
+            BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
           .select("qid", "v")
           // one exchange: hash(qid) serves this distinct AND the final
           // top-10/n_visited window (round 16/17, guide §2.4); the cache
           // that fed the former separate n_visited aggregate is gone
           // with it — vis now has exactly one consumer
           .repartition(col("qid")).distinct()
-        val cos = (sdotl(col("embedding"), col("qemb")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qemb"), col("qemb")).cast("double") / lit(1e14)))
-        // n_visited rides the SAME window pass as the top-10 pick (round
-        // 17, guide §2.4): the broadcast joins are 1:1 (every visited v
-        // is an index member, every qid a query), so a full-frame
-        // count(*) over the rank window's own spec equals the old
-        // separate groupBy(qid) aggregate — one Window operator instead
-        // of an aggregate + broadcast-join pass over the visited set.
-        val wTop = Window.partitionBy("qid").orderBy(col("cc").desc, col("v"))
-        vis.join(embBcast(d)(idx.select(col("vec_id").as("v"), col("embedding"))), "v")
-          .join(embBcast(d)(qs.select(col("qid"), col("qemb"))), "qid")
-          .withColumn("cc", cos)
-          .withColumn("rk", row_number().over(wTop).cast("long"))
-          .withColumn("n_visited", count(lit(1)).over(
-            wTop.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-          .where(col("rk") <= 10)
-          .select(col("qid").as("query_id"), col("rk"), col("v").as("vec_id"),
-            s6(col("cc")).as("cos_sim"), col("n_visited"))
-          .orderBy("query_id", "rk")
+        batchTopTen(d, vis, idx, qs)
       }),
 
     // Incremental insert for the GRAPH index family (round 16, VERDICT
@@ -3073,7 +2842,7 @@ object LlmExtras {
     // graph indexes grow by DESCENT + LOCAL RE-LINK against a frozen
     // graph, never by rebuild. The non-query corpus splits by
     // llm_ann_ivf_upsert's hash (~25% delta); the frozen layered graph
-    // wires the ~75% base members only ([[uhnswGraph]] — 'hnsw:lvl:'
+    // wires the ~75% base members only ([[hnswLayers]] — 'hnsw:lvl:'
     // levels, 'uhnsw:sc:' shortcuts); every delta node then descends it
     // BATCHED (the llm_ann_batch_hnsw machinery verbatim: one shared
     // entry, beam-1 upper rounds, beam-12 flat rounds at layer 0, beam
@@ -3091,60 +2860,15 @@ object LlmExtras {
     // link-recall@4 of inserted links vs each delta's exact 4-NN among
     // base (the merged-vs-rebuilt parity lemma).
     Q("llm_ann_hnsw_upsert", Some {
-      def sgnSql(p: Int) =
-        s"(CASE WHEN ${sqlHash32(s"CONCAT($p, ':', i - 1)")} % 2 = 0 THEN 1.0 ELSE -1.0 END)"
-      val projCols = (0 until NswPlanes).map(p =>
-        s"SUM(CAST(FLOOR(x * ${sgnSql(p)} * 1e14 + 0.5) AS BIGINT)) AS p$p").mkString(", ")
-      val bucketExpr = (0 until NswPlanes).map(p =>
-        s"(CASE WHEN p$p > 0 THEN ${1L << p} ELSE 0 END)").mkString(" + ")
-      val flips = (0 until NswPlanes).map(p => 1L << p).mkString("[0,", ",", "]")
-      def layerCtes(l: Int): String =
-        s"m$l AS (SELECT b.vec_id, b.bucket FROM bkt b JOIN lvl ON lvl.vec_id = b.vec_id AND lvl.l >= $l), " +
-          s"pool$l AS (SELECT a.vec_id AS s, c.vec_id AS t FROM m$l a " +
-          s"JOIN nbf ON nbf.bucket = a.bucket JOIN m$l c ON c.bucket = nbf.nb AND c.vec_id <> a.vec_id), " +
-          s"pdn$l AS MATERIALIZED (SELECT p.s, p.t, " +
-          "SUM(CAST(FLOOR((a.x - b.x) * (a.x - b.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
-          s"FROM pool$l p JOIN ux a ON a.vec_id = p.s JOIN ux b ON b.vec_id = p.t AND b.i = a.i GROUP BY p.s, p.t), " +
-          s"knn$l AS (SELECT s, t FROM (SELECT s, t, " +
-          s"ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2, t) AS rn FROM pdn$l) WHERE rn <= $NswM), " +
-          s"rkm$l AS (SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS rk FROM m$l), " +
-          s"nn$l AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM m$l), " +
-          s"sc$l AS (SELECT a.vec_id AS s, r.vec_id AS t FROM (SELECT vec_id, " +
-          sqlHash32("'uhnsw:sc:' || CAST(h AS VARCHAR) || ':' || CAST(vec_id AS VARCHAR)") +
-          s" % (SELECT n FROM nn$l) AS trk FROM m$l, (SELECT UNNEST([0,1]) AS h) hh) a " +
-          s"JOIN rkm$l r ON r.rk = a.trk WHERE r.vec_id <> a.vec_id), " +
-          s"adj$l AS MATERIALIZED (SELECT DISTINCT s, t FROM (" +
-          s"SELECT s, t FROM knn$l UNION ALL SELECT t, s FROM knn$l " +
-          s"UNION ALL SELECT s, t FROM sc$l UNION ALL SELECT t, s FROM sc$l))"
-      def blayer(pfx: String, adj: String, seed: String, steps: Int,
-          beam: Int): String = {
-        val rounds = (1 to steps).map { t =>
-          s"v$pfx$t AS MATERIALIZED (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM v$pfx${t - 1} " +
-            s"UNION ALL SELECT b.qid, $adj.t AS v FROM b$pfx${t - 1} b JOIN $adj ON $adj.s = b.v)), " +
-            s"b$pfx$t AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
-            "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
-            s"FROM v$pfx$t vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn <= $beam)"
-        }.mkString(", ")
-        s"v${pfx}0 AS (SELECT qid, v FROM $seed), b${pfx}0 AS (SELECT qid, v FROM $seed), " + rounds
-      }
-      def bestOf(name: String, src: String): String =
-        s"$name AS (SELECT qid, v FROM (SELECT vv.qid, vv.v, " +
-          "ROW_NUMBER() OVER (PARTITION BY vv.qid ORDER BY qd.d2, vv.v) AS rn " +
-          s"FROM $src vv JOIN qd ON qd.qid = vv.qid AND qd.v = vv.v) WHERE rn = 1)"
-      "WITH ux AS (SELECT vec_id, CAST(UNNEST(embedding) AS DOUBLE) AS x, " +
-        "UNNEST(RANGE(1, LEN(embedding) + 1)) AS i FROM embeddings), " +
+      val (projCols, bucketExpr) = signSql(NswPlanes)
+      UxSql +
         "flags AS (SELECT vec_id, CASE WHEN " +
         sqlHash32("'upsert:' || CAST(vec_id AS VARCHAR)") +
         " % 4 = 0 THEN 1 ELSE 0 END AS is_delta FROM embeddings WHERE vec_id <> 0), " +
         s"projs AS (SELECT ux.vec_id AS vec_id, $projCols FROM ux " +
         "JOIN flags ON flags.vec_id = ux.vec_id AND flags.is_delta = 0 GROUP BY ux.vec_id), " +
         s"bkt AS MATERIALIZED (SELECT vec_id, CAST($bucketExpr AS BIGINT) AS bucket FROM projs), " +
-        "lvl AS (SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2 WHEN h % 4 = 0 THEN 1 ELSE 0 END AS l " +
-        "FROM (SELECT vec_id, " + sqlHash32("'hnsw:lvl:' || CAST(vec_id AS VARCHAR)") + " AS h " +
-        "FROM flags WHERE is_delta = 0)), " +
-        s"nbf AS (SELECT DISTINCT bucket, xor(bucket, f) AS nb FROM bkt, " +
-        s"(SELECT CAST(UNNEST($flips) AS BIGINT) AS f) fl), " +
-        layerCtes(2) + ", " + layerCtes(1) + ", " + layerCtes(0) + ", " +
+        layersSql("flags WHERE is_delta = 0", "uhnsw:sc:") +
         "qd AS MATERIALIZED (SELECT q.vec_id AS qid, u.vec_id AS v, " +
         "SUM(CAST(FLOOR((u.x - q.x) * (u.x - q.x) * 1e14 + 0.5) AS BIGINT)) AS d2 " +
         "FROM ux u JOIN flags fu ON fu.vec_id = u.vec_id AND fu.is_delta = 0 " +
@@ -3154,14 +2878,7 @@ object LlmExtras {
         sqlHash32("'uhnsw:entry:0'") + " % (SELECT n FROM nn2)), " +
         "seed2 AS (SELECT q.vec_id AS qid, e.v FROM " +
         "(SELECT vec_id FROM flags WHERE is_delta = 1) q, ent e), " +
-        blayer("a", "adj2", "seed2", BhnswStepsU, BhnswBeamU) + ", " +
-        bestOf("s1", s"va$BhnswStepsU") + ", " +
-        blayer("b", "adj1", "s1", BhnswStepsU, BhnswBeamU) + ", " +
-        bestOf("s0", s"vb$BhnswStepsU") + ", " +
-        blayer("c", "adj0", "s0", BhnswSteps0, BnswBeam) + ", " +
-        s"cand AS (SELECT DISTINCT qid, v FROM (SELECT qid, v FROM va$BhnswStepsU " +
-        s"UNION ALL SELECT qid, v FROM vb$BhnswStepsU " +
-        s"UNION ALL SELECT qid, v FROM vc$BhnswSteps0)), " +
+        batchDescentSql +
         "nvq AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_visited FROM cand GROUP BY qid) " +
         "SELECT x.qid AS query_id, CAST(x.rk AS BIGINT) AS rk, x.v AS vec_id, " +
         "CAST(x.d2 AS BIGINT) AS d2, nvq.n_visited " +
@@ -3172,7 +2889,6 @@ object LlmExtras {
     },
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d).where(col("vec_id") =!= 0)
           .select(col("vec_id"),
             transform(col("embedding"), x => x.cast("double")).as("e"),
@@ -3184,58 +2900,18 @@ object LlmExtras {
           .select(col("vec_id").as("qid"), col("e").as("qe"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // frozen base graph built in-plan per invocation
-        // ([[uhnswGraph]]); then the batched descent + re-link, the
-        // production add() shape
-        val (adjAllM, ranked) = uhnswGraph(s, d)
-        val adjAll = adjAllM.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
-        def adjL(l: Int): DataFrame =
-          adjAll.where(col("layer") === l).select("s", "t")
-        val embv = base.select(col("vec_id").as("v"), col("e"))
-        def withD2(vdf: DataFrame): DataFrame =
-          vdf.join(embBcast(d)(embv), "v")
-            .join(embBcast(d)(qs), "qid")
-            .select(col("qid"), col("v"), sl2(col("e"), col("qe")).as("d2"))
-        def beamPick(vis: DataFrame, b: Int): DataFrame =
-          vis.withColumn("rn", row_number().over(
-              Window.partitionBy("qid").orderBy(col("d2"), col("v"))))
-            .where(col("rn") <= b)
-            .select("qid", "v", "d2")
-        def bsearch(seed: DataFrame, adj: DataFrame, steps: Int,
-            b: Int): DataFrame = {
-          var vis = seed
-          var beam = seed
-          for (_ <- 1 to steps) {
-            // ONE exchange per round (round 16 optimization, guide
-            // §2.4): shuffle the state by qid once; the (qid, v) dedup
-            // (GROUP BY + MIN(d2) — identical to the old distinct, d2
-            // being a deterministic function of (qid, v)) and the
-            // beam-pick window both reuse that partitioning.
-            // Round 17 A/B (VERDICT r16 #4): a per-TWO-rounds checkpoint
-            // cadence was tried here and REJECTED — AQE submits one job
-            // per exchange STAGE, not per action, so the job count was
-            // unchanged (142 -> 140) and steady time within noise, while
-            // the skipped round's dedup aggregate executes twice under
-            // the reused exchange (real duplicated work at scale).
-            vis = vis.unionAll(withD2(
-                beam.join(adj, beam("v") === adj("s"))
-                  .select(beam("qid"), col("t").as("v"))))
-              .repartition(col("qid"))
-              .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
-              .localCheckpoint()
-            beam = beamPick(vis, b)
-          }
-          vis
-        }
-        val ent = ranked.where(col("layer") === 2)
-          .join(broadcast(nnl.where(col("layer") === 2).select(col("n"))),
-            col("rk") === hash32(lit("uhnsw:entry:0")) % col("n"))
-          .select(col("vec_id").as("v"))
-        val seed2 = withD2(qs.select(col("qid")).crossJoin(broadcast(ent)))
-        val v2 = bsearch(seed2, adjL(2), BhnswStepsU, BhnswBeamU)
-        val v1 = bsearch(beamPick(v2, 1), adjL(1), BhnswStepsU, BhnswBeamU)
-        val v0 = bsearch(beamPick(v1, 1), adjL(0), BhnswSteps0, BnswBeam)
-        val vis = v2.unionAll(v1).unionAll(v0)
+        // ([[hnswLayers]] over the base members); then the batched
+        // descent + re-link, the production add() shape
+        val (adjAll, ranked) = hnswLayers(s, d,
+          withE(T.embeddings(s, d).where(col("vec_id") =!= 0 &&
+            hash32(concat(lit("upsert:"), col("vec_id").cast("string"))) % 4 =!= 0))
+            .transform(Cached(_)), // multi-consumer cache; lifecycle: Cached scaladoc
+          "uhnsw:sc:")
+        val beam = new BatchBeam(d, base.select(col("vec_id").as("v"), col("e")), qs)
+        val seed2 = beam.withD2(qs.select(col("qid"))
+          .crossJoin(broadcast(hnswEntry(ranked, "uhnsw:entry:0"))))
+        val vis = beam.descend(seed2, layerAdj(adjAll),
+            BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
           // one exchange: hash(qid) serves the (qid, v) dedup (MIN(d2)
           // == the old distinct, d2 a function of (qid, v)) AND the
           // final link/n_visited window (guide §2.4); the cache that fed
@@ -4127,7 +3803,6 @@ object LlmExtras {
         "ORDER BY rrf6 DESC, doc_id LIMIT 10"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.sdotl
         val queryTerms = Seq("spark", "merge", "window")
         val dls = T.documents(s, d)
           .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
@@ -4156,9 +3831,7 @@ object LlmExtras {
           .select("doc_id", "rl")
         val qe = T.embeddings(s, d).where(col("vec_id") === 0)
           .select(col("embedding").as("qe"))
-        val cos = (sdotl(col("embedding"), col("qe")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("embedding"), col("embedding")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("qe"), col("qe")).cast("double") / lit(1e14)))
+        val cos = scaledCos("embedding", "qe")
         val vecs = T.embeddings(s, d).where(col("vec_id") =!= 0)
           .crossJoin(broadcast(qe))
           .withColumn("c", cos)
@@ -4224,7 +3897,6 @@ object LlmExtras {
         "ORDER BY query_id, rk"),
       (s, d) => {
         graft.functions.VectorExprs.register(s)
-        import graft.functions.VectorExprs.sdotl
         val emb = T.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding"))
         val idx = emb.where(col("vec_id") % 2 === 0)
@@ -4233,9 +3905,7 @@ object LlmExtras {
         val qs = emb.where(col("vec_id") % 2 === 1)
           .select(col("vec_id").as("qid"), col("label").as("lq"),
             col("embedding").as("eq"))
-        val cos = (sdotl(col("ev"), col("eq")).cast("double") / lit(1e14)) /
-          (sqrt(sdotl(col("ev"), col("ev")).cast("double") / lit(1e14)) *
-            sqrt(sdotl(col("eq"), col("eq")).cast("double") / lit(1e14)))
+        val cos = scaledCos("ev", "eq")
         // one batched scan: every (query, index) cosine, labels attached
         // map-side; the gated broadcast keeps the pair stream shuffle-free
         // at the graded SFs (over the gate AQE shards by qid)

@@ -741,6 +741,29 @@ class PlanContractSpec extends SparkSpec {
       s"hybrid_rrf shape:\n${hr.take(2000)}")
   }
 
+  test("graph-ANN builders run a pinned number of Spark jobs") {
+    // Jobs each NSW/HNSW builder launches before it returns its DataFrame
+    // at sf0.001: the index build, one checkpoint per search round and
+    // one job per AQE exchange stage inside them. A change to the search
+    // loop or the checkpoint cadence that moves a count updates its pin
+    // here, with the reason. The cache is cleared first: rows another
+    // test left cached would change AQE's stats and so its stage split.
+    val pinned = Seq("llm_ann_nsw" -> 52, "llm_ann_batch_nsw" -> 82,
+      "llm_ann_hnsw" -> 75, "llm_ann_batch_hnsw" -> 132,
+      "llm_ann_hnsw_upsert" -> 135)
+    val sc = spark.sparkContext
+    val got = pinned.map { case (key, _) =>
+      spark.catalog.clearCache()
+      val tag = s"plan-contract-jobs:$key"
+      sc.setJobGroup(tag, key)
+      try SparkEntry.queries(key)(spark, sfDir) finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      key -> sc.statusTracker.getJobIdsForGroup(tag).length
+    }
+    spark.catalog.clearCache()
+    assert(got == pinned, s"builder job counts moved: $got")
+  }
+
   test("ANN broadcasts follow the side-size rule (VERDICT r14 #9)") {
     // Corpus-proportional sides (index/query embedding frames) are hinted
     // ONLY while the source table sits under the gate; bounded frames keep
