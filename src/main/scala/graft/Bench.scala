@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -7,12 +8,11 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // local-experiment knob only. Default on — AQE is part of the scale
-      // design (SCALING.md "Knobs") AND measured faster here: interleaved
-      // A/B at sf0.1 local[32] gave 53.7/50.5 s on vs 66.3/58.8 s off
-      // (partition coalescing beats the re-planning latency).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE on — it is part of the scale design (SCALING.md "Knobs") AND
+      // measured faster here: interleaved A/B at sf0.1 local[32] gave
+      // 53.7/50.5 s on vs 66.3/58.8 s off (partition coalescing beats the
+      // re-planning latency).
+      .config("spark.sql.adaptive.enabled", "true")
       // spark.sql.files.openCostInBytes was A/B'd at 256 KB vs the 4 MB
       // default on a 20-key heavy/trivial mix (round 16, REPS=3): wash
       // on the totals (33.33 vs 33.48 s), heavy per-row keys unchanged
@@ -26,7 +26,9 @@ object Bench {
     // pipeline otherwise land on whichever query happens to run first
     // (~2.5 s of one-time cost mis-attributed to a 125-row cross join)
     spark.range(1000).selectExpr("sum(id)").count()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(e) =>
+      System.err.println(s"[bench] warm-up FAILED: ${e.getClass.getName}: ${e.getMessage}")
+    }
     // untimed STREAMING warm-up (round 13, r12 verdict #6): the first
     // streaming query in a JVM pays one-time micro-batch-planner /
     // state-store / RocksDB-JNI class loading + codegen (~2 s, measured:
@@ -102,12 +104,20 @@ object Bench {
     // regression (both inflated) numerically instead of by argument.
     // Unset on the driver — the graded shape is unchanged there.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
+    // a key that throws (NonFatal) is still timed, but reported on stderr
+    // and counted in total_summary's n_failed — never a silent fast success
+    val failed = collection.mutable.Set[String]()
+    def run(name: String, fn: (SparkSession, String) => DataFrame): Unit =
+      try fn(spark, sfDir).count() catch { case NonFatal(e) =>
+        failed += name
+        System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+      }
     val runStart = System.nanoTime()
     val results = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      run(name, fn)
       val t1 = System.nanoTime()
       // drop this key's persisted subtrees before the next key runs:
       // nothing unpersists inside the plans, so without this the storage
@@ -118,7 +128,7 @@ object Bench {
       spark.catalog.clearCache()
       val steady = if (reps <= 1) Double.NaN else (2 to reps).map { _ =>
         val s0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        run(name, fn)
         val s1 = System.nanoTime()
         spark.catalog.clearCache()
         (s1 - s0) / 1e9
@@ -153,7 +163,7 @@ object Bench {
     // first-total-wins or summing parser cannot double-count (ADVICE r5).
     val slowest5 = results.toSeq.sortBy(-_._2._1).take(5)
       .map { case (k, (d, _, _)) => f""""$k":$d%.3f""" }.mkString("{", ",", "}")
-    val line3 = f"""{"metric":"total_summary","value":$total%.3f,"unit":"sec","n_keys":${results.size},"slowest5":$slowest5,"sf":"$sfDir"}"""
+    val line3 = f"""{"metric":"total_summary","value":$total%.3f,"unit":"sec","n_keys":${results.size},"n_failed":${failed.size},"slowest5":$slowest5,"sf":"$sfDir"}"""
     println(line3)
     // durable copy (round 17, VERDICT r16 #7): every BENCH_r*.json back to
     // r01 carries `parsed: null` because the driver keeps only the last

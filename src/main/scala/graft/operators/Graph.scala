@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 import graft.{Det, Q, Tables => T}
 import graft.Det.{halfUpDiv, s6, sqlHalfUpDiv, sqlS6}
@@ -64,6 +65,68 @@ object Graph {
       "JOIN customer c ON o.o_custkey = c.c_custkey " +
       "JOIN supplier s ON l.l_suppkey = s.s_suppkey " +
       "GROUP BY src, dst)"
+
+  /** The undirected trade graph: canonical (least, greatest) endpoint
+    * pairs named `a`, `b`, self-loops dropped, distinct. */
+  private def undirected(s: SparkSession, d: String, a: String, b: String): DataFrame =
+    tradeEdges(s, d).where(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as(a), greatest(col("src"), col("dst")).as(b))
+      .distinct()
+
+  /** [[undirected]] grouped instead of distinct: one `agg` over the
+    * directed edges of each canonical pair. */
+  private def undirectedAgg(s: SparkSession, d: String, a: String, b: String,
+      agg: Column): DataFrame =
+    tradeEdges(s, d).where(col("src") =!= col("dst"))
+      .groupBy(least(col("src"), col("dst")).as(a), greatest(col("src"), col("dst")).as(b))
+      .agg(agg)
+
+  /** Oracle twin of [[undirected]]: CTE `name(a, b)` over `e`. */
+  private def undirectedSql(name: String, a: String, b: String): String =
+    s"$name AS (SELECT DISTINCT LEAST(src, dst) AS $a, GREATEST(src, dst) AS $b " +
+      "FROM e WHERE src <> dst)"
+
+  /** Both orientations of the pair list x(a, b) as (u, w), each row
+    * carrying the `keep` columns. */
+  private def symmetrise(x: DataFrame, a: String, b: String, u: String, w: String,
+      keep: String*): DataFrame =
+    x.select(col(a).as(u) +: col(b).as(w) +: keep.map(col): _*)
+      .unionAll(x.select(col(b).as(u) +: col(a).as(w) +: keep.map(col): _*))
+
+  /** Oracle twin of [[symmetrise]]: the UNION ALL body over `from`. */
+  private def symSql(from: String, a: String, b: String, u: String, w: String,
+      keep: String*): String = {
+    val k = keep.map(", " + _).mkString
+    s"SELECT $a AS $u, $b AS $w$k FROM $from UNION ALL SELECT $b, $a$k FROM $from"
+  }
+
+  /** Neighbour count per node `v` of a symmetrised pair list. */
+  private def degrees(nb: DataFrame, v: String, name: String): DataFrame =
+    nb.groupBy(v).agg(count(lit(1)).as(name))
+
+  /** Oracle CTEs `und(a, b)`, `nb(v, u)` (both orientations) and
+    * `deg(v, <dg>)`: the degree-based keys' shared prelude. */
+  private def undDegSql(dg: String): String =
+    undirectedSql("und", "a", "b") + s", nb AS (${symSql("und", "a", "b", "v", "u")}), " +
+      s"deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS $dg FROM nb GROUP BY v)"
+
+  /** Undirected pairs (a, b) whose summed trade weight w2 is at least
+    * the mean pair weight (w2·ne ≥ Σw2, exact longs): graph_kcore's and
+    * graph_ktruss's starting graph. */
+  private def heavyEdges(s: SparkSession, d: String): DataFrame = {
+    val und = undirectedAgg(s, d, "a", "b", sum(col("w")).as("w2"))
+    val tot = und.agg(sum(col("w2")).as("t"), count(lit(1)).as("ne"))
+    und.crossJoin(broadcast(tot))
+      .where(col("w2") * col("ne") >= col("t"))
+      .select("a", "b")
+  }
+
+  /** Oracle twin of [[heavyEdges]]: CTEs `und`, `tot` and `seed(a, b)`. */
+  private def heavyEdgesSql(seed: String): String =
+    "und AS MATERIALIZED (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, " +
+      "CAST(SUM(w) AS BIGINT) AS w2 FROM e WHERE src <> dst GROUP BY a, b), " +
+      "tot AS MATERIALIZED (SELECT CAST(SUM(w2) AS BIGINT) AS t, CAST(COUNT(*) AS BIGINT) AS ne FROM und), " +
+      s"$seed AS MATERIALIZED (SELECT a, b FROM und, tot WHERE w2 * ne >= t)"
 
   /** Rounds of hash-min label propagation (graph_cc) — one constant for
     * both the Spark loop and the unrolled oracle CTE chain. Min labels
@@ -132,7 +195,7 @@ object Graph {
         s"l$k AS MATERIALIZED (SELECT p.v, pk.lab AS lbl " +
         s"FROM $prev p JOIN p$k pk ON pk.u = p.v)"
     }.mkString(", ")
-    "sym AS MATERIALIZED (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
+    s"sym AS MATERIALIZED (${symSql("ue", "a", "b", "u", "w")}), " +
       "l0 AS MATERIALIZED (SELECT n_nationkey AS v, CAST(n_nationkey AS BIGINT) AS lbl FROM nation), " +
       rounds
   }
@@ -141,10 +204,8 @@ object Graph {
     * (v, lbl) — graph_label_prop's body, shared with
     * graph_louvain_move. */
   private def lpaLabels(s: SparkSession, d: String): DataFrame = {
-    val ue = mutualTop4(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = ue.select(col("a").as("u"), col("b").as("w"))
-      .unionAll(ue.select(col("b").as("u"), col("a").as("w")))
+    val ue = mutualTop4(s, d).persist(MEMORY_AND_DISK)
+    val sym = symmetrise(ue, "a", "b", "u", "w")
     val nodes = T.nation(s, d).select(col("n_nationkey").as("v"))
     var lbl = nodes.select(col("v"), col("v").cast("long").as("lbl"))
     for (_ <- 1 to LpaRounds) {
@@ -204,40 +265,37 @@ object Graph {
     * at K). Declared before `all` (the KcoreRounds contract). */
   private val StressRounds = 8
 
-  /** The K=ClosenessRounds min-plus ALL-PAIRS distance chain over the
-    * unweighted undirected trade graph (needs [[tradeEdgesSql]] in
-    * scope): defines `und`, `sym`, `n`, `d0..dK` — distances after round
-    * k live in `d$k(u, v, d)`, 999 = unreachable sentinel. Extracted
-    * (round-10 fifth wave) so graph_ecc starts from EXACTLY
-    * graph_closeness's matrix without textual drift (the lpaSqlChain
-    * precedent). */
-  private lazy val apspSqlChain: String = {
+  /** The K=ClosenessRounds min-plus distance chain over the unweighted
+    * undirected trade graph (needs [[tradeEdgesSql]] in scope): defines
+    * `und`, `sym`, `n`, `seedCte`, `d0..dK` — distances from every row
+    * of `seed(v)` after round k live in `d$k(u, v, d)`, 999 = unreachable
+    * sentinel. Seeded from `n` it is the ALL-PAIRS matrix graph_closeness
+    * and graph_ecc share; seeded from the pivots (graph_closeness_pivot)
+    * it is the landmark APSP that replaces the |V|² matrix with a |P|·|V|
+    * one [Eppstein & Wang 2004, "Fast approximation of centrality"] —
+    * the same relaxation text either way. */
+  private def apspSqlChain(seed: String, seedCte: String = ""): String = {
     val rounds = (1 to ClosenessRounds).map { k =>
       val prev = s"d${k - 1}"
       s"d$k AS MATERIALIZED (SELECT p.u, p.v, LEAST(p.d, COALESCE(MIN(q.d + 1), p.d)) AS d " +
         s"FROM $prev p LEFT JOIN sym s ON s.a = p.v LEFT JOIN $prev q ON q.u = p.u AND q.v = s.b " +
         "GROUP BY p.u, p.v, p.d)"
     }.mkString(", ")
-    "und AS (SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y " +
-      "FROM e WHERE src <> dst), " +
-      "sym AS MATERIALIZED (SELECT x AS a, y AS b FROM und UNION ALL SELECT y, x FROM und), " +
-      "n AS (SELECT n_nationkey AS v FROM nation), " +
+    undirectedSql("und", "x", "y") + ", " +
+      s"sym AS MATERIALIZED (${symSql("und", "x", "y", "a", "b")}), " +
+      "n AS (SELECT n_nationkey AS v FROM nation), " + seedCte +
       "d0 AS MATERIALIZED (SELECT a.v AS u, b.v AS v, " +
       "CAST(CASE WHEN a.v = b.v THEN 0 ELSE 999 END AS BIGINT) AS d " +
-      "FROM n a CROSS JOIN n b), " +
+      s"FROM $seed a CROSS JOIN n b), " +
       rounds
   }
 
   /** Spark twin of [[apspSqlChain]]: the converged-at-K (u, v, d)
     * distance matrix shared by graph_closeness and graph_ecc. */
   private def apspDistances(s: SparkSession, d: String): DataFrame = {
-    val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(s, d, "x", "y")
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val sym = und.select(col("x").as("a"), col("y").as("b"))
-      .unionAll(und.select(col("y").as("a"), col("x").as("b")))
+    val sym = symmetrise(und, "x", "y", "a", "b")
     val n = T.nation(s, d).select(col("n_nationkey").as("v"))
     // MIN-PLUS DOUBLING (round-12 job diet, VERDICT r11 item 8): the
     // oracle keeps its K=8 single-step MATERIALIZED chain, the Spark
@@ -280,46 +338,26 @@ object Graph {
   private val PivotHashMul = 2654435761L
   private val PivotMod = 5L
 
-  /** The K=ClosenessRounds min-plus chain RESTRICTED to the pivot
-    * sources — the landmark/pivot APSP that replaces the |V|² matrix
-    * with a |P|·|V| one [Eppstein & Wang 2004, "Fast approximation of
-    * centrality"]. This is the graded 100 TB scale path the exact
-    * graph_closeness/graph_ecc keys document in prose: distances FROM
-    * k sampled sources only, centrality estimated per Bavelas from the
-    * pivot sample. Same relaxation text as [[apspSqlChain]], different
-    * d0 seed. */
-  private lazy val pivotApspSqlChain: String = {
-    val rounds = (1 to ClosenessRounds).map { k =>
-      val prev = s"d${k - 1}"
-      s"d$k AS MATERIALIZED (SELECT p.u, p.v, LEAST(p.d, COALESCE(MIN(q.d + 1), p.d)) AS d " +
-        s"FROM $prev p LEFT JOIN sym s ON s.a = p.v LEFT JOIN $prev q ON q.u = p.u AND q.v = s.b " +
-        "GROUP BY p.u, p.v, p.d)"
-    }.mkString(", ")
-    "und AS (SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y " +
-      "FROM e WHERE src <> dst), " +
-      "sym AS MATERIALIZED (SELECT x AS a, y AS b FROM und UNION ALL SELECT y, x FROM und), " +
-      "n AS (SELECT n_nationkey AS v FROM nation), " +
-      s"piv AS (SELECT v FROM n WHERE ((v * $PivotHashMul) % 4294967296) % $PivotMod = 0), " +
-      "d0 AS MATERIALIZED (SELECT a.v AS u, b.v AS v, " +
-      "CAST(CASE WHEN a.v = b.v THEN 0 ELSE 999 END AS BIGINT) AS d " +
-      "FROM piv a CROSS JOIN n b), " +
-      rounds
-  }
+  private def isPivot(v: Column): Column =
+    ((v * lit(PivotHashMul)) % lit(4294967296L)) % lit(PivotMod) === 0
 
-  /** Spark twin of [[pivotApspSqlChain]]: the |P|·|V| pivot-source
-    * distance matrix. Identical relaxation ops to [[apspDistances]] —
-    * only the d0 seed shrinks — so the convergence induction carries. */
+  /** Oracle twin of [[isPivot]] over the SQL expression `v`. */
+  private def pivotSql(v: String): String =
+    s"(($v * $PivotHashMul) % 4294967296) % $PivotMod = 0"
+
+  /** Spark twin of the pivot-seeded [[apspSqlChain]]: the |P|·|V|
+    * pivot-source distance matrix, relaxed one hop per step exactly as
+    * the oracle chain relaxes it (the min-plus doubling of
+    * [[apspDistances]] needs the full |V|² matrix), so each pair of
+    * fused steps below equals two oracle layers. This is the graded
+    * 100 TB scale path the exact graph_closeness/graph_ecc keys document
+    * in prose: distances FROM k sampled sources only, centrality
+    * estimated per Bavelas from the pivot sample. */
   private def pivotApspDistances(s: SparkSession, d: String): DataFrame = {
-    val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = und.select(col("x").as("a"), col("y").as("b"))
-      .unionAll(und.select(col("y").as("a"), col("x").as("b")))
+    val und = undirected(s, d, "x", "y").persist(MEMORY_AND_DISK)
+    val sym = symmetrise(und, "x", "y", "a", "b")
     val n = T.nation(s, d).select(col("n_nationkey").as("v"))
-    val piv = n.where(
-      ((col("v") * lit(PivotHashMul)) % lit(4294967296L)) % lit(PivotMod) === 0)
+    val piv = n.where(isPivot(col("v")))
     var dist = piv.select(col("v").as("u"))
       .crossJoin(n.select(col("v")))
       .select(col("u"), col("v"),
@@ -358,12 +396,11 @@ object Graph {
       : (DataFrame, DataFrame, DataFrame) = {
     val ue = mutualTop4(s, d)
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val sym = ue.select(col("a").as("u"), col("b").as("w"))
-      .unionAll(ue.select(col("b").as("u"), col("a").as("w")))
+    val sym = symmetrise(ue, "a", "b", "u", "w")
     val lbl = T.nation(s, d).select(col("n_nationkey").as("v"),
       col("n_nationkey").cast("long").as("comm"))
     val m = ue.agg(count(lit(1)).as("me"))
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("dg"))
+    val deg = degrees(sym, "u", "dg")
     val ctot = lbl.join(deg, col("u") === col("v"), "left")
       .groupBy("comm").agg(sum(coalesce(col("dg"), lit(0L))).as("st"))
     val kin = sym
@@ -391,6 +428,119 @@ object Graph {
       .where(col("rn") === 1)
       .select(col("v"), col("comm").as("new_comm"), col("g").as("gain"))
     (ue, lbl, pick)
+  }
+
+  /** Oracle twin of [[louvainPhase1]] (needs [[mutualTop4Sql]] in
+    * scope): CTEs `sym`, `lbl`, `m`, `deg`, `ctot`, `kin`, `pairs`,
+    * `cand` and `pick(v, new_comm, g)`. */
+  private lazy val louvainPhase1Sql: String =
+    s"sym AS (${symSql("ue", "a", "b", "u", "w")}), " +
+      "lbl AS (SELECT n_nationkey AS v, CAST(n_nationkey AS BIGINT) AS comm FROM nation), " +
+      "m AS (SELECT CAST(COUNT(*) AS BIGINT) AS me FROM ue), " +
+      "deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS dg FROM sym GROUP BY u), " +
+      "ctot AS (SELECT l.comm, CAST(SUM(COALESCE(d.dg, 0)) AS BIGINT) AS st " +
+      "FROM lbl l LEFT JOIN deg d ON d.u = l.v GROUP BY l.comm), " +
+      "kin AS (SELECT s.u AS v, lw.comm, CAST(COUNT(*) AS BIGINT) AS k " +
+      "FROM sym s JOIN lbl lw ON lw.v = s.w GROUP BY s.u, lw.comm), " +
+      "pairs AS (SELECT v, comm FROM kin UNION SELECT v, comm FROM lbl " +
+      "UNION SELECT v, CAST(v AS BIGINT) AS comm FROM lbl), " +
+      "cand AS (SELECT p.v, p.comm, " +
+      "CAST(2 * (SELECT me FROM m) * COALESCE(k.k, 0) " +
+      "- (COALESCE(ct.st, 0) - CASE WHEN p.comm = l.comm THEN COALESCE(d.dg, 0) ELSE 0 END) " +
+      "* COALESCE(d.dg, 0) AS BIGINT) AS g " +
+      "FROM pairs p JOIN lbl l ON l.v = p.v " +
+      "LEFT JOIN kin k ON k.v = p.v AND k.comm = p.comm " +
+      "LEFT JOIN ctot ct ON ct.comm = p.comm " +
+      "LEFT JOIN deg d ON d.u = p.v), " +
+      "pick AS (SELECT v, comm AS new_comm, g FROM (SELECT *, " +
+      "ROW_NUMBER() OVER (PARTITION BY v ORDER BY g DESC, comm) AS rn FROM cand) r " +
+      "WHERE rn = 1)"
+
+  /** Single-source min-plus relaxation from nation 0 over the
+    * symmetrised edge list sym(u, w, ...): `rounds` Bellman-Ford steps
+    * d(v) ← min(d(v), min over neighbours of d + cost), 999 the
+    * unreachable sentinel; dist is node-sized and broadcast,
+    * localCheckpoint flattens the loop lineage. graph_bfs relaxes with
+    * cost 1, graph_sssp with the edge's `cst`. */
+  private def relaxFromZero(s: SparkSession, d: String, sym: DataFrame, rounds: Int,
+      cost: Column): DataFrame = {
+    val nodes = T.nation(s, d).select(col("n_nationkey").as("v"))
+    var dist = nodes.select(col("v"),
+      when(col("v") === 0, 0L).otherwise(999L).as("d"))
+    for (_ <- 1 to rounds) {
+      val viaN = sym
+        .join(broadcast(dist.select(col("v").as("w"), col("d").as("dn"))), "w")
+        .groupBy(col("u").as("v")).agg(min(col("dn") + cost).as("nd"))
+      dist = dist.join(viaN, Seq("v"), "left")
+        .select(col("v"), least(col("d"), coalesce(col("nd"), col("d"))).as("d"))
+        .localCheckpoint()
+    }
+    dist
+  }
+
+  /** Oracle twin of [[relaxFromZero]]: the whole graph_bfs/graph_sssp
+    * query, `rounds` unrolled MATERIALIZED layers over the CTEs
+    * `symCtes` (which define `sym(u, w, ...)`), each relaxing by the SQL
+    * expression `cost`. */
+  private def relaxFromZeroSql(symCtes: String, rounds: Int, cost: String): String = {
+    val chain = (1 to rounds).map { k =>
+      val prev = s"d${k - 1}"
+      s"d$k AS MATERIALIZED (SELECT p.v, LEAST(p.d, COALESCE(MIN(q.d + $cost), p.d)) AS d " +
+        s"FROM $prev p LEFT JOIN sym s ON s.u = p.v LEFT JOIN $prev q ON q.v = s.w " +
+        "GROUP BY p.v, p.d)"
+    }.mkString(", ")
+    s"WITH $tradeEdgesSql, $symCtes, " +
+      "d0 AS MATERIALIZED (SELECT n_nationkey AS v, " +
+      "CAST(CASE WHEN n_nationkey = 0 THEN 0 ELSE 999 END AS BIGINT) AS d FROM nation), " +
+      chain +
+      s" SELECT v AS nationkey, d AS dist FROM d$rounds ORDER BY nationkey"
+  }
+
+  /** The Brandes forward pass in relational form: level-synchronous BFS
+    * with shortest-path counts from every row of `sources(v)` over the
+    * symmetrised sym(u, w). Returns the (s, v, d, sig) table after
+    * StressRounds rounds; a round joins the frontier to sym, sums σ over
+    * predecessors and anti-joins the pairs already settled.
+    * graph_betweenness runs it from every nation,
+    * graph_betweenness_pivot from the pivots. */
+  private def sigmaPaths(sym: DataFrame, sources: DataFrame): DataFrame = {
+    var paths = sources.select(col("v").as("s"), col("v"),
+      lit(0L).as("d"), lit(1L).as("sig"))
+    var frontier = paths
+    for (k <- 1 to StressRounds) {
+      val cand = frontier.select(col("s"), col("v"), col("sig"))
+        .join(sym, col("v") === col("u"))
+        .groupBy(col("s"), col("w").as("nv"))
+        .agg(sum(col("sig")).as("sig"))
+      frontier = cand
+        .join(paths.select(col("s"), col("v").as("nv")),
+          Seq("s", "nv"), "left_anti")
+        .select(col("s"), col("nv").as("v"), lit(k.toLong).as("d"),
+          col("sig"))
+        .localCheckpoint()
+      // no second checkpoint: paths is a UNION of already-
+      // checkpointed frontiers + the base, so its lineage is one
+      // level deep by construction — halving the per-round job count
+      paths = paths.unionAll(frontier)
+    }
+    paths
+  }
+
+  /** Oracle twin of [[sigmaPaths]] (needs [[mutualTop4Sql]] in scope):
+    * CTEs `sym`, the caller's `p0Ctes` (which define `p0(s, v, d, sig)`),
+    * `f0` and the unrolled `f1..fK`/`p1..pK` — paths after round k live
+    * in `p$k`. */
+  private def sigmaPathsSql(p0Ctes: String): String = {
+    val rounds = (1 to StressRounds).map { k =>
+      val (p, f) = (s"p${k - 1}", s"f$k")
+      s"$f AS MATERIALIZED (SELECT fr.s, e.w AS v, CAST($k AS BIGINT) AS d, " +
+        s"CAST(SUM(fr.sig) AS BIGINT) AS sig FROM f${k - 1} fr " +
+        s"JOIN sym e ON e.u = fr.v LEFT JOIN $p p ON p.s = fr.s AND p.v = e.w " +
+        "WHERE p.s IS NULL GROUP BY fr.s, e.w), " +
+        s"p$k AS MATERIALIZED (SELECT * FROM p${k - 1} UNION ALL SELECT * FROM $f)"
+    }.mkString(", ")
+    s"sym AS MATERIALIZED (${symSql("ue", "a", "b", "u", "w")}), " + p0Ctes + ", " +
+      "f0 AS MATERIALIZED (SELECT * FROM p0), " + rounds
   }
 
   /** Peel rounds and the triangle-support threshold for graph_ktruss
@@ -447,9 +597,7 @@ object Graph {
     // either). GraphSpec re-derives both from an independent scalar
     // topological-order DP + transitive closure.
     Q("graph_dag_layers", Some(
-      "WITH " + tradeEdgesSql + ", " +
-        "dag AS (SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v " +
-        "FROM e WHERE src <> dst), " +
+      "WITH " + tradeEdgesSql + ", " + undirectedSql("dag", "u", "v") + ", " +
         "p0 AS MATERIALIZED (SELECT u, v, CAST(1 AS BIGINT) AS l FROM dag), " +
         (1 to 5).map(k =>
           s"p$k AS MATERIALIZED (SELECT u, v, MAX(l) AS l FROM (" +
@@ -462,10 +610,7 @@ object Graph {
         "FROM nation n LEFT JOIN p5 p ON p.v = n.n_nationkey " +
         "GROUP BY n.n_nationkey ORDER BY nation"),
       (s, d) => {
-        val dag = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("u"),
-            greatest(col("src"), col("dst")).as("v"))
-          .distinct()
+        val dag = undirected(s, d, "u", "v")
         var p = dag.select(col("u"), col("v"), lit(1L).as("l"))
         for (_ <- 1 to 5) {
           val a = p.select(col("u").as("au"), col("v").as("w"), col("l").as("la"))
@@ -506,7 +651,7 @@ object Graph {
       // mutual-top-4 sparsification like graph_simrank/label_prop so
       // attenuated path counting actually ranks
       "WITH " + tradeEdgesSql + ", " + mutualTop4Sql + ", " +
-        "de AS (SELECT a AS src, b AS dst FROM ue UNION ALL SELECT b, a FROM ue), " +
+        s"de AS (${symSql("ue", "a", "b", "src", "dst")}), " +
         "n AS (SELECT n_nationkey AS v FROM nation), " +
         "p0 AS MATERIALIZED (SELECT v, CAST(1 AS BIGINT) AS c FROM n), " +
         (1 to 4).map(round).mkString(", ") +
@@ -520,9 +665,7 @@ object Graph {
         "ORDER BY nation"
     },
       (s, d) => {
-        val ue = mutualTop4(s, d)
-        val de = ue.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(ue.select(col("b").as("src"), col("a").as("dst")))
+        val de = symmetrise(mutualTop4(s, d), "a", "b", "src", "dst")
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val n = T.nation(s, d).select(col("n_nationkey").cast("long").as("v"))
         var p = n.select(col("v"), lit(1L).as("c"))
@@ -578,8 +721,7 @@ object Graph {
       // so the key runs on the SAME mutual-top-4 sparsification
       // graph_label_prop/modularity use: degrees vary, scores spread
       "WITH " + tradeEdgesSql + ", " + mutualTop4Sql + ", " +
-        "ind AS MATERIALIZED (SELECT a AS src, b AS dst FROM ue " +
-        "UNION ALL SELECT b, a FROM ue), " +
+        s"ind AS MATERIALIZED (${symSql("ue", "a", "b", "src", "dst")}), " +
         "dgi AS (SELECT dst AS v, CAST(COUNT(*) AS BIGINT) AS na FROM ind GROUP BY dst), " +
         "dgi2 AS (SELECT dst AS v, CAST(COUNT(*) AS BIGINT) AS nb FROM ind GROUP BY dst), " +
         "n AS (SELECT n_nationkey AS v FROM nation), " +
@@ -590,9 +732,7 @@ object Graph {
         "FROM s3 WHERE a < b AND s6 > 0 ORDER BY a, b"
     },
       (s, d) => {
-        val ue = mutualTop4(s, d)
-        val de = ue.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(ue.select(col("b").as("src"), col("a").as("dst")))
+        val de = symmetrise(mutualTop4(s, d), "a", "b", "src", "dst")
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val dgi = de.groupBy(col("dst").as("v")).agg(count(lit(1)).as("nin"))
         val n = T.nation(s, d).select(col("n_nationkey").cast("long").as("v"))
@@ -648,8 +788,7 @@ object Graph {
         s"cr$r AS (SELECT c1.c AS cx, c2.c AS cy, em.cost FROM em " +
           s"JOIN $pc c1 ON c1.v = em.x JOIN $pc c2 ON c2.v = em.y WHERE c1.c <> c2.c), " +
           s"pk$r AS (SELECT k, ARG_MIN(other, cost) AS pt, MIN(cost) AS mc FROM " +
-          s"(SELECT cx AS k, cy AS other, cost FROM cr$r " +
-          s"UNION ALL SELECT cy, cx, cost FROM cr$r) GROUP BY k), " +
+          s"(${symSql(s"cr$r", "cx", "cy", "k", "other", "cost")}) GROUP BY k), " +
           s"p0_$r AS (SELECT d.c AS k, COALESCE(pk.pt, d.c) AS p FROM " +
           s"(SELECT DISTINCT c FROM $pc) d LEFT JOIN pk$r pk ON pk.k = d.c), " +
           s"p1_$r AS (SELECT a.k, CASE WHEN b.p = a.k THEN LEAST(a.k, a.p) " +
@@ -671,10 +810,7 @@ object Graph {
         "SELECT em.x, em.y, em.cost, ch.r FROM em JOIN ch ON ch.cost = em.cost ORDER BY em.cost"
     },
       (s, d) => {
-        val eu = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .groupBy(least(col("src"), col("dst")).as("x"),
-            greatest(col("src"), col("dst")).as("y"))
-          .agg(sum("w").as("wsum"))
+        val eu = undirectedAgg(s, d, "x", "y", sum("w").as("wsum"))
         val e = eu.select(col("x"), col("y"),
             (col("wsum") * 10000 + col("x") * 100 + col("y")).as("cost"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
@@ -703,7 +839,7 @@ object Graph {
         // pipeline them).
         def cut(df: DataFrame): DataFrame = {
           val r = df.rdd.coalesce(1)
-          r.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          r.persist(MEMORY_AND_DISK)
           s.createDataFrame(r, df.schema)
         }
         // Five-fold compose per cut job (p∘p∘p∘p∘p = f^5 of the input
@@ -728,8 +864,7 @@ object Graph {
             .join(broadcast(c.select(col("v").as("x"), col("c").as("cx"))), "x")
             .join(broadcast(c.select(col("v").as("y"), col("c").as("cy"))), "y")
             .where(col("cx") =!= col("cy"))
-          val both = cr.select(col("cx").as("k"), col("cy").as("other"), col("cost"))
-            .unionAll(cr.select(col("cy").as("k"), col("cx").as("other"), col("cost")))
+          val both = symmetrise(cr, "cx", "cy", "k", "other", "cost")
           // unique costs make the pick tie-free, so min_by is safe here.
           // pk is THE cut of the round's pick subtree: p0/p1, the
           // contraction and the chosen-edge slice all read the persisted
@@ -787,10 +922,8 @@ object Graph {
       val out = (0 to WalkSteps).map(t =>
         s"SELECT start, CAST($t AS BIGINT) AS step, CAST(v AS BIGINT) AS node FROM w$t")
         .mkString(" UNION ALL ")
-      "WITH " + tradeEdgesSql + ", " +
-        "und AS (SELECT DISTINCT LEAST(src, dst) AS x, GREATEST(src, dst) AS y " +
-        "FROM e WHERE src <> dst), " +
-        "sym AS (SELECT x AS a, y AS b FROM und UNION ALL SELECT y, x FROM und), " +
+      "WITH " + tradeEdgesSql + ", " + undirectedSql("und", "x", "y") + ", " +
+        s"sym AS (${symSql("und", "x", "y", "a", "b")}), " +
         "adj AS MATERIALIZED (SELECT a AS v, b AS nb, " +
         "CAST(ROW_NUMBER() OVER (PARTITION BY a ORDER BY b) - 1 AS BIGINT) AS rk, " +
         "CAST(COUNT(*) OVER (PARTITION BY a) AS BIGINT) AS deg FROM sym), " +
@@ -799,13 +932,7 @@ object Graph {
         s"SELECT start, step, node FROM ($out) ORDER BY start, step"
     },
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("x"),
-            greatest(col("src"), col("dst")).as("y"))
-          .distinct()
-        val sym = und.select(col("x").as("a"), col("y").as("b"))
-          .unionAll(und.select(col("y").as("a"), col("x").as("b")))
+        val sym = symmetrise(undirected(s, d, "x", "y"), "x", "y", "a", "b")
         val adj = sym.select(col("a").as("av"), col("b").as("nb"))
           .withColumn("rk",
             (row_number().over(Window.partitionBy("av").orderBy("nb")) - 1).cast("long"))
@@ -882,7 +1009,7 @@ object Graph {
         // win_ntile note): the harness clearCaches per key; long-lived
         // sessions should clearCache after the result materializes.
         val e = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(MEMORY_AND_DISK)
         val mu = e.agg((sum("w").cast("double") / count(lit(1))).as("mu"))
         val ue = e.crossJoin(broadcast(mu))
           .where(col("w") >= lit(1.25) * col("mu"))
@@ -930,14 +1057,14 @@ object Graph {
         "m AS (SELECT CAST(SUM(w) AS DOUBLE) / COUNT(*) AS mu FROM e WHERE src <> dst), " +
         "ue AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b " +
         "FROM e, m WHERE src <> dst AND w >= 3.0 * mu), " +
-        "sym AS MATERIALIZED (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
+        s"sym AS MATERIALIZED (${symSql("ue", "a", "b", "u", "w")}), " +
         "l0 AS MATERIALIZED (SELECT n_nationkey AS v, CAST(n_nationkey AS BIGINT) AS lbl FROM nation), " +
         rounds +
         s" SELECT v AS nationkey, lbl AS component FROM l$CcRounds ORDER BY nationkey"
     },
       (s, d) => {
         val e = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(MEMORY_AND_DISK)
         val mu = e.agg((sum("w").cast("double") / count(lit(1))).as("mu"))
         val strong = e.crossJoin(broadcast(mu))
           .where(col("w") >= lit(3.0) * col("mu"))
@@ -964,41 +1091,11 @@ object Graph {
     // At web scale the frontier-delta form replaces full relaxation
     // (only changed distances join the next round) — same plan shape,
     // smaller build side per round.
-    Q("graph_bfs", Some {
-      val rounds = (1 to BfsRounds).map { k =>
-        val prev = s"d${k - 1}"
-        s"d$k AS MATERIALIZED (SELECT p.v, LEAST(p.d, COALESCE(MIN(q.d + 1), p.d)) AS d " +
-          s"FROM $prev p LEFT JOIN sym s ON s.u = p.v LEFT JOIN $prev q ON q.v = s.w " +
-          "GROUP BY p.v, p.d)"
-      }.mkString(", ")
-      s"WITH $tradeEdgesSql, " +
-        "und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b " +
-        "FROM e WHERE src <> dst), " +
-        "sym AS MATERIALIZED (SELECT a AS u, b AS w FROM und UNION ALL SELECT b, a FROM und), " +
-        "d0 AS MATERIALIZED (SELECT n_nationkey AS v, " +
-        "CAST(CASE WHEN n_nationkey = 0 THEN 0 ELSE 999 END AS BIGINT) AS d FROM nation), " +
-        rounds +
-        s" SELECT v AS nationkey, d AS dist FROM d$BfsRounds ORDER BY nationkey"
-    },
+    Q("graph_bfs", Some(relaxFromZeroSql(undirectedSql("und", "a", "b") +
+        s", sym AS MATERIALIZED (${symSql("und", "a", "b", "u", "w")})", BfsRounds, "1")),
       (s, d) => {
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sym = und.select(col("a").as("u"), col("b").as("w"))
-          .unionAll(und.select(col("b").as("u"), col("a").as("w")))
-        val nodes = T.nation(s, d).select(col("n_nationkey").as("v"))
-        var dist = nodes.select(col("v"),
-          when(col("v") === 0, 0L).otherwise(999L).as("d"))
-        for (_ <- 1 to BfsRounds) {
-          val viaN = sym
-            .join(broadcast(dist.select(col("v").as("w"), col("d").as("dn"))), "w")
-            .groupBy(col("u").as("v")).agg(min(col("dn") + 1).as("nd"))
-          dist = dist.join(viaN, Seq("v"), "left")
-            .select(col("v"), least(col("d"), coalesce(col("nd"), col("d"))).as("d"))
-            .localCheckpoint()
-        }
+        val und = undirected(s, d, "a", "b").persist(MEMORY_AND_DISK)
+        val dist = relaxFromZero(s, d, symmetrise(und, "a", "b", "u", "w"), BfsRounds, lit(1))
         und.unpersist()
         dist.select(col("v").as("nationkey"), col("d").as("dist"))
           .orderBy("nationkey")
@@ -1012,23 +1109,14 @@ object Graph {
     // node-sized aggregates after the shared edge build — the histogram
     // is at most |V| rows at any scale.
     Q("graph_degree_dist", Some(
-      s"WITH $tradeEdgesSql, " +
-        "und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b " +
-        "FROM e WHERE src <> dst), " +
-        "nb AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und), " +
-        "deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS degree FROM nb GROUP BY v), " +
+      s"WITH $tradeEdgesSql, ${undDegSql("degree")}, " +
         "d2 AS (SELECT n.n_nationkey AS v, COALESCE(deg.degree, 0) AS degree " +
         "FROM nation n LEFT JOIN deg ON deg.v = n.n_nationkey) " +
         "SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes " +
         "FROM d2 GROUP BY degree ORDER BY degree"),
       (s, d) => {
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-        val nb = und.select(col("a").as("v"), col("b").as("u"))
-          .unionAll(und.select(col("b").as("v"), col("a").as("u")))
-        val deg = nb.groupBy("v").agg(count(lit(1)).as("degree"))
+        val nb = symmetrise(undirected(s, d, "a", "b"), "a", "b", "v", "u")
+        val deg = degrees(nb, "v", "degree")
         T.nation(s, d).select(col("n_nationkey").as("v"))
           .join(deg, Seq("v"), "left")
           .select(coalesce(col("degree"), lit(0L)).as("degree"))
@@ -1047,11 +1135,7 @@ object Graph {
     // same degree-ordered orientation fix applies when hubs dominate;
     // here pairs are bounded by |V|² of a nation-level graph.
     Q("graph_jaccard", Some(
-      s"WITH $tradeEdgesSql, " +
-        "und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b " +
-        "FROM e WHERE src <> dst), " +
-        "nb AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und), " +
-        "deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS dg FROM nb GROUP BY v), " +
+      s"WITH $tradeEdgesSql, ${undDegSql("dg")}, " +
         "cmn AS (SELECT x.v AS a, y.v AS b, CAST(COUNT(*) AS BIGINT) AS c " +
         "FROM nb x JOIN nb y ON x.u = y.u AND x.v < y.v GROUP BY x.v, y.v) " +
         "SELECT cmn.a, cmn.b, cmn.c AS n_common, " +
@@ -1059,14 +1143,9 @@ object Graph {
         "FROM cmn JOIN deg da ON da.v = cmn.a JOIN deg db ON db.v = cmn.b " +
         "ORDER BY cmn.a, cmn.b"),
       (s, d) => {
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nb = und.select(col("a").as("v"), col("b").as("u"))
-          .unionAll(und.select(col("b").as("v"), col("a").as("u")))
-        val deg = nb.groupBy("v").agg(count(lit(1)).as("dg"))
+        val und = undirected(s, d, "a", "b").persist(MEMORY_AND_DISK)
+        val nb = symmetrise(und, "a", "b", "v", "u")
+        val deg = degrees(nb, "v", "dg")
         val cmn = nb.select(col("v").as("a"), col("u"))
           .join(nb.select(col("v").as("b"), col("u")), "u")
           .where(col("a") < col("b"))
@@ -1091,11 +1170,7 @@ object Graph {
     // degree-ordered orientation as triangle counting; here it is
     // bounded by the nation graph.
     Q("graph_clustering_coeff", Some(
-      s"WITH $tradeEdgesSql, " +
-        "und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b " +
-        "FROM e WHERE src <> dst), " +
-        "nb AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und), " +
-        "deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS dg FROM nb GROUP BY v), " +
+      s"WITH $tradeEdgesSql, ${undDegSql("dg")}, " +
         "tri AS (SELECT x.v, CAST(COUNT(*) AS BIGINT) AS t " +
         "FROM nb x JOIN nb y ON x.v = y.v AND x.u < y.u " +
         "JOIN und ed ON ed.a = x.u AND ed.b = y.u GROUP BY x.v) " +
@@ -1108,14 +1183,9 @@ object Graph {
         "FROM nation n LEFT JOIN deg ON deg.v = n.n_nationkey " +
         "LEFT JOIN tri ON tri.v = n.n_nationkey ORDER BY v"),
       (s, d) => {
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nb = und.select(col("a").as("v"), col("b").as("u"))
-          .unionAll(und.select(col("b").as("v"), col("a").as("u")))
-        val deg = nb.groupBy("v").agg(count(lit(1)).as("dg"))
+        val und = undirected(s, d, "a", "b").persist(MEMORY_AND_DISK)
+        val nb = symmetrise(und, "a", "b", "v", "u")
+        val deg = degrees(nb, "v", "dg")
         val tri = nb.select(col("v"), col("u").as("p"))
           .join(nb.select(col("v"), col("u").as("q")), "v")
           .where(col("p") < col("q"))
@@ -1153,11 +1223,7 @@ object Graph {
       // k_i references k_{i-1} five times through nb/s, so the default
       // inlined expansion would re-evaluate the base scan 5^R times
       val sb = new StringBuilder(
-        s"WITH $tradeEdgesSql, " +
-          "und AS MATERIALIZED (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, " +
-          "CAST(SUM(w) AS BIGINT) AS w2 FROM e WHERE src <> dst GROUP BY a, b), " +
-          "tot AS MATERIALIZED (SELECT CAST(SUM(w2) AS BIGINT) AS t, CAST(COUNT(*) AS BIGINT) AS ne FROM und), " +
-          "k0 AS MATERIALIZED (SELECT a, b FROM und, tot WHERE w2 * ne >= t)")
+        s"WITH $tradeEdgesSql, ${heavyEdgesSql("k0")}")
       for (i <- 1 to KcoreRounds) {
         sb.append(s", nb$i AS MATERIALIZED (SELECT a AS v FROM k${i - 1} UNION ALL SELECT b FROM k${i - 1})")
         sb.append(s", d$i AS MATERIALIZED (SELECT v, CAST(COUNT(*) AS BIGINT) AS deg FROM nb$i GROUP BY v)")
@@ -1171,19 +1237,11 @@ object Graph {
       sb.toString
     },
       (s, d) => {
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .groupBy(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .agg(sum(col("w")).as("w2"))
-        val tot = und.agg(sum(col("w2")).as("t"), count(lit(1)).as("ne"))
-        var edges = und.crossJoin(broadcast(tot))
-          .where(col("w2") * col("ne") >= col("t"))
-          .select("a", "b")
-          .localCheckpoint()
+        def endpointDeg(e: DataFrame): DataFrame =
+          degrees(e.select(col("a").as("v")).unionAll(e.select(col("b").as("v"))), "v", "deg")
+        var edges = heavyEdges(s, d).localCheckpoint()
         for (_ <- 1 to KcoreRounds) {
-          val survivors = edges.select(col("a").as("v"))
-            .unionAll(edges.select(col("b").as("v")))
-            .groupBy("v").agg(count(lit(1)).as("deg"))
+          val survivors = endpointDeg(edges)
             .where(col("deg") >= KcoreK)
             .select("v")
           edges = edges
@@ -1192,9 +1250,7 @@ object Graph {
             .select("a", "b")
             .localCheckpoint()
         }
-        edges.select(col("a").as("v")).unionAll(edges.select(col("b").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("deg"))
-          .orderBy("v")
+        endpointDeg(edges).orderBy("v")
       }),
 
     // Strongly connected components (round 9, third wave) — the DIRECTED
@@ -1230,7 +1286,7 @@ object Graph {
         val ke = dir.crossJoin(broadcast(tot))
           .where(col("w") * col("ne") >= col("t"))
           .select("src", "dst")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(MEMORY_AND_DISK)
         val nodes = T.nation(s, d).select(col("n_nationkey").as("v"))
         var reach = nodes.select(col("v"), col("v").as("u")).localCheckpoint()
         for (_ <- 1 to SccRounds) {
@@ -1259,11 +1315,7 @@ object Graph {
     // Degrees join onto stubs broadcast; everything after the edge
     // build is node/edge-sized.
     Q("graph_assortativity", Some(
-      s"WITH $tradeEdgesSql, " +
-        "und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b " +
-        "FROM e WHERE src <> dst), " +
-        "nb AS (SELECT a AS v, b AS u FROM und UNION ALL SELECT b, a FROM und), " +
-        "deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS dg FROM nb GROUP BY v), " +
+      s"WITH $tradeEdgesSql, ${undDegSql("dg")}, " +
         "st AS (SELECT da.dg AS x, db.dg AS y FROM nb " +
         "JOIN deg da ON da.v = nb.v JOIN deg db ON db.v = nb.u), " +
         "m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx, " +
@@ -1277,14 +1329,9 @@ object Graph {
           "SQRT(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))") +
         " END AS r6 FROM m"),
       (s, d) => {
-        val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-            greatest(col("src"), col("dst")).as("b"))
-          .distinct()
-        val nb = und.select(col("a").as("v"), col("b").as("u"))
-          .unionAll(und.select(col("b").as("v"), col("a").as("u")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val deg = nb.groupBy("v").agg(count(lit(1)).as("dg"))
+        val nb = symmetrise(undirected(s, d, "a", "b"), "a", "b", "v", "u")
+          .persist(MEMORY_AND_DISK)
+        val deg = degrees(nb, "v", "dg")
         val m = nb
           .join(broadcast(deg.select(col("v"), col("dg").as("x"))), "v")
           .join(broadcast(deg.select(col("v").as("u"), col("dg").as("y"))), "u")
@@ -1360,7 +1407,7 @@ object Graph {
       (s, d) => {
         val de = tradeEdges(s, d).where(col("src") =!= col("dst"))
           .select("src", "dst").distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(MEMORY_AND_DISK)
         val rev = de.select(col("src").as("rs"), col("dst").as("rd"),
           lit(1).as("hit"))
         de.join(broadcast(rev),
@@ -1385,23 +1432,11 @@ object Graph {
     // K+1 changes nothing (converged on this corpus). Same archive-scale
     // note as graph_bfs: the frontier-delta form replaces full
     // relaxation when |V| is web-sized.
-    Q("graph_sssp", Some {
-      val rounds = (1 to SsspRounds).map { k =>
-        val prev = s"d${k - 1}"
-        s"d$k AS MATERIALIZED (SELECT p.v, LEAST(p.d, COALESCE(MIN(q.d + s.cst), p.d)) AS d " +
-          s"FROM $prev p LEFT JOIN sym s ON s.u = p.v LEFT JOIN $prev q ON q.v = s.w " +
-          "GROUP BY p.v, p.d)"
-      }.mkString(", ")
-      s"WITH $tradeEdgesSql, " +
-        "und AS (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, " +
+    Q("graph_sssp", Some(relaxFromZeroSql(
+      "und AS (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, " +
         "CAST(1 + SUM(w) % 5 AS BIGINT) AS cst FROM e WHERE src <> dst GROUP BY a, b), " +
-        "sym AS MATERIALIZED (SELECT a AS u, b AS w, cst FROM und " +
-        "UNION ALL SELECT b, a, cst FROM und), " +
-        "d0 AS MATERIALIZED (SELECT n_nationkey AS v, " +
-        "CAST(CASE WHEN n_nationkey = 0 THEN 0 ELSE 999 END AS BIGINT) AS d FROM nation), " +
-        rounds +
-        s" SELECT v AS nationkey, d AS dist FROM d$SsspRounds ORDER BY nationkey"
-    },
+        s"sym AS MATERIALIZED (${symSql("und", "a", "b", "u", "w", "cst")})",
+      SsspRounds, "s.cst")),
       (s, d) => ssspDistances(s, d, SsspRounds)
         .select(col("v").as("nationkey"), col("d").as("dist"))
         .orderBy("nationkey")),
@@ -1419,7 +1454,7 @@ object Graph {
     // pivot sampling (closeness against k sampled sources), the same
     // plan with a sampled source dimension.
     Q("graph_closeness", Some(
-      s"WITH $tradeEdgesSql, $apspSqlChain, " +
+      s"WITH $tradeEdgesSql, ${apspSqlChain("n")}, " +
         s"cs AS (SELECT v, CAST(SUM(d) AS BIGINT) AS sum_d, " +
         s"CAST(COUNT(*) AS BIGINT) AS n_nodes FROM d$ClosenessRounds WHERE u <> v GROUP BY v) " +
         "SELECT v AS nationkey, sum_d, " +
@@ -1446,7 +1481,7 @@ object Graph {
     // join. |V|²-bounded like closeness: fine on an aggregated entity
     // graph, per-source label frontiers at web scale.
     Q("graph_ecc", Some(
-      s"WITH $tradeEdgesSql, $apspSqlChain, " +
+      s"WITH $tradeEdgesSql, ${apspSqlChain("n")}, " +
         s"ec AS (SELECT v, CAST(MAX(d) AS BIGINT) AS ecc FROM d$ClosenessRounds " +
         "WHERE u <> v GROUP BY v), " +
         "mm AS (SELECT MIN(ecc) AS rad, MAX(ecc) AS diam FROM ec) " +
@@ -1479,7 +1514,8 @@ object Graph {
     // the estimates against the exact keys (sum_d ≤ exact sum,
     // ecc_lb ≤ exact ecc, equality when P = V).
     Q("graph_closeness_pivot", Some(
-      s"WITH $tradeEdgesSql, $pivotApspSqlChain, " +
+      s"WITH $tradeEdgesSql, " +
+        apspSqlChain("piv", s"piv AS (SELECT v FROM n WHERE ${pivotSql("v")}), ") + ", " +
         s"cs AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS n_pivots, " +
         s"CAST(SUM(d) AS BIGINT) AS sum_d, CAST(MAX(d) AS BIGINT) AS ecc_lb " +
         s"FROM d$ClosenessRounds WHERE u <> v GROUP BY v) " +
@@ -1523,7 +1559,7 @@ object Graph {
     },
       (s, d) => {
         val e = tradeEdges(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(MEMORY_AND_DISK)
         val outw = e.groupBy("src").agg(sum("w").as("wt"))
         val nations = T.nation(s, d).select(col("n_nationkey").as("v"))
         val restart = when(col("v") === 0, lit(150000000.0)).otherwise(lit(0.0))
@@ -1600,7 +1636,7 @@ object Graph {
     // integer arithmetic.
     Q("graph_modularity", Some {
       s"WITH RECURSIVE $tradeEdgesSql, $mutualTop4Sql, " +
-        "sym AS (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
+        s"sym AS (${symSql("ue", "a", "b", "u", "w")}), " +
         "m AS (SELECT CAST(COUNT(*) AS BIGINT) AS me FROM ue), " +
         "reach AS (SELECT n_nationkey AS a, n_nationkey AS b FROM nation " +
         "UNION SELECT r.a, s.w FROM reach r JOIN sym s ON s.u = r.b), " +
@@ -1623,14 +1659,13 @@ object Graph {
       (s, d) => {
         val ue = mutualTop4(s, d)
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val sym = ue.select(col("a").as("u"), col("b").as("w"))
-          .unionAll(ue.select(col("b").as("u"), col("a").as("w")))
+        val sym = symmetrise(ue, "a", "b", "u", "w")
         val m = ue.agg(count(lit(1)).as("me"))
         val nodes = T.nation(s, d)
           .select(col("n_nationkey").cast("long").as("doc_id"))
         val labels = Llm.componentLabels(nodes,
           ue.select(col("a").cast("long").as("d1"), col("b").cast("long").as("d2")))
-        val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("dg"))
+        val deg = degrees(sym, "u", "dg")
         val dc = labels
           .join(deg, col("doc_id") === col("u"), "left")
           .groupBy(col("cluster").as("c"))
@@ -1677,20 +1712,9 @@ object Graph {
     // exact all-sources table is the honest choice. Oracle: the SAME K
     // rounds as MATERIALIZED CTEs + the same triple join.
     Q("graph_betweenness", Some {
-      val rounds = (1 to StressRounds).map { k =>
-        val (p, f) = (s"p${k - 1}", s"f$k")
-        s"$f AS MATERIALIZED (SELECT fr.s, e.w AS v, CAST($k AS BIGINT) AS d, " +
-          s"CAST(SUM(fr.sig) AS BIGINT) AS sig FROM f${k - 1} fr " +
-          s"JOIN sym e ON e.u = fr.v LEFT JOIN $p p ON p.s = fr.s AND p.v = e.w " +
-          "WHERE p.s IS NULL GROUP BY fr.s, e.w), " +
-          s"p$k AS MATERIALIZED (SELECT * FROM p${k - 1} UNION ALL SELECT * FROM $f)"
-      }.mkString(", ")
       s"WITH $tradeEdgesSql, $mutualTop4Sql, " +
-        "sym AS MATERIALIZED (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
-        "p0 AS MATERIALIZED (SELECT n_nationkey AS s, n_nationkey AS v, " +
-        "CAST(0 AS BIGINT) AS d, CAST(1 AS BIGINT) AS sig FROM nation), " +
-        "f0 AS MATERIALIZED (SELECT * FROM p0), " +
-        rounds + ", " +
+        sigmaPathsSql("p0 AS MATERIALIZED (SELECT n_nationkey AS s, n_nationkey AS v, " +
+          "CAST(0 AS BIGINT) AS d, CAST(1 AS BIGINT) AS sig FROM nation)") + ", " +
         s"st AS (SELECT a.v, CAST(SUM(a.sig * b.sig) AS BIGINT) AS stress " +
         s"FROM p$StressRounds a JOIN p$StressRounds b ON b.s = a.v " +
         s"JOIN p$StressRounds c ON c.s = a.s AND c.v = b.v " +
@@ -1703,28 +1727,8 @@ object Graph {
       (s, d) => {
         val ue = mutualTop4(s, d)
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val sym = ue.select(col("a").as("u"), col("b").as("w"))
-          .unionAll(ue.select(col("b").as("u"), col("a").as("w")))
         val nodes = T.nation(s, d).select(col("n_nationkey").cast("long").as("v"))
-        var paths = nodes.select(col("v").as("s"), col("v"),
-          lit(0L).as("d"), lit(1L).as("sig"))
-        var frontier = paths
-        for (k <- 1 to StressRounds) {
-          val cand = frontier.select(col("s"), col("v"), col("sig"))
-            .join(sym, col("v") === col("u"))
-            .groupBy(col("s"), col("w").as("nv"))
-            .agg(sum(col("sig")).as("sig"))
-          frontier = cand
-            .join(paths.select(col("s"), col("v").as("nv")),
-              Seq("s", "nv"), "left_anti")
-            .select(col("s"), col("nv").as("v"), lit(k.toLong).as("d"),
-              col("sig"))
-            .localCheckpoint()
-          // no second checkpoint: paths is a UNION of already-
-          // checkpointed frontiers + the base, so its lineage is one
-          // level deep by construction — halving the per-round job count
-          paths = paths.unionAll(frontier)
-        }
+        val paths = sigmaPaths(symmetrise(ue, "a", "b", "u", "w"), nodes)
         val a = paths.select(col("s"), col("v"),
           col("d").as("da"), col("sig").as("siga"))
         val b = paths.select(col("s").as("v"), col("v").as("t"),
@@ -1764,14 +1768,6 @@ object Graph {
     // In unweighted BFS every edge from depth ℓ to ℓ+1 is a DAG edge,
     // so the per-level join needs no σ-consistency filter.
     Q("graph_betweenness_pivot", Some {
-      val rounds = (1 to StressRounds).map { k =>
-        val (p, f) = (s"p${k - 1}", s"f$k")
-        s"$f AS MATERIALIZED (SELECT fr.s, e.w AS v, CAST($k AS BIGINT) AS d, " +
-          s"CAST(SUM(fr.sig) AS BIGINT) AS sig FROM f${k - 1} fr " +
-          s"JOIN sym e ON e.u = fr.v LEFT JOIN $p p ON p.s = fr.s AND p.v = e.w " +
-          "WHERE p.s IS NULL GROUP BY fr.s, e.w), " +
-          s"p$k AS MATERIALIZED (SELECT * FROM p${k - 1} UNION ALL SELECT * FROM $f)"
-      }.mkString(", ")
       val term = Det.sqlHalfUpDiv(s"p.sig * (1000000 + n.d6)", "n.sig")
       val back = ((StressRounds - 1) to 1 by -1).map { lev =>
         s"dl$lev AS MATERIALIZED (SELECT p.s, p.v, p.sig, " +
@@ -1783,12 +1779,8 @@ object Graph {
       val union = (1 to StressRounds).map(l => s"SELECT v, d6 FROM dl$l")
         .mkString(" UNION ALL ")
       s"WITH $tradeEdgesSql, $mutualTop4Sql, " +
-        "sym AS MATERIALIZED (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
-        s"piv AS (SELECT n_nationkey AS s FROM nation " +
-        s"WHERE ((n_nationkey * $PivotHashMul) % 4294967296) % $PivotMod = 0), " +
-        "p0 AS MATERIALIZED (SELECT s, s AS v, CAST(0 AS BIGINT) AS d, CAST(1 AS BIGINT) AS sig FROM piv), " +
-        "f0 AS MATERIALIZED (SELECT * FROM p0), " +
-        rounds + ", " +
+        sigmaPathsSql(s"piv AS (SELECT n_nationkey AS s FROM nation WHERE ${pivotSql("n_nationkey")}), " +
+          "p0 AS MATERIALIZED (SELECT s, s AS v, CAST(0 AS BIGINT) AS d, CAST(1 AS BIGINT) AS sig FROM piv)") + ", " +
         s"dl$StressRounds AS (SELECT s, v, sig, CAST(0 AS BIGINT) AS d6 " +
         s"FROM p$StressRounds WHERE d = $StressRounds), " +
         back + ", " +
@@ -1801,28 +1793,9 @@ object Graph {
       (s, d) => {
         val ue = mutualTop4(s, d)
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val sym = ue.select(col("a").as("u"), col("b").as("w"))
-          .unionAll(ue.select(col("b").as("u"), col("a").as("w")))
+        val sym = symmetrise(ue, "a", "b", "u", "w")
         val nodes = T.nation(s, d).select(col("n_nationkey").cast("long").as("v"))
-        val piv = nodes.where(
-          ((col("v") * lit(PivotHashMul)) % lit(4294967296L)) % lit(PivotMod) === 0)
-        var paths = piv.select(col("v").as("s"), col("v"),
-          lit(0L).as("d"), lit(1L).as("sig"))
-        var frontier = paths
-        for (k <- 1 to StressRounds) {
-          val cand = frontier.select(col("s"), col("v"), col("sig"))
-            .join(sym, col("v") === col("u"))
-            .groupBy(col("s"), col("w").as("nv"))
-            .agg(sum(col("sig")).as("sig"))
-          frontier = cand
-            .join(paths.select(col("s"), col("v").as("nv")),
-              Seq("s", "nv"), "left_anti")
-            .select(col("s"), col("nv").as("v"), lit(k.toLong).as("d"),
-              col("sig"))
-            .localCheckpoint()
-          paths = paths.unionAll(frontier)
-        }
-        val pAll = paths.localCheckpoint()
+        val pAll = sigmaPaths(sym, nodes.where(isPivot(col("v")))).localCheckpoint()
         // backward accumulation, deepest level first; each level's δ6 is
         // one exact-integer aggregate over the next level's table
         var delta = pAll.where(col("d") === StressRounds)
@@ -1871,28 +1844,7 @@ object Graph {
     // graph_cc). Oracle: the SAME gain algebra over the unrolled LPA
     // chain.
     Q("graph_louvain_move", Some {
-      s"WITH $tradeEdgesSql, $mutualTop4Sql, " +
-        "sym AS (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
-        "lbl AS (SELECT n_nationkey AS v, CAST(n_nationkey AS BIGINT) AS comm FROM nation), " +
-        "m AS (SELECT CAST(COUNT(*) AS BIGINT) AS me FROM ue), " +
-        "deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS dg FROM sym GROUP BY u), " +
-        "ctot AS (SELECT l.comm, CAST(SUM(COALESCE(d.dg, 0)) AS BIGINT) AS st " +
-        "FROM lbl l LEFT JOIN deg d ON d.u = l.v GROUP BY l.comm), " +
-        "kin AS (SELECT s.u AS v, lw.comm, CAST(COUNT(*) AS BIGINT) AS k " +
-        "FROM sym s JOIN lbl lw ON lw.v = s.w GROUP BY s.u, lw.comm), " +
-        "pairs AS (SELECT v, comm FROM kin UNION SELECT v, comm FROM lbl " +
-        "UNION SELECT v, CAST(v AS BIGINT) AS comm FROM lbl), " +
-        "cand AS (SELECT p.v, p.comm, " +
-        "CAST(2 * (SELECT me FROM m) * COALESCE(k.k, 0) " +
-        "- (COALESCE(ct.st, 0) - CASE WHEN p.comm = l.comm THEN COALESCE(d.dg, 0) ELSE 0 END) " +
-        "* COALESCE(d.dg, 0) AS BIGINT) AS g " +
-        "FROM pairs p JOIN lbl l ON l.v = p.v " +
-        "LEFT JOIN kin k ON k.v = p.v AND k.comm = p.comm " +
-        "LEFT JOIN ctot ct ON ct.comm = p.comm " +
-        "LEFT JOIN deg d ON d.u = p.v), " +
-        "pick AS (SELECT v, comm AS new_comm, g FROM (SELECT *, " +
-        "ROW_NUMBER() OVER (PARTITION BY v ORDER BY g DESC, comm) AS rn FROM cand) r " +
-        "WHERE rn = 1) " +
+      s"WITH $tradeEdgesSql, $mutualTop4Sql, $louvainPhase1Sql " +
         "SELECT n.n_nationkey AS nationkey, l.comm AS old_comm, " +
         "p.new_comm, p.g AS gain " +
         "FROM nation n JOIN lbl l ON l.v = n.n_nationkey " +
@@ -1923,35 +1875,13 @@ object Graph {
     // level starts from. Work is community-sized after one edge-keyed
     // relabel join.
     Q("graph_louvain_contract", Some {
-      s"WITH $tradeEdgesSql, $mutualTop4Sql, " +
-        "sym AS (SELECT a AS u, b AS w FROM ue UNION ALL SELECT b, a FROM ue), " +
-        "lbl AS (SELECT n_nationkey AS v, CAST(n_nationkey AS BIGINT) AS comm FROM nation), " +
-        "m AS (SELECT CAST(COUNT(*) AS BIGINT) AS me FROM ue), " +
-        "deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS dg FROM sym GROUP BY u), " +
-        "ctot AS (SELECT l.comm, CAST(SUM(COALESCE(d.dg, 0)) AS BIGINT) AS st " +
-        "FROM lbl l LEFT JOIN deg d ON d.u = l.v GROUP BY l.comm), " +
-        "kin AS (SELECT s.u AS v, lw.comm, CAST(COUNT(*) AS BIGINT) AS k " +
-        "FROM sym s JOIN lbl lw ON lw.v = s.w GROUP BY s.u, lw.comm), " +
-        "pairs AS (SELECT v, comm FROM kin UNION SELECT v, comm FROM lbl " +
-        "UNION SELECT v, CAST(v AS BIGINT) AS comm FROM lbl), " +
-        "cand AS (SELECT p.v, p.comm, " +
-        "CAST(2 * (SELECT me FROM m) * COALESCE(k.k, 0) " +
-        "- (COALESCE(ct.st, 0) - CASE WHEN p.comm = l.comm THEN COALESCE(d.dg, 0) ELSE 0 END) " +
-        "* COALESCE(d.dg, 0) AS BIGINT) AS g " +
-        "FROM pairs p JOIN lbl l ON l.v = p.v " +
-        "LEFT JOIN kin k ON k.v = p.v AND k.comm = p.comm " +
-        "LEFT JOIN ctot ct ON ct.comm = p.comm " +
-        "LEFT JOIN deg d ON d.u = p.v), " +
-        "pick AS (SELECT v, comm AS new_comm, g FROM (SELECT *, " +
-        "ROW_NUMBER() OVER (PARTITION BY v ORDER BY g DESC, comm) AS rn FROM cand) r " +
-        "WHERE rn = 1), " +
+      s"WITH $tradeEdgesSql, $mutualTop4Sql, $louvainPhase1Sql, " +
         "nl AS (SELECT v, new_comm FROM pick), " +
         "se AS (SELECT LEAST(la.new_comm, lb.new_comm) AS ca, " +
         "GREATEST(la.new_comm, lb.new_comm) AS cb, CAST(COUNT(*) AS BIGINT) AS w " +
         "FROM ue JOIN nl la ON la.v = ue.a JOIN nl lb ON lb.v = ue.b GROUP BY 1, 2), " +
         "m2 AS (SELECT CAST(SUM(w) AS BIGINT) AS mw FROM se), " +
-        "sym2 AS (SELECT ca AS i, cb AS j, w FROM se WHERE ca <> cb " +
-        "UNION ALL SELECT cb, ca, w FROM se WHERE ca <> cb), " +
+        s"sym2 AS (${symSql("se WHERE ca <> cb", "ca", "cb", "i", "j", "w")}), " +
         "selfw AS (SELECT ca AS i, w FROM se WHERE ca = cb), " +
         "nodes2 AS (SELECT DISTINCT new_comm AS i FROM nl), " +
         "ki AS (SELECT n.i, CAST(COALESCE(sw.s, 0) + 2 * COALESCE(sf.w, 0) AS BIGINT) AS k " +
@@ -1984,10 +1914,7 @@ object Graph {
           .agg(count(lit(1)).as("w"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val m2 = se.agg(sum(col("w")).as("mw"))
-        val sym2 = se.where(col("ca") =!= col("cb"))
-          .select(col("ca").as("i"), col("cb").as("j"), col("w"))
-          .unionAll(se.where(col("ca") =!= col("cb"))
-            .select(col("cb").as("i"), col("ca").as("j"), col("w")))
+        val sym2 = symmetrise(se.where(col("ca") =!= col("cb")), "ca", "cb", "i", "j", "w")
         val selfw = se.where(col("ca") === col("cb"))
           .select(col("ca").as("si"), col("w").as("ws"))
         val nodes2 = nl.select(col("new_comm").as("i")).distinct()
@@ -2038,21 +1965,15 @@ object Graph {
     // iterative key (graph_kcore scaladoc).
     Q("graph_ktruss", Some {
       val sb = new StringBuilder(
-        s"WITH $tradeEdgesSql, " +
-          "und AS MATERIALIZED (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, " +
-          "CAST(SUM(w) AS BIGINT) AS w2 FROM e WHERE src <> dst GROUP BY a, b), " +
-          "tot AS MATERIALIZED (SELECT CAST(SUM(w2) AS BIGINT) AS t, CAST(COUNT(*) AS BIGINT) AS ne FROM und), " +
-          "t0 AS MATERIALIZED (SELECT a, b FROM und, tot WHERE w2 * ne >= t)")
+        s"WITH $tradeEdgesSql, ${heavyEdgesSql("t0")}")
       for (i <- 1 to TrussRounds) {
-        sb.append(s", sym$i AS MATERIALIZED (SELECT a AS u, b AS v FROM t${i - 1} " +
-          s"UNION ALL SELECT b, a FROM t${i - 1})")
+        sb.append(s", sym$i AS MATERIALIZED (${symSql(s"t${i - 1}", "a", "b", "u", "v")})")
         sb.append(s", sup$i AS MATERIALIZED (SELECT e.a, e.b, CAST(COUNT(*) AS BIGINT) AS supp " +
           s"FROM t${i - 1} e JOIN sym$i s1 ON s1.u = e.a " +
           s"JOIN sym$i s2 ON s2.u = e.b AND s2.v = s1.v GROUP BY e.a, e.b)")
         sb.append(s", t$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE supp >= $TrussSupp)")
       }
-      sb.append(s", symf AS (SELECT a AS u, b AS v FROM t$TrussRounds " +
-        s"UNION ALL SELECT b, a FROM t$TrussRounds) " +
+      sb.append(s", symf AS (${symSql(s"t$TrussRounds", "a", "b", "u", "v")}) " +
         s"SELECT e.a, e.b, CAST(COUNT(*) AS BIGINT) AS supp FROM t$TrussRounds e " +
         "JOIN symf s1 ON s1.u = e.a JOIN symf s2 ON s2.u = e.b AND s2.v = s1.v " +
         "GROUP BY e.a, e.b ORDER BY e.a, e.b")
@@ -2065,18 +1986,9 @@ object Graph {
     * K+1 and assert the fixpoint. Returns the surviving edges with their
     * support over the final graph (a, b, supp). */
   def ktrussSupport(s: SparkSession, d: String, rounds: Int): DataFrame = {
-    val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-      .groupBy(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .agg(sum(col("w")).as("w2"))
-    val tot = und.agg(sum(col("w2")).as("t"), count(lit(1)).as("ne"))
-    var edges = und.crossJoin(broadcast(tot))
-      .where(col("w2") * col("ne") >= col("t"))
-      .select("a", "b")
-      .localCheckpoint()
+    var edges = heavyEdges(s, d).localCheckpoint()
     def support(e: DataFrame): DataFrame = {
-      val sym = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val sym = symmetrise(e, "a", "b", "u", "v")
       e.join(broadcast(sym.select(col("u").as("a"), col("v").as("c1"))), "a")
         .join(broadcast(sym.select(col("u").as("b"), col("v").as("c2"))),
           Seq("b"))
@@ -2094,24 +2006,9 @@ object Graph {
   /** The graph_sssp relaxation loop, K parameterized so GraphSpec can
     * run K and K+1 and assert the fixpoint. */
   def ssspDistances(s: SparkSession, d: String, k: Int): DataFrame = {
-    val und = tradeEdges(s, d).where(col("src") =!= col("dst"))
-      .groupBy(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .agg((lit(1L) + sum("w") % 5).as("cst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = und.select(col("a").as("u"), col("b").as("w"), col("cst"))
-      .unionAll(und.select(col("b").as("u"), col("a").as("w"), col("cst")))
-    val nodes = T.nation(s, d).select(col("n_nationkey").as("v"))
-    var dist = nodes.select(col("v"),
-      when(col("v") === 0, 0L).otherwise(999L).as("d"))
-    for (_ <- 1 to k) {
-      val viaN = sym
-        .join(broadcast(dist.select(col("v").as("w"), col("d").as("dn"))), "w")
-        .groupBy(col("u").as("v")).agg(min(col("dn") + col("cst")).as("nd"))
-      dist = dist.join(viaN, Seq("v"), "left")
-        .select(col("v"), least(col("d"), coalesce(col("nd"), col("d"))).as("d"))
-        .localCheckpoint()
-    }
+    val und = undirectedAgg(s, d, "a", "b", (lit(1L) + sum("w") % 5).as("cst"))
+      .persist(MEMORY_AND_DISK)
+    val dist = relaxFromZero(s, d, symmetrise(und, "a", "b", "u", "w", "cst"), k, col("cst"))
     und.unpersist()
     dist
   }
@@ -2120,7 +2017,7 @@ object Graph {
     * scaladoc for the grid/normalization contract). */
   private def hits(s: SparkSession, d: String): DataFrame = {
     val e = tradeEdges(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val nations = T.nation(s, d).select(col("n_nationkey").as("v"))
     def normalize(raw: DataFrame): DataFrame = {
       val tot = raw.agg(sum(col("raw")).as("tot"))

@@ -741,16 +741,22 @@ class PlanContractSpec extends SparkSpec {
       s"hybrid_rrf shape:\n${hr.take(2000)}")
   }
 
-  test("graph-ANN builders run a pinned number of Spark jobs") {
-    // Jobs each NSW/HNSW builder launches before it returns its DataFrame
-    // at sf0.001: the index build, one checkpoint per search round and
-    // one job per AQE exchange stage inside them. A change to the search
-    // loop or the checkpoint cadence that moves a count updates its pin
-    // here, with the reason. The cache is cleared first: rows another
-    // test left cached would change AQE's stats and so its stage split.
+  test("iterative builders run a pinned number of Spark jobs") {
+    // Jobs each iterative builder launches before it returns its
+    // DataFrame at sf0.001: for the NSW/HNSW keys the index build and
+    // the search rounds, for the graph keys the relaxation, BFS, peel,
+    // Borůvka and Louvain rounds — one checkpoint per round and one job
+    // per AQE exchange stage inside them. A change to a loop or its
+    // checkpoint cadence that moves a count updates its pin here, with
+    // the reason. The cache is cleared first: rows another test left
+    // cached would change AQE's stats and so its stage split.
     val pinned = Seq("llm_ann_nsw" -> 52, "llm_ann_batch_nsw" -> 82,
       "llm_ann_hnsw" -> 75, "llm_ann_batch_hnsw" -> 132,
-      "llm_ann_hnsw_upsert" -> 135)
+      "llm_ann_hnsw_upsert" -> 135, "graph_bfs" -> 46, "graph_sssp" -> 57,
+      "graph_closeness" -> 23, "graph_ecc" -> 23, "graph_closeness_pivot" -> 60,
+      "graph_betweenness" -> 45, "graph_betweenness_pivot" -> 71,
+      "graph_kcore" -> 32, "graph_ktruss" -> 24, "graph_mst_boruvka" -> 62,
+      "graph_louvain_contract" -> 34)
     val sc = spark.sparkContext
     val got = pinned.map { case (key, _) =>
       spark.catalog.clearCache()
