@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -184,11 +184,136 @@ object EO {
   private val DistRounds = 8
 
   /** Inverse of [[eventTiles]]'s packing for oracle comparison: one row
-    * per (tile, pos, value) across whatever time/band rows the composite
-    * left. */
-  private def unpackTiles(tiles: DataFrame): DataFrame =
-    tiles.select(col("tile_y").cast("long").as("tile"),
-      posexplode(col("data")).as(Seq("pos", "v")))
+    * per (tile, `pos`, `v`) of the packed array `arr` across whatever
+    * time/band rows the composite left. */
+  private def unpackTiles(tiles: DataFrame, arr: Column = col("data"),
+      pos: String = "pos", v: String = "v"): DataFrame =
+    tiles.select(tileId, posexplode(arr).as(Seq(pos, v)))
+
+  /** The packed tiles' tile_y key as the long `tile` id the oracles use. */
+  private def tileId: Column = col("tile_y").cast("long").as("tile")
+
+  /** The t = 0 slice of the full 256-pixel [[eventTiles]] of one band —
+    * the input of every positional 16×16 tile key. */
+  private def t0Tiles(s: SparkSession, d: String, band: (String, Column)): DataFrame =
+    eventTiles(s, d, Seq(band)).where(size(col("data")) === 256 && col("time") === 0)
+
+  /** The Horn gradient of the t = 0 user_id tiles, one row per interior
+    * pixel: (tile, opos, p) with p = struct(gx, gy). */
+  private def hornPixels(s: SparkSession, d: String): DataFrame =
+    unpackTiles(graft.raster.RasterGrid.focalGradient3x3(
+      t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16),
+      arrays_zip(col("gx"), col("gy")), "opos", "p")
+
+  /** [[hornPixels]] with the components as longs: (tile, opos, gx, gy). */
+  private def hornGradient(s: SparkSession, d: String): DataFrame =
+    hornPixels(s, d).select(col("tile"), col("opos"),
+      col("p.gx").cast("long").as("gx"), col("p.gy").cast("long").as("gy"))
+
+  /** Event rows on the tile grid, unpacked: tile, the caller's pixel
+    * `coords`, t, then `vals` (the row form of [[eventTiles]]' layout). */
+  private def eventPixels(s: SparkSession, d: String, coords: Seq[Column],
+      vals: Column*): DataFrame =
+    T.events(s, d).select((expr("(event_id div 4) div 256").as("tile") +: coords) ++
+      ((col("event_id") % 4).as("t") +: vals): _*)
+
+  /** An event pixel's coordinates in its 16×16 tile: (py, px), or the
+    * packed index pos. */
+  private def pyPx: Seq[Column] = Seq(
+    expr("((event_id div 4) % 256) div 16").as("py"),
+    expr("((event_id div 4) % 256) % 16").as("px"))
+  private def tilePos: Seq[Column] = Seq(expr("(event_id div 4) % 256").as("pos"))
+
+  /** The tiles of `px` whose t = 0 slice is complete (256 pixels). */
+  private def fullTiles(px: DataFrame): DataFrame =
+    px.where(col("t") === 0).groupBy("tile")
+      .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
+
+  /** The `keep` rows of `px` that lie on a [[fullTiles]] tile. */
+  private def onFullTiles(px: DataFrame, keep: Column): DataFrame =
+    px.where(keep).join(broadcast(fullTiles(px)), "tile")
+
+  /** The 16-bin DN histogram groups (tile, bin = min(v div 32, 15)) of
+    * the full tiles' t = 0 pixels, v = user_id. */
+  private def tileBins(s: SparkSession, d: String): RelationalGroupedDataset =
+    onFullTiles(eventPixels(s, d, Nil, col("user_id").as("v")), col("t") === 0)
+      .groupBy(col("tile"), least(expr("v div 32"), lit(15L)).as("bin"))
+
+  /** The set t = 0 mask pixels (user_id parity) of the full tiles as
+    * (tile, py, px, pid), pid the global pixel id — the clump keys' p0. */
+  private def maskPixels(s: SparkSession, d: String): DataFrame =
+    onFullTiles(eventPixels(s, d, pyPx :+ expr("event_id div 4").as("pid"),
+      (col("user_id") % 2).as("m")), col("t") === 0 && col("m") === 1)
+      .select("tile", "py", "px", "pid")
+
+  /** Whether packed pixel index p lies in its 16×16 tile's 14×14 interior. */
+  private def interior(p: Column): Column =
+    shiftright(p, 4).between(1, 14) && p.bitwiseAND(lit(15)).between(1, 14)
+
+  /** Oracle twin of [[eventPixels]]: the `px` CTE (tile, `coords`, t,
+    * `vals`). Callers prepend `WITH ` and append their own CTEs. */
+  private def pxSql(coords: String, vals: String): String =
+    s"px AS (SELECT (event_id // 4) // 256 AS tile, ${coords}event_id % 4 AS t, $vals FROM events)"
+
+  /** [[pxSql]] plus `full_t`, the oracle twin of [[fullTiles]]. */
+  private def fullTilesSql(coords: String, vals: String): String =
+    pxSql(coords, vals) +
+      ", full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256)"
+
+  /** [[pxSql]] coordinates: (py, px) in the tile, or the packed pos.
+    * Declared BEFORE `all` (object-init order). */
+  private val PyPxSql = "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, "
+  private val PosSql = "(event_id // 4) % 256 AS pos, "
+
+  /** The `p0` CTE: the full tiles' t = 0 pixels as (tile, `cols`). */
+  private def p0Sql(cols: String): String =
+    s"p0 AS (SELECT tile, $cols FROM px JOIN full_t USING (tile) WHERE t = 0)"
+
+  /** `WITH px, full_t, p0, ` of the 3×3 stencil keys: p0 = (tile, py, px,
+    * `name`) with `name` = CAST(`v` AS BIGINT). */
+  private def gridSql(v: String, name: String): String =
+    "WITH " + fullTilesSql(PyPxSql, s"CAST($v AS BIGINT) AS $name") + ", " +
+      p0Sql(s"py, px, $name") + ", "
+
+  /** The 3×3 neighbourhood self-join of `src` (o = centre, nb = each of
+    * its 9 cells) over the centres with py, px in [lo, hi]. */
+  private def nb3x3Sql(src: String, lo: Int, hi: Int): String =
+    s"FROM $src o JOIN $src nb ON nb.tile = o.tile " +
+      "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
+      s"WHERE o.py BETWEEN $lo AND $hi AND o.px BETWEEN $lo AND $hi "
+
+  /** A 3×3 stencil CTE `name` over p0's 14×14 interior: (tile, opos,
+    * `aggs` over the neighbours nb of each centre o). */
+  private def stencilSql(name: String, aggs: String): String =
+    s"$name AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, $aggs " +
+      nb3x3Sql("p0", 1, 14) + "GROUP BY o.tile, opos)"
+
+  /** Oracle twin of [[hornGradient]]: [[gridSql]] over user_id plus the
+    * Horn stencil CTE g(tile, opos, gx, gy). */
+  private def hornSql: String =
+    gridSql("user_id", "v") + stencilSql("g",
+      "CAST(SUM(nb.v * (nb.px - o.px) * (CASE WHEN nb.py = o.py THEN 2 ELSE 1 END)) AS BIGINT) AS gx, " +
+        "CAST(SUM(nb.v * (nb.py - o.py) * (CASE WHEN nb.px = o.px THEN 2 ELSE 1 END)) AS BIGINT) AS gy")
+
+  /** Oracle twin of [[tileBins]]: the per-(tile, bin) `aggs` over the
+    * full tiles' t = 0 pixels p. */
+  private def tileBinsSql(aggs: String): String =
+    s"SELECT p.tile, LEAST(p.v // 32, 15) AS bin, $aggs " +
+      "FROM px p JOIN full_t USING (tile) WHERE p.t = 0 GROUP BY p.tile, bin"
+
+  /** Oracle twin of [[maskPixels]] + [[clumpLabeled]]: p0, the right/down
+    * pairs `ed` and cl(pid, clump = min pid reachable over 4-adjacency),
+    * by a recursive closure. */
+  private def maskClumpsSql: String =
+    "WITH RECURSIVE " + fullTilesSql(PyPxSql + "(event_id // 4) AS pid, ", "user_id % 2 AS m") +
+      ", p0 AS (SELECT p.tile, py, px, pid FROM px p JOIN full_t USING (tile) " +
+      "WHERE t = 0 AND m = 1), " +
+      "ed AS (SELECT a.pid AS d1, b.pid AS d2 FROM p0 a JOIN p0 b ON a.tile = b.tile " +
+      "AND ((b.py = a.py AND b.px = a.px + 1) OR (b.py = a.py + 1 AND b.px = a.px))), " +
+      "edges AS (SELECT d1, d2 FROM ed UNION ALL SELECT d2, d1 FROM ed), " +
+      "reach AS (SELECT pid AS a, pid AS b FROM p0 " +
+      "UNION SELECT r.a, e.d2 FROM reach r JOIN edges e ON r.b = e.d1), " +
+      "cl AS (SELECT a AS pid, MIN(b) AS clump FROM reach GROUP BY a)"
 
   /** Rounds of D8 flow-accumulation relaxation (eo_tile_flow_acc) — the
     * graph_bfs fixed-K contract: both engines run the SAME K, and the
@@ -201,6 +326,52 @@ object EO {
   private val D8Offs = Seq((0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8),
     (0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128))
 
+  /** Oracle `CASE dir …` mapping a D8 direction code to its dy or dx. */
+  private def dirCaseSql(of: ((Int, Int, Int)) => Int): String =
+    "CASE dir " + D8Offs.init.map(o => s"WHEN ${o._3} THEN ${of(o)}").mkString(" ") +
+      s" ELSE ${of(D8Offs.last)} END"
+  private val DirDySql = dirCaseSql(_._1)
+  private val DirDxSql = dirCaseSql(_._2)
+
+  /** The D8 keys' p0: the full tiles' t = 0 elevations (tile, py, px, z). */
+  private val D8P0Sql =
+    "p0 AS (SELECT p.tile, py, px, z FROM px p JOIN full_t USING (tile) WHERE t = 0)"
+
+  /** The D8 oracle prelude up to the steepest-descent pick: px/full_t
+    * with z = s2(value), the caller's `p0` CTE, the [[D8Offs]] offsets,
+    * and pick(tile, py, px, best, dir) per interior pixel — max drop,
+    * min direction code on ties. Ends with ", ". */
+  private def d8PickSql(p0: String): String =
+    "WITH " + fullTilesSql(PyPxSql, sqlS2("value") + " AS z") + ", " + p0 + ", " +
+      "offs AS (SELECT * FROM (VALUES " +
+      D8Offs.map { case (dy, dx, dir) => s"($dy, $dx, $dir)" }.mkString(", ") +
+      ") AS v(dy, dx, dir)), " +
+      "nb AS (SELECT o.tile, o.py, o.px, f.dir, o.z - n.z AS drop " +
+      "FROM p0 o CROSS JOIN offs f " +
+      "JOIN p0 n ON n.tile = o.tile AND n.py = o.py + f.dy AND n.px = o.px + f.dx " +
+      "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14), " +
+      "wb AS (SELECT tile, py, px, dir, drop, " +
+      "MAX(drop) OVER (PARTITION BY tile, py, px) AS best FROM nb), " +
+      "pick AS (SELECT tile, py, px, MAX(best) AS best, " +
+      "CAST(MIN(CASE WHEN drop = best THEN dir END) AS BIGINT) AS dir " +
+      "FROM wb GROUP BY tile, py, px), "
+
+  /** The flow-accumulation oracle chain after [[d8PickSql]]: fl (each
+    * pick's interior target), a0 = 1 per pixel, then FlowAccRounds
+    * relaxation rounds a1..aK of acc = 1 + Σ inflowing acc. */
+  private def flowAccSql: String =
+    s"fl AS MATERIALIZED (SELECT tile, py, px, py + ($DirDySql) AS ty, px + ($DirDxSql) AS tx " +
+      s"FROM pick WHERE best > 0 AND py + ($DirDySql) BETWEEN 1 AND 14 " +
+      s"AND px + ($DirDxSql) BETWEEN 1 AND 14), " +
+      "a0 AS MATERIALIZED (SELECT tile, py, px, CAST(1 AS BIGINT) AS acc FROM pick), " +
+      (1 to FlowAccRounds).map { k =>
+        s"a$k AS MATERIALIZED (SELECT n.tile, n.py, n.px, " +
+          "1 + COALESCE(SUM(u.acc), 0) AS acc " +
+          "FROM a0 n LEFT JOIN fl ON fl.tile = n.tile AND fl.ty = n.py AND fl.tx = n.px " +
+          s"LEFT JOIN a${k - 1} u ON u.tile = fl.tile AND u.py = fl.py AND u.px = fl.px " +
+          "GROUP BY n.tile, n.py, n.px)"
+      }.mkString(", ")
+
   /** The packed D8 flow map shared by eo_tile_flow_acc and
     * eo_tile_watershed: one row per full t=0 tile with `flow` a 256-long
     * array — flow[p] = the downstream pixel index picked by steepest
@@ -209,21 +380,14 @@ object EO {
     * whose pick leaves the graded 14×14 interior. ONE aggregation
     * Exchange; the pick itself is a map-only array projection. */
   private def d8FlowPacked(s: SparkSession, d: String): DataFrame = {
-    val px = T.events(s, d).select(
-      expr("(event_id div 4) div 256").as("tile"),
-      expr("(event_id div 4) % 256").as("pos"),
-      (col("event_id") % 4).as("t"), Det.s2(col("value")).as("z"))
-    val packed = px.where(col("t") === 0)
+    val packed = eventPixels(s, d, tilePos, Det.s2(col("value")).as("z"))
+      .where(col("t") === 0)
       .groupBy("tile")
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("z")))),
         e => e.getField("z")).as("zarr"),
         count(lit(1)).as("c"))
       .where(col("c") === 256)
       .select("tile", "zarr")
-    def pyOf(p: Column) = shiftright(p, 4)
-    def pxOf(p: Column) = p.bitwiseAND(lit(15))
-    def interior(p: Column) =
-      pyOf(p).between(1, 14) && pxOf(p).between(1, 14)
     val idx = sequence(lit(0), lit(255))
     // flow[p] = downstream pixel index, or -1 (boundary, pit, or target
     // on the boundary ring — flows exiting the graded interior)
@@ -268,8 +432,6 @@ object EO {
     * accumulation, boundary 0), zarr the s2 elevation array carried
     * through for downstream terrain composites (eo_twi). */
   private def flowAccPacked(s: SparkSession, d: String, k: Int): DataFrame = {
-    def interior(p: Column) =
-      shiftright(p, 4).between(1, 14) && p.bitwiseAND(lit(15)).between(1, 14)
     val idx = sequence(lit(0), lit(255))
     var df = d8FlowPacked(s, d)
       .select(col("tile"), col("zarr"), col("flow"),
@@ -321,8 +483,6 @@ object EO {
     * element through nested element_at, so the lineage is cut per round
     * with a LAZY localCheckpoint — the eo_tile_distance discipline). */
   def watershedBasins(s: SparkSession, d: String, j: Int): DataFrame = {
-    def interior(p: Column) =
-      shiftright(p, 4).between(1, 14) && p.bitwiseAND(lit(15)).between(1, 14)
     val idx = sequence(lit(0), lit(255))
     var df = d8FlowPacked(s, d).select(col("tile"),
       transform(idx, p => {
@@ -673,17 +833,10 @@ object EO {
     // output. σₙ² = 400 DN² — the noise constant a real chain
     // calibrates from the sensor.
     Q("eo_tile_lee", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
+      gridSql("user_id", "v") +
         "fs AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, o.v AS x, " +
         "CAST(SUM(nb.v) AS BIGINT) AS sv, CAST(SUM(nb.v * nb.v) AS BIGINT) AS svv " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos, o.v), " +
+        nb3x3Sql("p0", 1, 14) + "GROUP BY o.tile, opos, o.v), " +
         "lee AS (SELECT tile, opos, " +
         sqlS2("CAST(sv AS DOUBLE) / 9.0 + (CAST(x AS DOUBLE) - CAST(sv AS DOUBLE) / 9.0) * " +
           "((CAST(9 * svv - sv * sv AS DOUBLE) / 81.0) / " +
@@ -694,8 +847,7 @@ object EO {
         "FROM lee GROUP BY tile ORDER BY tile"),
       (s, d) => {
         import graft.raster.TileExprs
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
+        val grid = t0Tiles(s, d, "v" -> col("user_id"))
         TileExprs.register(s)
         // interior pixel values align with the stencil outputs by
         // slicing the same 14x14 window out of the original tile
@@ -703,7 +855,7 @@ object EO {
           sequence(lit(0), lit(14 * 14 - 1)),
           o => element_at(col("data"),
             ((o / 14).cast("int") + 1) * 16 + (o % 14).cast("int") + 2))
-        val both = grid.select(col("tile_y").cast("long").as("tile"),
+        val both = grid.select(tileId,
           TileExprs.focal3(col("data"), 16, 16).as("fs"),
           TileExprs.focal3(transform(col("data"), e => e * e), 16, 16).as("fs2"),
           interior.as("xs"))
@@ -781,10 +933,7 @@ object EO {
     // tile borders (compose the halo exchange when cross-tile shadows
     // matter, the focal contract). Counts + position checksum per tile.
     Q("eo_tile_shift_mask", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id % 2 AS BIGINT) AS m FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PyPxSql, "CAST(user_id % 2 AS BIGINT) AS m") + ", " +
         "p0 AS (SELECT p.tile, py, px, m FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
         "sh AS (SELECT o.tile, o.py, o.px, o.m AS cloud, " +
         "COALESCE(src.m, 0) AS shadow FROM p0 o " +
@@ -797,14 +946,8 @@ object EO {
         "CAST(SUM(bad * (pos + 1)) AS BIGINT) AS checksum " +
         "FROM c GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("((event_id div 4) % 256) div 16").as("py"),
-          expr("((event_id div 4) % 256) % 16").as("px"),
-          (col("event_id") % 4).as("t"), (col("user_id") % 2).as("m"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val p0 = px.where(col("t") === 0).join(broadcast(fullT), "tile")
+        val p0 = onFullTiles(eventPixels(s, d, pyPx, (col("user_id") % 2).as("m")),
+            col("t") === 0)
           .select("tile", "py", "px", "m")
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val src = p0.select(col("tile").as("ts"), col("py").as("sy"),
@@ -839,22 +982,7 @@ object EO {
     // Output = per-tile direction histogram with drop and position
     // checksums pinning every pixel's decision.
     Q("eo_tile_d8", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, " + sqlS2("value") + " AS z FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, py, px, z FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
-        "offs AS (SELECT * FROM (VALUES (0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8), " +
-        "(0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128)) AS v(dy, dx, dir)), " +
-        "nb AS (SELECT o.tile, o.py, o.px, f.dir, o.z - n.z AS drop " +
-        "FROM p0 o CROSS JOIN offs f " +
-        "JOIN p0 n ON n.tile = o.tile AND n.py = o.py + f.dy AND n.px = o.px + f.dx " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14), " +
-        "wb AS (SELECT tile, py, px, dir, drop, " +
-        "MAX(drop) OVER (PARTITION BY tile, py, px) AS best FROM nb), " +
-        "pick AS (SELECT tile, py, px, MAX(best) AS best, " +
-        "CAST(MIN(CASE WHEN drop = best THEN dir END) AS BIGINT) AS dir " +
-        "FROM wb GROUP BY tile, py, px), " +
+      d8PickSql(D8P0Sql) +
         "d AS (SELECT tile, py * 16 + px AS pos, " +
         "CASE WHEN best > 0 THEN dir ELSE 0 END AS dir, " +
         "CASE WHEN best > 0 THEN best ELSE 0 END AS drop FROM pick) " +
@@ -863,19 +991,11 @@ object EO {
         "CAST(SUM(pos + 1) AS BIGINT) AS checksum " +
         "FROM d GROUP BY tile, dir ORDER BY tile, dir"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("((event_id div 4) % 256) div 16").as("py"),
-          expr("((event_id div 4) % 256) % 16").as("px"),
-          (col("event_id") % 4).as("t"), s2(col("value")).as("z"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val p0 = px.where(col("t") === 0).join(broadcast(fullT), "tile")
+        val p0 = onFullTiles(eventPixels(s, d, pyPx, s2(col("value")).as("z")),
+            col("t") === 0)
           .select("tile", "py", "px", "z")
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val offs = Seq((0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8),
-          (0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128))
-        val offDf = s.createDataFrame(offs).toDF("dy", "dx", "dir")
+        val offDf = s.createDataFrame(D8Offs).toDF("dy", "dx", "dir")
         val nbr = p0.select(col("tile").as("nt"), col("py").as("ny"),
           col("px").as("nx"), col("z").as("nz"))
         val nb = p0.where(col("py").between(1, 14) && col("px").between(1, 14))
@@ -913,10 +1033,7 @@ object EO {
     // same 9-neighbor MAX/MIN via the offsets-dimension join on global
     // pixel coordinates. Interior 14×14, the focal halo contract.
     Q("eo_tile_morph_gradient", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PyPxSql, "CAST(user_id AS BIGINT) AS v") + ", " +
         "p0 AS (SELECT p.tile, py, px, v FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
         "offs AS (SELECT * FROM (VALUES (-1,-1),(-1,0),(-1,1),(0,-1),(0,0),(0,1),(1,-1),(1,0),(1,1)) AS o(dy, dx)), " +
         "nb AS (SELECT o.tile, o.py, o.px, n.v FROM p0 o CROSS JOIN offs f " +
@@ -928,11 +1045,9 @@ object EO {
         "CAST(SUM(grad * ((py - 1) * 14 + (px - 1) + 1)) AS BIGINT) AS checksum " +
         "FROM g GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val grad = graft.raster.RasterGrid.morphGradient3x3(grid, h = 16, w = 16)
-        grad.select(col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "g")))
+        val grad = graft.raster.RasterGrid.morphGradient3x3(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16)
+        unpackTiles(grad, pos = "opos", v = "g")
           .groupBy("tile")
           .agg(count(lit(1)).as("n"),
             sum(col("g").cast("long")).as("sum_grad"),
@@ -987,12 +1102,9 @@ object EO {
     Q("eo_tile_otsu", Some {
       val num = "(s0 * c1 - s1 * c0)"
       val score = s"(($num * $num * 10000) // (c0 * c1))"
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "h AS (SELECT p.tile, LEAST(p.v // 32, 15) AS bin, CAST(COUNT(*) AS BIGINT) AS n, " +
-        "CAST(SUM(LEAST(p.v // 32, 15)) AS BIGINT) AS sv " +
-        "FROM px p JOIN full_t USING (tile) WHERE p.t = 0 GROUP BY p.tile, bin), " +
+      "WITH " + fullTilesSql("", "CAST(user_id AS BIGINT) AS v") + ", " +
+        "h AS (" + tileBinsSql("CAST(COUNT(*) AS BIGINT) AS n, " +
+          "CAST(SUM(LEAST(p.v // 32, 15)) AS BIGINT) AS sv") + "), " +
         "c AS (SELECT tile, bin, " +
         "SUM(n) OVER (PARTITION BY tile ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c0, " +
         "SUM(sv) OVER (PARTITION BY tile ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s0, " +
@@ -1006,14 +1118,7 @@ object EO {
     },
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          (col("event_id") % 4).as("t"), col("user_id").as("v"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val h = px.where(col("t") === 0)
-          .join(broadcast(fullT), "tile")
-          .groupBy(col("tile"), least(expr("v div 32"), lit(15L)).as("bin"))
+        val h = tileBins(s, d)
           .agg(count(lit(1)).as("n"),
             sum(least(expr("v div 32"), lit(15L))).as("sv"))
         val wCum = Window.partitionBy("tile").orderBy("bin")
@@ -1053,9 +1158,8 @@ object EO {
     // per (tile, quadrant) counts, summed squared magnitude, and a
     // position checksum pinning every pixel's classification.
     Q("eo_cva", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS b1, " + sqlS2("value") + " AS b2 FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PosSql,
+        "CAST(user_id AS BIGINT) AS b1, " + sqlS2("value") + " AS b2") + ", " +
         "p0 AS (SELECT p.tile, pos, b1, b2 FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
         "p1 AS (SELECT p.tile, pos, b1, b2 FROM px p JOIN full_t USING (tile) WHERE t = 1), " +
         "cv AS (SELECT p0.tile, p0.pos, p1.b1 - p0.b1 AS d1, p1.b2 - p0.b2 AS d2 " +
@@ -1068,15 +1172,9 @@ object EO {
         "CAST(SUM(pos + 1) AS BIGINT) AS checksum " +
         "FROM cls GROUP BY tile, quadrant ORDER BY tile, quadrant"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("(event_id div 4) % 256").as("pos"),
-          (col("event_id") % 4).as("t"),
+        val px = eventPixels(s, d, tilePos,
           col("user_id").as("b1"), s2(col("value")).as("b2"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        def epoch(t: Int) = px.where(col("t") === t)
-          .join(broadcast(fullT), "tile")
+        def epoch(t: Int) = onFullTiles(px, col("t") === t)
           .select(col("tile"), col("pos"), col("b1"), col("b2"))
         val p1 = epoch(1).select(col("tile"), col("pos"),
           col("b1").as("b1b"), col("b2").as("b2b"))
@@ -1104,47 +1202,14 @@ object EO {
     // graph_bfs/CcRounds contract. Each round is one equi join on the
     // (tile, ty, tx) flow key + one partial agg, localCheckpoint'd;
     // flows into the tile's boundary ring exit the graded interior, the
-    // same halo caveat as every focal key. CTE text is kept in lock-step
-    // with eo_tile_d8's pick chain (same px/full_t/p0/offs/nb/wb/pick).
-    Q("eo_tile_flow_acc", Some {
-      val dirDy = "CASE dir WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1 WHEN 8 THEN 1 " +
-        "WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1 ELSE -1 END"
-      val dirDx = "CASE dir WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0 WHEN 8 THEN -1 " +
-        "WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0 ELSE 1 END"
-      val rounds = (1 to FlowAccRounds).map { k =>
-        val prev = s"a${k - 1}"
-        s"a$k AS MATERIALIZED (SELECT n.tile, n.py, n.px, " +
-          s"1 + COALESCE(SUM(u.acc), 0) AS acc " +
-          s"FROM a0 n LEFT JOIN fl ON fl.tile = n.tile AND fl.ty = n.py AND fl.tx = n.px " +
-          s"LEFT JOIN $prev u ON u.tile = fl.tile AND u.py = fl.py AND u.px = fl.px " +
-          "GROUP BY n.tile, n.py, n.px)"
-      }.mkString(", ")
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, " + sqlS2("value") + " AS z FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, py, px, z FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
-        "offs AS (SELECT * FROM (VALUES (0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8), " +
-        "(0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128)) AS v(dy, dx, dir)), " +
-        "nb AS (SELECT o.tile, o.py, o.px, f.dir, o.z - n.z AS drop " +
-        "FROM p0 o CROSS JOIN offs f " +
-        "JOIN p0 n ON n.tile = o.tile AND n.py = o.py + f.dy AND n.px = o.px + f.dx " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14), " +
-        "wb AS (SELECT tile, py, px, dir, drop, " +
-        "MAX(drop) OVER (PARTITION BY tile, py, px) AS best FROM nb), " +
-        "pick AS (SELECT tile, py, px, MAX(best) AS best, " +
-        "CAST(MIN(CASE WHEN drop = best THEN dir END) AS BIGINT) AS dir " +
-        "FROM wb GROUP BY tile, py, px), " +
-        s"fl AS MATERIALIZED (SELECT tile, py, px, py + ($dirDy) AS ty, px + ($dirDx) AS tx " +
-        "FROM pick WHERE best > 0 AND py + (" + dirDy + ") BETWEEN 1 AND 14 " +
-        "AND px + (" + dirDx + ") BETWEEN 1 AND 14), " +
-        "a0 AS MATERIALIZED (SELECT tile, py, px, CAST(1 AS BIGINT) AS acc FROM pick), " +
-        rounds +
+    // same halo caveat as every focal key. The oracle shares eo_tile_d8's
+    // pick chain (d8PickSql).
+    Q("eo_tile_flow_acc", Some(
+      d8PickSql(D8P0Sql) + flowAccSql +
         s" SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_cells, " +
         "CAST(MAX(acc) AS BIGINT) AS max_acc, CAST(SUM(acc) AS BIGINT) AS sum_acc, " +
         "CAST(SUM(acc * (py * 16 + px + 1)) AS BIGINT) AS checksum " +
-        s"FROM a$FlowAccRounds GROUP BY tile ORDER BY tile"
-    },
+        s"FROM a$FlowAccRounds GROUP BY tile ORDER BY tile"),
       (s, d) => {
         // rollup stays inside the packed array — no second shuffle; the
         // boundary ring carries acc = 0 and drops out of every statistic
@@ -1178,35 +1243,16 @@ object EO {
     // At archive scale basins never cross tiles (the halo contract), so
     // the labeling is embarrassingly parallel in tiles.
     Q("eo_tile_watershed", Some {
-      val dirDy = "CASE dir WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1 WHEN 8 THEN 1 " +
-        "WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1 ELSE -1 END"
-      val dirDx = "CASE dir WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0 WHEN 8 THEN -1 " +
-        "WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0 ELSE 1 END"
       val rounds = (1 to WatershedDoublings).map { k =>
         s"r$k AS MATERIALIZED (SELECT a.tile, a.pos, b.ptr " +
           s"FROM r${k - 1} a JOIN r${k - 1} b ON b.tile = a.tile AND b.pos = a.ptr)"
       }.mkString(", ")
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, " + sqlS2("value") + " AS z FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, py, px, z FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
-        "offs AS (SELECT * FROM (VALUES (0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8), " +
-        "(0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128)) AS v(dy, dx, dir)), " +
-        "nb AS (SELECT o.tile, o.py, o.px, f.dir, o.z - n.z AS drop " +
-        "FROM p0 o CROSS JOIN offs f " +
-        "JOIN p0 n ON n.tile = o.tile AND n.py = o.py + f.dy AND n.px = o.px + f.dx " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14), " +
-        "wb AS (SELECT tile, py, px, dir, drop, " +
-        "MAX(drop) OVER (PARTITION BY tile, py, px) AS best FROM nb), " +
-        "pick AS (SELECT tile, py, px, MAX(best) AS best, " +
-        "CAST(MIN(CASE WHEN drop = best THEN dir END) AS BIGINT) AS dir " +
-        "FROM wb GROUP BY tile, py, px), " +
+      d8PickSql(D8P0Sql) +
         // ptr0: the flow target when it stays interior, else self (root)
         s"r0 AS MATERIALIZED (SELECT tile, py * 16 + px AS pos, " +
-        s"CASE WHEN best > 0 AND py + ($dirDy) BETWEEN 1 AND 14 " +
-        s"AND px + ($dirDx) BETWEEN 1 AND 14 " +
-        s"THEN (py + ($dirDy)) * 16 + px + ($dirDx) ELSE py * 16 + px END AS ptr " +
+        s"CASE WHEN best > 0 AND py + ($DirDySql) BETWEEN 1 AND 14 " +
+        s"AND px + ($DirDxSql) BETWEEN 1 AND 14 " +
+        s"THEN (py + ($DirDySql)) * 16 + px + ($DirDxSql) ELSE py * 16 + px END AS ptr " +
         "FROM pick), " +
         rounds +
         s" SELECT tile, CAST(ptr AS BIGINT) AS basin, " +
@@ -1234,40 +1280,9 @@ object EO {
     // projection — the full two-product composite costs ONE shuffle.
     // Graded per interior pixel (tile, pos, acc, twi6): flat cells ride
     // the max(·,1) guard identically on both engines.
-    Q("eo_twi", Some {
-      val dirDy = "CASE dir WHEN 1 THEN 0 WHEN 2 THEN 1 WHEN 4 THEN 1 WHEN 8 THEN 1 " +
-        "WHEN 16 THEN 0 WHEN 32 THEN -1 WHEN 64 THEN -1 ELSE -1 END"
-      val dirDx = "CASE dir WHEN 1 THEN 1 WHEN 2 THEN 1 WHEN 4 THEN 0 WHEN 8 THEN -1 " +
-        "WHEN 16 THEN -1 WHEN 32 THEN -1 WHEN 64 THEN 0 ELSE 1 END"
-      val rounds = (1 to FlowAccRounds).map { k =>
-        val prev = s"a${k - 1}"
-        s"a$k AS MATERIALIZED (SELECT n.tile, n.py, n.px, " +
-          s"1 + COALESCE(SUM(u.acc), 0) AS acc " +
-          s"FROM a0 n LEFT JOIN fl ON fl.tile = n.tile AND fl.ty = n.py AND fl.tx = n.px " +
-          s"LEFT JOIN $prev u ON u.tile = fl.tile AND u.py = fl.py AND u.px = fl.px " +
-          "GROUP BY n.tile, n.py, n.px)"
-      }.mkString(", ")
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, " + sqlS2("value") + " AS z FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS MATERIALIZED (SELECT p.tile, py, px, z FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
-        "offs AS (SELECT * FROM (VALUES (0, 1, 1), (1, 1, 2), (1, 0, 4), (1, -1, 8), " +
-        "(0, -1, 16), (-1, -1, 32), (-1, 0, 64), (-1, 1, 128)) AS v(dy, dx, dir)), " +
-        "nb AS (SELECT o.tile, o.py, o.px, f.dir, o.z - n.z AS drop " +
-        "FROM p0 o CROSS JOIN offs f " +
-        "JOIN p0 n ON n.tile = o.tile AND n.py = o.py + f.dy AND n.px = o.px + f.dx " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14), " +
-        "wb AS (SELECT tile, py, px, dir, drop, " +
-        "MAX(drop) OVER (PARTITION BY tile, py, px) AS best FROM nb), " +
-        "pick AS (SELECT tile, py, px, MAX(best) AS best, " +
-        "CAST(MIN(CASE WHEN drop = best THEN dir END) AS BIGINT) AS dir " +
-        "FROM wb GROUP BY tile, py, px), " +
-        s"fl AS MATERIALIZED (SELECT tile, py, px, py + ($dirDy) AS ty, px + ($dirDx) AS tx " +
-        "FROM pick WHERE best > 0 AND py + (" + dirDy + ") BETWEEN 1 AND 14 " +
-        "AND px + (" + dirDx + ") BETWEEN 1 AND 14), " +
-        "a0 AS MATERIALIZED (SELECT tile, py, px, CAST(1 AS BIGINT) AS acc FROM pick), " +
-        rounds + ", " +
+    Q("eo_twi", Some(
+      d8PickSql("p0 AS MATERIALIZED (SELECT p.tile, py, px, z " +
+        "FROM px p JOIN full_t USING (tile) WHERE t = 0)") + flowAccSql + ", " +
         "gr AS (SELECT o.tile, o.py, o.px, ea.z - we.z AS gx, so.z - no.z AS gy " +
         "FROM p0 o " +
         "JOIN p0 ea ON ea.tile = o.tile AND ea.py = o.py AND ea.px = o.px + 1 " +
@@ -1279,11 +1294,8 @@ object EO {
         sqlS6("(" + Det.sqlLnInt("a.acc") + " - 0.5 * " +
           Det.sqlLnInt("GREATEST(g.gx * g.gx + g.gy * g.gy, 1)") + ")") + " AS twi6 " +
         s"FROM a$FlowAccRounds a JOIN gr g ON g.tile = a.tile AND g.py = a.py AND g.px = a.px " +
-        "ORDER BY a.tile, pos"
-    },
+        "ORDER BY a.tile, pos"),
       (s, d) => {
-        def interior(p: Column) =
-          shiftright(p, 4).between(1, 14) && p.bitwiseAND(lit(15)).between(1, 14)
         val idx = sequence(lit(0), lit(255))
         def z(arr: Column, p: Column, off: Int) = element_at(arr, p + lit(off) + 1)
         // the packed stage only GATHERS (acc, g2) per pixel; the portable
@@ -1317,11 +1329,8 @@ object EO {
     // floored back to ints, clamped identically. Ranks ride a per-tile
     // window over the FIXED 256-pixel tiles; one shuffle on the tile key.
     Q("eo_tile_stretch", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) AS pos, event_id % 4 AS t, " +
-        "CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, pos, v FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
+      "WITH " + fullTilesSql("((event_id // 4) % 256) AS pos, ", "CAST(user_id AS BIGINT) AS v") +
+        ", p0 AS (SELECT p.tile, pos, v FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
         "r AS (SELECT tile, pos, v, ROW_NUMBER() OVER (PARTITION BY tile ORDER BY v, pos) AS rn, " +
         "COUNT(*) OVER (PARTITION BY tile) AS n FROM p0), " +
         "b AS (SELECT tile, " +
@@ -1336,13 +1345,8 @@ object EO {
         "CAST(SUM(sv * (pos + 1)) AS BIGINT) AS checksum " +
         "FROM st JOIN b ON b.tile = st.tile GROUP BY st.tile, b.lo, b.hi ORDER BY st.tile"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("(event_id div 4) % 256").as("pos"),
-          (col("event_id") % 4).as("t"), col("user_id").as("v"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val p0 = px.where(col("t") === 0).join(broadcast(fullT), "tile")
+        val p0 = onFullTiles(eventPixels(s, d, tilePos, col("user_id").as("v")),
+            col("t") === 0)
           .select("tile", "pos", "v")
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val wT = Window.partitionBy("tile")
@@ -1664,8 +1668,7 @@ object EO {
     // integer grid: doubled pixel sums (medians land on halves) plus a
     // position-weighted checksum that pins every pixel to its slot.
     Q("eo_tile_composite_median", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v FROM events), " +
+      "WITH " + pxSql(PosSql, "CAST(user_id AS DOUBLE) AS v") + ", " +
         "med AS (SELECT tile, pos, MEDIAN(v) AS mv FROM px GROUP BY tile, pos) " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_px, " +
         "CAST(SUM(CAST(mv * 2 AS BIGINT)) AS BIGINT) AS sum2, " +
@@ -1687,9 +1690,8 @@ object EO {
     // band at the time where the score band peaks, earliest time on ties —
     // the oracle spells the same pick as ROW_NUMBER(score DESC, t ASC).
     Q("eo_tile_argmax", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS score, " +
-        "CAST(event_id % 1000 AS DOUBLE) AS v FROM events), " +
+      "WITH " + pxSql(PosSql,
+        "CAST(user_id AS DOUBLE) AS score, CAST(event_id % 1000 AS DOUBLE) AS v") + ", " +
         "pick AS (SELECT tile, pos, v FROM (SELECT tile, pos, v, " +
         "ROW_NUMBER() OVER (PARTITION BY tile, pos ORDER BY score DESC, t ASC) AS rn FROM px) WHERE rn = 1) " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_px, " +
@@ -1723,9 +1725,7 @@ object EO {
     // so the slice keeps the graded run eval-light without narrowing
     // coverage.
     Q("eo_tile_downsample", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id AS DOUBLE) AS v") + ", " +
         "blk AS (SELECT tile, t, ((pos // 16) // 4) * 4 + (pos % 16) // 4 AS opos, " +
         "SUM(CAST(v AS BIGINT)) AS bs FROM px JOIN full_t USING (tile) " +
         "WHERE t = 0 GROUP BY tile, t, opos) " +
@@ -1734,11 +1734,9 @@ object EO {
         "CAST(SUM(bs * (t * 16 + opos + 1)) AS BIGINT) AS checksum " +
         "FROM blk GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val ds = graft.raster.RasterGrid.downsample(grid, h = 16, w = 16, factor = 4)
-        ds.select(col("time"), col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+        val ds = graft.raster.RasterGrid.downsample(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16, factor = 4)
+        ds.select(col("time"), tileId, posexplode(col("data")).as(Seq("opos", "v")))
           .groupBy("tile")
           .agg(
             count(lit(1)).as("n_out"),
@@ -1758,10 +1756,8 @@ object EO {
     // reason: positional pixel math needs the defined 16x16 geometry and
     // the inlined block folds are interpreted higher-order eval.
     Q("eo_tile_pyramid", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, pos, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id AS DOUBLE) AS v") + ", " +
+        p0Sql("pos, v") + ", " +
         "l1 AS (SELECT 1 AS level, tile, ((pos // 16) // 2) * 8 + (pos % 16) // 2 AS opos, " +
         "SUM(CAST(v AS BIGINT)) AS bs FROM p0 GROUP BY tile, opos), " +
         "l2 AS (SELECT 2 AS level, tile, ((pos // 16) // 4) * 4 + (pos % 16) // 4 AS opos, " +
@@ -1772,12 +1768,10 @@ object EO {
         "CAST(SUM(bs * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM lv GROUP BY level, tile ORDER BY level, tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val pyr = graft.raster.RasterGrid.pyramid(grid, h = 16, w = 16, levels = 2)
+        val pyr = graft.raster.RasterGrid.pyramid(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16, levels = 2)
         pyr.where(col("level") >= 1)
-          .select(col("level"), col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+          .select(col("level"), tileId, posexplode(col("data")).as(Seq("opos", "v")))
           .withColumn("bs", (col("v") * call_function("shiftleft", lit(1L),
             (col("level") * 2).cast("int")).cast("double")).cast("long"))
           .groupBy("level", "tile")
@@ -1803,10 +1797,8 @@ object EO {
     // joins, no pixel shuffle. Graded on n_out and the position-weighted
     // class checksum, so one wrong block winner breaks the hash.
     Q("eo_tile_resample_majority", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id % 8 AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, pos, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id % 8 AS BIGINT) AS v") + ", " +
+        p0Sql("pos, v") + ", " +
         "blk AS (SELECT tile, ((pos // 16) // 2) * 8 + (pos % 16) // 2 AS opos, v, " +
         "CAST(COUNT(*) AS BIGINT) AS c FROM p0 GROUP BY tile, opos, v), " +
         "pick AS (SELECT tile, opos, v FROM (SELECT *, ROW_NUMBER() OVER " +
@@ -1857,10 +1849,8 @@ object EO {
     // at archive scale the decision stays metadata-sized while the
     // census is the one scan of the chosen level.
     Q("eo_cog_overview_select", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, pos, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id AS DOUBLE) AS v") + ", " +
+        p0Sql("pos, v") + ", " +
         "l0 AS (SELECT 0 AS level, tile, pos AS opos, CAST(v AS BIGINT) AS bs FROM p0), " +
         "l1 AS (SELECT 1 AS level, tile, ((pos // 16) // 2) * 8 + (pos % 16) // 2 AS opos, " +
         "SUM(CAST(v AS BIGINT)) AS bs FROM p0 GROUP BY tile, opos), " +
@@ -1876,9 +1866,8 @@ object EO {
         "SELECT sel.factor, sel.level, c.n_px, c.sum_px, c.checksum " +
         "FROM sel JOIN census c ON c.level = sel.level ORDER BY sel.factor"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val pyr = graft.raster.RasterGrid.pyramid(grid, h = 16, w = 16, levels = 2)
+        val pyr = graft.raster.RasterGrid.pyramid(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16, levels = 2)
         val census = pyr
           .select(col("level"),
             posexplode(col("data")).as(Seq("opos", "v")))
@@ -1912,9 +1901,7 @@ object EO {
     // output; the oracle ignores tiling entirely and joins on GLOBAL
     // pixel coordinates, so any seam error breaks the hash.
     Q("eo_tile_focal_halo", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id AS BIGINT) AS v") + ", " +
         "core AS (SELECT f.tile FROM full_t f JOIN full_t a ON a.tile = f.tile - 1 " +
         "JOIN full_t b ON b.tile = f.tile + 1), " +
         "pg AS (SELECT p.tile, p.tile * 16 + p.pos // 16 AS gy, p.pos % 16 AS gx, p.v " +
@@ -1930,8 +1917,7 @@ object EO {
         "CAST(SUM(fsum * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM fs GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
+        val grid = t0Tiles(s, d, "v" -> col("user_id"))
         // the halo exchange: ship each tile's first/last row to the
         // neighbor that needs it (keyed re-partition of 16-float rows)
         val fromAbove = grid.select((col("tile_y") + 1).as("tile_y"),
@@ -1961,10 +1947,8 @@ object EO {
     // per tile (no shuffle); position-weighted checksum pins every output
     // pixel to its (oy, ox) slot, grading the clamp rows too.
     Q("eo_tile_upsample", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, pos, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id AS DOUBLE) AS v") + ", " +
+        p0Sql("pos, v") + ", " +
         "o AS (SELECT f.tile, t1.oy, t2.ox FROM full_t f, range(0,32) t1(oy), range(0,32) t2(ox)), " +
         "g AS (SELECT tile, oy, ox, oy//2 AS y0, ox//2 AS x0, " +
         "LEAST(oy//2 + oy%2, 15) AS y1, LEAST(ox//2 + ox%2, 15) AS x1 FROM o), " +
@@ -1978,11 +1962,9 @@ object EO {
         "CAST(SUM(CAST(s4 AS BIGINT) * (oy*32 + ox + 1)) AS BIGINT) AS checksum " +
         "FROM u GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val up = graft.raster.RasterGrid.upsampleBilinear2x(grid, h = 16, w = 16)
-        up.select(col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+        val up = graft.raster.RasterGrid.upsampleBilinear2x(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16)
+        unpackTiles(up, pos = "opos")
           .groupBy("tile")
           .agg(
             count(lit(1)).as("n_out"),
@@ -2001,10 +1983,7 @@ object EO {
     // spells the same integer taps via positional self-joins. RasterSpec
     // pins interpolation exactness on a known ramp.
     Q("eo_tile_cubic", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PyPxSql, "CAST(user_id AS BIGINT) AS v") + ", " +
         "p0 AS (SELECT p.tile, py, px, v FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
         "o AS (SELECT tile, py, px, v, " +
         "GREATEST(px - 1, 0) AS xm, LEAST(px + 1, 15) AS xp, LEAST(px + 2, 15) AS xq FROM p0), " +
@@ -2020,11 +1999,9 @@ object EO {
         "CAST(SUM(v * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM e GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val up = graft.raster.RasterGrid.upsampleCubic2xRows(grid, h = 16, w = 16)
-        up.select(col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+        val up = graft.raster.RasterGrid.upsampleCubic2xRows(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16)
+        unpackTiles(up, pos = "opos")
           .groupBy("tile")
           .agg(
             count(lit(1)).as("n_out"),
@@ -2042,27 +2019,15 @@ object EO {
     // Same full-tile t=0 slice as the other positional tile keys; the
     // oracle spells the 9-neighbor sum as a bounded relational self-join.
     Q("eo_tile_focal", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "fs AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v) AS BIGINT) AS fsum " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos) " +
-        "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
+      gridSql("user_id", "v") + stencilSql("fs", "CAST(SUM(nb.v) AS BIGINT) AS fsum") +
+        " SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
         "CAST(SUM(fsum) AS BIGINT) AS sum_fs, " +
         "CAST(SUM(fsum * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM fs GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val foc = graft.raster.RasterGrid.focalSum3x3(grid, h = 16, w = 16)
-        foc.select(col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+        val foc = graft.raster.RasterGrid.focalSum3x3(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16)
+        unpackTiles(foc, pos = "opos")
           .withColumn("fsum", col("v").cast("long"))
           .groupBy("tile")
           .agg(
@@ -2087,38 +2052,26 @@ object EO {
     // hash. Mask = user_id parity (~half the pixels set — both
     // morphology directions exercised on every tile).
     Q("eo_tile_morph", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id % 2 AS BIGINT) AS m FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, m FROM px JOIN full_t USING (tile) WHERE t = 0), " +
+      gridSql("user_id % 2", "m") +
         "dil AS (SELECT o.tile, o.py, o.px, " +
         "CASE WHEN SUM(nb.m) > 0 THEN 1 ELSE 0 END AS dm " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, o.py, o.px), " +
+        nb3x3Sql("p0", 1, 14) + "GROUP BY o.tile, o.py, o.px), " +
         "er AS (SELECT o.tile, (o.py - 2) * 12 + (o.px - 2) AS opos, " +
         "CASE WHEN SUM(nb.dm) = 9 THEN 1 ELSE 0 END AS cm " +
-        "FROM dil o JOIN dil nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 2 AND 13 AND o.px BETWEEN 2 AND 13 " +
-        "GROUP BY o.tile, o.py, o.px) " +
+        nb3x3Sql("dil", 2, 13) + "GROUP BY o.tile, o.py, o.px) " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
         "CAST(SUM(cm) AS BIGINT) AS n_set, " +
         "CAST(SUM(cm * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM er GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val mask = eventTiles(s, d, Seq("m" -> (col("user_id") % 2)))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val dil = graft.raster.RasterGrid.focalSum3x3(mask, h = 16, w = 16)
+        val dil = graft.raster.RasterGrid.focalSum3x3(
+            t0Tiles(s, d, "m" -> (col("user_id") % 2)), h = 16, w = 16)
           .withColumn("data", transform(col("data"),
             v => when(v > 0f, lit(1.0f)).otherwise(lit(0.0f))))
         val closed = graft.raster.RasterGrid.focalSum3x3(dil, h = 14, w = 14)
           .withColumn("data", transform(col("data"),
             v => when(v === 9.0f, lit(1.0f)).otherwise(lit(0.0f))))
-        closed.select(col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+        unpackTiles(closed, pos = "opos")
           .withColumn("cm", col("v").cast("long"))
           .groupBy("tile")
           .agg(
@@ -2138,31 +2091,14 @@ object EO {
     // (nb.px − o.px) · (2 if same row else 1) weights. Per-tile sums +
     // position-weighted checksums pin every interior pixel's components.
     Q("eo_tile_gradient", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "g AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v * (nb.px - o.px) * (CASE WHEN nb.py = o.py THEN 2 ELSE 1 END)) AS BIGINT) AS gx, " +
-        "CAST(SUM(nb.v * (nb.py - o.py) * (CASE WHEN nb.px = o.px THEN 2 ELSE 1 END)) AS BIGINT) AS gy " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos) " +
-        "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
+      hornSql +
+        " SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
         "CAST(SUM(gx) AS BIGINT) AS sum_gx, CAST(SUM(gy) AS BIGINT) AS sum_gy, " +
         "CAST(SUM(gx * (opos + 1)) AS BIGINT) AS cksum_x, " +
         "CAST(SUM(gy * (opos + 1)) AS BIGINT) AS cksum_y " +
         "FROM g GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val g = graft.raster.RasterGrid.focalGradient3x3(grid, h = 16, w = 16)
-        g.select(col("tile_y").cast("long").as("tile"),
-            posexplode(arrays_zip(col("gx"), col("gy"))).as(Seq("opos", "p")))
-          .select(col("tile"), col("opos"),
-            col("p.gx").cast("long").as("gx"), col("p.gy").cast("long").as("gy"))
+        hornGradient(s, d)
           .groupBy("tile")
           .agg(
             count(lit(1)).as("n_out"),
@@ -2186,18 +2122,7 @@ object EO {
     // eo_tile_gradient precedent). Same native focal stencil machinery,
     // one aggregate — no new plan shape.
     Q("eo_tile_hillshade", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "g AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v * (nb.px - o.px) * (CASE WHEN nb.py = o.py THEN 2 ELSE 1 END)) AS BIGINT) AS gx, " +
-        "CAST(SUM(nb.v * (nb.py - o.py) * (CASE WHEN nb.px = o.px THEN 2 ELSE 1 END)) AS BIGINT) AS gy " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos), " +
+      hornSql + ", " +
         "hs AS (SELECT tile, opos, (-2) * gx + 3 * gy + 48 AS d FROM g) " +
         "SELECT tile, " +
         "CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_lit, " +
@@ -2206,11 +2131,7 @@ object EO {
         "CAST(SUM(d * (opos + 1)) AS BIGINT) AS cksum " +
         "FROM hs GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val g = graft.raster.RasterGrid.focalGradient3x3(grid, h = 16, w = 16)
-        g.select(col("tile_y").cast("long").as("tile"),
-            posexplode(arrays_zip(col("gx"), col("gy"))).as(Seq("opos", "p")))
+        hornPixels(s, d)
           .select(col("tile"), col("opos"),
             (lit(-2) * col("p.gx").cast("long") + lit(3) * col("p.gy").cast("long")
               + lit(48)).as("d"))
@@ -2233,18 +2154,7 @@ object EO {
     // conventions do. Same focal machinery and cost as eo_tile_gradient
     // (one halo-free in-tile stencil + one aggregate).
     Q("eo_tile_aspect", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "g AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v * (nb.px - o.px) * (CASE WHEN nb.py = o.py THEN 2 ELSE 1 END)) AS BIGINT) AS gx, " +
-        "CAST(SUM(nb.v * (nb.py - o.py) * (CASE WHEN nb.px = o.px THEN 2 ELSE 1 END)) AS BIGINT) AS gy " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos), " +
+      hornSql + ", " +
         "a AS (SELECT tile, opos, CASE " +
         "WHEN gx = 0 AND gy = 0 THEN 'FLAT' " +
         "WHEN 12 * ABS(gy) <= 5 * ABS(gx) THEN (CASE WHEN gx > 0 THEN 'E' ELSE 'W' END) " +
@@ -2255,13 +2165,7 @@ object EO {
         "CAST(SUM(opos + 1) AS BIGINT) AS cksum " +
         "FROM a GROUP BY tile, aspect ORDER BY tile, aspect"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val g = graft.raster.RasterGrid.focalGradient3x3(grid, h = 16, w = 16)
-          .select(col("tile_y").cast("long").as("tile"),
-            posexplode(arrays_zip(col("gx"), col("gy"))).as(Seq("opos", "p")))
-          .select(col("tile"), col("opos"),
-            col("p.gx").cast("long").as("gx"), col("p.gy").cast("long").as("gy"))
+        val g = hornGradient(s, d)
         val aspect = when(col("gx") === 0 && col("gy") === 0, "FLAT")
           .when(lit(12) * abs(col("gy")) <= lit(5) * abs(col("gx")),
             when(col("gx") > 0, "E").otherwise("W"))
@@ -2285,22 +2189,12 @@ object EO {
     // scale the combiner collapses each tile's 256 pixels to ≤16 rows
     // before the (tile, bin) shuffle.
     Q("eo_tile_histogram", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256) " +
-        "SELECT p.tile, LEAST(p.v // 32, 15) AS bin, CAST(COUNT(*) AS BIGINT) AS n_px, " +
-        "CAST(MIN(p.v) AS BIGINT) AS v_min, CAST(MAX(p.v) AS BIGINT) AS v_max " +
-        "FROM px p JOIN full_t USING (tile) WHERE p.t = 0 " +
-        "GROUP BY p.tile, bin ORDER BY p.tile, bin"),
+      "WITH " + fullTilesSql("", "CAST(user_id AS BIGINT) AS v") + " " +
+        tileBinsSql("CAST(COUNT(*) AS BIGINT) AS n_px, " +
+          "CAST(MIN(p.v) AS BIGINT) AS v_min, CAST(MAX(p.v) AS BIGINT) AS v_max") +
+        " ORDER BY p.tile, bin"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          (col("event_id") % 4).as("t"), col("user_id").as("v"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        px.where(col("t") === 0)
-          .join(broadcast(fullT), "tile")
-          .groupBy(col("tile"), least(expr("v div 32"), lit(15L)).as("bin"))
+        tileBins(s, d)
           .agg(count(lit(1)).as("n_px"), min(col("v")).as("v_min"), max(col("v")).as("v_max"))
           .orderBy("tile", "bin")
       }),
@@ -2391,9 +2285,7 @@ object EO {
     // cropped, tile 1 fully inside on y — so the key checks both the
     // prune and the crop edge arithmetic.
     Q("eo_window_read", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PosSql, "CAST(user_id AS DOUBLE) AS v") + ", " +
         "win AS (SELECT tile, pos, v FROM px JOIN full_t USING (tile) WHERE t = 0 " +
         "AND pos % 16 >= 4 AND pos % 16 < 12 " +
         "AND tile * 16 + pos // 16 >= 8 AND tile * 16 + pos // 16 < 40) " +
@@ -2402,12 +2294,9 @@ object EO {
         "CAST(SUM(CAST(v AS BIGINT) * (pos + 1)) AS BIGINT) AS checksum " +
         "FROM win GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val win = graft.raster.RasterGrid.windowRead(
-          grid, h = 16, w = 16, x0 = 4, x1 = 12, y0 = 8, y1 = 40)
-        win.select(col("tile_y").cast("long").as("tile"),
-            explode(col("win")).as("e"))
+        val win = graft.raster.RasterGrid.windowRead(t0Tiles(s, d, "v" -> col("user_id")),
+          h = 16, w = 16, x0 = 4, x1 = 12, y0 = 8, y1 = 40)
+        win.select(tileId, explode(col("win")).as("e"))
           .select(col("tile"), col("e.pos").as("pos"),
             col("e.v").cast("long").as("v"))
           .groupBy("tile")
@@ -2535,9 +2424,8 @@ object EO {
     // pixels reduce on the exact integer grid; NULL-vs-NaN semantics stay
     // engine-local (oracle counts NULLs, Spark counts NaNs).
     Q("eo_tile_maskwhere", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CAST(user_id AS DOUBLE) AS v, " +
-        "CAST(LENGTH(props) AS DOUBLE) AS qa FROM events), " +
+      "WITH " + pxSql(PosSql,
+        "CAST(user_id AS DOUBLE) AS v, CAST(LENGTH(props) AS DOUBLE) AS qa") + ", " +
         "m AS (SELECT tile, pos, CASE WHEN qa = 8 THEN v ELSE NULL END AS mv FROM px) " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_px, " +
         "CAST(COUNT(*) - COUNT(mv) AS BIGINT) AS n_masked, " +
@@ -2570,9 +2458,8 @@ object EO {
     // The oracle spells the same pick as FIRST(v ORDER BY t) over valid
     // observations.
     Q("eo_tile_fuse", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, (event_id // 4) % 256 AS pos, " +
-        "event_id % 4 AS t, CASE WHEN user_id % 2 = 0 THEN NULL ELSE CAST(user_id AS DOUBLE) END AS v " +
-        "FROM events), " +
+      "WITH " + pxSql(PosSql,
+        "CASE WHEN user_id % 2 = 0 THEN NULL ELSE CAST(user_id AS DOUBLE) END AS v") + ", " +
         "fused AS (SELECT tile, pos, FIRST(v ORDER BY t) FILTER (WHERE v IS NOT NULL) AS fv " +
         "FROM px GROUP BY tile, pos) " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_px, " +
@@ -2996,27 +2883,16 @@ object EO {
     // self-join, pinning every interior pixel via the position-weighted
     // checksum.
     Q("eo_tile_tri", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "fs AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(ABS(nb.v - o.v)) AS BIGINT) AS tri " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos) " +
-        "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
+      gridSql("user_id", "v") +
+        stencilSql("fs", "CAST(SUM(ABS(nb.v - o.v)) AS BIGINT) AS tri") +
+        " SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
         "CAST(SUM(tri) AS BIGINT) AS sum_tri, " +
         "CAST(SUM(tri * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM fs GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
-        val t = graft.raster.RasterGrid.focalTri3x3(grid, h = 16, w = 16)
-        t.select(col("tile_y").cast("long").as("tile"),
-            posexplode(col("data")).as(Seq("opos", "v")))
+        val t = graft.raster.RasterGrid.focalTri3x3(
+          t0Tiles(s, d, "v" -> col("user_id")), h = 16, w = 16)
+        unpackTiles(t, pos = "opos")
           .withColumn("tri", col("v").cast("long"))
           .groupBy("tile")
           .agg(
@@ -3121,13 +2997,8 @@ object EO {
     // the identical bounded neighbor self-join — one join + one
     // partial agg, tile-local at any archive size.
     Q("eo_tile_curvature", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "comp AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v * (CASE WHEN nb.py = o.py AND ABS(nb.px - o.px) = 1 THEN 1 " +
+      gridSql("user_id", "v") +
+        stencilSql("comp", "CAST(SUM(nb.v * (CASE WHEN nb.py = o.py AND ABS(nb.px - o.px) = 1 THEN 1 " +
         "WHEN nb.py = o.py AND nb.px = o.px THEN -2 ELSE 0 END)) AS BIGINT) AS d2, " +
         "CAST(SUM(nb.v * (CASE WHEN nb.px = o.px AND ABS(nb.py - o.py) = 1 THEN 1 " +
         "WHEN nb.py = o.py AND nb.px = o.px THEN -2 ELSE 0 END)) AS BIGINT) AS e2, " +
@@ -3138,11 +3009,7 @@ object EO {
         "CAST(SUM(nb.v * (CASE WHEN nb.py = o.py AND nb.px = o.px + 1 THEN 1 " +
         "WHEN nb.py = o.py AND nb.px = o.px - 1 THEN -1 ELSE 0 END)) AS BIGINT) AS g2, " +
         "CAST(SUM(nb.v * (CASE WHEN nb.px = o.px AND nb.py = o.py - 1 THEN 1 " +
-        "WHEN nb.px = o.px AND nb.py = o.py + 1 THEN -1 ELSE 0 END)) AS BIGINT) AS h2 " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos), " +
+        "WHEN nb.px = o.px AND nb.py = o.py + 1 THEN -1 ELSE 0 END)) AS BIGINT) AS h2") + ", " +
         "cur AS (SELECT tile, opos, " +
         "2 * d2 * h2 * h2 + 2 * e2 * g2 * g2 - f4 * g2 * h2 AS pn, " +
         "-(2 * d2 * g2 * g2 + 2 * e2 * h2 * h2 + f4 * g2 * h2) AS fn " +
@@ -3211,30 +3078,19 @@ object EO {
       }),
 
     Q("eo_tile_laplace", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "lp AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v * (CASE WHEN nb.py = o.py AND nb.px = o.px THEN -4 " +
-        "WHEN ABS(nb.py - o.py) + ABS(nb.px - o.px) = 1 THEN 1 ELSE 0 END)) AS BIGINT) AS lap " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos) " +
-        "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
+      gridSql("user_id", "v") +
+        stencilSql("lp", "CAST(SUM(nb.v * (CASE WHEN nb.py = o.py AND nb.px = o.px THEN -4 " +
+          "WHEN ABS(nb.py - o.py) + ABS(nb.px - o.px) = 1 THEN 1 ELSE 0 END)) AS BIGINT) AS lap") +
+        " SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
         "CAST(SUM(lap) AS BIGINT) AS sum_lap, " +
         "CAST(SUM(ABS(lap)) AS BIGINT) AS sum_abs, " +
         "CAST(SUM(lap * (opos + 1)) AS BIGINT) AS checksum " +
         "FROM lp GROUP BY tile ORDER BY tile"),
       (s, d) => {
         import graft.raster.TileExprs
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
+        val grid = t0Tiles(s, d, "v" -> col("user_id"))
         TileExprs.register(s)
-        grid.select(col("tile_y").cast("long").as("tile"),
-            posexplode(TileExprs.laplace3(col("data"), 16, 16)).as(Seq("opos", "v")))
+        unpackTiles(grid, TileExprs.laplace3(col("data"), 16, 16), "opos", "v")
           .withColumn("lap", col("v").cast("long"))
           .groupBy("tile")
           .agg(count(lit(1)).as("n_out"), sum(col("lap")).as("sum_lap"),
@@ -3299,17 +3155,9 @@ object EO {
     // the integer combine happens on the exploded longs. Oracle spells
     // the same n·Σx²−S² over the 9-neighbor join.
     Q("eo_tile_focal_var", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT tile, py, px, v FROM px JOIN full_t USING (tile) WHERE t = 0), " +
-        "fs AS (SELECT o.tile, (o.py - 1) * 14 + (o.px - 1) AS opos, " +
-        "CAST(SUM(nb.v) AS BIGINT) AS sv, CAST(SUM(nb.v * nb.v) AS BIGINT) AS svv " +
-        "FROM p0 o JOIN p0 nb ON nb.tile = o.tile " +
-        "AND nb.py BETWEEN o.py - 1 AND o.py + 1 AND nb.px BETWEEN o.px - 1 AND o.px + 1 " +
-        "WHERE o.py BETWEEN 1 AND 14 AND o.px BETWEEN 1 AND 14 " +
-        "GROUP BY o.tile, opos), " +
+      gridSql("user_id", "v") +
+        stencilSql("fs",
+          "CAST(SUM(nb.v) AS BIGINT) AS sv, CAST(SUM(nb.v * nb.v) AS BIGINT) AS svv") + ", " +
         "vr AS (SELECT tile, opos, 9 * svv - sv * sv AS vn FROM fs) " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_out, " +
         "CAST(SUM(vn) AS BIGINT) AS sum_vn, " +
@@ -3317,10 +3165,9 @@ object EO {
         "FROM vr GROUP BY tile ORDER BY tile"),
       (s, d) => {
         import graft.raster.TileExprs
-        val grid = eventTiles(s, d, Seq("v" -> col("user_id")))
-          .where(size(col("data")) === 256 && col("time") === 0)
+        val grid = t0Tiles(s, d, "v" -> col("user_id"))
         TileExprs.register(s)
-        val both = grid.select(col("tile_y").cast("long").as("tile"),
+        val both = grid.select(tileId,
           TileExprs.focal3(col("data"), 16, 16).as("fs"),
           TileExprs.focal3(transform(col("data"), e => e * e), 16, 16).as("fs2"))
         both.select(col("tile"),
@@ -3349,36 +3196,12 @@ object EO {
     // over a second implementation). Oracle: the recursive-CTE closure
     // over the same adjacency.
     Q("eo_tile_clump", Some(
-      "WITH RECURSIVE px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "(event_id // 4) AS pid, event_id % 4 AS t, user_id % 2 AS m FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, py, px, pid FROM px p JOIN full_t USING (tile) " +
-        "WHERE t = 0 AND m = 1), " +
-        "ed AS (SELECT a.pid AS d1, b.pid AS d2 FROM p0 a JOIN p0 b ON a.tile = b.tile " +
-        "AND ((b.py = a.py AND b.px = a.px + 1) OR (b.py = a.py + 1 AND b.px = a.px))), " +
-        "edges AS (SELECT d1, d2 FROM ed UNION ALL SELECT d2, d1 FROM ed), " +
-        "reach AS (SELECT pid AS a, pid AS b FROM p0 " +
-        "UNION SELECT r.a, e.d2 FROM reach r JOIN edges e ON r.b = e.d1), " +
-        "cl AS (SELECT a AS pid, MIN(b) AS clump FROM reach GROUP BY a) " +
-        "SELECT p0.tile, cl.clump, CAST(COUNT(*) AS BIGINT) AS n_px, " +
+      maskClumpsSql +
+        " SELECT p0.tile, cl.clump, CAST(COUNT(*) AS BIGINT) AS n_px, " +
         "CAST(SUM(p0.pid + 1) AS BIGINT) AS cksum " +
         "FROM cl JOIN p0 ON p0.pid = cl.pid " +
         "GROUP BY p0.tile, cl.clump ORDER BY p0.tile, cl.clump"),
-      (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("((event_id div 4) % 256) div 16").as("py"),
-          expr("((event_id div 4) % 256) % 16").as("px"),
-          expr("event_id div 4").as("pid"),
-          (col("event_id") % 4).as("t"), (col("user_id") % 2).as("m"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val p0 = px.where(col("t") === 0 && col("m") === 1)
-          .join(broadcast(fullT), "tile")
-          .select("tile", "py", "px", "pid")
-        clumpRollup(p0)
-      }),
+      (s, d) => clumpRollup(maskPixels(s, d))),
 
     // Raster POLYGONIZE (round 12, VERDICT r11 item 5) — the
     // gdal_polygonize step that turns eo_tile_clump's labeled regions
@@ -3398,18 +3221,7 @@ object EO {
     // polygonize costs one extra (tile, clump, corner) partial agg over
     // the clump labeling — no walk, no driver loop, any archive scale.
     Q("eo_polygonize", Some(
-      "WITH RECURSIVE px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "(event_id // 4) AS pid, event_id % 4 AS t, user_id % 2 AS m FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, py, px, pid FROM px p JOIN full_t USING (tile) " +
-        "WHERE t = 0 AND m = 1), " +
-        "ed AS (SELECT a.pid AS d1, b.pid AS d2 FROM p0 a JOIN p0 b ON a.tile = b.tile " +
-        "AND ((b.py = a.py AND b.px = a.px + 1) OR (b.py = a.py + 1 AND b.px = a.px))), " +
-        "edges AS (SELECT d1, d2 FROM ed UNION ALL SELECT d2, d1 FROM ed), " +
-        "reach AS (SELECT pid AS a, pid AS b FROM p0 " +
-        "UNION SELECT r.a, e.d2 FROM reach r JOIN edges e ON r.b = e.d1), " +
-        "cl AS (SELECT a AS pid, MIN(b) AS clump FROM reach GROUP BY a), " +
+      maskClumpsSql + ", " +
         "lp AS (SELECT p0.tile, p0.py, p0.px, p0.pid, cl.clump " +
         "FROM cl JOIN p0 ON p0.pid = cl.pid), " +
         "adjc AS (SELECT l.tile, l.clump, CAST(COUNT(*) AS BIGINT) AS n_adj " +
@@ -3433,18 +3245,7 @@ object EO {
         "LEFT JOIN adjc ON adjc.tile = ar.tile AND adjc.clump = ar.clump " +
         "ORDER BY ar.tile, ar.clump"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("((event_id div 4) % 256) div 16").as("py"),
-          expr("((event_id div 4) % 256) % 16").as("px"),
-          expr("event_id div 4").as("pid"),
-          (col("event_id") % 4).as("t"), (col("user_id") % 2).as("m"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val p0 = px.where(col("t") === 0 && col("m") === 1)
-          .join(broadcast(fullT), "tile")
-          .select("tile", "py", "px", "pid")
-        val (labRaw, pairs) = clumpLabeled(p0)
+        val (labRaw, pairs) = clumpLabeled(maskPixels(s, d))
         val labC = labRaw
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val adjc = pairs
@@ -3630,18 +3431,7 @@ object EO {
     // rollup. Pixel checksums pin WHICH pixels survived, not just how
     // many.
     Q("eo_tile_sieve", Some(
-      "WITH RECURSIVE px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "(event_id // 4) AS pid, event_id % 4 AS t, user_id % 2 AS m FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "p0 AS (SELECT p.tile, py, px, pid FROM px p JOIN full_t USING (tile) " +
-        "WHERE t = 0 AND m = 1), " +
-        "ed AS (SELECT a.pid AS d1, b.pid AS d2 FROM p0 a JOIN p0 b ON a.tile = b.tile " +
-        "AND ((b.py = a.py AND b.px = a.px + 1) OR (b.py = a.py + 1 AND b.px = a.px))), " +
-        "edges AS (SELECT d1, d2 FROM ed UNION ALL SELECT d2, d1 FROM ed), " +
-        "reach AS (SELECT pid AS a, pid AS b FROM p0 " +
-        "UNION SELECT r.a, e.d2 FROM reach r JOIN edges e ON r.b = e.d1), " +
-        "cl AS (SELECT a AS pid, MIN(b) AS clump FROM reach GROUP BY a), " +
+      maskClumpsSql + ", " +
         "cs AS (SELECT p0.tile, cl.clump, CAST(COUNT(*) AS BIGINT) AS n_px, " +
         "CAST(SUM(p0.pid + 1) AS BIGINT) AS cksum " +
         "FROM cl JOIN p0 ON p0.pid = cl.pid GROUP BY p0.tile, cl.clump) " +
@@ -3652,19 +3442,8 @@ object EO {
         "CAST(SUM(CASE WHEN n_px >= 3 THEN cksum ELSE 0 END) AS BIGINT) AS cksum_kept " +
         "FROM cs GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("((event_id div 4) % 256) div 16").as("py"),
-          expr("((event_id div 4) % 256) % 16").as("px"),
-          expr("event_id div 4").as("pid"),
-          (col("event_id") % 4).as("t"), (col("user_id") % 2).as("m"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val p0 = px.where(col("t") === 0 && col("m") === 1)
-          .join(broadcast(fullT), "tile")
-          .select("tile", "py", "px", "pid")
         val kept = col("n_px") >= 3
-        clumpRollup(p0)
+        clumpRollup(maskPixels(s, d))
           .groupBy("tile")
           .agg(sum(when(kept, 1L).otherwise(0L)).as("n_clumps_kept"),
             sum(when(kept, col("n_px")).otherwise(0L)).as("n_px_kept"),
@@ -3780,10 +3559,7 @@ object EO {
           s"LEAST(p.dist, COALESCE(nb.mind, 999) + 1) AS dist " +
           s"FROM $prev p LEFT JOIN nb$k nb ON nb.tile = p.tile AND nb.py = p.py AND nb.px = p.px)"
       }.mkString(", ")
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS px, " +
-        "event_id % 4 AS t, user_id % 2 AS m FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(PyPxSql, "user_id % 2 AS m") + ", " +
         "d0 AS MATERIALIZED (SELECT p.tile, py, px, " +
         "CASE WHEN m = 1 THEN 0 ELSE 999 END AS dist " +
         "FROM px p JOIN full_t USING (tile) WHERE t = 0), " +
@@ -3807,11 +3583,8 @@ object EO {
         // task), so each round's logical plan is cut to a LogicalRDD
         // WITHOUT paying an eager materialization job; execution still
         // happens inside the one consuming action.
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("(event_id div 4) % 256").as("pos"),
-          (col("event_id") % 4).as("t"), (col("user_id") % 2).as("m"))
-        var packed = px.where(col("t") === 0)
+        var packed = eventPixels(s, d, tilePos, (col("user_id") % 2).as("m"))
+          .where(col("t") === 0)
           .groupBy("tile")
           .agg(transform(array_sort(collect_list(struct(col("pos"),
             when(col("m") === 1, 0L).otherwise(999L).as("dv")))),
@@ -3900,26 +3673,15 @@ object EO {
     // per-tile sum (the agg_entropy discipline). Two partial-agg
     // shuffles on the tile key, map-side combinable.
     Q("eo_texture_entropy", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "event_id % 4 AS t, CAST(user_id AS BIGINT) AS v FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
-        "h AS (SELECT p.tile, LEAST(p.v // 32, 15) AS bin, CAST(COUNT(*) AS BIGINT) AS c " +
-        "FROM px p JOIN full_t USING (tile) WHERE p.t = 0 GROUP BY p.tile, bin) " +
+      "WITH " + fullTilesSql("", "CAST(user_id AS BIGINT) AS v") + ", " +
+        "h AS (" + tileBinsSql("CAST(COUNT(*) AS BIGINT) AS c") + ") " +
         "SELECT tile, CAST(COUNT(*) AS BIGINT) AS n_bins, " +
         "CAST(SUM(" +
         sqlS6("-(CAST(c AS DOUBLE) / 256.0) * " + sqlLnRatio("c", "256")) +
         ") AS BIGINT) AS entropy6 " +
         "FROM h GROUP BY tile ORDER BY tile"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          (col("event_id") % 4).as("t"), col("user_id").as("v"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
-        val h = px.where(col("t") === 0)
-          .join(broadcast(fullT), "tile")
-          .groupBy(col("tile"), least(expr("v div 32"), lit(15L)).as("bin"))
-          .agg(count(lit(1)).as("c"))
+        val h = tileBins(s, d).agg(count(lit(1)).as("c"))
         val p = col("c").cast("double") / lit(256.0)
         h.select(col("tile"), s6(-p * lnRatio(col("c"), lit(256L))).as("e6"))
           .groupBy("tile")
@@ -3980,10 +3742,9 @@ object EO {
     // tile-local keys, no join on pixel coordinates at all. Pure
     // integer comparisons — no float topology ambiguity.
     Q("eo_tile_contour", Some(
-      "WITH px AS (SELECT (event_id // 4) // 256 AS tile, " +
-        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS qx, " +
-        "event_id % 4 AS t, CASE WHEN user_id >= 64 THEN 1 ELSE 0 END AS b FROM events), " +
-        "full_t AS (SELECT tile FROM px WHERE t = 0 GROUP BY tile HAVING COUNT(*) = 256), " +
+      "WITH " + fullTilesSql(
+        "((event_id // 4) % 256) // 16 AS py, ((event_id // 4) % 256) % 16 AS qx, ",
+        "CASE WHEN user_id >= 64 THEN 1 ELSE 0 END AS b") + ", " +
         "corners AS (SELECT p.tile, p.py - dr AS cy, p.qx - dc AS cx, " +
         "(CASE WHEN dr = 0 AND dc = 0 THEN 8 WHEN dr = 0 THEN 4 " +
         "WHEN dc = 0 THEN 2 ELSE 1 END) * p.b AS wb " +
@@ -3996,20 +3757,14 @@ object EO {
         "SELECT tile, mcase, CAST(COUNT(*) AS BIGINT) AS n_cells " +
         "FROM cells GROUP BY tile, mcase ORDER BY tile, mcase"),
       (s, d) => {
-        val px = T.events(s, d).select(
-          expr("(event_id div 4) div 256").as("tile"),
-          expr("((event_id div 4) % 256) div 16").as("py"),
-          expr("((event_id div 4) % 256) % 16").as("qx"),
-          (col("event_id") % 4).as("t"),
+        val px = eventPixels(s, d, Seq(expr("((event_id div 4) % 256) div 16").as("py"),
+            expr("((event_id div 4) % 256) % 16").as("qx")),
           when(col("user_id") >= 64, 1).otherwise(0).as("b"))
-        val fullT = px.where(col("t") === 0).groupBy("tile")
-          .agg(count(lit(1)).as("c")).where(col("c") === 256).select("tile")
         val offs = s.range(0, 2).select(col("id").as("dr"))
           .crossJoin(s.range(0, 2).select(col("id").as("dc")))
         val wb = when(col("dr") === 0 && col("dc") === 0, 8)
           .when(col("dr") === 0, 4).when(col("dc") === 0, 2).otherwise(1) * col("b")
-        px.where(col("t") === 0)
-          .join(broadcast(fullT), "tile")
+        onFullTiles(px, col("t") === 0)
           .crossJoin(broadcast(offs))
           .select(col("tile"), (col("py") - col("dr")).as("cy"),
             (col("qx") - col("dc")).as("cx"), wb.as("wb"))
@@ -4425,10 +4180,6 @@ object EO {
           .orderBy("cx", "cy")
       }))
 
-  /** 4-adjacency connected-component rollup over set mask pixels
-    * (tile, py, px, pid — pid globally unique, raster-ordered within a
-    * tile): per (tile, clump) size + id checksum, clump = min pid in the
-    * component. Shared by eo_tile_clump and its generative spec. */
   /** 4-adjacency connected-component labeling over masked pixels:
     * returns (labeled = (tile, py, px, pid, cluster), pairs = the
     * right+down in-tile adjacency (d1, d2)) — shared by eo_tile_clump's
@@ -4452,6 +4203,11 @@ object EO {
     (labeled, pairs)
   }
 
+  /** 4-adjacency connected-component rollup over set mask pixels
+    * (tile, py, px, pid — pid globally unique, raster-ordered within a
+    * tile): per (tile, clump) size + id checksum, clump = min pid in the
+    * component. Shared by eo_tile_clump, eo_tile_sieve and the
+    * generative spec. */
   private[graft] def clumpRollup(pixels: DataFrame): DataFrame = {
     val (labeled, _) = clumpLabeled(pixels)
     labeled

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -21,7 +23,8 @@ import graft.sources.ProductSink
   * each job gets `maxAttempts` tries; a job that still fails (or names an
   * unknown product) is written to `<workDir>/dead/` as JSON with the
   * attempt count and last error, and the worker moves on — one poison job
-  * never wedges the queue. Covered by WorkerSpec.
+  * never wedges the queue. Only non-fatal errors are retried; a fatal
+  * one (OOM, linkage) propagates. Covered by WorkerSpec.
   *
   * Run: sbt "runMain graft.streaming.ProductWorkerDemo"
   */
@@ -71,7 +74,7 @@ object ProductWorkerDemo {
               Seq.empty, lineage = Some(dir))
             return Done(jobId, product, m.rows, m.path)
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               lastErr = Option(e.getMessage).getOrElse(e.getClass.getName)
           }
         }

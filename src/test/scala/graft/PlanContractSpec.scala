@@ -99,18 +99,28 @@ class PlanContractSpec extends SparkSpec {
 
   test("tile stencils run the native expressions, not interpreted transforms") {
     // (eventTiles' struct-field unpack is still a cheap one-lambda
-    // transform — the pin is that the KERNEL is the native expression)
-    for (k <- Seq("eo_tile_upsample", "eo_tile_focal", "eo_tile_focal_halo")) {
+    // transform — the pin is that the KERNEL is the native expression).
+    // Every key on the shared t0Tiles → stencil path is pinned, or a
+    // revert to an interpreted fold would pass the suite silently. The
+    // Horn gradient keys (gradient, hillshade, aspect) run
+    // focalGradient3x3, which has no native expression to pin.
+    val natives = Seq(
+      "eo_tile_upsample" -> Seq("graft_tile_up2x"),
+      "eo_tile_cubic" -> Seq("graft_tile_upcubic"),
+      "eo_tile_focal" -> Seq("graft_tile_focal3"),
+      "eo_tile_focal_halo" -> Seq("graft_tile_focal3"),
+      "eo_tile_focal_var" -> Seq("graft_tile_focal3"),
+      "eo_tile_lee" -> Seq("graft_tile_focal3"),
+      "eo_tile_morph" -> Seq("graft_tile_focal3"),
+      "eo_tile_morph_gradient" -> Seq("graft_tile_max3", "graft_tile_min3"),
+      "eo_tile_tri" -> Seq("graft_tile_tri3"),
+      "eo_tile_laplace" -> Seq("graft_tile_laplace3"),
+      "eo_tile_downsample" -> Seq("graft_tile_down"),
+      "eo_tile_pyramid" -> Seq("graft_tile_down"),
+      "eo_cog_overview_select" -> Seq("graft_tile_down"))
+    for ((k, names) <- natives) {
       val p = planOf(k)
-      assert(p.contains("graft_tile_up2x") || p.contains("graft_tile_focal3"),
-        s"$k lost the native stencil:\n$p")
-    }
-    // the downsample family rewired to graft_tile_down in the same
-    // commit — pin it too, or a revert to the interpreted aggregate
-    // fold would pass the suite silently
-    for (k <- Seq("eo_tile_downsample", "eo_tile_pyramid")) {
-      val p = planOf(k)
-      assert(p.contains("graft_tile_down"), s"$k lost the native stencil:\n$p")
+      for (n <- names) assert(p.contains(n), s"$k lost the native stencil $n:\n$p")
     }
   }
 

@@ -6,7 +6,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [key ...]
 Reads oracle_sql.json written by graft.Verify, registers the sfDir parquet
 tables as DuckDB views, runs each oracle SQL, and compares against the
 Spark-written parquet under <verifyOutDir>/<key>/ — columns sorted by name,
-exact value equality (NaN==NaN), row order as produced.
+exact value equality (NaN==NaN), row order as produced. A named key with no
+entry in oracle_sql.json fails.
 """
 import json
 import math
@@ -34,6 +35,12 @@ def main():
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
     n_pass = n_fail = 0
+    # a key named on the command line without an oracle (a typo, or a key
+    # whose oracle is None) fails loudly instead of counting as skipped
+    missing = sorted(only - set(oracles))
+    for key in missing:
+        print(f"FAIL {key}: no oracle SQL")
+        n_fail += 1
     for key in sorted(oracles):
         if only and key not in only:
             continue
@@ -99,7 +106,7 @@ def main():
             print(f"PASS {key} ({want.num_rows} rows)")
             n_pass += 1
     print(f"\n{n_pass} passed, {n_fail} failed, "
-          f"{len(oracles) - n_pass - n_fail} skipped")
+          f"{len(oracles) - n_pass - (n_fail - len(missing))} skipped")
     sys.exit(1 if n_fail else 0)
 
 
