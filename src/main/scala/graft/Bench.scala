@@ -43,30 +43,24 @@ object Bench {
     val warmDir = java.nio.file.Files.createTempDirectory("graft_bench_warm")
     try {
       spark.range(2).write.mode("overwrite").parquet(s"$warmDir/in")
-      val pk = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(pk)
-      spark.conf.set(pk,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // hold the handle and stop in a finally: if awaitTermination throws,
-      // the outer cleanup would otherwise delete warmDir under a
-      // still-active query (ADVICE r14 #3; stop on a terminated query is
-      // a no-op)
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        q = spark.readStream.schema("id LONG").parquet(s"$warmDir/in")
-          .groupBy("id").count()
-          .writeStream.format("memory").queryName("graft_warm_stream")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        if (q != null) {
-          try q.stop() catch { case scala.util.control.NonFatal(_) => () }
-        }
-        prev match {
-          case Some(p) => spark.conf.set(pk, p)
-          case None => spark.conf.unset(pk)
+      graft.streaming.StreamTwins.withConfs(spark, graft.streaming.StreamTwins.RocksDb) {
+        // hold the handle and stop in a finally: if awaitTermination throws,
+        // the outer cleanup would otherwise delete warmDir under a
+        // still-active query (ADVICE r14 #3; stop on a terminated query is
+        // a no-op)
+        var q: org.apache.spark.sql.streaming.StreamingQuery = null
+        try {
+          q = spark.readStream.schema("id LONG").parquet(s"$warmDir/in")
+            .groupBy("id").count()
+            .writeStream.format("memory").queryName("graft_warm_stream")
+            .outputMode("complete")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+        } finally {
+          if (q != null) {
+            try q.stop() catch { case scala.util.control.NonFatal(_) => () }
+          }
         }
       }
     } catch { case scala.util.control.NonFatal(e) =>

@@ -1,9 +1,16 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
+  MapState, OutputMode, StatefulProcessor, StatefulProcessorHandle, StreamingQuery,
+  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.{Det, Q, Tables => T}
+import graft.maintenance.Compaction.deleteRecursively
 import Det._
 
 /** SURVEY.md §3.11: streaming semantics, graded through deterministic batch
@@ -21,31 +28,13 @@ import Det._
   */
 object StreamTwins {
 
-  /** Run a build-time streaming query with the session's shuffle-partition
-    * count lowered to 4, restored in a finally (the stream_exec_join
-    * precedent, generalized to the whole exec family in round 13 — r12
-    * verdict #6). A streaming query's state-store instance count is
-    * pinned to spark.sql.shuffle.partitions at first start, and EVERY
-    * instance commits per micro-batch — at 32 local partitions a 3-batch
-    * run pays ~100 store commits (RocksDB opens, for the v2-API keys) of
-    * pure fixed cost against a few hundred distinct keys. Sizing state
-    * partitions to keyed-state VOLUME rather than batch parallelism is
-    * the same knob production tunes per query; the sink table and keyed
-    * state are partition-count-invariant, so the graded frame is
-    * unchanged. Batch-side staging/finalize plans build outside the
-    * wrap, so their shuffle width is untouched. The override mutates
-    * session-global conf, so it is NOT reentrant and NOT safe under a
-    * concurrently-planning sibling query — a depth counter makes nesting
-    * (which would restore "4" as the "previous" value) fail loud, and the
-    * exec keys run strictly serially in Bench/Verify so the concurrent
-    * case cannot arise on the graded path (ADVICE r13 #1). */
   /** Exact (landing, checkpoint) dirs of the LATEST stream_exec_changelog
     * invocation. The spec reads the checkpoint path from here instead of
     * globbing java.io.tmpdir (a stale dir from a prior run could win a
     * maxBy(lastModified) race — ADVICE r13 #2); the key deletes the
     * previous invocation's dirs on each run so /tmp stays bounded. */
   private[graft] val chlogDirs =
-    new java.util.concurrent.atomic.AtomicReference[(java.nio.file.Path, java.nio.file.Path)](null)
+    new java.util.concurrent.atomic.AtomicReference[(Path, Path)](null)
 
   /** JVM-lifetime staging memos (round 14, VERDICT r13 item 2 — the
     * executed-streaming fixed cost): every stream_exec key used to
@@ -132,6 +121,18 @@ object StreamTwins {
         .select(countDistinct(col("user_id"))).collect().head.getLong(0))
     }.head
 
+  /** Distinct users of half a plus distinct users of half b — one
+    * emission per user per batch with data, the poll-loop cut count of
+    * the tws_ttl key (one collect pair per JVM). */
+  private def nEmitHalves(s: SparkSession, d: String, tm: Long): Long =
+    memoLongs(s"$d#nEmitTtlHalves") {
+      val raw = s.read.parquet(s"$d/events.parquet")
+      Array(raw.where(unix_timestamp(col("ts")) <= tm)
+          .select(countDistinct(col("user_id"))).collect().head.getLong(0) +
+        raw.where(unix_timestamp(col("ts")) > tm && col("user_id") % 3 === 0)
+          .select(countDistinct(col("user_id"))).collect().head.getLong(0))
+    }.head
+
   /** Stage exec_late's three lane files (a = evens minus the sentinel,
     * b = the earliest-event sentinel, c = odds) once per JVM — all three
     * lanes come out of ONE lane-partitioned write job (the lane column
@@ -177,13 +178,7 @@ object StreamTwins {
     try {
       val tm = stageTmHalves(s, d, scratch, 240L, 120L) // half_a, half_b_u3, tsbounds
       nUsersStaged(s, d, tm)
-      memoLongs(s"$d#nEmitTtlHalves") {
-        val raw = s.read.parquet(s"$d/events.parquet")
-        Array(raw.where(unix_timestamp(col("ts")) <= tm)
-            .select(countDistinct(col("user_id"))).collect().head.getLong(0) +
-          raw.where(unix_timestamp(col("ts")) > tm && col("user_id") % 3 === 0)
-            .select(countDistinct(col("user_id"))).collect().head.getLong(0))
-      }
+      nEmitHalves(s, d, tm)
       def raw = s.read.parquet(s"$d/events.parquet")
       stagedSplit(d, "half_gt")(raw.where(unix_timestamp(col("ts")) > tm))
       stagedSplit(d, "u5_0")(raw.where(col("user_id") % 5 === 0))
@@ -194,6 +189,24 @@ object StreamTwins {
     } finally graft.maintenance.Compaction.deleteRecursively(scratch)
   }
 
+  /** Run a build-time streaming query with the session's shuffle-partition
+    * count lowered to 4, restored in a finally (the stream_exec_join
+    * precedent, generalized to the whole exec family in round 13 — r12
+    * verdict #6). A streaming query's state-store instance count is
+    * pinned to spark.sql.shuffle.partitions at first start, and EVERY
+    * instance commits per micro-batch — at 32 local partitions a 3-batch
+    * run pays ~100 store commits (RocksDB opens, for the v2-API keys) of
+    * pure fixed cost against a few hundred distinct keys. Sizing state
+    * partitions to keyed-state VOLUME rather than batch parallelism is
+    * the same knob production tunes per query; the sink table and keyed
+    * state are partition-count-invariant, so the graded frame is
+    * unchanged. Batch-side staging/finalize plans build outside the
+    * wrap, so their shuffle width is untouched. The override mutates
+    * session-global conf, so it is NOT reentrant and NOT safe under a
+    * concurrently-planning sibling query — a depth counter makes nesting
+    * (which would restore "4" as the "previous" value) fail loud, and the
+    * exec keys run strictly serially in Bench/Verify so the concurrent
+    * case cannot arise on the graded path (ADVICE r13 #1). */
   private val lowStatePartsDepth = new java.util.concurrent.atomic.AtomicInteger(0)
   private def lowStateParts[A](s: org.apache.spark.sql.SparkSession)(body: => A): A = {
     val k = "spark.sql.shuffle.partitions"
@@ -212,19 +225,217 @@ object StreamTwins {
     }
   }
 
+  /** Set `confs` for the duration of `body`, then restore each one's
+    * previous value (or unset it if it had none). */
+  private[graft] def withConfs[A](s: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(p)) => s.conf.set(k, p)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** The state-store provider the v2-state-API keys require (one RocksDB
+    * column family per state variable; HDFSBacked throws
+    * STATE_STORE_UNSUPPORTED_OPERATION). */
+  private[graft] val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** A fresh `graft_exec_<name>` landing dir for one exec-key invocation,
+    * with the nanosAsLong read conf the staged splits need set. */
+  private def newLanding(s: SparkSession, name: String): Path = {
+    val landing = Files.createTempDirectory(s"graft_exec_$name")
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    landing
+  }
+
+  /** Run `body` over a [[newLanding]] dir and delete the dir after: the
+    * key's query has terminated by then, and the returned frame reads the
+    * memory sink, not the landing files. */
+  private def withLanding[A](s: SparkSession, name: String)(body: Path => A): A = {
+    val landing = newLanding(s, name)
+    try body(landing) finally deleteRecursively(landing)
+  }
+
+  /** Copy the events file into `landing` once per name (one AvailableNow
+    * micro-batch when there is no maxFilesPerTrigger cap). */
+  private def copyEvents(d: String, landing: Path, names: String*): Unit =
+    names.foreach(n =>
+      Files.copy(java.nio.file.Paths.get(s"$d/events.parquet"), landing.resolve(n)))
+
+  private def startSink(df: DataFrame, name: String, mode: OutputMode,
+      ckpt: Option[Path]): StreamingQuery = {
+    val w = df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+    ckpt.foreach(c => w.option("checkpointLocation", c.toString))
+    w.start()
+  }
+
+  /** Run `df` to completion into the memory sink `name` (Trigger.AvailableNow,
+    * under [[lowStateParts]]); the sink table is then the key's result. */
+  private def runToSink(s: SparkSession, df: DataFrame, name: String, mode: OutputMode,
+      ckpt: Option[Path] = None): Unit =
+    lowStateParts(s)(startSink(df, name, mode, ckpt).awaitTermination())
+
+  /** The deterministic cut of the processing-time keys: AvailableNow never
+    * terminates under a processing-time timeout/timer (Spark 4.1
+    * shouldRunAnotherBatch is unconditionally true there), and every
+    * emission is a complete state removal, so the query is stopped once
+    * the Append sink holds `n` rows — bounded at 180 s as a crash guard,
+    * and a stalled query fails instead of returning a partial sink. */
+  private def runToCount(s: SparkSession, df: DataFrame, name: String, n: Long): Unit =
+    lowStateParts(s) {
+      val q = startSink(df, name, OutputMode.Append(), None)
+      val deadline = System.currentTimeMillis() + 180000L
+      while (s.table(name).count() < n && System.currentTimeMillis() < deadline) {
+        Thread.sleep(25L)
+      }
+      q.stop()
+      q.awaitTermination()
+      require(s.table(name).count() == n, "streaming query stalled before emitting all keys")
+    }
+
+  /** (user_id, value) rows of the staged landing dir, keyed by user. */
+  private def byUser(s: SparkSession, d: String, landing: Path, perTrigger: Option[Int]) = {
+    import s.implicits._
+    T.eventsStream(s, d, landing.toString, perTrigger)
+      .select(col("user_id"), col("value"))
+      .as[(Long, Double)]
+      .groupByKey(_._1)
+  }
+
+  /** The flatMapGroupsWithState function of fmgws and istate: fold the
+    * group's rows into its (count, Σs6) state and emit the merged fold. */
+  private def emitFold(uid: Long, rows: Iterator[(Long, Double)],
+      state: GroupState[(Long, Long)]): Iterator[(Long, Long, Long)] = {
+    val (n, acc) = ExactFold(state.getOption.getOrElse((0L, 0L)), rows.map(_._2))
+    state.update((n, acc))
+    Iterator((uid, n, acc))
+  }
+
+  /** 1 h tumbling (count, Σs6) per event type — stream_tumble and its
+    * executed twins (exec_tumble, restart, changelog), whose shared oracle
+    * is [[HourTumbleSql]]. */
+  private def hourTumble(events: DataFrame): DataFrame =
+    events.groupBy(col("event_type"), (floor(epochS(col("ts")) / 3600) * 3600).as("win_start"))
+      .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
+
+  private def hourTumbleSink(s: SparkSession, name: String): DataFrame =
+    s.table(name).select("event_type", "win_start", "n", "sum_val")
+      .orderBy("event_type", "win_start")
+
+  private val HourTumbleSql =
+    "SELECT event_type, (CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600) * 3600 AS win_start, " +
+      "CAST(COUNT(*) AS BIGINT) AS n, " + sqlSum6("value") + " AS sum_val " +
+      "FROM events GROUP BY event_type, win_start ORDER BY event_type, win_start"
+
+  /** The two-lifetime restart of stream_exec_restart/changelog: the hour
+    * tumble runs against one checkpoint twice — run 1 over the evens file
+    * (offsets + state committed), then the odds file lands and run 2 must
+    * recover the state and read ONLY the new file. Both lifetimes run
+    * under the same lowered partition count, pinned into the checkpoint. */
+  private def restartTwice(s: SparkSession, d: String, name: String,
+      landing: Path, ckpt: Path): DataFrame = {
+    def stage(even: Boolean, file: String): Unit =
+      placeSplit(landing, stagedSplit(d, s"parity_$even") {
+        s.read.parquet(s"$d/events.parquet")
+          .where((col("event_id") % 2 === 0) === even)
+      }, file, 0L)
+    def runOnce(): Unit = runToSink(s, hourTumble(T.eventsStream(s, d, landing.toString)),
+      name, OutputMode.Complete(), Some(ckpt))
+    stage(even = true, "a.parquet")
+    runOnce()
+    stage(even = false, "b.parquet")
+    runOnce()
+    hourTumbleSink(s, name)
+  }
+
+  /** Clicks joined to purchases of the same user within 300 s, each
+    * stream watermarked 1 h, run into the Append sink `name`; `joinType`
+    * is "inner", "leftOuter" or "fullOuter". Time columns are the
+    * floored-second instants, bit-aligned with the twins' integer lag. */
+  private def execIntervalJoin(s: SparkSession, d: String, landing: Path,
+      perTrigger: Option[Int], joinType: String, name: String): DataFrame = {
+    val clicks = T.eventsStream(s, d, landing.toString, perTrigger)
+      .where(col("event_type") === "click")
+      .select(col("user_id"),
+        timestamp_seconds(epochS(col("ts"))).as("tl_ts"),
+        col("event_id").as("click_id"))
+      .withWatermark("tl_ts", "1 hour")
+    val buys = T.eventsStream(s, d, landing.toString, perTrigger)
+      .where(col("event_type") === "purchase")
+      .select(col("user_id").as("u2"),
+        timestamp_seconds(epochS(col("ts"))).as("tr_ts"),
+        col("event_id").as("purchase_id"))
+      .withWatermark("tr_ts", "1 hour")
+    val joined = clicks.join(buys,
+        col("user_id") === col("u2")
+          && col("tr_ts") >= col("tl_ts")
+          && col("tr_ts") <= col("tl_ts") + expr("INTERVAL 300 SECONDS"),
+        joinType)
+      .select(col("click_id"), col("purchase_id"),
+        (unix_timestamp(col("tr_ts")) - unix_timestamp(col("tl_ts"))).as("lag_s"))
+    runToSink(s, joined, name, OutputMode.Append())
+    s.table(name).select("click_id", "purchase_id", "lag_s")
+      .orderBy(col("click_id").asc_nulls_first, col("purchase_id").asc_nulls_first)
+  }
+
+  private val IntervalJoinSql =
+    "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events) " +
+      "SELECT a.event_id AS click_id, b.event_id AS purchase_id, b.te - a.te AS lag_s " +
+      "FROM te a JOIN te b ON a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300 " +
+      "WHERE a.event_type = 'click' AND b.event_type = 'purchase' " +
+      "ORDER BY click_id, purchase_id"
+
+  /** The outer exec joins' oracle prelude over the staged tm-half union
+    * st: the final watermark wm, clicks a, purchases b, matches m and the
+    * left null rows nl (unmatched clicks whose horizon tl + 300 closed). */
+  private val OuterJoinSql =
+    "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events), " +
+      "tm AS (SELECT (MIN(te) + MAX(te)) // 2 AS m FROM te), " +
+      "st AS (SELECT * FROM te WHERE te <= (SELECT m FROM tm) OR user_id % 3 = 0), " +
+      "wm AS (SELECT LEAST(MAX(CASE WHEN event_type = 'click' THEN te END), " +
+      "MAX(CASE WHEN event_type = 'purchase' THEN te END)) - 3600 AS w FROM st), " +
+      "a AS (SELECT * FROM st WHERE event_type = 'click'), " +
+      "b AS (SELECT * FROM st WHERE event_type = 'purchase'), " +
+      "m AS (SELECT a.event_id AS click_id, b.event_id AS purchase_id, b.te - a.te AS lag_s " +
+      "FROM a JOIN b ON a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300), " +
+      "nl AS (SELECT a.event_id AS click_id, CAST(NULL AS BIGINT) AS purchase_id, " +
+      "CAST(NULL AS BIGINT) AS lag_s FROM a " +
+      "WHERE a.te + 300 < (SELECT w FROM wm) AND NOT EXISTS " +
+      "(SELECT 1 FROM b WHERE a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300))"
+
+  /** WITH te (the `cols` of events, te the floored epoch second) and mm
+    * (the integer time midpoint tm) — the oracle prelude of the keys
+    * staged by [[stageTmHalves]]. */
+  private def tmSql(cols: String): String =
+    s"WITH te AS (SELECT $cols FROM events), " +
+      "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), "
+
+  /** [[tmSql]] plus the staged halves: a = first time half, b = second
+    * half ∩ user_id % 3 = 0. */
+  private def tmHalvesSql(cols: String): String = tmSql(cols) +
+    "a AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm)), " +
+    "b AS (SELECT * FROM te WHERE te > (SELECT tm FROM mm) AND user_id % 3 = 0), "
+
+  private val UserTeValue = "user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, value"
+  private val UserTeV6 =
+    "user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, " + sqlS6("value") + " AS v6"
+
+  /** Per-user (count, Σs6) over the staged a ∪ b — the oracle of the two
+    * keys where every staged user emits its full fold exactly once
+    * (ptimeout, tws_timer). */
+  private val StagedUserFoldSql = tmHalvesSql(UserTeValue) +
+    "u AS (SELECT * FROM a UNION ALL SELECT * FROM b) " +
+    "SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
+    "CAST(SUM(" + sqlS6("value") + ") AS BIGINT) AS sum_val " +
+    "FROM u GROUP BY user_id ORDER BY user_id"
+
   val all: Seq[Q] = Seq(
 
-    Q("stream_tumble", Some(
-      "SELECT event_type, (CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600) * 3600 AS win_start, " +
-        "CAST(COUNT(*) AS BIGINT) AS n, " + sqlSum6("value") + " AS sum_val " +
-        "FROM events GROUP BY event_type, win_start ORDER BY event_type, win_start"),
-      (s, d) =>
-        T.events(s, d)
-          .groupBy(
-            col("event_type"),
-            (floor(epochS(col("ts")) / 3600) * 3600).as("win_start"))
-          .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
-          .orderBy("event_type", "win_start")),
+    Q("stream_tumble", Some(HourTumbleSql),
+      (s, d) => hourTumble(T.events(s, d)).orderBy("event_type", "win_start")),
 
     // EXECUTED streaming (round 10, VERDICT r9 "missing" #3): the same
     // tumbling semantics as stream_tumble, but the graded value is
@@ -240,32 +451,12 @@ object StreamTwins {
     // oracle's EXACTLY — closing the "semantics graded, execution not"
     // gap the r9 verdict called out. BUILD-TIME SIDE EFFECT: runs the
     // streaming query to completion at plan-construction time.
-    Q("stream_exec_tumble", Some(
-      "SELECT event_type, (CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600) * 3600 AS win_start, " +
-        "CAST(COUNT(*) AS BIGINT) AS n, " + sqlSum6("value") + " AS sum_val " +
-        "FROM events GROUP BY event_type, win_start ORDER BY event_type, win_start"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_tumble")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events.parquet"))
-        val stream = T.eventsStream(s, d, landing.toString)
-        val agg = stream
-          .withWatermark("ts", "1 hour")
-          .groupBy(col("event_type"),
-            (floor(epochS(col("ts")) / 3600) * 3600).as("win_start"))
-          .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
-        lowStateParts(s) {
-          val q = agg.writeStream.format("memory")
-            .queryName("graft_exec_tumble")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("graft_exec_tumble")
-          .select("event_type", "win_start", "n", "sum_val")
-          .orderBy("event_type", "win_start")
+    Q("stream_exec_tumble", Some(HourTumbleSql),
+      (s, d) => withLanding(s, "tumble") { landing =>
+        copyEvents(d, landing, "events.parquet")
+        val stream = T.eventsStream(s, d, landing.toString).withWatermark("ts", "1 hour")
+        runToSink(s, hourTumble(stream), "graft_exec_tumble", OutputMode.Complete())
+        hourTumbleSink(s, "graft_exec_tumble")
       }),
 
     // EXECUTED sliding-window aggregation (round 10, fifth wave) — the
@@ -285,23 +476,13 @@ object StreamTwins {
         "CAST(COUNT(*) AS BIGINT) AS n, " + sqlSum6("value") + " AS sum_val " +
         "FROM events CROSS JOIN (SELECT UNNEST([0,1,2,3]) AS k) offs " +
         "GROUP BY event_type, win_start ORDER BY event_type, win_start"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_slide")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events.parquet"))
+      (s, d) => withLanding(s, "slide") { landing =>
+        copyEvents(d, landing, "events.parquet")
         val agg = T.eventsStream(s, d, landing.toString)
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
-        lowStateParts(s) {
-          val q = agg.writeStream.format("memory")
-            .queryName("graft_exec_slide")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, agg, "graft_exec_slide", OutputMode.Complete())
         s.table("graft_exec_slide")
           .select(col("event_type"), epochS(col("window.start")).as("win_start"),
             col("n"), col("sum_val"))
@@ -337,9 +518,7 @@ object StreamTwins {
         "CAST(CASE WHEN n1 > 0 AND n2 > 0 THEN 2 ELSE 1 END AS BIGINT) AS n_updates, " +
         "CAST(n_final + CASE WHEN n1 > 0 AND n2 > 0 THEN n1 ELSE 0 END AS BIGINT) AS sum_history, " +
         "n_final FROM g ORDER BY event_type, win_start"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_updhist")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "updhist") { landing =>
         // parity split WITHOUT instant conversion (the exec_late rule:
         // staged halves must keep the on-disk ts encoding)
         def raw = s.read.parquet(s"$d/events.parquet")
@@ -351,14 +530,7 @@ object StreamTwins {
           .groupBy(col("event_type"),
             (floor(epochS(col("ts")) / 86400) * 86400).as("win_start"))
           .agg(count(lit(1)).as("n"))
-        lowStateParts(s) {
-          val q = agg.writeStream.format("memory")
-            .queryName("graft_exec_update_history")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, agg, "graft_exec_update_history", OutputMode.Update())
         s.table("graft_exec_update_history")
           .groupBy("event_type", "win_start")
           .agg(count(lit(1)).as("n_updates"), sum(col("n")).as("sum_history"),
@@ -384,25 +556,12 @@ object StreamTwins {
       "SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, " +
         sqlSum6("value") + " AS sum_val FROM events " +
         "GROUP BY event_type ORDER BY event_type"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_dedup")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events_a.parquet"))
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events_b.parquet"))
+      (s, d) => withLanding(s, "dedup") { landing =>
+        copyEvents(d, landing, "events_a.parquet", "events_b.parquet")
         val distinctRows = T.eventsStream(s, d, landing.toString)
           .withWatermark("ts", "1 hour")
           .dropDuplicates("event_id", "ts")
-        lowStateParts(s) {
-          val q = distinctRows.writeStream.format("memory")
-            .queryName("graft_exec_dedup")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, distinctRows, "graft_exec_dedup", OutputMode.Append())
         s.table("graft_exec_dedup")
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
@@ -427,40 +586,13 @@ object StreamTwins {
       "SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
         sqlSum6("value") + " AS sum_val FROM events " +
         "GROUP BY user_id ORDER BY user_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_fmgws")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events.parquet"))
-        val sq = s
-        import sq.implicits._
-        val stream = T.eventsStream(s, d, landing.toString)
-          .select(col("user_id"), col("value"))
-          .as[(Long, Double)]
-        val emitted = stream.groupByKey(_._1)
-          .flatMapGroupsWithState(
-            org.apache.spark.sql.streaming.OutputMode.Append(),
-            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
-            (uid: Long, rows: Iterator[(Long, Double)],
-                state: org.apache.spark.sql.streaming.GroupState[(Long, Long)]) => {
-              val (n0, s0) = state.getOption.getOrElse((0L, 0L))
-              var n = n0; var acc = s0
-              rows.foreach { r =>
-                n += 1
-                acc += math.floor(r._2 * 1e6 + 0.5).toLong
-              }
-              state.update((n, acc))
-              Iterator((uid, n, acc))
-            })
+      (s, d) => withLanding(s, "fmgws") { landing =>
+        import s.implicits._
+        copyEvents(d, landing, "events.parquet")
+        val emitted = byUser(s, d, landing, None)
+          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(emitFold)
           .toDF("user_id", "n", "sum_val")
-        lowStateParts(s) {
-          val q = emitted.writeStream.format("memory")
-            .queryName("graft_exec_fmgws")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, emitted, "graft_exec_fmgws", OutputMode.Append())
         s.table("graft_exec_fmgws").orderBy("user_id")
       }),
 
@@ -486,10 +618,7 @@ object StreamTwins {
     // SIDE EFFECT: stages files + runs the streaming query to
     // completion at plan-construction time.
     Q("stream_exec_timeout", Some(
-      "WITH te AS (SELECT user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, value FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
-        "a AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm)), " +
-        "b AS (SELECT * FROM te WHERE te > (SELECT tm FROM mm) AND user_id % 3 = 0), " +
+      tmHalvesSql(UserTeValue) +
         "w1 AS (SELECT MAX(te) - 3600 AS w FROM a), " +
         "w2 AS (SELECT MAX(te) - 3600 AS w FROM b), " +
         "ag AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS na, " +
@@ -505,12 +634,9 @@ object StreamTwins {
         "ma + 86400 < (SELECT w FROM w1) OR ma + 86400 < (SELECT w FROM w2) " +
         "ELSE mb + 86400 < (SELECT w FROM w2) END " +
         "ORDER BY user_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_timeout")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "timeout") { landing =>
         stageTmHalves(s, d, landing, 240L, 0L)
-        val sq = s
-        import sq.implicits._
+        import s.implicits._
         val stream = T.eventsStream(s, d, landing.toString, Some(1))
           .select(col("user_id"), epochS(col("ts")).as("te"), col("value"),
             timestamp_seconds(epochS(col("ts"))).as("tsec"))
@@ -519,38 +645,24 @@ object StreamTwins {
           // would strip the watermark the event-time timeout requires
           .as[(Long, Long, Double, java.sql.Timestamp)]
         val emitted = stream.groupByKey(_._1)
-          .flatMapGroupsWithState(
-            org.apache.spark.sql.streaming.OutputMode.Append(),
-            org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())(
+          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
             (uid: Long, rows: Iterator[(Long, Long, Double, java.sql.Timestamp)],
-                state: org.apache.spark.sql.streaming.GroupState[(Long, Long)]) => {
+                state: GroupState[(Long, Long)]) => {
               if (state.hasTimedOut) {
                 val (n, acc) = state.get
                 state.remove()
                 Iterator((uid, n, acc))
               } else {
-                val (n0, s0) = state.getOption.getOrElse((0L, 0L))
-                var n = n0; var acc = s0; var maxT = Long.MinValue
-                rows.foreach { r =>
-                  n += 1
-                  acc += math.floor(r._3 * 1e6 + 0.5).toLong
-                  if (r._2 > maxT) maxT = r._2
-                }
-                state.update((n, acc))
+                var maxT = Long.MinValue
+                state.update(ExactFold(state.getOption.getOrElse((0L, 0L)),
+                  rows.map { r => if (r._2 > maxT) maxT = r._2; r._3 }))
                 // idle gap: close 1 day after the group's last event
                 state.setTimeoutTimestamp(maxT * 1000L + 86400L * 1000L)
                 Iterator.empty
               }
             })
           .toDF("user_id", "n", "sum_val")
-        lowStateParts(s) {
-          val q = emitted.writeStream.format("memory")
-            .queryName("graft_exec_timeout")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, emitted, "graft_exec_timeout", OutputMode.Append())
         s.table("graft_exec_timeout").orderBy("user_id")
       }),
 
@@ -585,65 +697,28 @@ object StreamTwins {
     // over A ∪ B — a lost timeout, a double fire, or a fold applied
     // twice all break the hash. BUILD-TIME SIDE EFFECT: stages files +
     // runs (and stops) the streaming query at plan-construction time.
-    Q("stream_exec_ptimeout", Some(
-      "WITH te AS (SELECT user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, value FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
-        "a AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm)), " +
-        "b AS (SELECT * FROM te WHERE te > (SELECT tm FROM mm) AND user_id % 3 = 0), " +
-        "u AS (SELECT * FROM a UNION ALL SELECT * FROM b) " +
-        "SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
-        "CAST(SUM(" + sqlS6("value") + ") AS BIGINT) AS sum_val " +
-        "FROM u GROUP BY user_id ORDER BY user_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_ptimeout")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val tm = stageTmHalves(s, d, landing, 240L, 120L)
-        val nUsers = nUsersStaged(s, d, tm)
-        val sq = s
-        import sq.implicits._
-        val stream = T.eventsStream(s, d, landing.toString, Some(1))
-          .select(col("user_id"), col("value"))
-          .as[(Long, Double)]
-        val emitted = stream.groupByKey(_._1)
-          .flatMapGroupsWithState(
-            org.apache.spark.sql.streaming.OutputMode.Append(),
-            org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout())(
-            (uid: Long, rows: Iterator[(Long, Double)],
-                state: org.apache.spark.sql.streaming.GroupState[(Long, Long)]) => {
+    Q("stream_exec_ptimeout", Some(StagedUserFoldSql),
+      (s, d) => withLanding(s, "ptimeout") { landing =>
+        val nUsers = nUsersStaged(s, d, stageTmHalves(s, d, landing, 240L, 120L))
+        import s.implicits._
+        val emitted = byUser(s, d, landing, Some(1))
+          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(
+            (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[(Long, Long)]) => {
               if (state.hasTimedOut) {
                 val (n, acc) = state.get
                 state.remove()
                 Iterator((uid, n, acc))
               } else {
-                var (n, acc) = state.getOption.getOrElse((0L, 0L))
-                rows.foreach { r =>
-                  n += 1
-                  acc += math.floor(r._2 * 1e6 + 0.5).toLong
-                }
-                state.update((n, acc))
+                state.update(ExactFold(state.getOption.getOrElse((0L, 0L)), rows.map(_._2)))
                 // 1 ms: expires before any later micro-batch (see (2))
                 state.setTimeoutDuration(1L)
                 Iterator.empty
               }
             })
           .toDF("user_id", "n", "sum_val")
-        lowStateParts(s) {
-          val q = emitted.writeStream.format("memory")
-            .queryName("graft_exec_ptimeout")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          // the deterministic cut of measured fact (1): wait until every
-          // staged user's closure is committed, then stop the otherwise
-          // endless empty-batch loop (bounded at 180 s as a crash guard)
-          val deadline = System.currentTimeMillis() + 180000L
-          while (s.table("graft_exec_ptimeout").count() < nUsers &&
-              System.currentTimeMillis() < deadline) {
-            Thread.sleep(25L)
-          }
-          q.stop()
-          q.awaitTermination()
-        }
+        // the deterministic cut of measured fact (1): stop the otherwise
+        // endless empty-batch loop once every staged user's closure is in
+        runToCount(s, emitted, "graft_exec_ptimeout", nUsers)
         s.table("graft_exec_ptimeout").orderBy("user_id")
       }),
 
@@ -664,23 +739,19 @@ object StreamTwins {
     // BUILD-TIME SIDE EFFECT: stages the second-half file + runs the
     // streaming query to completion at plan-construction time.
     Q("stream_exec_istate", Some(
-      "WITH te AS (SELECT user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, value FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
+      tmSql(UserTeValue) +
         "snd AS (SELECT DISTINCT user_id FROM te WHERE te > (SELECT tm FROM mm)) " +
         "SELECT t.user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
         sqlSum6("value") + " AS sum_val " +
         "FROM te t JOIN snd USING (user_id) GROUP BY t.user_id ORDER BY t.user_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_istate")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "istate") { landing =>
         val (mn, mx) = tsBounds(s, d)
         val tm = Math.floorDiv(mn + mx, 2L)
         placeSplit(landing, stagedSplit(d, "half_gt") {
           s.read.parquet(s"$d/events.parquet")
             .where(unix_timestamp(col("ts")) > tm)
         }, "b.parquet", 0L)
-        val sq = s
-        import sq.implicits._
+        import s.implicits._
         // the snapshot: a plain batch fold of the first half (exact
         // integer state, so seeding + merging is hash-exact)
         val init = T.events(s, d)
@@ -691,34 +762,10 @@ object StreamTwins {
           .as[(Long, Long, Long)]
           .groupByKey(_._1)
           .mapValues(r => (r._2, r._3))
-        val stream = T.eventsStream(s, d, landing.toString)
-          .select(col("user_id"), col("value"))
-          .as[(Long, Double)]
-        val emitted = stream.groupByKey(_._1)
-          .flatMapGroupsWithState(
-            org.apache.spark.sql.streaming.OutputMode.Append(),
-            org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
-            init)(
-            (uid: Long, rows: Iterator[(Long, Double)],
-                state: org.apache.spark.sql.streaming.GroupState[(Long, Long)]) => {
-              val (n0, s0) = state.getOption.getOrElse((0L, 0L))
-              var n = n0; var acc = s0
-              rows.foreach { r =>
-                n += 1
-                acc += math.floor(r._2 * 1e6 + 0.5).toLong
-              }
-              state.update((n, acc))
-              Iterator((uid, n, acc))
-            })
+        val emitted = byUser(s, d, landing, None)
+          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout(), init)(emitFold)
           .toDF("user_id", "n", "sum_val")
-        lowStateParts(s) {
-          val q = emitted.writeStream.format("memory")
-            .queryName("graft_exec_istate")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, emitted, "graft_exec_istate", OutputMode.Append())
         s.table("graft_exec_istate").orderBy("user_id")
       }),
 
@@ -751,11 +798,7 @@ object StreamTwins {
       // B-only user's FIRST invocation happens in batch 2) — so the
       // oracle is structurally correct even if the corpus ever ships a
       // half-empty user, not correct-by-corpus-luck.
-      "WITH te AS (SELECT user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, " +
-        sqlS6("value") + " AS v6 FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
-        "a AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm)), " +
-        "b AS (SELECT * FROM te WHERE te > (SELECT tm FROM mm) AND user_id % 3 = 0), " +
+      tmHalvesSql(UserTeV6) +
         "e1 AS (SELECT user_id, CAST(1 AS BIGINT) AS n_inv, " +
         "CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(v6) AS BIGINT) AS sum_val " +
         "FROM a GROUP BY user_id), " +
@@ -767,39 +810,14 @@ object StreamTwins {
         "UNION ALL SELECT user_id, 1, v6 FROM b) GROUP BY user_id) " +
         "SELECT * FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2) " +
         "ORDER BY user_id, n_inv"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_tws")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "tws") { landing =>
         stageTmHalves(s, d, landing, 240L, 120L)
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val sq = s
-          import sq.implicits._
-          val stream = T.eventsStream(s, d, landing.toString, Some(1))
-            .select(col("user_id"), col("value"))
-            .as[(Long, Double)]
-          val emitted = stream.groupByKey(_._1)
-            .transformWithState(
-              new TwsRunningFold(),
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Append())
+        withConfs(s, RocksDb) {
+          import s.implicits._
+          val emitted = byUser(s, d, landing, Some(1))
+            .transformWithState(new TwsRunningFold(), TimeMode.None(), OutputMode.Append())
             .toDF("user_id", "n_inv", "n", "sum_val")
-          lowStateParts(s) {
-            val q = emitted.writeStream.format("memory")
-              .queryName("graft_exec_tws")
-              .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+          runToSink(s, emitted, "graft_exec_tws", OutputMode.Append())
         }
         s.table("graft_exec_tws").orderBy("user_id", "n_inv")
       }),
@@ -828,8 +846,7 @@ object StreamTwins {
     // SIDE EFFECT: stages files + runs the streaming query at
     // plan-construction time.
     Q("stream_exec_tws_map", Some(
-      "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
+      tmSql("user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id") +
         "st AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm) " +
         "OR (te > (SELECT tm FROM mm) AND user_id % 3 = 0)), " +
         "lp AS (SELECT user_id, te AS lte, event_id AS lid FROM (SELECT user_id, te, event_id, " +
@@ -847,40 +864,18 @@ object StreamTwins {
         "SELECT o.user_id, o.event_type, o.n, COALESCE(r.n_resets, 0) AS n_resets " +
         "FROM outx o LEFT JOIN resets r ON r.user_id = o.user_id " +
         "ORDER BY o.user_id, o.event_type"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_twsmap")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "twsmap") { landing =>
         stageTmHalves(s, d, landing, 240L, 120L)
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val sq = s
-          import sq.implicits._
-          val stream = T.eventsStream(s, d, landing.toString, Some(1))
+        withConfs(s, RocksDb) {
+          import s.implicits._
+          val emitted = T.eventsStream(s, d, landing.toString, Some(1))
             .select(col("user_id"), col("event_type"),
               epochS(col("ts")).as("te"), col("event_id"))
             .as[(Long, String, Long, Long)]
-          val emitted = stream.groupByKey(_._1)
-            .transformWithState(
-              new TwsMapTally(),
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Append())
+            .groupByKey(_._1)
+            .transformWithState(new TwsMapTally(), TimeMode.None(), OutputMode.Append())
             .toDF("user_id", "inv", "event_type", "n", "n_resets")
-          lowStateParts(s) {
-            val q = emitted.writeStream.format("memory")
-              .queryName("graft_exec_tws_map")
-              .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+          runToSink(s, emitted, "graft_exec_tws_map", OutputMode.Append())
         }
         val w = Window.partitionBy("user_id")
         s.table("graft_exec_tws_map")
@@ -908,57 +903,15 @@ object StreamTwins {
     // ptimeout deterministic cut once the sink holds one emission per
     // staged user. BUILD-TIME SIDE EFFECT: stages files + runs (and
     // stops) the streaming query at plan-construction time.
-    Q("stream_exec_tws_timer", Some(
-      "WITH te AS (SELECT user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, value FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
-        "a AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm)), " +
-        "b AS (SELECT * FROM te WHERE te > (SELECT tm FROM mm) AND user_id % 3 = 0), " +
-        "u AS (SELECT * FROM a UNION ALL SELECT * FROM b) " +
-        "SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
-        "CAST(SUM(" + sqlS6("value") + ") AS BIGINT) AS sum_val " +
-        "FROM u GROUP BY user_id ORDER BY user_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_twstimer")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val tm = stageTmHalves(s, d, landing, 240L, 120L)
-        val nUsers = nUsersStaged(s, d, tm)
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val sq = s
-          import sq.implicits._
-          val stream = T.eventsStream(s, d, landing.toString, Some(1))
-            .select(col("user_id"), col("value"))
-            .as[(Long, Double)]
-          val emitted = stream.groupByKey(_._1)
-            .transformWithState(
-              new TwsTimerFold(),
-              org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-              org.apache.spark.sql.streaming.OutputMode.Append())
+    Q("stream_exec_tws_timer", Some(StagedUserFoldSql),
+      (s, d) => withLanding(s, "twstimer") { landing =>
+        val nUsers = nUsersStaged(s, d, stageTmHalves(s, d, landing, 240L, 120L))
+        withConfs(s, RocksDb) {
+          import s.implicits._
+          val emitted = byUser(s, d, landing, Some(1))
+            .transformWithState(new TwsTimerFold(), TimeMode.ProcessingTime(), OutputMode.Append())
             .toDF("user_id", "n", "sum_val")
-          lowStateParts(s) {
-            val q = emitted.writeStream.format("memory")
-              .queryName("graft_exec_tws_timer")
-              .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val deadline = System.currentTimeMillis() + 180000L
-            while (s.table("graft_exec_tws_timer").count() < nUsers &&
-                System.currentTimeMillis() < deadline) {
-              Thread.sleep(25L)
-            }
-            q.stop()
-            q.awaitTermination()
-            require(s.table("graft_exec_tws_timer").count() == nUsers,
-              "streaming query stalled before emitting all keys")
-          }
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+          runToCount(s, emitted, "graft_exec_tws_timer", nUsers)
         }
         s.table("graft_exec_tws_timer").orderBy("user_id")
       }),
@@ -977,70 +930,24 @@ object StreamTwins {
     // v2 keys. BUILD-TIME SIDE EFFECT: stages files + runs the
     // streaming query at plan-construction time.
     Q("stream_exec_tws_ttl", Some(
-      "WITH te AS (SELECT user_id, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, " +
-        sqlS6("value") + " AS v6 FROM events), " +
-        "mm AS (SELECT (MIN(te) + MAX(te)) // 2 AS tm FROM te), " +
-        "a AS (SELECT * FROM te WHERE te <= (SELECT tm FROM mm)), " +
-        "b AS (SELECT * FROM te WHERE te > (SELECT tm FROM mm) AND user_id % 3 = 0), " +
+      tmHalvesSql(UserTeV6) +
         "e1 AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
         "CAST(SUM(v6) AS BIGINT) AS sum_val FROM a GROUP BY user_id), " +
         "e2 AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, " +
         "CAST(SUM(v6) AS BIGINT) AS sum_val FROM b GROUP BY user_id) " +
         "SELECT * FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2) " +
         "ORDER BY user_id, n, sum_val"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_twsttl")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val tm = stageTmHalves(s, d, landing, 240L, 120L)
-        // expected emissions: one per user per batch-with-data — the
-        // deterministic cut (AvailableNow NEVER self-terminates under
+      (s, d) => withLanding(s, "twsttl") { landing =>
+        // the deterministic cut (AvailableNow NEVER self-terminates under
         // TimeMode.ProcessingTime, the stream_exec_ptimeout law,
-        // re-measured here); both per-half distinct counts memoized
-        // family-wide like the staged files themselves
-        val nEmit = memoLongs(s"$d#nEmitTtlHalves") {
-          val raw = s.read.parquet(s"$d/events.parquet")
-          Array(raw.where(unix_timestamp(col("ts")) <= tm)
-              .select(countDistinct(col("user_id"))).collect().head.getLong(0) +
-            raw.where(unix_timestamp(col("ts")) > tm && col("user_id") % 3 === 0)
-              .select(countDistinct(col("user_id"))).collect().head.getLong(0))
-        }.head
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProvider = s.conf.getOption(providerKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val sq = s
-          import sq.implicits._
-          val stream = T.eventsStream(s, d, landing.toString, Some(1))
-            .select(col("user_id"), col("value"))
-            .as[(Long, Double)]
-          val emitted = stream.groupByKey(_._1)
-            .transformWithState(
-              new TwsTtlFold(),
-              org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-              org.apache.spark.sql.streaming.OutputMode.Append())
+        // re-measured here) at one emission per user per batch with data
+        val nEmit = nEmitHalves(s, d, stageTmHalves(s, d, landing, 240L, 120L))
+        withConfs(s, RocksDb) {
+          import s.implicits._
+          val emitted = byUser(s, d, landing, Some(1))
+            .transformWithState(new TwsTtlFold(), TimeMode.ProcessingTime(), OutputMode.Append())
             .toDF("user_id", "n", "sum_val")
-          lowStateParts(s) {
-            val q = emitted.writeStream.format("memory")
-              .queryName("graft_exec_tws_ttl")
-              .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            val deadline = System.currentTimeMillis() + 180000L
-            while (s.table("graft_exec_tws_ttl").count() < nEmit &&
-                System.currentTimeMillis() < deadline) {
-              Thread.sleep(25L)
-            }
-            q.stop()
-            q.awaitTermination()
-            require(s.table("graft_exec_tws_ttl").count() == nEmit,
-              "streaming query stalled before emitting all keys")
-          }
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
+          runToCount(s, emitted, "graft_exec_tws_ttl", nEmit)
         }
         s.table("graft_exec_tws_ttl").orderBy("user_id", "n", "sum_val")
       }),
@@ -1060,41 +967,11 @@ object StreamTwins {
     // contract a production pipeline exercises on every deploy/crash.
     // BUILD-TIME SIDE EFFECT: stages + runs two streaming query
     // lifetimes at plan-construction time.
-    Q("stream_exec_restart", Some(
-      "SELECT event_type, (CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600) * 3600 AS win_start, " +
-        "CAST(COUNT(*) AS BIGINT) AS n, " + sqlSum6("value") + " AS sum_val " +
-        "FROM events GROUP BY event_type, win_start ORDER BY event_type, win_start"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_restart")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ckpt")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        def stage(even: Boolean, name: String): Unit =
-          placeSplit(landing, stagedSplit(d, s"parity_$even") {
-            s.read.parquet(s"$d/events.parquet")
-              .where((col("event_id") % 2 === 0) === even)
-          }, name, 0L)
-        def runOnce(): Unit = lowStateParts(s) {
-          // both lifetimes run under the same lowered count — the state
-          // partition count is pinned into the shared checkpoint
-          val agg = T.eventsStream(s, d, landing.toString)
-            .groupBy(col("event_type"),
-              (floor(epochS(col("ts")) / 3600) * 3600).as("win_start"))
-            .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
-          val q = agg.writeStream.format("memory")
-            .queryName("graft_exec_restart")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        stage(even = true, "a.parquet")
-        runOnce() // run 1: evens only, offsets + state committed
-        stage(even = false, "b.parquet")
-        runOnce() // run 2: recovers state, reads ONLY the new file
-        s.table("graft_exec_restart")
-          .select("event_type", "win_start", "n", "sum_val")
-          .orderBy("event_type", "win_start")
+    Q("stream_exec_restart", Some(HourTumbleSql),
+      (s, d) => withLanding(s, "restart") { landing =>
+        val ckpt = Files.createTempDirectory("graft_restart_ckpt")
+        try restartTwice(s, d, "graft_exec_restart", landing, ckpt)
+        finally deleteRecursively(ckpt)
       }),
 
     // EXECUTED restart under RocksDB CHANGELOG checkpointing (round 13)
@@ -1115,67 +992,24 @@ object StreamTwins {
     // both lifetimes share the lowStateParts width pinned into the
     // checkpoint. BUILD-TIME SIDE EFFECT: stages + runs two streaming
     // query lifetimes at plan-construction time.
-    Q("stream_exec_changelog", Some(
-      "SELECT event_type, (CAST(FLOOR(EPOCH(ts)) AS BIGINT) // 3600) * 3600 AS win_start, " +
-        "CAST(COUNT(*) AS BIGINT) AS n, " + sqlSum6("value") + " AS sum_val " +
-        "FROM events GROUP BY event_type, win_start ORDER BY event_type, win_start"),
+    Q("stream_exec_changelog", Some(HourTumbleSql),
       (s, d) => {
         // Delete the PREVIOUS invocation's dirs (Bench REPS / spec re-runs
         // would otherwise grow /tmp) and publish the exact paths of this
         // one — the spec inspects the checkpoint for .changelog files by
         // this reference, never by tmpdir globbing (ADVICE r13 #2).
         Option(chlogDirs.get()).foreach { case (l0, c0) =>
-          graft.maintenance.Compaction.deleteRecursively(l0)
-          graft.maintenance.Compaction.deleteRecursively(c0)
+          deleteRecursively(l0)
+          deleteRecursively(c0)
         }
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_chlog")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_chlog_ckpt")
+        val landing = newLanding(s, "chlog")
+        val ckpt = Files.createTempDirectory("graft_chlog_ckpt")
         chlogDirs.set((landing, ckpt))
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        def stage(even: Boolean, name: String): Unit =
-          placeSplit(landing, stagedSplit(d, s"parity_$even") {
-            s.read.parquet(s"$d/events.parquet")
-              .where((col("event_id") % 2 === 0) === even)
-          }, name, 0L)
-        val providerKey = "spark.sql.streaming.stateStore.providerClass"
-        val chlogKey =
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        val prevProvider = s.conf.getOption(providerKey)
-        val prevChlog = s.conf.getOption(chlogKey)
-        s.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set(chlogKey, "true")
-        try {
-          def runOnce(): Unit = lowStateParts(s) {
-            val agg = T.eventsStream(s, d, landing.toString)
-              .groupBy(col("event_type"),
-                (floor(epochS(col("ts")) / 3600) * 3600).as("win_start"))
-              .agg(count(lit(1)).as("n"), sum6(col("value")).as("sum_val"))
-            val q = agg.writeStream.format("memory")
-              .queryName("graft_exec_changelog")
-              .option("checkpointLocation", ckpt.toString)
-              .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-          stage(even = true, "a.parquet")
-          runOnce() // run 1: evens; commit = full snapshot + changelog
-          stage(even = false, "b.parquet")
-          runOnce() // run 2: REPLAYS the changelog, folds exactly the odds
-        } finally {
-          prevProvider match {
-            case Some(p) => s.conf.set(providerKey, p)
-            case None => s.conf.unset(providerKey)
-          }
-          prevChlog match {
-            case Some(p) => s.conf.set(chlogKey, p)
-            case None => s.conf.unset(chlogKey)
-          }
+        // run 1's commit = full snapshot + changelog; run 2 REPLAYS it
+        withConfs(s, RocksDb,
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
+          restartTwice(s, d, "graft_exec_changelog", landing, ckpt)
         }
-        s.table("graft_exec_changelog")
-          .select("event_type", "win_start", "n", "sum_val")
-          .orderBy("event_type", "win_start")
       }),
 
     // EXECUTED watermark late-drop (round 10 third wave) — the key that
@@ -1220,9 +1054,7 @@ object StreamTwins {
         "CAST(COUNT(*) AS BIGINT) AS n, " +
         sqlSum6("value") + " AS sum_val FROM kept " +
         "GROUP BY event_type, win_start ORDER BY event_type, win_start"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_late")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "late") { landing =>
         // split WITHOUT instant conversion: the staged thirds must carry
         // the original on-disk ts encoding so eventsStream's footer-probed
         // schema still applies to them. All three thirds in ONE write job
@@ -1240,14 +1072,7 @@ object StreamTwins {
           .withWatermark("tsec", "1 hour")
           .groupBy(col("event_type"), window(col("tsec"), "1 hour").as("w"))
           .agg(count(lit(1)).as("n"), sum(s6(col("value"))).as("sum_val"))
-        lowStateParts(s) {
-          val q = agg.writeStream.format("memory")
-            .queryName("graft_exec_late")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, agg, "graft_exec_late", OutputMode.Update())
         val byKey = Window.partitionBy("event_type", "win_start")
           .orderBy(col("n").desc)
         s.table("graft_exec_late")
@@ -1293,11 +1118,8 @@ object StreamTwins {
         "SELECT user_id, session_id, MIN(te) AS s_start, MAX(te) AS s_end, " +
         "CAST(COUNT(*) AS BIGINT) AS n FROM sess GROUP BY user_id, session_id " +
         "ORDER BY user_id, session_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_session")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events.parquet"))
+      (s, d) => withLanding(s, "session") { landing =>
+        copyEvents(d, landing, "events.parquet")
         val sess = T.eventsStream(s, d, landing.toString)
           .select(col("user_id"),
             timestamp_seconds(epochS(col("ts"))).as("tsec"))
@@ -1307,14 +1129,7 @@ object StreamTwins {
           .agg(min(unix_timestamp(col("tsec"))).as("s_start"),
             max(unix_timestamp(col("tsec"))).as("s_end"),
             count(lit(1)).as("n"))
-        lowStateParts(s) {
-          val q = sess.writeStream.format("memory")
-            .queryName("graft_exec_session")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        runToSink(s, sess, "graft_exec_session", OutputMode.Complete())
         val byUser = Window.partitionBy("user_id").orderBy(col("s_start"))
         s.table("graft_exec_session")
           .withColumn("session_id", row_number().over(byUser).cast("int"))
@@ -1468,12 +1283,7 @@ object StreamTwins {
     // user_id; the range predicate filters inside the join, and the
     // per-user time window bounds streaming state exactly like the
     // watermark does.
-    Q("stream_interval_join", Some(
-      "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events) " +
-        "SELECT a.event_id AS click_id, b.event_id AS purchase_id, b.te - a.te AS lag_s " +
-        "FROM te a JOIN te b ON a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300 " +
-        "WHERE a.event_type = 'click' AND b.event_type = 'purchase' " +
-        "ORDER BY click_id, purchase_id"),
+    Q("stream_interval_join", Some(IntervalJoinSql),
       (s, d) => {
         val te = T.events(s, d)
           .select(col("user_id"), col("event_type"), epochS(col("ts")).as("te"), col("event_id"))
@@ -1504,52 +1314,15 @@ object StreamTwins {
     // dropped or duplicated buffered row breaks the hash. BUILD-TIME
     // SIDE EFFECT: runs the streaming query to completion at
     // plan-construction time.
-    Q("stream_exec_join", Some(
-      "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events) " +
-        "SELECT a.event_id AS click_id, b.event_id AS purchase_id, b.te - a.te AS lag_s " +
-        "FROM te a JOIN te b ON a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300 " +
-        "WHERE a.event_type = 'click' AND b.event_type = 'purchase' " +
-        "ORDER BY click_id, purchase_id"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_join")
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$d/events.parquet"),
-          landing.resolve("events.parquet"))
-        val clicks = T.eventsStream(s, d, landing.toString)
-          .where(col("event_type") === "click")
-          .select(col("user_id"),
-            timestamp_seconds(epochS(col("ts"))).as("tl_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("tl_ts", "1 hour")
-        val buys = T.eventsStream(s, d, landing.toString)
-          .where(col("event_type") === "purchase")
-          .select(col("user_id").as("u2"),
-            timestamp_seconds(epochS(col("ts"))).as("tr_ts"),
-            col("event_id").as("purchase_id"))
-          .withWatermark("tr_ts", "1 hour")
-        val joined = clicks.join(buys,
-            col("user_id") === col("u2")
-              && col("tr_ts") >= col("tl_ts")
-              && col("tr_ts") <= col("tl_ts") + expr("INTERVAL 300 SECONDS"))
-          .select(col("click_id"), col("purchase_id"),
-            (unix_timestamp(col("tr_ts")) - unix_timestamp(col("tl_ts")))
-              .as("lag_s"))
+    Q("stream_exec_join", Some(IntervalJoinSql),
+      (s, d) => withLanding(s, "join") { landing =>
+        copyEvents(d, landing, "events.parquet")
         // A symmetric-hash interval join carries FOUR stores per
         // partition, so the state-store sizing lever matters most here
         // (measured 13.9 s at 32 partitions → ~3× faster at 8; this key
         // is where the now-family-wide lowStateParts discipline was
         // first measured).
-        lowStateParts(s) {
-          val q = joined.writeStream.format("memory")
-            .queryName("graft_exec_join")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("graft_exec_join")
-          .select("click_id", "purchase_id", "lag_s")
-          .orderBy("click_id", "purchase_id")
+        execIntervalJoin(s, d, landing, None, "inner", "graft_exec_join")
       }),
 
     // EXECUTED left-outer stream-stream interval join (round 15, VERDICT
@@ -1576,56 +1349,11 @@ object StreamTwins {
     // null breaks the hash. BUILD-TIME SIDE EFFECT: stages + runs the
     // streaming query at plan-construction time.
     Q("stream_exec_left_join", Some(
-      "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events), " +
-        "tm AS (SELECT (MIN(te) + MAX(te)) // 2 AS m FROM te), " +
-        "st AS (SELECT * FROM te WHERE te <= (SELECT m FROM tm) OR user_id % 3 = 0), " +
-        "wm AS (SELECT LEAST(MAX(CASE WHEN event_type = 'click' THEN te END), " +
-        "MAX(CASE WHEN event_type = 'purchase' THEN te END)) - 3600 AS w FROM st), " +
-        "a AS (SELECT * FROM st WHERE event_type = 'click'), " +
-        "b AS (SELECT * FROM st WHERE event_type = 'purchase'), " +
-        "m AS (SELECT a.event_id AS click_id, b.event_id AS purchase_id, b.te - a.te AS lag_s " +
-        "FROM a JOIN b ON a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300), " +
-        "nl AS (SELECT a.event_id AS click_id, CAST(NULL AS BIGINT) AS purchase_id, " +
-        "CAST(NULL AS BIGINT) AS lag_s FROM a " +
-        "WHERE a.te + 300 < (SELECT w FROM wm) AND NOT EXISTS " +
-        "(SELECT 1 FROM b WHERE a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300)) " +
-        "SELECT * FROM m UNION ALL SELECT * FROM nl " +
+      OuterJoinSql + " SELECT * FROM m UNION ALL SELECT * FROM nl " +
         "ORDER BY click_id, purchase_id NULLS FIRST"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_ljoin")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "ljoin") { landing =>
         stageTmHalves(s, d, landing, 240L, 0L)
-        val clicks = T.eventsStream(s, d, landing.toString, Some(1))
-          .where(col("event_type") === "click")
-          .select(col("user_id"),
-            timestamp_seconds(epochS(col("ts"))).as("tl_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("tl_ts", "1 hour")
-        val buys = T.eventsStream(s, d, landing.toString, Some(1))
-          .where(col("event_type") === "purchase")
-          .select(col("user_id").as("u2"),
-            timestamp_seconds(epochS(col("ts"))).as("tr_ts"),
-            col("event_id").as("purchase_id"))
-          .withWatermark("tr_ts", "1 hour")
-        val joined = clicks.join(buys,
-            col("user_id") === col("u2")
-              && col("tr_ts") >= col("tl_ts")
-              && col("tr_ts") <= col("tl_ts") + expr("INTERVAL 300 SECONDS"),
-            "leftOuter")
-          .select(col("click_id"), col("purchase_id"),
-            (unix_timestamp(col("tr_ts")) - unix_timestamp(col("tl_ts")))
-              .as("lag_s"))
-        lowStateParts(s) {
-          val q = joined.writeStream.format("memory")
-            .queryName("graft_exec_left_join")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("graft_exec_left_join")
-          .select("click_id", "purchase_id", "lag_s")
-          .orderBy(col("click_id"), col("purchase_id").asc_nulls_first)
+        execIntervalJoin(s, d, landing, Some(1), "leftOuter", "graft_exec_left_join")
       }),
 
     // EXECUTED full-outer stream-stream interval join (round 16, VERDICT
@@ -1649,61 +1377,16 @@ object StreamTwins {
     // hash. BUILD-TIME SIDE EFFECT: stages + runs the streaming query
     // at plan-construction time.
     Q("stream_exec_full_join", Some(
-      "WITH te AS (SELECT user_id, event_type, CAST(FLOOR(EPOCH(ts)) AS BIGINT) AS te, event_id FROM events), " +
-        "tm AS (SELECT (MIN(te) + MAX(te)) // 2 AS m FROM te), " +
-        "st AS (SELECT * FROM te WHERE te <= (SELECT m FROM tm) OR user_id % 3 = 0), " +
-        "wm AS (SELECT LEAST(MAX(CASE WHEN event_type = 'click' THEN te END), " +
-        "MAX(CASE WHEN event_type = 'purchase' THEN te END)) - 3600 AS w FROM st), " +
-        "a AS (SELECT * FROM st WHERE event_type = 'click'), " +
-        "b AS (SELECT * FROM st WHERE event_type = 'purchase'), " +
-        "m AS (SELECT a.event_id AS click_id, b.event_id AS purchase_id, b.te - a.te AS lag_s " +
-        "FROM a JOIN b ON a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300), " +
-        "nl AS (SELECT a.event_id AS click_id, CAST(NULL AS BIGINT) AS purchase_id, " +
-        "CAST(NULL AS BIGINT) AS lag_s FROM a " +
-        "WHERE a.te + 300 < (SELECT w FROM wm) AND NOT EXISTS " +
-        "(SELECT 1 FROM b WHERE a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300)), " +
+      OuterJoinSql + ", " +
         "nr AS (SELECT CAST(NULL AS BIGINT) AS click_id, b.event_id AS purchase_id, " +
         "CAST(NULL AS BIGINT) AS lag_s FROM b " +
         "WHERE b.te < (SELECT w FROM wm) AND NOT EXISTS " +
         "(SELECT 1 FROM a WHERE a.user_id = b.user_id AND b.te >= a.te AND b.te <= a.te + 300)) " +
         "SELECT * FROM m UNION ALL SELECT * FROM nl UNION ALL SELECT * FROM nr " +
         "ORDER BY click_id NULLS FIRST, purchase_id NULLS FIRST"),
-      (s, d) => {
-        val landing = java.nio.file.Files.createTempDirectory("graft_exec_fjoin")
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      (s, d) => withLanding(s, "fjoin") { landing =>
         stageTmHalves(s, d, landing, 240L, 0L)
-        val clicks = T.eventsStream(s, d, landing.toString, Some(1))
-          .where(col("event_type") === "click")
-          .select(col("user_id"),
-            timestamp_seconds(epochS(col("ts"))).as("tl_ts"),
-            col("event_id").as("click_id"))
-          .withWatermark("tl_ts", "1 hour")
-        val buys = T.eventsStream(s, d, landing.toString, Some(1))
-          .where(col("event_type") === "purchase")
-          .select(col("user_id").as("u2"),
-            timestamp_seconds(epochS(col("ts"))).as("tr_ts"),
-            col("event_id").as("purchase_id"))
-          .withWatermark("tr_ts", "1 hour")
-        val joined = clicks.join(buys,
-            col("user_id") === col("u2")
-              && col("tr_ts") >= col("tl_ts")
-              && col("tr_ts") <= col("tl_ts") + expr("INTERVAL 300 SECONDS"),
-            "fullOuter")
-          .select(col("click_id"), col("purchase_id"),
-            (unix_timestamp(col("tr_ts")) - unix_timestamp(col("tl_ts")))
-              .as("lag_s"))
-        lowStateParts(s) {
-          val q = joined.writeStream.format("memory")
-            .queryName("graft_exec_full_join")
-            .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("graft_exec_full_join")
-          .select("click_id", "purchase_id", "lag_s")
-          .orderBy(col("click_id").asc_nulls_first,
-            col("purchase_id").asc_nulls_first)
+        execIntervalJoin(s, d, landing, Some(1), "fullOuter", "graft_exec_full_join")
       }),
 
     // LEFT OUTER stream-stream interval join (round 9, second wave) —
@@ -1883,41 +1566,22 @@ object StreamTwins {
   * merging and re-encoding are hash-exact across batches.
   */
 private[streaming] final class TwsRunningFold
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Double), (Long, Long, Long, Long)] {
+    extends StatefulProcessor[Long, (Long, Double), (Long, Long, Long, Long)] {
 
-  @transient private var fold:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
-  @transient private var invRows:
-      org.apache.spark.sql.streaming.ListState[Long] = _
+  @transient private var fold: ValueState[(Long, Long)] = _
+  @transient private var invRows: ListState[Long] = _
 
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    fold = getHandle.getValueState[(Long, Long)]("fold",
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-    invRows = getHandle.getListState[Long]("inv_rows",
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    fold = ExactFold.pairState(getHandle, "fold", TTLConfig.NONE)
+    invRows = getHandle.getListState[Long]("inv_rows", Encoders.scalaLong, TTLConfig.NONE)
   }
 
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[(Long, Double)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Long, Long)] = {
-    var (n, acc) = if (fold.exists()) fold.get() else (0L, 0L)
-    var batchRows = 0L
-    rows.foreach { r =>
-      n += 1
-      batchRows += 1
-      acc += math.floor(r._2 * 1e6 + 0.5).toLong
-    }
+  override def handleInputRows(uid: Long, rows: Iterator[(Long, Double)],
+      timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
+    val (n0, s0) = if (fold.exists()) fold.get() else (0L, 0L)
+    val (n, acc) = ExactFold((n0, s0), rows.map(_._2))
     fold.update((n, acc))
-    invRows.appendValue(batchRows)
+    invRows.appendValue(n - n0)
     val nInv = invRows.get().size.toLong
     Iterator((uid, nInv, n, acc))
   }
@@ -1940,33 +1604,19 @@ private[streaming] final class TwsRunningFold
   * select each user's last invocation as the final state.
   */
 private[streaming] final class TwsMapTally
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String, Long, Long), (Long, Long, String, Long, Long)] {
+    extends StatefulProcessor[Long, (Long, String, Long, Long), (Long, Long, String, Long, Long)] {
 
-  @transient private var tally:
-      org.apache.spark.sql.streaming.MapState[String, Long] = _
-  @transient private var meta:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
+  @transient private var tally: MapState[String, Long] = _
+  @transient private var meta: ValueState[(Long, Long)] = _
 
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     tally = getHandle.getMapState[String, Long]("tally",
-      org.apache.spark.sql.Encoders.STRING,
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-    meta = getHandle.getValueState[(Long, Long)]("meta",
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
+      Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
+    meta = ExactFold.pairState(getHandle, "meta", TTLConfig.NONE)
   }
 
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[(Long, String, Long, Long)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, String, Long, Long)] = {
+  override def handleInputRows(uid: Long, rows: Iterator[(Long, String, Long, Long)],
+      timerValues: TimerValues): Iterator[(Long, Long, String, Long, Long)] = {
     var (inv, resets) = if (meta.exists()) meta.get() else (0L, 0L)
     rows.toSeq.sortBy(r => (r._3, r._4)).foreach { r =>
       if (r._2 == "purchase") {
@@ -1993,42 +1643,23 @@ private[streaming] final class TwsMapTally
   * once no matter how many timers it armed.
   */
 private[streaming] final class TwsTimerFold
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Double), (Long, Long, Long)] {
+    extends StatefulProcessor[Long, (Long, Double), (Long, Long, Long)] {
 
-  @transient private var fold:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
+  @transient private var fold: ValueState[(Long, Long)] = _
 
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    fold = getHandle.getValueState[(Long, Long)]("fold",
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong),
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-  }
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    fold = ExactFold.pairState(getHandle, "fold", TTLConfig.NONE)
 
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[(Long, Double)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Long)] = {
-    var (n, acc) = if (fold.exists()) fold.get() else (0L, 0L)
-    rows.foreach { r =>
-      n += 1
-      acc += math.floor(r._2 * 1e6 + 0.5).toLong
-    }
-    fold.update((n, acc))
+  override def handleInputRows(uid: Long, rows: Iterator[(Long, Double)],
+      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
+    fold.update(ExactFold(if (fold.exists()) fold.get() else (0L, 0L), rows.map(_._2)))
     // 1 ms: expired by any LATER batch (the stream_exec_ptimeout law)
     getHandle.registerTimer(
       timerValues.getCurrentProcessingTimeInMs() + 1L)
     Iterator.empty
   }
 
-  override def handleExpiredTimer(
-      uid: Long,
-      timerValues: org.apache.spark.sql.streaming.TimerValues,
+  override def handleExpiredTimer(uid: Long, timerValues: TimerValues,
       expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
       : Iterator[(Long, Long, Long)] = {
     if (fold.exists()) {
@@ -2047,35 +1678,39 @@ private[streaming] final class TwsTimerFold
   * proof that TTL'd state genuinely vanished between batches.
   */
 private[streaming] final class TwsTtlFold
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Double), (Long, Long, Long)] {
+    extends StatefulProcessor[Long, (Long, Double), (Long, Long, Long)] {
 
-  @transient private var fold:
-      org.apache.spark.sql.streaming.ValueState[(Long, Long)] = _
+  @transient private var fold: ValueState[(Long, Long)] = _
 
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    fold = getHandle.getValueState[(Long, Long)]("fold",
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong),
-      org.apache.spark.sql.streaming.TTLConfig(
-        java.time.Duration.ofMillis(1L)))
-  }
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    fold = ExactFold.pairState(getHandle, "fold", TTLConfig(java.time.Duration.ofMillis(1L)))
 
-  override def handleInputRows(
-      uid: Long,
-      rows: Iterator[(Long, Double)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Long)] = {
+  override def handleInputRows(uid: Long, rows: Iterator[(Long, Double)],
+      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
     // exists() honors TTL: state written > 1 ms ago reads as absent
-    var (n, acc) = if (fold.exists()) fold.get() else (0L, 0L)
-    rows.foreach { r =>
-      n += 1
-      acc += math.floor(r._2 * 1e6 + 0.5).toLong
-    }
+    val (n, acc) = ExactFold(if (fold.exists()) fold.get() else (0L, 0L), rows.map(_._2))
     fold.update((n, acc))
     Iterator((uid, n, acc))
   }
+}
+
+/** The exact per-key (count, Σs6(value)) state of the arbitrary-state
+  * keys: per-element s6 floors THEN integer sums, so the fold is
+  * order-free (the Det rule 3 discipline applied inside the state
+  * function — Spark guarantees no row order within a group's batch). */
+private[streaming] object ExactFold {
+  def apply(z: (Long, Long), values: Iterator[Double]): (Long, Long) = {
+    var (n, acc) = z
+    values.foreach { v =>
+      n += 1
+      acc += math.floor(v * 1e6 + 0.5).toLong
+    }
+    (n, acc)
+  }
+
+  /** A (Long, Long) ValueState named `name`. */
+  def pairState(h: StatefulProcessorHandle, name: String,
+      ttl: TTLConfig): ValueState[(Long, Long)] =
+    h.getValueState[(Long, Long)](name,
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), ttl)
 }

@@ -8,12 +8,27 @@ package graft
 class DeterminismSpec extends SparkSpec {
 
   test("every registered query is run-to-run deterministic at sf0.001") {
+    // session confs a key may swap while it runs (the exec keys' lowered
+    // state partitions, RocksDB provider and changelog flag) must be
+    // restored after every run
+    val swapped = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    def confs() = swapped.map(k => k -> spark.conf.getOption(k))
+    val leaked = collection.mutable.Buffer[String]()
+    def run(q: Q) = {
+      val before = confs()
+      val rows = q.fn(spark, sfDir).collect().toSeq
+      if (confs() != before) leaked += s"${q.name}: $before -> ${confs()}"
+      rows
+    }
     val flaky = SparkEntry.registry.flatMap { q =>
-      val a = q.fn(spark, sfDir).collect().toSeq
-      val b = q.fn(spark, sfDir).collect().toSeq
+      val a = run(q)
+      val b = run(q)
       if (a == b) None else Some(q.name)
     }
     assert(flaky.isEmpty, s"nondeterministic keys: $flaky")
+    assert(leaked.isEmpty, s"keys that did not restore session confs: $leaked")
   }
 
   test("aggregate keys are invariant to the shuffle partition count") {
