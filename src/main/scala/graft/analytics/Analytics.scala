@@ -235,7 +235,6 @@ object Similarity {
     * against this). */
   def cosineTopK(emb: DataFrame, query: DataFrame, embCol: String,
       idCol: String, k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     import graft.functions.VectorExprs.sdotl
     val q = query.select(col(embCol).as("_qe"))
     val e = col(embCol)

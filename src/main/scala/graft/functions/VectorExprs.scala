@@ -1,12 +1,18 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftInternal, SparkSession, SparkSessionExtensions}
+
+import graft.raster.{TileDownsample, TileExprs, TileFocalExtremum3x3, TileFocalLaplace3x3,
+  TileFocalSum3x3, TileFocalTri3x3, TileUpCubicRows, TileUpsample2x}
 
 /** Native Catalyst expression for the vector hot path (SURVEY §5.3): a
   * whole-stage-codegen dot product over two float arrays.
@@ -362,127 +368,80 @@ case class PqAdcSum(left: Expression, right: Expression)
 
 object VectorExprs {
 
-  val DotName = "graft_dot"
-  val SDotLName = "graft_sdotl"
-  val SL2Name = "graft_sl2"
-  val SL2E10Name = "graft_sl2e10"
-  val ICountName = "graft_icount"
-  val PqAdcName = "graft_pqadc"
+  private def native(e: (Expression, Expression) => Expression)(a: Column, b: Column): Column =
+    GraftInternal.column(e(GraftInternal.expression(a), GraftInternal.expression(b)))
 
-  private val dotBuilder: Seq[Expression] => Expression =
-    children => FloatVecDot(children(0), children(1))
+  /** Column-level helper: [[FloatVecDot]]. */
+  def dot(a: Column, b: Column): Column = native(FloatVecDot)(a, b)
 
-  private val sdotlBuilder: Seq[Expression] => Expression =
-    children => FloatVecScaledDotL(children(0), children(1))
+  /** Column-level helper: [[FloatVecScaledDotL]]. */
+  def sdotl(a: Column, b: Column): Column = native(FloatVecScaledDotL)(a, b)
 
-  private val sl2Builder: Seq[Expression] => Expression =
-    children => DoubleVecScaledL2(children(0), children(1))
+  /** Column-level helper: [[DoubleVecScaledL2]]. */
+  def sl2(a: Column, b: Column): Column = native(DoubleVecScaledL2)(a, b)
 
-  private val sl2e10Builder: Seq[Expression] => Expression =
-    children => DoubleVecScaledL2E10(children(0), children(1))
+  /** Column-level helper: [[DoubleVecScaledL2E10]]. */
+  def sl2e10(a: Column, b: Column): Column = native(DoubleVecScaledL2E10)(a, b)
 
-  private val icountBuilder: Seq[Expression] => Expression =
-    children => SortedIntersectCount(children(0), children(1))
+  /** Column-level helper: [[SortedIntersectCount]] — both arrays must be
+    * sorted ascending and duplicate-free. */
+  def icount(a: Column, b: Column): Column = native(SortedIntersectCount)(a, b)
 
-  private val pqadcBuilder: Seq[Expression] => Expression =
-    children => PqAdcSum(children(0), children(1))
-
-  /** Imperative registration — used by query builders so the expression is
-    * available regardless of how the session was constructed. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(DotName, dotBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(SDotLName, sdotlBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(SL2Name, sl2Builder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(SL2E10Name, sl2e10Builder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(ICountName, icountBuilder, "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(PqAdcName, pqadcBuilder, "built-in")
-  }
-
-  /** Column-level helper: `dot(a, b)` after [[register]]. */
-  def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(DotName, a, b)
-
-  /** Column-level helper: `sdotl(a, b)` after [[register]]. */
-  def sdotl(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(SDotLName, a, b)
-
-  /** Column-level helper: `sl2(a, b)` after [[register]]. */
-  def sl2(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(SL2Name, a, b)
-
-  /** Column-level helper: `sl2e10(a, b)` after [[register]]. */
-  def sl2e10(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(SL2E10Name, a, b)
-
-  /** Column-level helper: `icount(a, b)` after [[register]] — both arrays
-    * must be sorted ascending and duplicate-free. */
-  def icount(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function(ICountName, a, b)
-
-  /** Column-level helper: `pqadc(lut, code)` after [[register]] — `lut`
-    * flattened row-major over (m, ck), `code` the M centroid ids. */
-  def pqadc(lut: Column, code: Column): Column =
-    org.apache.spark.sql.functions.call_function(PqAdcName, lut, code)
+  /** Column-level helper: [[PqAdcSum]] — `lut` flattened row-major over
+    * (m, ck), `code` the M centroid ids. */
+  def pqadc(lut: Column, code: Column): Column = native(PqAdcSum)(lut, code)
 }
 
 /** Config-level registration: `--conf
   * spark.sql.extensions=graft.functions.GraftExtensions` gives a session
-  * the full custom tier — the vector expressions as built-ins AND the
-  * as-of join's planner strategy + pushdown rule (the
+  * the full custom tier — every SQL-callable native expression as a
+  * built-in AND the as-of join's planner strategy + pushdown rule (the
   * SparkSessionExtensions surface of the contract; `AsOf.join` also
   * registers imperatively for sessions built without the conf). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsOfPushDown)
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.DotName),
-      new ExpressionInfo(classOf[FloatVecDot].getName, VectorExprs.DotName),
-      children => FloatVecDot(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.SDotLName),
-      new ExpressionInfo(classOf[FloatVecScaledDotL].getName, VectorExprs.SDotLName),
-      children => FloatVecScaledDotL(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.SL2Name),
-      new ExpressionInfo(classOf[DoubleVecScaledL2].getName, VectorExprs.SL2Name),
-      children => DoubleVecScaledL2(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.SL2E10Name),
-      new ExpressionInfo(classOf[DoubleVecScaledL2E10].getName, VectorExprs.SL2E10Name),
-      children => DoubleVecScaledL2E10(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.ICountName),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, VectorExprs.ICountName),
-      children => SortedIntersectCount(children(0), children(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorExprs.PqAdcName),
-      new ExpressionInfo(classOf[PqAdcSum].getName, VectorExprs.PqAdcName),
-      children => PqAdcSum(children(0), children(1))))
-    // the native tile-stencil family (graft.raster.TileExprs) — same
-    // contract as the vector tier: conf-built sessions get the SQL names
-    // without routing through RasterGrid's self-registering methods
-    e.injectFunction((
-      FunctionIdentifier(graft.raster.TileExprs.Up2xName),
-      new ExpressionInfo(classOf[graft.raster.TileUpsample2x].getName,
-        graft.raster.TileExprs.Up2xName),
-      children => graft.raster.TileUpsample2x(children(0), children(1), children(2))))
-    e.injectFunction((
-      FunctionIdentifier(graft.raster.TileExprs.Focal3Name),
-      new ExpressionInfo(classOf[graft.raster.TileFocalSum3x3].getName,
-        graft.raster.TileExprs.Focal3Name),
-      children => graft.raster.TileFocalSum3x3(children(0), children(1), children(2))))
-    e.injectFunction((
-      FunctionIdentifier(graft.raster.TileExprs.DownName),
-      new ExpressionInfo(classOf[graft.raster.TileDownsample].getName,
-        graft.raster.TileExprs.DownName),
-      children => graft.raster.TileDownsample(
-        children(0), children(1), children(2), children(3))))
+    GraftExtensions.functions.foreach(e.injectFunction)
   }
+}
+
+object GraftExtensions {
+
+  type FunctionDescription = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
+
+  private def fn[E <: Expression](name: String)(build: Seq[Expression] => E)(
+      implicit ct: ClassTag[E]): FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getName, name), build)
+
+  /** The one name → constructor table of the SQL-callable native
+    * expressions. The Column helpers (VectorExprs, TileExprs, UnicodeExprs)
+    * build their expressions directly and need none of it; `Md5Low32` has
+    * no SQL name (Det.hash32 is its only caller). */
+  val functions: Seq[FunctionDescription] = Seq(
+    fn("graft_dot")(c => FloatVecDot(c(0), c(1))),
+    fn("graft_sdotl")(c => FloatVecScaledDotL(c(0), c(1))),
+    fn("graft_sl2")(c => DoubleVecScaledL2(c(0), c(1))),
+    fn("graft_sl2e10")(c => DoubleVecScaledL2E10(c(0), c(1))),
+    fn("graft_icount")(c => SortedIntersectCount(c(0), c(1))),
+    fn("graft_pqadc")(c => PqAdcSum(c(0), c(1))),
+    fn(TileExprs.Up2xName)(c => TileUpsample2x(c(0), c(1), c(2))),
+    fn(TileExprs.UpCubicName)(c => TileUpCubicRows(c(0), c(1), c(2))),
+    fn(TileExprs.Max3Name)(c => TileFocalExtremum3x3(c(0), c(1), c(2), isMax = true)),
+    fn(TileExprs.Min3Name)(c => TileFocalExtremum3x3(c(0), c(1), c(2), isMax = false)),
+    fn(TileExprs.Focal3Name)(c => TileFocalSum3x3(c(0), c(1), c(2))),
+    fn(TileExprs.Tri3Name)(c => TileFocalTri3x3(c(0), c(1), c(2))),
+    fn(TileExprs.Laplace3Name)(c => TileFocalLaplace3x3(c(0), c(1), c(2))),
+    fn(TileExprs.DownName)(c => TileDownsample(c(0), c(1), c(2), c(3))),
+    fn(UnicodeExprs.NormName) { c =>
+      require(c.length == 1, s"${UnicodeExprs.NormName} takes exactly one argument")
+      UnicodeNormExpr(c.head)
+    })
+
+  /** Registers [[functions]] in a running session, for callers that name
+    * a native expression in SQL text. Idempotent. */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }

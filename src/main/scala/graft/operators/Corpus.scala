@@ -174,7 +174,6 @@ object Corpus {
         "CAST(CASE WHEN norm = text THEN 1 ELSE 0 END AS BIGINT) AS roundtrip " +
         "FROM n ORDER BY doc_id"),
       (s, d) => {
-        graft.functions.UnicodeExprs.register(s)
         import graft.functions.UnicodeExprs.unorm
         T.documents(s, d)
           .select(col("doc_id"), (col("doc_id") % 3).as("lane"), col("text"),

@@ -848,7 +848,6 @@ object EO {
       (s, d) => {
         import graft.raster.TileExprs
         val grid = t0Tiles(s, d, "v" -> col("user_id"))
-        TileExprs.register(s)
         // interior pixel values align with the stencil outputs by
         // slicing the same 14x14 window out of the original tile
         val interior = transform(
@@ -3089,7 +3088,6 @@ object EO {
       (s, d) => {
         import graft.raster.TileExprs
         val grid = t0Tiles(s, d, "v" -> col("user_id"))
-        TileExprs.register(s)
         unpackTiles(grid, TileExprs.laplace3(col("data"), 16, 16), "opos", "v")
           .withColumn("lap", col("v").cast("long"))
           .groupBy("tile")
@@ -3166,7 +3164,6 @@ object EO {
       (s, d) => {
         import graft.raster.TileExprs
         val grid = t0Tiles(s, d, "v" -> col("user_id"))
-        TileExprs.register(s)
         val both = grid.select(tileId,
           TileExprs.focal3(col("data"), 16, 16).as("fs"),
           TileExprs.focal3(transform(col("data"), e => e * e), 16, 16).as("fs2"))

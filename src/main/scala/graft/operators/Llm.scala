@@ -393,7 +393,6 @@ object Llm {
     * previous round's assignment, final per-(ck, pos) centroid grid). */
   private def lloydChain(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.VectorExprs.register(s)
     import graft.functions.VectorExprs.sl2
     val vecs = T.embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("dvec"))
@@ -833,7 +832,6 @@ object Llm {
         // one codegen'd loop — the posexplode layout shuffled dim× rows
         // through the distance hash-agg; this broadcasts #labels rows and
         // shuffles none. Per-element arithmetic is the oracle's exact twin.
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val ux = vecPos(s, d)
         val cent = ux.groupBy(col("label").as("clabel"), col("pos"))
@@ -880,7 +878,6 @@ object Llm {
         "SELECT upd.ck AS cluster, upd.pos, upd.c6, nm.n_members " +
         "FROM upd JOIN nm ON nm.ck = upd.ck ORDER BY cluster, pos"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val seedArr = T.embeddings(s, d).where(col("vec_id") < 8)
           .select(col("vec_id").as("ck"),
@@ -988,7 +985,6 @@ object Llm {
         "FROM drp JOIN nk ON nk.ck = drp.ck ORDER BY vec_id"
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sdotl
         val asg = lloydChain(s, d)._1
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
@@ -1280,7 +1276,6 @@ object Llm {
           .mkString("", " UNION ALL ", " ORDER BY pick")
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sdotl
         def cosOf(a: Column, b: Column): Column =
           (sdotl(a, b).cast("double") / lit(1e14)) /

@@ -347,7 +347,6 @@ object LlmExtras {
   private def nswAdj(s: SparkSession, d: String, members: DataFrame)(
       shortcuts: DataFrame => DataFrame): DataFrame =
     materializeIndex {
-      graft.functions.VectorExprs.register(s)
       val sigs = members.select(col("vec_id"), nswBucket.as("bucket"))
         .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
       undirected(nswKnn(d, sigs, members, Nil), shortcuts(sigs), Nil)
@@ -378,7 +377,6 @@ object LlmExtras {
   private def hnswLayers(s: SparkSession, d: String, members: DataFrame,
       scSalt: String): (DataFrame, DataFrame) =
     materializeIndexPair {
-      graft.functions.VectorExprs.register(s)
       val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
       val mAll = members.select(col("vec_id"), nswBucket.as("bucket"),
           when(pmod(hl, lit(16)) === 0, 2)
@@ -862,7 +860,6 @@ object LlmExtras {
   private def pqLloyd(s: SparkSession, d: String, idxFilter: Column,
       seedLo: Long, seedHi: Long, seedCk: Column): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExprs.register(s)
     import graft.functions.VectorExprs.sl2
     val subvecs = pqSubvecs(s, d).where(idxFilter)
     val uxpos = T.embeddings(s, d).where(idxFilter)
@@ -922,7 +919,6 @@ object LlmExtras {
     * ([[pqLloydTrained]], materialized once per call); the bounded M·K
     * LUT join is derived on top. */
   private def pqTrained(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorExprs.register(s)
     import graft.functions.VectorExprs.sl2
     val (asg, centPacked) = pqLloydTrained(s, d)
     val qsub = pqSubvecs(s, d).where(col("vec_id") === 0)
@@ -1688,7 +1684,6 @@ object LlmExtras {
         // allocation per pair where array_intersect builds a hash set per
         // row, and the per-doc row layout keeps the block join
         // explode-free
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.icount
         // persisted: the dict's eager zipWithIndex job AND the docsB build
         // both consume the distinct doc-bigram stream
@@ -1768,7 +1763,6 @@ object LlmExtras {
         // Pairs come from a label-blocked self-join of whole rows (the IVF
         // cell analogue) — dim× fewer shuffled rows than the posexplode
         // layout, and no wide hash-agg.
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sdotl
         val withNorm = T.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding"),
@@ -1825,7 +1819,6 @@ object LlmExtras {
         "SELECT cluster, vec_id AS kept_id, CAST(n_members AS BIGINT) AS n_members " +
         "FROM rep WHERE rn = 1 ORDER BY cluster"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sdotl
         val withNorm = T.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding"),
@@ -1898,7 +1891,6 @@ object LlmExtras {
         val sigs = ux.groupBy("vec_id")
           .agg(projCols.head, projCols.tail: _*)
           .select(col("vec_id"), bucket.as("bucket"))
-        graft.functions.VectorExprs.register(s)
         val e = T.embeddings(s, d).join(sigs, "vec_id")
         val q = e.where(col("vec_id") === 0)
           .select(col("bucket").as("qbucket"), col("embedding").as("qe"))
@@ -1940,7 +1932,6 @@ object LlmExtras {
         "SELECT vec_id, label, " + sqlS6("c") + " AS cos_sim FROM cosd " +
         "ORDER BY c DESC, vec_id LIMIT 3"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val ux = T.embeddings(s, d)
           .select(col("vec_id"), col("label"), posexplode(col("embedding")).as(Seq("pos", "xf")))
@@ -2040,7 +2031,6 @@ object LlmExtras {
         "FROM cells LEFT JOIN cen ON cen.clabel = cells.clabel " +
         "LEFT JOIN qh ON qh.clabel = cells.clabel ORDER BY cells.clabel"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d).where(col("vec_id") =!= 0)
           .select(col("vec_id"), col("label"), col("embedding"),
@@ -2171,7 +2161,6 @@ object LlmExtras {
         sqlS6("CAST(hits_pq10 AS DOUBLE) / CAST(n_top AS DOUBLE)") +
         " AS recall6 FROM k"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = T.embeddings(s, d)
         val q = emb.where(col("vec_id") === 0).select(col("embedding").as("qe"))
         val cos = scaledCos("embedding", "qe")
@@ -2244,7 +2233,6 @@ object LlmExtras {
         "FROM r JOIN embeddings e ON e.vec_id = r.vec_id " +
         "ORDER BY r.c DESC, r.vec_id LIMIT 10"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val ux = T.embeddings(s, d)
           .select(col("vec_id"), col("label"),
@@ -2325,7 +2313,6 @@ object LlmExtras {
         "CAST((SELECT COUNT(*) FROM top10 t JOIN lshc USING (vec_id)) AS BIGINT) AS hits_lsh10"
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d)
         val q = emb.where(col("vec_id") === 0).select(col("embedding").as("qe"))
@@ -2430,7 +2417,6 @@ object LlmExtras {
         QueryTopTenSql
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = withE(T.embeddings(s, d))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // index graph built in-plan per invocation ([[nswAdj]]),
@@ -2500,7 +2486,6 @@ object LlmExtras {
         "ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cc DESC, vec_id) AS rk FROM cosd) " +
         "WHERE rk <= 10 ORDER BY query_id, rk"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val emb = T.embeddings(s, d)
         val idx = emb.where(col("vec_id") % 2 === 0)
@@ -2600,7 +2585,6 @@ object LlmExtras {
     },
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val subvecs = pqSubvecs(s, d)
         // Lloyd codes + codebook trained in-plan per invocation
@@ -2696,7 +2680,6 @@ object LlmExtras {
         batchTopTenSql(s"v$BnswSteps")
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = withE(T.embeddings(s, d))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val idx = emb.where(col("vec_id") % 2 === 0)
@@ -2753,7 +2736,6 @@ object LlmExtras {
         QueryTopTenSql
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = withE(T.embeddings(s, d).where(col("vec_id") =!= 0))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         // layered graph + member-rank dictionary built in-plan per
@@ -2802,7 +2784,6 @@ object LlmExtras {
         batchTopTenSql("cand")
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = withE(T.embeddings(s, d))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
         val idx = emb.where(col("vec_id") % 2 === 0)
@@ -2888,7 +2869,6 @@ object LlmExtras {
         s"JOIN nvq ON nvq.qid = x.qid WHERE x.rk <= $NswM ORDER BY query_id, rk"
     },
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = T.embeddings(s, d).where(col("vec_id") =!= 0)
           .select(col("vec_id"),
             transform(col("embedding"), x => x.cast("double")).as("e"),
@@ -3802,7 +3782,6 @@ object LlmExtras {
         "SELECT doc_id, lex_rank, vec_rank, rrf6 FROM fused " +
         "ORDER BY rrf6 DESC, doc_id LIMIT 10"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val queryTerms = Seq("spark", "merge", "window")
         val dls = T.documents(s, d)
           .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
@@ -3896,7 +3875,6 @@ object LlmExtras {
         "FROM negs n JOIN np ON np.qid = n.qid WHERE n.rk <= 5 " +
         "ORDER BY query_id, rk"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         val emb = T.embeddings(s, d)
           .select(col("vec_id"), col("label"), col("embedding"))
         val idx = emb.where(col("vec_id") % 2 === 0)
@@ -4008,7 +3986,6 @@ object LlmExtras {
         "FROM g JOIN f ON f.d1 = g.d1 " +
         "GROUP BY g.d1, g.n_sup, g.n1, g.mi ORDER BY g.d1"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.icount
         val toks = T.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -4092,7 +4069,6 @@ object LlmExtras {
         "FROM g JOIN f ON f.d1 = g.d1 " +
         "GROUP BY g.d1, g.n_sup, g.n1, g.mi, g.k ORDER BY g.d1"),
       (s, d) => {
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.icount
         val toks = T.documents(s, d)
           .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))

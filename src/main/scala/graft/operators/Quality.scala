@@ -822,7 +822,6 @@ object Quality {
     },
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2e10
         val lrdCap = 1000000000L
         val emb = T.embeddings(s, d).select(col("vec_id"), col("label"),
@@ -948,7 +947,6 @@ object Quality {
     },
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorExprs.register(s)
         import graft.functions.VectorExprs.sl2
         val lrdCap = 1000000000L
         val emb = T.embeddings(s, d).select(col("vec_id"), col("label"),

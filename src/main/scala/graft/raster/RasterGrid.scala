@@ -197,7 +197,6 @@ object RasterGrid {
     // native codegen'd stencil (TileExprs) — same k-order block fold and
     // final /factor² float divide as the transform+aggregate form it
     // replaced, bit-for-bit identical output
-    TileExprs.register(df.sparkSession)
     df.select(col("product"), col("band"), col("time"),
       col("tile_y"), col("tile_x"),
       TileExprs.down(col("data"), h, w, factor).as("data"))
@@ -246,22 +245,18 @@ object RasterGrid {
     * interpreted `transform` form it replaced was the whole key cost:
     * 4.5 s -> sub-second at the r8 bench scale; same left-assoc float
     * sums, bit-for-bit identical output). */
-  def upsampleBilinear2x(df: DataFrame, h: Int, w: Int): DataFrame = {
-    TileExprs.register(df.sparkSession)
+  def upsampleBilinear2x(df: DataFrame, h: Int, w: Int): DataFrame =
     df.select(col("product"), col("band"), col("time"),
       col("tile_y"), col("tile_x"),
       TileExprs.up2x(col("data"), h, w).as("data"))
-  }
 
   /** Horizontal Catmull-Rom cubic 2× upsample (resampling='cubic' along
     * rows), SIXTEEN-SCALED integer outputs — see [[TileUpCubicRows]] for
     * the tap/clamp contract. Output tiles are h×2w. */
-  def upsampleCubic2xRows(df: DataFrame, h: Int, w: Int): DataFrame = {
-    TileExprs.register(df.sparkSession)
+  def upsampleCubic2xRows(df: DataFrame, h: Int, w: Int): DataFrame =
     df.select(col("product"), col("band"), col("time"),
       col("tile_y"), col("tile_x"),
       TileExprs.upCubic(col("data"), h, w).as("data"))
-  }
 
   /** Beucher morphological gradient over each tile's interior: grayscale
     * dilation − erosion (the 3×3 max − min), the classic morphology edge
@@ -270,7 +265,6 @@ object RasterGrid {
     * Same (h−2)×(w−2) interior/halo contract as [[focalSum3x3]]. */
   def morphGradient3x3(df: DataFrame, h: Int, w: Int): DataFrame = {
     require(h >= 3 && w >= 3, "focal window needs a 3x3 interior")
-    TileExprs.register(df.sparkSession)
     df.select(col("product"), col("band"), col("time"),
       col("tile_y"), col("tile_x"),
       zip_with(TileExprs.max3(col("data"), h, w),
@@ -299,7 +293,6 @@ object RasterGrid {
     // h*w rowsum transform inside each of the 3 vertical reads: O(tile^2)
     // per output pixel, a ~1000 s stall at sf0.1. Keep stencils
     // self-contained — one expression, one array read.)
-    TileExprs.register(df.sparkSession)
     df.select(col("product"), col("band"), col("time"),
       col("tile_y"), col("tile_x"),
       TileExprs.focal3(col("data"), h, w).as("data"))
@@ -312,7 +305,6 @@ object RasterGrid {
     * and native-stencil execution as [[focalSum3x3]]. */
   def focalTri3x3(df: DataFrame, h: Int, w: Int): DataFrame = {
     require(h >= 3 && w >= 3, "TRI window needs a 3x3 interior")
-    TileExprs.register(df.sparkSession)
     df.select(col("product"), col("band"), col("time"),
       col("tile_y"), col("tile_x"),
       TileExprs.tri3(col("data"), h, w).as("data"))

@@ -2,11 +2,11 @@ package graft.raster
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftInternal}
 
 /** Native Catalyst expressions for the fixed-stencil tile hot paths
   * (SURVEY §5.3, the same justification as functions.VectorExprs): the
@@ -26,8 +26,9 @@ import org.apache.spark.sql.{Column, SparkSession}
   * mirrors the generated Java exactly.
   *
   * (h, w) arrive as foldable int literals (tile geometry is plan-time
-  * constant); the expressions are registered like the vector family so
-  * any session shape can reach them.
+  * constant); the Column helpers in [[TileExprs]] build the expressions
+  * directly, like the vector family, and `GraftExtensions` names them
+  * for SQL text.
   */
 case class TileUpsample2x(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
@@ -577,56 +578,27 @@ object TileExprs {
           s" pixels (min dim $minDim) but the array has $n elements")
   }
 
-  /** Imperative registration, idempotent (the VectorExprs pattern). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Up2xName, ch => TileUpsample2x(ch(0), ch(1), ch(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      UpCubicName, ch => TileUpCubicRows(ch(0), ch(1), ch(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Max3Name, ch => TileFocalExtremum3x3(ch(0), ch(1), ch(2), isMax = true), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Min3Name, ch => TileFocalExtremum3x3(ch(0), ch(1), ch(2), isMax = false), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Focal3Name, ch => TileFocalSum3x3(ch(0), ch(1), ch(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Tri3Name, ch => TileFocalTri3x3(ch(0), ch(1), ch(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Laplace3Name, ch => TileFocalLaplace3x3(ch(0), ch(1), ch(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DownName, ch => TileDownsample(ch(0), ch(1), ch(2), ch(3)), "built-in")
-  }
+  private def stencil(e: (Expression, Expression, Expression) => Expression)(
+      data: Column, h: Int, w: Int): Column =
+    GraftInternal.column(e(GraftInternal.expression(data), Literal(h), Literal(w)))
 
-  def up2x(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(Up2xName, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+  def up2x(data: Column, h: Int, w: Int): Column = stencil(TileUpsample2x)(data, h, w)
 
-  def upCubic(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(UpCubicName, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+  def upCubic(data: Column, h: Int, w: Int): Column = stencil(TileUpCubicRows)(data, h, w)
 
   def max3(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(Max3Name, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+    stencil(TileFocalExtremum3x3(_, _, _, isMax = true))(data, h, w)
 
   def min3(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(Min3Name, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+    stencil(TileFocalExtremum3x3(_, _, _, isMax = false))(data, h, w)
 
-  def focal3(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(Focal3Name, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+  def focal3(data: Column, h: Int, w: Int): Column = stencil(TileFocalSum3x3)(data, h, w)
 
-  def tri3(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(Tri3Name, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+  def tri3(data: Column, h: Int, w: Int): Column = stencil(TileFocalTri3x3)(data, h, w)
 
-  def laplace3(data: Column, h: Int, w: Int): Column =
-    org.apache.spark.sql.functions.call_function(Laplace3Name, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w))
+  def laplace3(data: Column, h: Int, w: Int): Column = stencil(TileFocalLaplace3x3)(data, h, w)
 
   def down(data: Column, h: Int, w: Int, factor: Int): Column =
-    org.apache.spark.sql.functions.call_function(DownName, data,
-      org.apache.spark.sql.functions.lit(h), org.apache.spark.sql.functions.lit(w),
-      org.apache.spark.sql.functions.lit(factor))
+    GraftInternal.column(TileDownsample(
+      GraftInternal.expression(data), Literal(h), Literal(w), Literal(factor)))
 }

@@ -57,10 +57,22 @@ object StreamTwins {
   private def memoLongs(key: String)(compute: => Array[Long]): Array[Long] =
     memoScalars.computeIfAbsent(key, _ => compute)
 
+  /** A temp dir for the staging memos. Their files are handed out for the
+    * JVM's lifetime, so one shutdown hook, registered with the first dir,
+    * deletes them all. */
+  private val stagingDirs = collection.mutable.Buffer[java.nio.file.Path]()
+  private def stagingDir(prefix: String): java.nio.file.Path = stagingDirs.synchronized {
+    if (stagingDirs.isEmpty) Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      stagingDirs.synchronized(stagingDirs.foreach(graft.maintenance.Compaction.deleteRecursively))))
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    stagingDirs += dir
+    dir
+  }
+
   private def stagedSplit(d: String, name: String)(
       build: => org.apache.spark.sql.DataFrame): java.nio.file.Path =
     splitFiles.computeIfAbsent(s"$d#$name", { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_split_$name")
+      val tmp = stagingDir(s"graft_split_$name")
       build.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       new java.io.File(tmp.toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head.toPath
@@ -150,7 +162,7 @@ object StreamTwins {
           unix_timestamp(col("ts")).as("te"))
         .orderBy("te", "event_id").limit(1)
         .collect().head.getLong(0)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_late_part")
+      val tmp = stagingDir("graft_late_part")
       raw.withColumn("lane",
           when(col("event_id") === sent, "b")
             .when(col("event_id") % 2 === 0, "a").otherwise("c"))

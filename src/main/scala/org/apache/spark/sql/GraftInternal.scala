@@ -9,9 +9,11 @@ object GraftInternal {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Column ⇄ Expression bridges for graft's native expressions that are
-    * used WITHOUT a session-registry registration (Det.hash32 is called
-    * from plan-builder code where no SparkSession is in scope). */
+  /** Column ⇄ Expression bridges: every Column helper of graft's native
+    * expressions (Det.hash32, VectorExprs, TileExprs, UnicodeExprs.unorm)
+    * builds its expression directly through these, so no session
+    * function registry is involved; `GraftExtensions` registers the SQL
+    * names for SQL-text callers only. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =

@@ -74,7 +74,7 @@ class AnnPropertySpec extends SparkSpec {
       val v = Array.tabulate(dim)(i => centers(lab)(i) + rnd.nextGaussian().toFloat * 0.5f)
       Row(id, v.toSeq, lab)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_gen").toString
+    val dir = tempDir("graft_ann_gen")
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), Tables.embeddingsSchema)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir

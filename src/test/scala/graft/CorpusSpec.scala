@@ -107,7 +107,7 @@ class CorpusSpec extends SparkSpec {
           cur = next
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory("graft_corpus_gen").toString
+      val dir = tempDir("graft_corpus_gen")
       val rows = docs.map { case (i, lang, text) =>
         Row(i, text, lang, "gen", text.length.toLong)
       }

@@ -68,7 +68,6 @@ class DetLemmaSpec extends SparkSpec {
 
   test("lemma 4: the codegen scaled dot equals the relational unnest formulation") {
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.sdotl
     for (seed <- 10L to 12L) {
       val a = doubles(seed, 64).map(x => (x / 1e6).toFloat)
@@ -85,7 +84,6 @@ class DetLemmaSpec extends SparkSpec {
 
   test("lemma 5: the two-pointer SortedIntersectCount equals array_intersect size") {
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.icount
     val rnd = new scala.util.Random(77)
     // 500 random sorted distinct id-array pairs of skewed sizes — one
@@ -106,7 +104,6 @@ class DetLemmaSpec extends SparkSpec {
 
   test("lemma 5b: PqAdcSum over packed arrays equals the (m, ck) join + SUM aggregate") {
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.pqadc
     val rnd = new scala.util.Random(4242)
     val (mM, kK) = (5, 7)

@@ -94,13 +94,12 @@ class DeterminismSpec extends SparkSpec {
   }
 
   test("native tile stencils: codegen and interpreted paths agree on NaN tiles") {
-    // VERDICT r10 #2: every custom Expression carries BOTH nullSafeEval and
-    // doGenCode; if they diverge (e.g. on a NaN seed), flipping wholestage
-    // codegen silently changes graded output. Pin bit-identity across
+    // every custom Expression carries BOTH nullSafeEval and doGenCode; if
+    // they diverge (e.g. on a NaN seed), flipping wholestage codegen
+    // silently changes graded output. Pin bit-identity across
     // CODEGEN_ONLY / NO_CODEGEN on tiles holding NaN, ±Inf, -0.0 and spikes.
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    graft.raster.TileExprs.register(spark)
     val h = 6; val w = 6
     val rnd = new scala.util.Random(11)
     val tiles = Seq(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GeomedianAgg, GeomedianDistributed, VectorExprs}
+import graft.functions.{GeomedianAgg, GeomedianDistributed, GraftExtensions, VectorExprs}
 import graft.sources.ProductSink
 
 /** Engine-surface tests: the distributed geomedian path, the native
@@ -27,7 +27,6 @@ class EngineSpec extends SparkSpec {
   }
 
   test("graft_dot equals the higher-order-function fold") {
-    VectorExprs.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(50)
     val rows = e.select(
         VectorExprs.dot(col("embedding"), col("embedding")).as("native"),
@@ -41,8 +40,8 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("graft_dot is registered by GraftExtensions for SQL use") {
-    VectorExprs.register(spark)
+  test("graft_dot resolves in SQL text after GraftExtensions.register") {
+    GraftExtensions.register(spark)
     Tables.embeddings(spark, sfDir).limit(5).createOrReplaceTempView("emb_t")
     val n = spark.sql("SELECT graft_dot(embedding, embedding) AS d FROM emb_t")
       .where(col("d") > 0).count()
@@ -50,7 +49,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("graft_dot rejects non-float-array inputs") {
-    VectorExprs.register(spark)
+    GraftExtensions.register(spark)
     Tables.documents(spark, sfDir).limit(1).createOrReplaceTempView("doc_t")
     val err = intercept[Exception] {
       spark.sql("SELECT graft_dot(text, text) FROM doc_t").collect()
@@ -164,6 +163,25 @@ class EngineSpec extends SparkSpec {
         "SELECT graft_dot(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT)))")
         .head().getDouble(0)
       assert(one == 1.0)
+      // so does every other SQL-callable native expression
+      val tile = "array_repeat(CAST(1.0 AS FLOAT), 16), 4, 4"
+      val calls = Map(
+        "graft_dot" -> "array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT))",
+        "graft_sdotl" -> "array(CAST(1.0 AS FLOAT)), array(CAST(2.0 AS FLOAT))",
+        "graft_sl2" -> "array(1.0D), array(2.0D)",
+        "graft_sl2e10" -> "array(1.0D), array(2.0D)",
+        "graft_icount" -> "array(1, 2), array(2, 3)",
+        "graft_pqadc" -> "array(5L, 6L), array(1)",
+        "graft_tile_up2x" -> tile, "graft_tile_upcubic" -> tile,
+        "graft_tile_max3" -> tile, "graft_tile_min3" -> tile,
+        "graft_tile_focal3" -> tile, "graft_tile_tri3" -> tile,
+        "graft_tile_laplace3" -> tile, "graft_tile_down" -> s"$tile, 2",
+        "graft_unorm" -> "'Café'")
+      assert(calls.keySet ==
+        graft.functions.GraftExtensions.functions.map(_._1.funcName).toSet)
+      calls.foreach { case (name, args) =>
+        assert(!s2.sql(s"SELECT $name($args)").head().isNullAt(0), name)
+      }
       // the as-of logical plan strategy is available without AsOf.join's
       // imperative extraStrategies path
       val l = Seq((1L, 10L)).toDF("lk", "lt")

@@ -62,7 +62,7 @@ class LlmPipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
 
   private def writeCorpus(docs: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_llm_gen").toString
+    val dir = tempDir("graft_llm_gen")
     val rows = docs.map { case (id, lang, text) =>
       Row(id, text, lang, "gen", text.length.toLong)
     }

@@ -280,7 +280,6 @@ class RasterSpec extends SparkSpec {
   }
 
   test("focal 3x3 Laplacian matches brute force on the tile interior") {
-    TileExprs.register(spark)
     val lap = RasterGrid.synthesize(spark, "p", "b",
       nTilesX = 1, nTilesY = 1, h = H, w = W, times = Seq(0))(
       (x, y, _) => (x * x + 2 * y * y).toFloat)
@@ -301,7 +300,6 @@ class RasterSpec extends SparkSpec {
   test("Lee-filter algebra: flat windows pass through, gain stays in [0,1)") {
     // the eo_tile_lee composition evaluated on a synthetic tile: the
     // filter is m + (x-m)·v/(v+σ²) from the two focal sums
-    TileExprs.register(spark)
     val g = RasterGrid.synthesize(spark, "p", "b",
       nTilesX = 1, nTilesY = 1, h = H, w = W, times = Seq(0))(
       (x, y, _) => if (y < H / 2) 7.0f else (x * 9 + y * 3).toFloat)
@@ -401,7 +399,7 @@ class RasterSpec extends SparkSpec {
     // SQL callers bypass RasterGrid's require()s — the expression guard
     // still catches them (undersized h*w vs a 64-element array is fine,
     // oversized throws; exercised via the registered SQL name)
-    graft.raster.TileExprs.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val sqlErr = intercept[Exception](
       g.selectExpr(s"graft_tile_down(data, ${4 * H}, ${4 * W}, 2) AS d")
         .collect())

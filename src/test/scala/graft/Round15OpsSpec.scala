@@ -365,7 +365,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("graft_unorm law on cliff-adjacent literals (codegen path)") {
     import graft.functions.UnicodeExprs
-    UnicodeExprs.register(spark)
+    graft.functions.GraftExtensions.register(spark)
     val rows = spark.sql(
       "SELECT graft_unorm('Ångström') AS a, " +           // precomposed Å/ö
         "graft_unorm('Café') AS b, " +                         // decomposed é

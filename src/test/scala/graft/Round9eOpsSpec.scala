@@ -520,7 +520,6 @@ class Round9eOpsSpec extends SparkSpec {
 
   test("TileUpCubicRows: ramp-exact interpolation, clamped edges, 16x scale") {
     import spark.implicits._
-    graft.raster.TileExprs.register(spark)
     val h = 3; val w = 4
     // rows: a linear ramp, a constant row, and an alternating row
     val ramp = Array.tabulate(w)(_.toFloat)
@@ -1492,7 +1491,6 @@ class Round9eOpsSpec extends SparkSpec {
 
   test("TileFocalExtremum3x3: dilate/erode and the Beucher gradient on a known grid") {
     import spark.implicits._
-    graft.raster.TileExprs.register(spark)
     val h = 4; val w = 5
     // a ramp with one spike: interior extrema are hand-checkable
     val tile = Array(

@@ -9,6 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = collection.mutable.Buffer[java.nio.file.Path]()
+
+  /** A fresh temp dir, deleted in afterAll. */
+  protected def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.foreach(graft.maintenance.Compaction.deleteRecursively)
+    finally super.afterAll()
 }
 
 object SparkSpec {
