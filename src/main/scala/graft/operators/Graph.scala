@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -163,7 +166,10 @@ object Graph {
       // node-sized, consumed twice by the mutuality self-join: without
       // this the plan recomputes the fact-scan tradeEdges build per side
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    tk.join(tk.select(col("a").as("b2"), col("b").as("a2")),
+    // the hint pins the build side: both sides are the same ≤100-row
+    // cache, and AQE picked either one depending on which side's stats
+    // were in when it re-planned
+    tk.join(broadcast(tk.select(col("a").as("b2"), col("b").as("a2"))),
         col("a") === col("a2") && col("b") === col("b2"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
@@ -290,45 +296,6 @@ object Graph {
       rounds
   }
 
-  /** Spark twin of [[apspSqlChain]]: the converged-at-K (u, v, d)
-    * distance matrix shared by graph_closeness and graph_ecc. */
-  private def apspDistances(s: SparkSession, d: String): DataFrame = {
-    val und = undirected(s, d, "x", "y")
-      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val sym = symmetrise(und, "x", "y", "a", "b")
-    val n = T.nation(s, d).select(col("n_nationkey").as("v"))
-    // MIN-PLUS DOUBLING (round-12 job diet, VERDICT r11 item 8): the
-    // oracle keeps its K=8 single-step MATERIALIZED chain, the Spark
-    // side squares the distance matrix log₂K = 3 times — d₁ → d₂ → d₄
-    // → d₈ — which yields the IDENTICAL final table (entry = true
-    // distance if ≤ 8 else the 999 sentinel; every sum through a 999
-    // clamps back to 999, and the graded corpora CONVERGE at K — the
-    // Round9e/10e fixpoint pins — so both schedules sit at the same
-    // fixpoint). 3 localCheckpoints instead of 8 checkpoint + 8
-    // broadcast jobs: measured 6.0/7.2 → 1.6/1.0 s (closeness/ecc
-    // steady-state, sf0.1 local[32]). A lazy per-round persist chain
-    // was measured FAR worse (99-158 s — nested uncommitted
-    // InMemoryRelations re-plan under AQE per consumer), hence
-    // checkpoint-per-doubling, not cache-per-round.
-    var dist = n.select(col("v").as("u"))
-      .crossJoin(n.select(col("v")))
-      .join(sym.select(col("a"), col("b"), lit(1L).as("e")),
-        col("u") === col("a") && col("v") === col("b"), "left")
-      .select(col("u"), col("v"),
-        when(col("u") === col("v"), 0L)
-          .otherwise(coalesce(col("e"), lit(999L))).as("d"))
-    for (_ <- 1 to 3) {
-      val a = dist.select(col("u").as("au"), col("v").as("w"), col("d").as("da"))
-      val b = dist.select(col("u").as("w"), col("v").as("bv"), col("d").as("db"))
-      dist = a.join(broadcast(b), "w")
-        .groupBy(col("au").as("u"), col("bv").as("v"))
-        .agg(min(col("da") + col("db")).as("dm"))
-        .select(col("u"), col("v"), least(col("dm"), lit(999L)).as("d"))
-        .localCheckpoint()
-    }
-    dist
-  }
-
   /** Knuth multiplicative-hash pivot pick for the landmark-sampled APSP
     * (graph_closeness_pivot): node v is a pivot iff
     * ((v·2654435761) mod 2³²) mod 5 = 0 — deterministic, engine-portable
@@ -345,45 +312,18 @@ object Graph {
   private def pivotSql(v: String): String =
     s"(($v * $PivotHashMul) % 4294967296) % $PivotMod = 0"
 
-  /** Spark twin of the pivot-seeded [[apspSqlChain]]: the |P|·|V|
-    * pivot-source distance matrix, relaxed one hop per step exactly as
-    * the oracle chain relaxes it (the min-plus doubling of
-    * [[apspDistances]] needs the full |V|² matrix), so each pair of
-    * fused steps below equals two oracle layers. This is the graded
-    * 100 TB scale path the exact graph_closeness/graph_ecc keys document
-    * in prose: distances FROM k sampled sources only, centrality
-    * estimated per Bavelas from the pivot sample. */
-  private def pivotApspDistances(s: SparkSession, d: String): DataFrame = {
-    val und = undirected(s, d, "x", "y").persist(MEMORY_AND_DISK)
-    val sym = symmetrise(und, "x", "y", "a", "b")
+  /** Spark twin of [[apspSqlChain]]: the (u, v, d) distances after
+    * ClosenessRounds single-step rounds from every nation matching
+    * `isSource` to every nation — all of them for graph_closeness and
+    * graph_ecc (the |V|² matrix), the pivots for graph_closeness_pivot
+    * (|P|·|V| rows) — relaxed on the driver by [[minPlus]]. */
+  private def apspDistances(s: SparkSession, d: String, isSource: Column): DataFrame = {
     val n = T.nation(s, d).select(col("n_nationkey").as("v"))
-    val piv = n.where(isPivot(col("v")))
-    var dist = piv.select(col("v").as("u"))
-      .crossJoin(n.select(col("v")))
-      .select(col("u"), col("v"),
-        when(col("u") === col("v"), 0L).otherwise(999L).as("d"))
-    // round-12 job diet (VERDICT r11 item 8): the |P|·|V| pivot table
-    // can't distance-double (it has no w-rows outside the pivot set),
-    // so the diet here is (a) broadcast the STATIC edge list instead of
-    // collecting the growing distance frame every round, and (b) fuse
-    // TWO single-step relaxations per lineage cut — identical
-    // arithmetic, half the checkpoint jobs (8 → 4). The fused step's
-    // subtree appears 4× per checkpoint — ~100-row broadcast joins,
-    // measured cheaper than the extra scheduler roundtrips.
-    def step(prev: DataFrame): DataFrame = {
-      val viaN = prev.select(col("u"), col("v").as("b"), col("d").as("dn"))
-        .join(broadcast(sym), "b")
-        .groupBy(col("u"), col("a").as("v"))
-        .agg(min(col("dn") + 1).as("nd"))
-      prev.join(viaN, Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          least(col("d"), coalesce(col("nd"), col("d"))).as("d"))
-    }
-    for (_ <- 1 to ClosenessRounds / 2) {
-      dist = step(step(dist)).localCheckpoint()
-    }
-    und.unpersist()
-    dist
+    val seeds = n.where(isSource).select(col("v").as("u"))
+      .crossJoin(n)
+      .select(col("u"), col("v"), when(col("u") === col("v"), 0L).otherwise(999L).as("d"))
+    val und = undirected(s, d, "x", "y").withColumn("cost", lit(1L))
+    minPlus(seeds, symmetrise(und, "x", "y", "a", "b", "cost"), ClosenessRounds)
   }
 
   /** The Louvain phase-1 singleton-start move sweep shared by
@@ -456,26 +396,114 @@ object Graph {
       "ROW_NUMBER() OVER (PARTITION BY v ORDER BY g DESC, comm) AS rn FROM cand) r " +
       "WHERE rn = 1)"
 
-  /** Single-source min-plus relaxation from nation 0 over the
-    * symmetrised edge list sym(u, w, ...): `rounds` Bellman-Ford steps
-    * d(v) ← min(d(v), min over neighbours of d + cost), 999 the
-    * unreachable sentinel; dist is node-sized and broadcast,
-    * localCheckpoint flattens the loop lineage. graph_bfs relaxes with
-    * cost 1, graph_sssp with the edge's `cst`. */
-  private def relaxFromZero(s: SparkSession, d: String, sym: DataFrame, rounds: Int,
-      cost: Column): DataFrame = {
-    val nodes = T.nation(s, d).select(col("n_nationkey").as("v"))
-    var dist = nodes.select(col("v"),
-      when(col("v") === 0, 0L).otherwise(999L).as("d"))
+  /** Single-source min-plus relaxation from nation 0: `rounds`
+    * Bellman-Ford steps over the undirected edge list und(a, b, cost),
+    * the (v, d) distances after them. graph_bfs relaxes with cost 1,
+    * graph_sssp with the pair's trade-volume cost. */
+  private def relaxFromZero(s: SparkSession, d: String, und: DataFrame,
+      rounds: Int): DataFrame = {
+    val seeds = T.nation(s, d).select(lit(0).as("u"), col("n_nationkey").as("v"))
+      .withColumn("d", when(col("v") === 0, 0L).otherwise(999L))
+    minPlus(seeds, symmetrise(und, "a", "b", "a", "b", "cost"), rounds).drop("u")
+  }
+
+  /** Most rows a driver-side kernel ([[minPlus]], [[boruvka]]) collects.
+    * Their inputs are bounded by the nation table, 25 rows at every scale
+    * factor: at most 625 seeds and 600 directed edges. */
+  private[graft] val LocalKernelMaxRows = 10000
+
+  /** A driver-side kernel's input has more than [[LocalKernelMaxRows]]
+    * rows: the graph is no longer entity-sized (SCALING.md principle 5). */
+  final class LocalKernelBoundExceeded(what: String)
+    extends IllegalStateException(
+      s"$what has more than $LocalKernelMaxRows rows, the bound of a driver-side graph kernel")
+
+  /** `df`'s rows, collected in one task, or [[LocalKernelBoundExceeded]]. */
+  private def collectBounded(df: DataFrame, what: String): Array[Row] = {
+    val rows = df.coalesce(1).limit(LocalKernelMaxRows + 1).collect()
+    if (rows.length > LocalKernelMaxRows) throw new LocalKernelBoundExceeded(what)
+    rows
+  }
+
+  /** Bounded multi-source min-plus relaxation on the driver: collects the
+    * seed table seeds(u, v, d) and the directed edge list edges(a, b,
+    * cost) in one action, runs [[minPlusRounds]] and returns the seed
+    * rows, in seeds' schema, holding the distances after `rounds`
+    * rounds. */
+  private[graft] def minPlus(seeds: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
+    val key = seeds.schema("v").dataType
+    val rows = collectBounded(
+      seeds.select(lit(false), col("u"), col("v"), col("d"))
+        .unionAll(edges.select(lit(true), col("a").cast(key), col("b").cast(key),
+          col("cost").cast("long"))),
+      "min-plus input")
+    def triple(r: Row) = (r.get(1), r.get(2), r.getLong(3))
+    val (edge, seed) = rows.partition(_.getBoolean(0))
+    val dist = minPlusRounds(seed.map(triple), edge.map(triple), rounds)
+    val out = seed.zip(dist).map { case (r, d) => Row(r.get(1), r.get(2), d) }
+    seeds.sparkSession.createDataFrame(out.toSeq.asJava, seeds.select("u", "v", "d").schema)
+  }
+
+  /** [[minPlus]]'s rounds in memory: `rounds` synchronous rounds
+    * d'(u, v) = min(d(u, v), min over edges (a, v, cost) of d(u, a) + cost)
+    * over the seeds (u, v, d), returning each seed's final d. Each round
+    * reads only the previous round's table, and only pairs that have a
+    * seed take part: the relational round `prev ⋈ edges → min by (u, b)
+    * ⟕ prev`. With the 999 sentinel as the seeds' "unreachable", a sum
+    * through it never beats an existing distance. */
+  private[graft] def minPlusRounds[K](seeds: Seq[(K, K, Long)], edges: Seq[(K, K, Long)],
+      rounds: Int): Array[Long] = {
+    val at = seeds.indices.map(i => (seeds(i)._1, seeds(i)._2) -> i).toMap
+    val byTarget = edges.groupBy(_._2).withDefaultValue(Seq.empty)
+    // each seed's in-edges as (index of the seed at the edge's source, cost)
+    val into = seeds.map { case (u, v, _) =>
+      byTarget(v).flatMap { case (a, _, c) => at.get((u, a)).map(_ -> c) }
+    }
+    var dist = seeds.map(_._3).toArray
     for (_ <- 1 to rounds) {
-      val viaN = sym
-        .join(broadcast(dist.select(col("v").as("w"), col("d").as("dn"))), "w")
-        .groupBy(col("u").as("v")).agg(min(col("dn") + cost).as("nd"))
-      dist = dist.join(viaN, Seq("v"), "left")
-        .select(col("v"), least(col("d"), coalesce(col("nd"), col("d"))).as("d"))
-        .localCheckpoint()
+      val prev = dist
+      dist = Array.tabulate(seeds.length) { i =>
+        into(i).foldLeft(prev(i)) { case (m, (j, c)) => math.min(m, prev(j) + c) }
+      }
     }
     dist
+  }
+
+  /** Borůvka's MST rounds on the driver: collects the undirected edge
+    * list edges(x, y, cost) in one action and returns [[boruvkaRounds]]'s
+    * picks as (cost, r) rows. */
+  private[graft] def boruvka(edges: DataFrame, rounds: Int): DataFrame = {
+    val es = collectBounded(edges.select(col("x").cast("long"), col("y").cast("long"),
+      col("cost").cast("long")), "Borůvka edges")
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val spark = edges.sparkSession
+    import spark.implicits._
+    boruvkaRounds(es, rounds).toDF("cost", "r")
+  }
+
+  /** [[boruvka]]'s rounds in memory over undirected edges (x, y, cost)
+    * whose costs must be unique. In round r every component of the
+    * previous round's partition picks its minimum-cost cross edge; the
+    * picks are recorded as (cost, r) — once when both ends pick the same
+    * edge — and the components they join merge by union-find. Components
+    * at least halve per round, so ⌈log₂ |V|⌉ rounds span the graph. */
+  private[graft] def boruvkaRounds(edges: Seq[(Long, Long, Long)],
+      rounds: Int): Seq[(Long, Long)] = {
+    val parent = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    (1 to rounds).flatMap { r =>
+      val best = mutable.HashMap.empty[Long, (Long, Long, Long)]
+      for (e @ (x, y, c) <- edges) {
+        val (cx, cy) = (find(x), find(y))
+        if (cx != cy) for (k <- Seq(cx, cy) if best.get(k).forall(c < _._3)) best(k) = e
+      }
+      val picked = best.values.toSeq.distinct
+      for ((x, y, _) <- picked) parent(find(x)) = find(y)
+      picked.map(e => (e._3, r.toLong))
+    }
   }
 
   /** Oracle twin of [[relaxFromZero]]: the whole graph_bfs/graph_sssp
@@ -561,15 +589,6 @@ object Graph {
     * schedule: p ← p∘p resolves hook chains up to 2^5 = 32 > 25
     * components — exact, like [[MstRounds]] a structural bound. */
   private val MstJumps = 5
-
-  /** Spark-side pointer jumps per Borůvka round, FUSED five-at-a-time
-    * (r12 verdict #7): each cut job composes the current pointer
-    * function five-fold, so two jobs reach f^25 ≥ the 24-edge
-    * worst-case hook depth (vs 2^5 in 5 doubling jobs). The schedules
-    * differ from the oracle's 5 doublings but both FULLY root every
-    * chain, so the per-round fixpoints — and the graded edge list — are
-    * identical. */
-  private val MstFusedJumps = 2
 
   /** Steps per hash-derandomized walk (graph_walk_corpus) — the typical
     * short-walk window DeepWalk trains on; fixed K both engines. */
@@ -679,10 +698,13 @@ object Graph {
         }
         val Seq(p1, p2, p3, p4) = rounds.map(r =>
           r.select(col("v"), col("c")))
-        n.join(p1.select(col("v"), col("c").as("c1")), Seq("v"), "left")
-          .join(p2.select(col("v"), col("c").as("c2")), Seq("v"), "left")
-          .join(p3.select(col("v"), col("c").as("c3")), Seq("v"), "left")
-          .join(p4.select(col("v"), col("c").as("c4")), Seq("v"), "left")
+        // node-sized rounds broadcast: unhinted, AQE turned these
+        // sort-merge joins into broadcast joins at run time, sometimes
+        // after a side's shuffle had already run (10 or 11 action jobs)
+        n.join(broadcast(p1.select(col("v"), col("c").as("c1"))), Seq("v"), "left")
+          .join(broadcast(p2.select(col("v"), col("c").as("c2"))), Seq("v"), "left")
+          .join(broadcast(p3.select(col("v"), col("c").as("c3"))), Seq("v"), "left")
+          .join(broadcast(p4.select(col("v"), col("c").as("c4"))), Seq("v"), "left")
           .select(col("v").as("nation"),
             coalesce(col("c1"), lit(0L)).as("paths1"),
             coalesce(col("c4"), lit(0L)).as("paths4"),
@@ -768,16 +790,16 @@ object Graph {
     // edge (costs made STRICTLY UNIQUE by packing the undirected trade
     // weight with the endpoint pair — cost = wsum·10000 + x·100 + y —
     // so the MST and every per-round pick are tie-free on both
-    // engines), components hook along the picks and contract by pointer
-    // jumping. The pick pointer graph has only 2-cycles (following min
+    // engines), and the components the picks join merge. The oracle
+    // hooks components along the picks and contracts them by pointer
+    // jumping: the pick pointer graph has only 2-cycles (following min
     // edges weakly decreases cost; unique costs forbid longer cycles),
     // resolved at the smaller label; 5 doublings then root every chain
-    // exactly. The oracle unrolls the identical schedule as a CTE
-    // chain. Graded surface = the chosen edge list (x, y, cost, round
-    // picked) in cost order — the full tree, not a summary. At scale:
-    // edges shuffle ONCE per round on the component key (the
-    // vertex-sized label table broadcasts), the classic
-    // log-round MST-forest schedule.
+    // exactly. The Spark side runs the rounds on the driver
+    // ([[boruvka]], union-find) after one distributed edge build; both
+    // reach the same partition each round, so they pick the same edges.
+    // Graded surface = the chosen edge list (x, y, cost, round picked)
+    // in cost order — the full tree, not a summary.
     Q("graph_mst_boruvka", Some {
       val rounds = (1 to MstRounds).map { r =>
         val pc = s"c${r - 1}"
@@ -814,86 +836,7 @@ object Graph {
         val e = eu.select(col("x"), col("y"),
             (col("wsum") * 10000 + col("x") * 100 + col("y")).as("cost"))
           .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // STATS-RESET lineage cut. Two pathologies stack here and plain
-        // localCheckpoint fixes neither: (1) each jump references its
-        // input TWICE (probe + broadcast build), doubling the plan per
-        // jump — 2^5 copies of the pick subtree per round (measured 47 s
-        // at sf0.1 uncut); (2) localCheckpoint REWRITES the subtree's
-        // size-in-bytes estimate onto its LogicalRDD, and Catalyst's
-        // join-size visitor MULTIPLIES child estimates — ~30 chained
-        // self-joins compound the BigInt estimate to ~2^30 DIGITS and
-        // the driver spins single-core in BigInteger.multiply inside the
-        // stats visitor (measured: >7 min of pure plan time at sf0.1,
-        // jstack-confirmed). Re-wrapping the computed RDD in a fresh
-        // DataFrame cuts the lineage AND resets stats to the default, so
-        // every estimate is at most one join's product. The RDD is
-        // persisted — component-sized (≤25 rows) — so its dual
-        // consumption never recomputes the parent chain.
-        // coalesce(1): every cut frame is component-sized (≤25 rows), so
-        // a 32-partition RDD pays 32 empty scheduler tasks per chained
-        // job — at ~25 chained jobs the task overhead IS the key's cost
-        // (r13: 7.7 → 4.7 s steady at sf0.1 with 1-partition cuts +
-        // the pk-level cut + five-fold jump fusion; eager per-cut
-        // count() was ALSO measured and is SLOWER — it forces the
-        // e-side joins once per cut instead of letting the final action
-        // pipeline them).
-        def cut(df: DataFrame): DataFrame = {
-          val r = df.rdd.coalesce(1)
-          r.persist(MEMORY_AND_DISK)
-          s.createDataFrame(r, df.schema)
-        }
-        // Five-fold compose per cut job (p∘p∘p∘p∘p = f^5 of the input
-        // function): the input is a persisted cut, so the five references
-        // never recompute the parent chain; two jump jobs reach f^25 ≥
-        // the 24-edge worst-case hook depth (MstFusedJumps, r12 verdict
-        // #7 — was 5 doubling jobs, then 3 triple jobs).
-        def jump(df: DataFrame): DataFrame = {
-          val step = df.select(col("k").as("k2"), col("p").as("p2"))
-          cut((1 to 4).foldLeft(df) { (acc, i) =>
-            acc.join(broadcast(step.toDF(s"kk$i", s"pp$i")),
-                col("p") === col(s"kk$i"))
-              .select(col("k"), col(s"pp$i").as("p"))
-          })
-        }
-        val n = T.nation(s, d)
-          .select(col("n_nationkey").as("v"), col("n_nationkey").cast("long").as("c"))
-        var c = n
-        var chosen: DataFrame = null
-        for (r <- 1 to MstRounds) {
-          val cr = e
-            .join(broadcast(c.select(col("v").as("x"), col("c").as("cx"))), "x")
-            .join(broadcast(c.select(col("v").as("y"), col("c").as("cy"))), "y")
-            .where(col("cx") =!= col("cy"))
-          val both = symmetrise(cr, "cx", "cy", "k", "other", "cost")
-          // unique costs make the pick tie-free, so min_by is safe here.
-          // pk is THE cut of the round's pick subtree: p0/p1, the
-          // contraction and the chosen-edge slice all read the persisted
-          // ≤25-row pick table instead of each re-cutting their own copy.
-          // repartition(1, key) BEFORE the tiny aggregates: a hash
-          // partitioning on the grouping key satisfies the aggregate's
-          // required distribution at ANY width, so the per-round shuffle
-          // is one single-partition exchange instead of a 32-way one —
-          // these frames are component-sized (≤25 groups); a large graph
-          // would size this to |components|, shrinking per round.
-          val pk = cut(both.repartition(1, col("k")).groupBy("k")
-            .agg(min_by(col("other"), col("cost")).as("pt"), min("cost").as("mc")))
-          val p0 = c.select(col("c")).repartition(1, col("c")).distinct()
-            .join(broadcast(pk), col("c") === col("k"), "left")
-            .select(col("c").as("k"), coalesce(col("pt"), col("c")).as("p"))
-          val p1 = cut(p0
-            .join(broadcast(p0.select(col("k").as("k2"), col("p").as("p2"))),
-              col("p") === col("k2"))
-            .select(col("k"),
-              when(col("p2") === col("k"), least(col("k"), col("p")))
-                .otherwise(col("p")).as("p"))) // p0 referenced twice — same cut
-          var j = p1
-          for (_ <- 1 to MstFusedJumps) j = jump(j)
-          c = cut(c.join(broadcast(j), col("c") === col("k"))
-            .select(col("v"), col("p").as("c")))
-          val chR = pk.select(col("mc").as("cost")).distinct()
-            .withColumn("r", lit(r.toLong)) // reads the pk cut — no own cut
-          chosen = if (chosen == null) chR else chosen.unionAll(chR)
-        }
+        val chosen = boruvka(e, MstRounds)
         e.join(chosen, "cost")
           .select(col("x"), col("y"), col("cost"), col("r"))
           .orderBy("cost")
@@ -1083,23 +1026,16 @@ object Graph {
     // Unweighted BFS distances from nation 0 (round 9, second wave) —
     // K rounds of min-plus relaxation d(v) ← min(d(v), min over
     // neighbors u of d(u)+1) over the full undirected edge set, the
-    // Bellman-Ford step in its relational form (one edge⋈dist join +
-    // one min aggregate per round; dist is node-sized and broadcast,
-    // localCheckpoint flattens the loop lineage). The oracle unrolls
+    // Bellman-Ford step. The Spark side runs the K rounds on the driver
+    // ([[minPlus]]) after one distributed edge build; the oracle unrolls
     // the SAME K layers as MATERIALIZED CTEs. Unreachable nodes hold
     // the 999 sentinel on both engines — no NULL/LEAST alignment risk.
-    // At web scale the frontier-delta form replaces full relaxation
-    // (only changed distances join the next round) — same plan shape,
-    // smaller build side per round.
     Q("graph_bfs", Some(relaxFromZeroSql(undirectedSql("und", "a", "b") +
         s", sym AS MATERIALIZED (${symSql("und", "a", "b", "u", "w")})", BfsRounds, "1")),
-      (s, d) => {
-        val und = undirected(s, d, "a", "b").persist(MEMORY_AND_DISK)
-        val dist = relaxFromZero(s, d, symmetrise(und, "a", "b", "u", "w"), BfsRounds, lit(1))
-        und.unpersist()
-        dist.select(col("v").as("nationkey"), col("d").as("dist"))
-          .orderBy("nationkey")
-      }),
+      (s, d) =>
+        relaxFromZero(s, d, undirected(s, d, "a", "b").withColumn("cost", lit(1L)), BfsRounds)
+          .select(col("v").as("nationkey"), col("d").as("dist"))
+          .orderBy("nationkey")),
 
     // Degree distribution of the undirected trade graph (round 9, second
     // wave) — the first diagnostic anyone runs on a web graph (power-law
@@ -1429,9 +1365,7 @@ object Graph {
     // trade volume (1 + Σw mod 5), so both engines relax identical
     // weights; 999 stays the unreachable sentinel. The oracle unrolls
     // the SAME K layers as MATERIALIZED CTEs; GraphSpec pins that round
-    // K+1 changes nothing (converged on this corpus). Same archive-scale
-    // note as graph_bfs: the frontier-delta form replaces full
-    // relaxation when |V| is web-sized.
+    // K+1 changes nothing (converged on this corpus).
     Q("graph_sssp", Some(relaxFromZeroSql(
       "und AS (SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b, " +
         "CAST(1 + SUM(w) % 5 AS BIGINT) AS cst FROM e WHERE src <> dst GROUP BY a, b), " +
@@ -1449,10 +1383,7 @@ object Graph {
     // matrix replaces the per-source loop), then one aggregate per
     // target folds the column sums and the (n−1)/Σ reciprocal is one
     // IEEE divide on the s6 grid. The oracle unrolls the same K
-    // MATERIALIZED layers; 999 stays the unreachable sentinel. At web
-    // scale exact all-pairs is infeasible — the published fallback is
-    // pivot sampling (closeness against k sampled sources), the same
-    // plan with a sampled source dimension.
+    // MATERIALIZED layers; 999 stays the unreachable sentinel.
     Q("graph_closeness", Some(
       s"WITH $tradeEdgesSql, ${apspSqlChain("n")}, " +
         s"cs AS (SELECT v, CAST(SUM(d) AS BIGINT) AS sum_d, " +
@@ -1461,7 +1392,7 @@ object Graph {
         sqlS6("(CAST(n_nodes AS DOUBLE)) / CAST(sum_d AS DOUBLE)") + " AS closeness6 " +
         "FROM cs ORDER BY nationkey"),
       (s, d) =>
-        apspDistances(s, d).where(col("u") =!= col("v"))
+        apspDistances(s, d, lit(true)).where(col("u") =!= col("v"))
           .groupBy(col("v").as("nationkey"))
           .agg(sum("d").as("sum_d"), count(lit(1)).as("n_nodes"))
           .select(col("nationkey"), col("sum_d"),
@@ -1478,8 +1409,7 @@ object Graph {
     // distance machinery — both engines reuse the shared apsp chain
     // verbatim, so the induction already proven for closeness carries
     // over; the final pass is one node-keyed max + a broadcast scalar
-    // join. |V|²-bounded like closeness: fine on an aggregated entity
-    // graph, per-source label frontiers at web scale.
+    // join.
     Q("graph_ecc", Some(
       s"WITH $tradeEdgesSql, ${apspSqlChain("n")}, " +
         s"ec AS (SELECT v, CAST(MAX(d) AS BIGINT) AS ecc FROM d$ClosenessRounds " +
@@ -1490,7 +1420,7 @@ object Graph {
         "CASE WHEN ecc = mm.diam THEN 1 ELSE 0 END AS is_periphery " +
         "FROM ec, mm ORDER BY nationkey"),
       (s, d) => {
-        val ec = apspDistances(s, d).where(col("u") =!= col("v"))
+        val ec = apspDistances(s, d, lit(true)).where(col("u") =!= col("v"))
           .groupBy(col("v").as("nationkey"))
           .agg(max("d").as("ecc"))
         val mm = ec.agg(min(col("ecc")).as("rad"), max(col("ecc")).as("diam"))
@@ -1507,10 +1437,7 @@ object Graph {
     // sources only (|P|·|V| rows instead of |V|²), and per node we
     // report the pivot-sample Bavelas closeness estimate
     // ĉ(v) = |P∖{v}| / Σ_{p∈P∖{v}} d(p,v) [Eppstein & Wang 2004] plus
-    // the eccentricity LOWER BOUND max_p d(p,v). At 100× vertex scale
-    // this is the first-line replacement the exact keys' comments
-    // promise: the relaxation cost drops from |V|²·K to |P|·|V|·K and
-    // the broadcast per round carries |P|·|V| rows. GraphSpec bounds
+    // the eccentricity LOWER BOUND max_p d(p,v). GraphSpec bounds
     // the estimates against the exact keys (sum_d ≤ exact sum,
     // ecc_lb ≤ exact ecc, equality when P = V).
     Q("graph_closeness_pivot", Some(
@@ -1523,7 +1450,7 @@ object Graph {
         sqlS6("CAST(n_pivots AS DOUBLE) / CAST(sum_d AS DOUBLE)") +
         " AS closeness_est6, ecc_lb FROM cs ORDER BY nationkey"),
       (s, d) =>
-        pivotApspDistances(s, d).where(col("u") =!= col("v"))
+        apspDistances(s, d, isPivot(col("v"))).where(col("u") =!= col("v"))
           .groupBy(col("v").as("nationkey"))
           .agg(count(lit(1)).as("n_pivots"), sum("d").as("sum_d"),
             max("d").as("ecc_lb"))
@@ -2006,11 +1933,7 @@ object Graph {
   /** The graph_sssp relaxation loop, K parameterized so GraphSpec can
     * run K and K+1 and assert the fixpoint. */
   def ssspDistances(s: SparkSession, d: String, k: Int): DataFrame = {
-    val und = undirectedAgg(s, d, "a", "b", (lit(1L) + sum("w") % 5).as("cst"))
-      .persist(MEMORY_AND_DISK)
-    val dist = relaxFromZero(s, d, symmetrise(und, "a", "b", "u", "w", "cst"), k, col("cst"))
-    und.unpersist()
-    dist
+    relaxFromZero(s, d, undirectedAgg(s, d, "a", "b", (lit(1L) + sum("w") % 5).as("cost")), k)
   }
 
   /** The quantized HITS loop — graph_hits's Spark side (see the Q's

@@ -754,18 +754,22 @@ class PlanContractSpec extends SparkSpec {
   test("iterative builders run a pinned number of Spark jobs") {
     // Jobs each iterative builder launches before it returns its
     // DataFrame at sf0.001: for the NSW/HNSW keys the index build and
-    // the search rounds, for the graph keys the relaxation, BFS, peel,
-    // Borůvka and Louvain rounds — one checkpoint per round and one job
+    // the search rounds, for betweenness, kcore, ktruss and louvain the
+    // BFS, peel and Louvain rounds — one checkpoint per round and one job
     // per AQE exchange stage inside them. A change to a loop or its
     // checkpoint cadence that moves a count updates its pin here, with
     // the reason. The cache is cleared first: rows another test left
     // cached would change AQE's stats and so its stage split.
+    // bfs, sssp, closeness, ecc, closeness_pivot and mst_boruvka run
+    // their rounds on the driver (Graph.minPlus, Graph.boruvka): their
+    // jobs are the one collect of the distributed edge build — its
+    // broadcast and exchange stages — and nothing per round.
     val pinned = Seq("llm_ann_nsw" -> 52, "llm_ann_batch_nsw" -> 82,
       "llm_ann_hnsw" -> 75, "llm_ann_batch_hnsw" -> 132,
-      "llm_ann_hnsw_upsert" -> 135, "graph_bfs" -> 46, "graph_sssp" -> 57,
-      "graph_closeness" -> 23, "graph_ecc" -> 23, "graph_closeness_pivot" -> 60,
+      "llm_ann_hnsw_upsert" -> 135, "graph_bfs" -> 5, "graph_sssp" -> 6,
+      "graph_closeness" -> 6, "graph_ecc" -> 6, "graph_closeness_pivot" -> 6,
       "graph_betweenness" -> 45, "graph_betweenness_pivot" -> 71,
-      "graph_kcore" -> 32, "graph_ktruss" -> 24, "graph_mst_boruvka" -> 62,
+      "graph_kcore" -> 32, "graph_ktruss" -> 24, "graph_mst_boruvka" -> 7,
       "graph_louvain_contract" -> 34)
     val sc = spark.sparkContext
     val got = pinned.map { case (key, _) =>

@@ -26,14 +26,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
+    sys.addShutdownHook(graft.maintenance.Compaction.deleteRecursively(warehouse))
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
