@@ -43,15 +43,8 @@ case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpres
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorExprs.dot(l.asInstanceOf[ArrayData].toFloatArray(), r.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -153,19 +146,8 @@ case class DoubleVecScaledL2(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = a.getDouble(i) - b.getDouble(i)
-      acc += math.floor(d * d * 1e14 + 0.5).toLong
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorExprs.sl2(l.asInstanceOf[ArrayData].toDoubleArray(), r.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -213,19 +195,8 @@ case class DoubleVecScaledL2E10(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = a.getDouble(i) - b.getDouble(i)
-      acc += math.floor(d * d * 1e10 + 0.5).toLong
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorExprs.sl2e10(l.asInstanceOf[ArrayData].toDoubleArray(), r.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -382,6 +353,38 @@ object VectorExprs {
 
   /** Column-level helper: [[DoubleVecScaledL2E10]]. */
   def sl2e10(a: Column, b: Column): Column = native(DoubleVecScaledL2E10)(a, b)
+
+  // The interpreted evaluation of dot, sl2 and sl2e10 on plain arrays, for
+  // driver-side callers (the graph-ANN beam search) that need graft_sl2's
+  // exact integers. NativeExprSpec checks them against the generated code
+  // bit for bit. A null element reads as 0, as the Catalyst arrays store it.
+
+  /** [[FloatVecDot]]: the double sum of float products, left to right. */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** [[DoubleVecScaledL2]]. */
+  def sl2(a: Array[Double], b: Array[Double]): Long = scaledL2(a, b, 1e14)
+
+  /** [[DoubleVecScaledL2E10]]. */
+  def sl2e10(a: Array[Double], b: Array[Double]): Long = scaledL2(a, b, 1e10)
+
+  private def scaledL2(a: Array[Double], b: Array[Double], scale: Double): Long = {
+    val n = math.min(a.length, b.length)
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val d = a(i) - b(i)
+      acc += math.floor(d * d * scale + 0.5).toLong
+      i += 1
+    }
+    acc
+  }
 
   /** Column-level helper: [[SortedIntersectCount]] — both arrays must be
     * sorted ascending and duplicate-free. */

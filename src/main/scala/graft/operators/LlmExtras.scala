@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.{Det, Q, Tables => T}
+import graft.functions.VectorExprs
 import Det._
 
 /** Training-data pipeline operators beyond SURVEY §3.10's core set (the
@@ -223,12 +228,16 @@ object LlmExtras {
   private[graft] def parquetBytes(f: java.io.File): Long =
     if (f.isFile) f.length()
     else Option(f.listFiles()).map(_.map(parquetBytes).sum).getOrElse(0L)
-  private[graft] def embBcast(d: String)(df: DataFrame): DataFrame = {
+  /** Whether `d`'s embeddings.parquet is under the gate: the one test
+    * behind [[embBcast]]'s hint and the graph-ANN keys' driver-side beam
+    * search ([[BeamSearch]]). An unknown size (missing path → 0 bytes)
+    * reads as over: withhold the hint and run the relational rounds. */
+  private[graft] def annUnderGate(d: String): Boolean = {
     val b = parquetBytes(new java.io.File(s"$d/embeddings.parquet"))
-    // unknown size (missing path → 0 bytes) is treated conservatively:
-    // withhold the hint and let AQE decide, never pin a broadcast
-    if (b > 0L && b <= AnnBroadcastGateBytes) broadcast(df) else df
+    b > 0L && b <= AnnBroadcastGateBytes
   }
+  private[graft] def embBcast(d: String)(df: DataFrame): DataFrame =
+    if (annUnderGate(d)) broadcast(df) else df
   /** The same gate for corpus-derived TEXT sides (ADVICE r16 #3): the
     * unigram piece inventory is unit-TYPE-sized — sublinear in corpus
     * bytes (Heaps) but not bounded, so its forced broadcasts get the
@@ -343,14 +352,20 @@ object LlmExtras {
     * top-[[NswM]] exact edges ([[nswKnn]]) ∪ the 2 hash shortcuts per
     * node that `shortcuts` wires from the bucketed members, symmetrized.
     * llm_ann_nsw indexes the full corpus, llm_ann_batch_nsw the even-id
-    * half. */
-  private def nswAdj(s: SparkSession, d: String, members: DataFrame)(
-      shortcuts: DataFrame => DataFrame): DataFrame =
-    materializeIndex {
+    * half. The relational beam rounds join it every round, so for them
+    * it is materialized and cached; the driver-side search collects it
+    * once, so there it stays lazy ([[BeamSearch]]). */
+  private def nswAdj(s: SparkSession, d: String, members: DataFrame, onDriver: Boolean)(
+      shortcuts: DataFrame => DataFrame): DataFrame = {
+    def build = {
       val sigs = members.select(col("vec_id"), nswBucket.as("bucket"))
         .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
       undirected(nswKnn(d, sigs, members, Nil), shortcuts(sigs), Nil)
     }
+    if (onDriver) build
+    else materializeIndex(build)
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+  }
 
   /** The 2 small-world shortcuts per node of `src` (vec_id): target rank
     * hash32(salt||h||':'||s) % n, mapped to a vec_id by `rankToId`
@@ -373,10 +388,11 @@ object LlmExtras {
     * t), member ranks = (layer, vec_id, rk)). `scSalt` is the shortcut
     * hash salt — "hnsw:sc:" (llm_ann_hnsw), "bhnsw:sc:"
     * (llm_ann_batch_hnsw) or "uhnsw:sc:" (llm_ann_hnsw_upsert), each
-    * key's distinct derandomized wiring. */
+    * key's distinct derandomized wiring. Materialized for the relational
+    * beam rounds only, as [[nswAdj]]. */
   private def hnswLayers(s: SparkSession, d: String, members: DataFrame,
-      scSalt: String): (DataFrame, DataFrame) =
-    materializeIndexPair {
+      scSalt: String, onDriver: Boolean): (DataFrame, DataFrame) = {
+    def build = {
       val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
       val mAll = members.select(col("vec_id"), nswBucket.as("bucket"),
           when(pmod(hl, lit(16)) === 0, 2)
@@ -402,11 +418,7 @@ object LlmExtras {
         .select(col("layer"), col("s2").as("s"), col("t"))
       (undirected(knn, sc, Seq("layer")), ranked)
     }
-
-  /** Per-layer adjacency lookup over a cached layered graph. */
-  private def layerAdj(adjAll: DataFrame): Int => DataFrame = {
-    val cached = adjAll.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    l => cached.where(col("layer") === l).select("s", "t")
+    if (onDriver) build else materializeIndexPair(build)
   }
 
   /** The shared top-layer entry: the layer-2 member of rank
@@ -419,39 +431,185 @@ object LlmExtras {
       .select(col("vec_id").as("v"))
   }
 
-  /** Fixed-width graph beam search, one checkpointed frontier⋈adjacency
-    * round at a time. Each round checkpoints: leaving a multi-round
-    * lineage lazy was MEASURED catastrophic (llm_ann_hnsw 33 s steady vs
-    * 5 — each downstream consumer re-plans and re-executes the whole
-    * un-cut walk, the localCheckpoint-stats pathology class), so the
-    * per-round cut is load-bearing, not optional. */
-  private trait BeamSearch {
+  /** Fixed-width graph beam search over an index, in one of two lowerings
+    * that return the same rows.
+    *
+    * On the driver (`onDriver`, chosen by [[annUnderGate]]: the index,
+    * the queries and every visited set are then broadcast-sized) one
+    * action collects the adjacency, the members' vectors, the queries and
+    * the seeds, [[LocalBeam]] runs every round in memory, and the visited
+    * set comes back as a DataFrame in the relational rounds' schema.
+    * The per-round cost of the relational lowering on such inputs is jobs,
+    * not data: ~10 scheduler jobs a round over a few hundred rows.
+    *
+    * Relationally, one checkpointed frontier⋈adjacency round at a time.
+    * Each round checkpoints: leaving a multi-round lineage lazy was
+    * MEASURED catastrophic (llm_ann_hnsw 33 s steady vs 5 — each
+    * downstream consumer re-plans and re-executes the whole un-cut walk,
+    * the localCheckpoint-stats pathology class), so the per-round cut is
+    * load-bearing, not optional. */
+  private[graft] sealed abstract class BeamSearch(onDriver: Boolean) {
     /** The `b` visited nodes nearest the query (ties by id). */
     def nearest(vis: DataFrame, b: Int): DataFrame
     /** One round: the visited set ∪ the beam's neighbors, checkpointed. */
     def expand(vis: DataFrame, beam: DataFrame, adj: DataFrame): DataFrame
+    /** The searched members (v, e). */
+    protected def members: DataFrame
+    /** The query vectors (qid, qe). */
+    protected def queries: DataFrame
+    /** `seed`'s (qid, v) pairs. */
+    protected def seedPairs(seed: DataFrame): DataFrame
+    /** Whether a visited node outside `members` stays visited ([[LocalBeam]]). */
+    protected def keepUnscored: Boolean
+    /** This search's visited frame from [[LocalBeam]]'s (qid, v, d2) rows. */
+    protected def visited(rows: DataFrame): DataFrame
 
-    def search(seed: DataFrame, adj: DataFrame, steps: Int, b: Int): DataFrame = {
-      var vis = seed
-      var beam = seed
-      for (_ <- 1 to steps) {
-        vis = expand(vis, beam, adj)
-        beam = nearest(vis, b)
+    def search(seed: DataFrame, adj: DataFrame, steps: Int, b: Int): DataFrame =
+      if (onDriver) onDriverRun(seed, adj.select(lit(0).as("layer"), col("s"), col("t"))) {
+        (k, seeds) => k.search(seeds, 0, steps, b)
+      } else {
+        var vis = seed
+        var beam = seed
+        for (_ <- 1 to steps) {
+          vis = expand(vis, beam, adj)
+          beam = nearest(vis, b)
+        }
+        vis
       }
-      vis
+
+    /** HNSW descent [Malkov & Yashunin 2018] over the layered adjacency
+      * (layer, s, t): `stepsU` rounds at beam `beamU` on layers 2 and 1,
+      * each lower layer seeded by the nearest node the layer above
+      * visited, then `steps0` rounds at `beam0` on layer 0. Returns the
+      * three layers' visited sets, unioned. Relational seeds stay lazy
+      * (they fold into the next checkpointed round's job). */
+    def descend(seed: DataFrame, adjAll: DataFrame, stepsU: Int,
+        beamU: Int, steps0: Int, beam0: Int): DataFrame =
+      if (onDriver) onDriverRun(seed, adjAll) {
+        (k, seeds) => k.descend(seeds, stepsU, beamU, steps0, beam0)
+      } else {
+        val cached = adjAll.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+        def adjL(l: Int) = cached.where(col("layer") === l).select("s", "t")
+        val v2 = search(seed, adjL(2), stepsU, beamU)
+        val v1 = search(nearest(v2, 1), adjL(1), stepsU, beamU)
+        val v0 = search(nearest(v1, 1), adjL(0), steps0, beam0)
+        v2.unionAll(v1).unionAll(v0)
+      }
+
+    /** Collects the layered adjacency `adj` (layer, s, t), [[members]],
+      * [[queries]] and `seed` in one action and runs `rounds` for each
+      * seeded query, in qid order. */
+    private def onDriverRun(seed: DataFrame, adj: DataFrame)(
+        rounds: (LocalBeam, Array[Int]) => Array[Int]): DataFrame = {
+      val vec = lit(null).cast("array<double>")
+      val rows = adj.select(lit(0), col("layer").cast("long"), col("s").cast("long"),
+          col("t").cast("long"), vec)
+        .unionAll(members.select(lit(1), lit(0L), col("v").cast("long"), lit(0L), col("e")))
+        .unionAll(queries.select(lit(2), col("qid").cast("long"), lit(0L), lit(0L), col("qe")))
+        .unionAll(seedPairs(seed).select(lit(3), col("qid").cast("long"),
+          col("v").cast("long"), lit(0L), vec))
+        .collect()
+      // every node id, numbered densely in first-seen order
+      val index = mutable.LinkedHashMap.empty[Long, Int]
+      def at(v: Long): Int = index.getOrElseUpdate(v, index.size)
+      def vector(r: Row) = r.getSeq[Double](4).toArray
+      val byTag = rows.groupBy(_.getInt(0)).withDefaultValue(Array.empty[Row])
+      val edges = byTag(0).map(r => (r.getLong(1).toInt, at(r.getLong(2)), at(r.getLong(3))))
+      val vecs = byTag(1).map(r => at(r.getLong(2)) -> vector(r)).toMap
+      val qs = byTag(2).map(r => r.getLong(1) -> vector(r)).toMap
+      val seeded = byTag(3).groupMap(_.getLong(1))(r => at(r.getLong(2))).toArray.sortBy(_._1)
+      val ids = index.keys.toArray
+      val memberVecs = Array.tabulate(ids.length)(vecs.getOrElse(_, null))
+      val layers = edges.groupBy(_._1).map { case (l, es) =>
+        val out = es.groupMap(_._2)(_._3)
+        l -> Array.tabulate(ids.length)(out.getOrElse(_, Array.empty[Int]))
+      }.withDefaultValue(Array.fill(ids.length)(Array.empty[Int]))
+      // the queries are independent: each runs on its own core into one
+      // primitive array of (qid, v, d2) triples
+      val out = java.util.stream.IntStream.range(0, seeded.length).parallel().mapToObj { i =>
+        val (qid, seeds) = seeded(i)
+        val k = new LocalBeam(ids, layers, memberVecs, qs.getOrElse(qid, null), keepUnscored)
+        rounds(k, seeds).flatMap(v => Array(qid, ids(v), k.d2(v)))
+      }.toArray(new Array[Array[Long]](_))
+      // An RDD of those arrays, not a local relation: the optimizer would
+      // evaluate every projection and filter over a batch's ~10⁵ local
+      // rows itself. The rows are built in Catalyst's form in the tasks.
+      val s = seed.sparkSession
+      visited(org.apache.spark.sql.GraftInternal.internalRows(s,
+        s.sparkContext.parallelize(out.toSeq).flatMap(a =>
+          Iterator.range(0, a.length, 3).map(i => InternalRow(a(i), a(i + 1), a(i + 2)))),
+        StructType(Seq("qid", "v", "d2").map(StructField(_, LongType, nullable = false)))))
+    }
+  }
+
+  /** [[BeamSearch]]'s rounds in memory, for one query `q` (null: none).
+    * Nodes are numbered densely: `ids(i)` is node i's id, `adj(l)(i)` its
+    * layer-`l` neighbours and `members(i)` its vector, null when i is not
+    * a searched member. A node's distance is graft_sl2 of its vector and
+    * `q` ([[VectorExprs.sl2]], the same integers); a node outside
+    * `members` (or any node, without a query) has none and never enters a
+    * beam. `keepUnscored` keeps such a node visited, as [[QueryBeam]]'s
+    * semi-join does, or drops it, as [[BatchBeam]]'s inner joins do.
+    * Beams rank by (d2, id), the relational `orderBy(d2, v)`. */
+  private[graft] final class LocalBeam(ids: Array[Long], adj: Int => Array[Array[Int]],
+      members: Array[Array[Double]], q: Array[Double], keepUnscored: Boolean) {
+    private val dist = new Array[Long](ids.length)
+    // 0: not yet looked at, 1: scored (dist holds its d2), 2: unscored
+    private val state = new Array[Byte](ids.length)
+
+    private def scored(i: Int): Boolean = {
+      if (state(i) == 0) {
+        if (members(i) != null && q != null) {
+          dist(i) = VectorExprs.sl2(members(i), q)
+          state(i) = 1
+        } else state(i) = 2
+      }
+      state(i) == 1
+    }
+    /** Node i's d2; 0 for an unscored node. */
+    def d2(i: Int): Long = if (scored(i)) dist(i) else 0L
+    private def kept(i: Int) = keepUnscored || scored(i)
+    private def before(a: Int, b: Int) =
+      dist(a) < dist(b) || (dist(a) == dist(b) && ids(a) < ids(b))
+
+    /** The `b` scored nodes of `nodes` nearest the query, nearest first. */
+    private def nearest(nodes: Array[Int], b: Int): Array[Int] = {
+      val top = new Array[Int](b)
+      var k = 0
+      for (c <- nodes if scored(c) && (k < b || before(c, top(b - 1)))) {
+        var j = if (k < b) { k += 1; k - 1 } else b - 1
+        while (j > 0 && before(c, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+        top(j) = c
+      }
+      java.util.Arrays.copyOf(top, k)
     }
 
-    /** HNSW descent [Malkov & Yashunin 2018]: `stepsU` rounds at beam
-      * `beamU` on layers 2 and 1, each lower layer seeded by the nearest
-      * node the layer above visited, then `steps0` rounds at `beam0` on
-      * layer 0. Returns the three layers' visited sets, unioned. Seeds
-      * stay lazy (they fold into the next checkpointed round's job). */
-    def descend(seed: DataFrame, adjL: Int => DataFrame, stepsU: Int,
-        beamU: Int, steps0: Int, beam0: Int): DataFrame = {
-      val v2 = search(seed, adjL(2), stepsU, beamU)
-      val v1 = search(nearest(v2, 1), adjL(1), stepsU, beamU)
-      val v0 = search(nearest(v1, 1), adjL(0), steps0, beam0)
-      v2.unionAll(v1).unionAll(v0)
+    /** `steps` rounds on layer `layer` from `seed`: the visited nodes. A
+      * round's beam is picked from the last beam's pool and the nodes the
+      * round added: a visited node outside that pool already had `b`
+      * nearer nodes. */
+    def search(seed: Array[Int], layer: Int, steps: Int, b: Int): Array[Int] = {
+      val nb = adj(layer)
+      val seen = new Array[Boolean](ids.length)
+      val vis = mutable.ArrayBuilder.make[Int]
+      var beam = seed.filter(kept)
+      for (v <- beam if !seen(v)) { seen(v) = true; vis += v }
+      var pool = nearest(beam.distinct, b)
+      for (_ <- 1 to steps) {
+        val added = for (s <- beam; t <- nb(s) if !seen(t) && kept(t)) yield { seen(t) = true; t }
+        vis ++= added
+        pool = nearest(pool ++ added, b)
+        beam = pool
+      }
+      vis.result()
+    }
+
+    /** [[BeamSearch.descend]]'s three layers, their visited nodes unioned. */
+    def descend(seed: Array[Int], stepsU: Int, beamU: Int, steps0: Int, beam0: Int): Array[Int] = {
+      val v2 = search(seed, 2, stepsU, beamU)
+      val v1 = search(nearest(v2, 1), 1, stepsU, beamU)
+      val v0 = search(nearest(v1, 1), 0, steps0, beam0)
+      v2 ++ v1 ++ v0
     }
   }
 
@@ -466,8 +624,8 @@ object LlmExtras {
     * into one — the beam recomputes inside the next round's checkpoint
     * job (deterministic total order → any recomputation yields identical
     * rows). */
-  private final class QueryBeam(embv: DataFrame, qArr: DataFrame)
-      extends BeamSearch {
+  private[graft] final class QueryBeam(embv: DataFrame, qArr: DataFrame, onDriver: Boolean)
+      extends BeamSearch(onDriver) {
     def nearest(vis: DataFrame, b: Int): DataFrame = {
       import graft.functions.VectorExprs.sl2
       embv.join(broadcast(vis), "v")
@@ -489,6 +647,12 @@ object LlmExtras {
         .repartition(1, col("v"))
         .distinct()
         .localCheckpoint()
+
+    protected def members: DataFrame = embv
+    protected def queries: DataFrame = qArr.select(lit(0L).as("qid"), col("qe"))
+    protected def seedPairs(seed: DataFrame): DataFrame = seed.select(lit(0L).as("qid"), col("v"))
+    protected def keepUnscored: Boolean = true
+    protected def visited(rows: DataFrame): DataFrame = rows.select("v")
   }
 
   /** Batched search state keyed by query: (qid, v, d2). `embv` holds the
@@ -496,9 +660,9 @@ object LlmExtras {
     * CARRIES its query distance, so each round evaluates sl2 only on the
     * ~beam×degree EXPANSION rows instead of re-scoring the whole visited
     * set, and the beam pick is a pure per-query window over the state —
-    * no joins. */
-  private final class BatchBeam(d: String, embv: DataFrame, qv: DataFrame)
-      extends BeamSearch {
+    * no joins. Seeds are [[withD2]] frames. */
+  private[graft] final class BatchBeam(d: String, embv: DataFrame, qv: DataFrame,
+      onDriver: Boolean) extends BeamSearch(onDriver) {
     def withD2(vdf: DataFrame): DataFrame = {
       import graft.functions.VectorExprs.sl2
       vdf.join(embBcast(d)(embv), "v")
@@ -527,6 +691,12 @@ object LlmExtras {
         .repartition(col("qid"))
         .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
         .localCheckpoint()
+
+    protected def members: DataFrame = embv
+    protected def queries: DataFrame = qv
+    protected def seedPairs(seed: DataFrame): DataFrame = seed.select("qid", "v")
+    protected def keepUnscored: Boolean = false
+    protected def visited(rows: DataFrame): DataFrame = rows
   }
 
   /** Single-query graded finish (llm_ann_nsw, llm_ann_hnsw): the 10
@@ -579,6 +749,146 @@ object LlmExtras {
       .select(col("qid").as("query_id"), col("rk"), col("v").as("vec_id"),
         s6(col("cc")).as("cos_sim"), col("n_visited"))
       .orderBy("query_id", "rk")
+  }
+
+  /** A graph-ANN key's visited set, as its beam search returns it, and
+    * the key's graded frame over that set. */
+  private[graft] final case class AnnRun(visited: DataFrame, graded: DataFrame)
+
+  // The five graph-ANN keys' builders (the design of each is at its key),
+  // in the beam-search lowering `onDriver` names ([[BeamSearch]]); the
+  // keys pass [[annUnderGate]]. Indexes are built in-plan per invocation
+  // ([[nswAdj]], [[hnswLayers]]).
+
+  /** llm_ann_nsw: a beam search from a hash-chosen entry over the full
+    * corpus's NSW graph; the query is in the graph, so expansion never
+    * re-enters vec_id 0. */
+  private[graft] def annNsw(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
+    val emb = withE(T.embeddings(s, d))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val adj = nswAdj(s, d, emb, onDriver)(_ => nswShortcuts(emb, "nsw:", identity))
+    // the lazy broadcast n scalar (SCALING.md principle 3)
+    val nn = emb.agg(count(lit(1)).as("n"))
+    val qArr = emb.where(col("vec_id") === 0).select(col("e").as("qe"))
+    val ent = nn.select(
+      when(hash32(lit("nsw:entry:0")) % col("n") =!= 0,
+        hash32(lit("nsw:entry:0")) % col("n"))
+        .otherwise(hash32(lit("nsw:entry:1")) % col("n")).as("v"))
+    val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr, onDriver)
+      .search(if (onDriver) ent else ent.localCheckpoint(), adj.where(col("t") =!= 0),
+        NswSteps, NswBeam)
+    val cand = vis.where(col("v") =!= 0).select(col("v").as("vec_id"))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    AnnRun(vis, queryTopTen(s, d, cand))
+  }
+
+  /** llm_ann_batch_nsw: every odd vec_id searches the even-id half's NSW
+    * graph (dense member ranks make shortcut and entry targets pure
+    * arithmetic: member r ↔ vec_id 2r) from one shared entry. */
+  private[graft] def annBatchNsw(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
+    val emb = withE(T.embeddings(s, d))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val idx = emb.where(col("vec_id") % 2 === 0)
+    val qs = emb.where(col("vec_id") % 2 === 1)
+      .select(col("vec_id").as("qid"), col("e").as("qe"),
+        col("embedding").as("qemb"))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val adj = nswAdj(s, d, idx, onDriver)(nswShortcuts(_, "bnsw:sc:", lit(2) * _))
+    // the lazy broadcast n scalar (the index half's cardinality)
+    val nn = idx.agg(count(lit(1)).as("n"))
+    val ent = nn.select(
+      (lit(2) * (hash32(lit("bnsw:entry:0")) % col("n"))).as("v"))
+    val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
+      qs.select(col("qid"), col("qe")), onDriver)
+    val seed = beam.withD2(qs.select(col("qid")).crossJoin(broadcast(ent)))
+    val vis = beam.search(if (onDriver) seed else seed.localCheckpoint(), adj,
+      BnswSteps, BnswBeam)
+    AnnRun(vis, batchTopTen(d, vis, idx, qs))
+  }
+
+  /** llm_ann_hnsw: the single query's descent of the layered graph over
+    * every other vector, from the shared top-layer entry. */
+  private[graft] def annHnsw(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
+    val emb = withE(T.embeddings(s, d).where(col("vec_id") =!= 0))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val (adjAll, ranked) = hnswLayers(s, d, emb, "hnsw:sc:", onDriver)
+    val qArr = T.embeddings(s, d).where(col("vec_id") === 0)
+      .select(transform(col("embedding"), x => x.cast("double")).as("qe"))
+    val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr, onDriver)
+      .descend(hnswEntry(ranked, "hnsw:entry:0"), adjAll,
+        HnswStepsU, HnswBeamU, HnswSteps0, NswBeam)
+    val cand = vis.repartition(1, col("v")).distinct()
+      .select(col("v").as("vec_id"))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    AnnRun(vis, queryTopTen(s, d, cand))
+  }
+
+  /** llm_ann_batch_hnsw: every odd vec_id descends the even-id half's
+    * layered graph from one shared entry. Relationally every round
+    * checkpoints (the hnsw lesson, re-confirmed by A/B here: fusing the
+    * upper layers' two beam-1 rounds into one cut measured 15.1 s steady
+    * vs ~13 — exchange reuse does not absorb the duplicated intra-layer
+    * subtree across the checkpoint-free rounds; BASELINE.md round-15
+    * entry). The seed stays lazy — the 1-row entry pick and the seed
+    * distances fold into the first round's job. */
+  private[graft] def annBatchHnsw(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
+    val emb = withE(T.embeddings(s, d))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val idx = emb.where(col("vec_id") % 2 === 0)
+    val qs = emb.where(col("vec_id") % 2 === 1)
+      .select(col("vec_id").as("qid"), col("e").as("qe"),
+        col("embedding").as("qemb"))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val (adjAll, ranked) = hnswLayers(s, d, idx, "bhnsw:sc:", onDriver)
+    val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
+      qs.select(col("qid"), col("qe")), onDriver)
+    val seed2 = beam.withD2(qs.select(col("qid"))
+      .crossJoin(broadcast(hnswEntry(ranked, "bhnsw:entry:0"))))
+    val vis = beam.descend(seed2, adjAll, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
+    // one exchange: hash(qid) serves this distinct AND the final
+    // top-10/n_visited window (round 16/17, guide §2.4)
+    AnnRun(vis, batchTopTen(d, vis.select("qid", "v").repartition(col("qid")).distinct(),
+      idx, qs))
+  }
+
+  /** llm_ann_hnsw_upsert: every delta node descends the frozen base
+    * graph, batched (llm_ann_batch_hnsw's geometry), and links to the
+    * [[NswM]] nearest members of its visited set. */
+  private[graft] def annHnswUpsert(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
+    val emb = T.embeddings(s, d).where(col("vec_id") =!= 0)
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("e"),
+        (when(hash32(concat(lit("upsert:"), col("vec_id").cast("string")))
+          % 4 === 0, 1L).otherwise(0L)).as("is_delta"))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val base = emb.where(col("is_delta") === 0)
+    val qs = emb.where(col("is_delta") === 1)
+      .select(col("vec_id").as("qid"), col("e").as("qe"))
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
+    val (adjAll, ranked) = hnswLayers(s, d,
+      withE(T.embeddings(s, d).where(col("vec_id") =!= 0 &&
+        hash32(concat(lit("upsert:"), col("vec_id").cast("string"))) % 4 =!= 0))
+        .transform(Cached(_)), // multi-consumer cache; lifecycle: Cached scaladoc
+      "uhnsw:sc:", onDriver)
+    val beam = new BatchBeam(d, base.select(col("vec_id").as("v"), col("e")), qs, onDriver)
+    val seed2 = beam.withD2(qs.select(col("qid"))
+      .crossJoin(broadcast(hnswEntry(ranked, "uhnsw:entry:0"))))
+    val vis = beam.descend(seed2, adjAll, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
+    // one exchange: hash(qid) serves the (qid, v) dedup (MIN(d2) == the
+    // old distinct, d2 a function of (qid, v)) AND the final
+    // link/n_visited window (guide §2.4). n_visited rides the SAME window
+    // pass as the link pick (round 17): a full-frame count(*) over the
+    // rank window's spec equals a separate groupBy(qid) aggregate.
+    val wLink = Window.partitionBy("qid").orderBy(col("d2"), col("v"))
+    AnnRun(vis, vis.repartition(col("qid"))
+      .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
+      .withColumn("rk", row_number().over(wLink).cast("long"))
+      .withColumn("n_visited", count(lit(1)).over(
+        wLink.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .where(col("rk") <= NswM)
+      .select(col("qid").as("query_id"), col("rk"), col("v").as("vec_id"),
+        col("d2"), col("n_visited"))
+      .orderBy("query_id", "rk"))
   }
 
   // DuckDB oracle pieces of the sign-LSH and graph-ANN keys. Their only
@@ -2416,28 +2726,7 @@ object LlmExtras {
         s"cand AS (SELECT v AS vec_id FROM v$NswSteps WHERE v <> 0), " +
         QueryTopTenSql
     },
-      (s, d) => {
-        val emb = withE(T.embeddings(s, d))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // index graph built in-plan per invocation ([[nswAdj]]),
-        // materialized once so the search rounds don't re-execute the
-        // build subtree
-        val adj = nswAdj(s, d, emb)(_ => nswShortcuts(emb, "nsw:", identity))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // the lazy broadcast n scalar (SCALING.md principle 3)
-        val nn = emb.agg(count(lit(1)).as("n"))
-        val qArr = emb.where(col("vec_id") === 0).select(col("e").as("qe"))
-        val ent = nn.select(
-          when(hash32(lit("nsw:entry:0")) % col("n") =!= 0,
-            hash32(lit("nsw:entry:0")) % col("n"))
-            .otherwise(hash32(lit("nsw:entry:1")) % col("n")).as("v"))
-        // the query is in the graph: expansion never re-enters vec_id 0
-        val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr)
-          .search(ent.localCheckpoint(), adj.where(col("t") =!= 0), NswSteps, NswBeam)
-        val cand = vis.where(col("v") =!= 0).select(col("v").as("vec_id"))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        queryTopTen(s, d, cand)
-      }),
+      (s, d) => annNsw(s, d, annUnderGate(d)).graded),
 
     // BATCHED multi-query IVF ANN (round 14, VERDICT r13 item 1) — the
     // throughput shape production similarity search actually runs at
@@ -2679,31 +2968,7 @@ object LlmExtras {
         batchRoundsSql("", "adj", BnswSteps, BnswBeam) + ", " +
         batchTopTenSql(s"v$BnswSteps")
     },
-      (s, d) => {
-        val emb = withE(T.embeddings(s, d))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val idx = emb.where(col("vec_id") % 2 === 0)
-        val qs = emb.where(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("qid"), col("e").as("qe"),
-            col("embedding").as("qemb"))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // index graph built in-plan per invocation ([[nswAdj]]; dense
-        // member ranks make shortcut targets pure arithmetic: member r ↔
-        // vec_id 2r), materialized once for the batched search rounds
-        val adj = nswAdj(s, d, idx)(nswShortcuts(_, "bnsw:sc:", lit(2) * _))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // the lazy broadcast n scalar (index-half cardinality — the same
-        // count the former sigs frame carried)
-        val nn = idx.agg(count(lit(1)).as("n"))
-        val ent = nn.select(
-          (lit(2) * (hash32(lit("bnsw:entry:0")) % col("n"))).as("v"))
-        val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
-          qs.select(col("qid"), col("qe")))
-        val vis = beam.search(
-          beam.withD2(qs.select(col("qid")).crossJoin(broadcast(ent))).localCheckpoint(),
-          adj, BnswSteps, BnswBeam)
-        batchTopTen(d, vis, idx, qs)
-      }),
+      (s, d) => annBatchNsw(s, d, annUnderGate(d)).graded),
 
     // Hierarchical NSW (round 14) — see the [[HnswStepsU]] scaladoc for
     // geometry + measured census. The graph EXCLUDES the query vector
@@ -2735,26 +3000,7 @@ object LlmExtras {
         s"UNION ALL SELECT v FROM vb$HnswStepsU UNION ALL SELECT v FROM vc$HnswSteps0)), " +
         QueryTopTenSql
     },
-      (s, d) => {
-        val emb = withE(T.embeddings(s, d).where(col("vec_id") =!= 0))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // layered graph + member-rank dictionary built in-plan per
-        // invocation ([[hnswLayers]], ONE pass for all layers; identical
-        // edge sets to per-layer builds, the oracle's per-layer CTEs
-        // unchanged), materialized once for the descent rounds
-        val (adjAll, ranked) = hnswLayers(s, d, emb, "hnsw:sc:")
-        val qArr = T.embeddings(s, d).where(col("vec_id") === 0)
-          .select(transform(col("embedding"), x => x.cast("double")).as("qe"))
-        // visited-restricted query distances + one checkpoint per round
-        // (the round-14 llm_ann_nsw discipline)
-        val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr)
-          .descend(hnswEntry(ranked, "hnsw:entry:0"), layerAdj(adjAll),
-            HnswStepsU, HnswBeamU, HnswSteps0, NswBeam)
-        val cand = vis.repartition(1, col("v")).distinct()
-          .select(col("v").as("vec_id"))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        queryTopTen(s, d, cand)
-      }),
+      (s, d) => annHnsw(s, d, annUnderGate(d)).graded),
 
     // BATCHED hierarchical NSW (round 15, VERDICT r14 item 3) — the
     // llm_ann_batch_nsw machinery (beam state keyed by query_id, one
@@ -2783,39 +3029,7 @@ object LlmExtras {
         batchDescentSql +
         batchTopTenSql("cand")
     },
-      (s, d) => {
-        val emb = withE(T.embeddings(s, d))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val idx = emb.where(col("vec_id") % 2 === 0)
-        val qs = emb.where(col("vec_id") % 2 === 1)
-          .select(col("vec_id").as("qid"), col("e").as("qe"),
-            col("embedding").as("qemb"))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // layered graph + member-rank dictionary built in-plan per
-        // invocation ([[hnswLayers]], ONE pass for all layers),
-        // materialized once for the batched descent rounds
-        val (adjAll, ranked) = hnswLayers(s, d, idx, "bhnsw:sc:")
-        val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
-          qs.select(col("qid"), col("qe")))
-        // every round checkpoints (the hnsw lesson, re-confirmed by A/B
-        // here: fusing the upper layers' two beam-1 rounds into one cut
-        // measured 15.1 s steady vs ~13 — exchange reuse does not absorb
-        // the duplicated intra-layer subtree across the checkpoint-free
-        // rounds; BASELINE.md round-15 entry). The seed stays lazy — the
-        // 1-row entry pick and the seed distances fold into the first
-        // round's checkpointed job.
-        val seed2 = beam.withD2(qs.select(col("qid"))
-          .crossJoin(broadcast(hnswEntry(ranked, "bhnsw:entry:0"))))
-        val vis = beam.descend(seed2, layerAdj(adjAll),
-            BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
-          .select("qid", "v")
-          // one exchange: hash(qid) serves this distinct AND the final
-          // top-10/n_visited window (round 16/17, guide §2.4); the cache
-          // that fed the former separate n_visited aggregate is gone
-          // with it — vis now has exactly one consumer
-          .repartition(col("qid")).distinct()
-        batchTopTen(d, vis, idx, qs)
-      }),
+      (s, d) => annBatchHnsw(s, d, annUnderGate(d)).graded),
 
     // Incremental insert for the GRAPH index family (round 16, VERDICT
     // r15 missing #1) — the hnswlib/FAISS-HNSW add()-after-build law
@@ -2868,50 +3082,7 @@ object LlmExtras {
         "FROM cand c JOIN qd ON qd.qid = c.qid AND qd.v = c.v) x " +
         s"JOIN nvq ON nvq.qid = x.qid WHERE x.rk <= $NswM ORDER BY query_id, rk"
     },
-      (s, d) => {
-        val emb = T.embeddings(s, d).where(col("vec_id") =!= 0)
-          .select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("e"),
-            (when(hash32(concat(lit("upsert:"), col("vec_id").cast("string")))
-              % 4 === 0, 1L).otherwise(0L)).as("is_delta"))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        val base = emb.where(col("is_delta") === 0)
-        val qs = emb.where(col("is_delta") === 1)
-          .select(col("vec_id").as("qid"), col("e").as("qe"))
-          .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-        // frozen base graph built in-plan per invocation
-        // ([[hnswLayers]] over the base members); then the batched
-        // descent + re-link, the production add() shape
-        val (adjAll, ranked) = hnswLayers(s, d,
-          withE(T.embeddings(s, d).where(col("vec_id") =!= 0 &&
-            hash32(concat(lit("upsert:"), col("vec_id").cast("string"))) % 4 =!= 0))
-            .transform(Cached(_)), // multi-consumer cache; lifecycle: Cached scaladoc
-          "uhnsw:sc:")
-        val beam = new BatchBeam(d, base.select(col("vec_id").as("v"), col("e")), qs)
-        val seed2 = beam.withD2(qs.select(col("qid"))
-          .crossJoin(broadcast(hnswEntry(ranked, "uhnsw:entry:0"))))
-        val vis = beam.descend(seed2, layerAdj(adjAll),
-            BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
-          // one exchange: hash(qid) serves the (qid, v) dedup (MIN(d2)
-          // == the old distinct, d2 a function of (qid, v)) AND the
-          // final link/n_visited window (guide §2.4); the cache that fed
-          // the former separate n_visited aggregate is gone with it —
-          // vis now has exactly one consumer
-          .repartition(col("qid"))
-          .groupBy("qid", "v").agg(min(col("d2")).as("d2"))
-        // n_visited rides the SAME window pass as the link pick (round
-        // 17, guide §2.4): a full-frame count(*) over the rank window's
-        // spec equals the old separate groupBy(qid) aggregate — one
-        // Window operator instead of an aggregate + broadcast-join pass.
-        val wLink = Window.partitionBy("qid").orderBy(col("d2"), col("v"))
-        vis.withColumn("rk", row_number().over(wLink).cast("long"))
-          .withColumn("n_visited", count(lit(1)).over(
-            wLink.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-          .where(col("rk") <= NswM)
-          .select(col("qid").as("query_id"), col("rk"), col("v").as("vec_id"),
-            col("d2"), col("n_visited"))
-          .orderBy("query_id", "rk")
-      }),
+      (s, d) => annHnswUpsert(s, d, annUnderGate(d)).graded),
 
     // TRAINED language-ID: multinomial Naive Bayes (round 13) — the
     // classic scalable text classifier [McCallum & Nigam 1998] beside

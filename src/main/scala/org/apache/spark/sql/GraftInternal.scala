@@ -18,4 +18,11 @@ object GraftInternal {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over rows already in Catalyst's internal form, with no
+    * per-row conversion (the graph-ANN driver-side beam search's visited
+    * rows, graft.operators.LlmExtras.BeamSearch). */
+  def internalRows(spark: SparkSession, rows: org.apache.spark.rdd.RDD[
+      org.apache.spark.sql.catalyst.InternalRow], schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

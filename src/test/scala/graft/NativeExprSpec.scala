@@ -156,4 +156,26 @@ class NativeExprSpec extends SparkSpec {
       assert(interp == gen, s"$c: codegen=$gen interpreted=$interp")
     }
   }
+
+  test("dot, sl2 and sl2e10 equal their Scala mirrors bit for bit on the edge inputs") {
+    // the driver-side callers (the graph-ANN beam search) compute with the
+    // mirrors what the plans compute with the expressions; a null element
+    // reads as 0, as the Catalyst arrays store it
+    def floats(v: Any) = v.asInstanceOf[scala.collection.Seq[Any]]
+      .map { case null => 0f; case f: Float => f }.toArray
+    def doubles(v: Any) = v.asInstanceOf[scala.collection.Seq[Any]]
+      .map { case null => 0d; case d: Double => d }.toArray
+    def mirror[A](f: (A, A) => Any, of: Any => A)(a: Any, b: Any): Any =
+      if (a == null || b == null) null else f(of(a), of(b))
+    val want = vectors.collect().toSeq.map { r =>
+      bits(Row(mirror(VectorExprs.dot(_: Array[Float], _: Array[Float]), floats)(r(0), r(1)),
+        mirror(VectorExprs.sl2(_: Array[Double], _: Array[Double]), doubles)(r(2), r(3)),
+        mirror(VectorExprs.sl2e10(_: Array[Double], _: Array[Double]), doubles)(r(2), r(3))))
+    }
+    val cols = Seq(VectorExprs.dot(col("fa"), col("fb")), VectorExprs.sl2(col("da"), col("db")),
+      VectorExprs.sl2e10(col("da"), col("db")))
+    val (gen, interp) = bothModes(vectors, cols)
+    assert(gen == Right(want), s"codegen=$gen mirrors=$want")
+    assert(interp == Right(want), s"interpreted=$interp mirrors=$want")
+  }
 }
