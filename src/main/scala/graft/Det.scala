@@ -268,12 +268,14 @@ object Det {
     org.apache.spark.sql.GraftInternal.column(
       graft.functions.Md5Low32(org.apache.spark.sql.GraftInternal.expression(c)))
 
-  /** Driver-side scalar twin of [[hash32]]/[[sqlHash32]], for PLAN-TIME
-    * constants only (inputs that are plan literals, e.g. the NSW
-    * derandomized sign table): MD5 low four bytes read little-endian,
-    * bit-identical to the Column and SQL forms — DetLemmaSpec pins the
-    * three-way agreement. Never use on row data (that must stay in the
-    * Column form so both engines compute it). */
+  /** Driver-side scalar twin of [[hash32]]/[[sqlHash32]]: MD5 low four
+    * bytes read little-endian, bit-identical to the Column and SQL forms —
+    * DetLemmaSpec pins the three-way agreement. For PLAN-TIME constants
+    * (inputs that are plan literals, e.g. the NSW derandomized sign
+    * table) and for driver kernels that mirror a plan bit for bit (the
+    * graph-ANN index kernel, LlmExtras.AnnIndex, which AnnBeamSpec checks
+    * against its plan). Never use it on row data in place of a plan: a
+    * plan's hashes stay in the Column form so both engines compute them. */
   def hash32Scala(str: String): Long = {
     val dg = java.security.MessageDigest.getInstance("MD5")
       .digest(str.getBytes("UTF-8"))

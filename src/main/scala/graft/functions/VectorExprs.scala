@@ -89,18 +89,8 @@ case class FloatVecScaledDotL(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += math.floor(a.getFloat(i).toDouble * b.getFloat(i).toDouble * 1e14 + 0.5).toLong
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorExprs.sdotl(l.asInstanceOf[ArrayData].toFloatArray(), r.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -354,10 +344,11 @@ object VectorExprs {
   /** Column-level helper: [[DoubleVecScaledL2E10]]. */
   def sl2e10(a: Column, b: Column): Column = native(DoubleVecScaledL2E10)(a, b)
 
-  // The interpreted evaluation of dot, sl2 and sl2e10 on plain arrays, for
-  // driver-side callers (the graph-ANN beam search) that need graft_sl2's
-  // exact integers. NativeExprSpec checks them against the generated code
-  // bit for bit. A null element reads as 0, as the Catalyst arrays store it.
+  // The interpreted evaluation of dot, sdotl, sl2 and sl2e10 on plain
+  // arrays, for driver-side callers (the graph-ANN index kernel and beam
+  // search) that need the expressions' exact integers. NativeExprSpec
+  // checks them against the generated code bit for bit. A null element
+  // reads as 0, as the Catalyst arrays store it.
 
   /** [[FloatVecDot]]: the double sum of float products, left to right. */
   def dot(a: Array[Float], b: Array[Float]): Double = {
@@ -365,6 +356,19 @@ object VectorExprs {
     var acc = 0.0
     var i = 0
     while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** [[FloatVecScaledDotL]]: the exact long sum of the scaled, floored
+    * float products. */
+  def sdotl(a: Array[Float], b: Array[Float]): Long = {
+    val n = math.min(a.length, b.length)
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += math.floor(a(i).toDouble * b(i).toDouble * 1e14 + 0.5).toLong
+      i += 1
+    }
     acc
   }
 

@@ -250,8 +250,10 @@ object LlmExtras {
     if (b > 0L && b <= AnnBroadcastGateBytes) broadcast(df) else df
   }
 
-  /** Per-invocation index-build materialization (round 16, REVISED): a
-    * mid-build change had memoized these deterministic structures (the
+  /** Per-invocation index-build materialization (round 16, REVISED). The
+    * graph-ANN indexes ([[nswAdj]], [[hnswLayers]]) take it only in the
+    * relational lowering over the ANN gate; under the gate [[AnnIndex]]
+    * builds them on the driver. A mid-build change had memoized these deterministic structures (the
     * even-id NSW bucket graph, the layered HNSW variants, the Lloyd PQ
     * codebooks) to JVM-lifetime temp parquet keyed by sfDir, with an
     * untimed Bench pre-warm — moving the build jobs out of every ANN
@@ -293,17 +295,22 @@ object LlmExtras {
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
+  /** The ±1f sign planes of the NSW bucket, folded from
+    * [[Det.hash32Scala]]: plane p's sign at position j is + when
+    * hash32(p:j) is even. */
+  private lazy val NswSigns: Array[Array[Float]] = Array.tabulate(NswPlanes, NswDims)(
+    (p, j) => if (Det.hash32Scala(s"$p:$j") % 2 == 0) 1.0f else -1.0f)
+
   /** The [[NswPlanes]]-bit sign-LSH bucket of `embedding`: one scaled-long
-    * dot per plane against plan-time ±1f sign arrays folded from
-    * [[Det.hash32Scala]] (literals, not per-element hashes). All five
-    * graph-ANN keys (llm_ann_nsw, _batch_nsw, _hnsw, _batch_hnsw,
-    * _hnsw_upsert) bucket with it — the hierarchy reuses the flat rung's
-    * geometry verbatim. */
+    * dot per plane against the [[NswSigns]] arrays as plan literals, not
+    * per-element hashes. All five graph-ANN keys (llm_ann_nsw,
+    * _batch_nsw, _hnsw, _batch_hnsw, _hnsw_upsert) bucket with it — the
+    * hierarchy reuses the flat rung's geometry verbatim; [[AnnIndex]]
+    * computes the same bucket with the sdotl mirror. */
   private def nswBucket: Column = {
     import graft.functions.VectorExprs.sdotl
     (0 until NswPlanes).map { p =>
-      val signs = array((0 until NswDims).map(j =>
-        lit(if (Det.hash32Scala(s"$p:$j") % 2 == 0) 1.0f else -1.0f)): _*)
+      val signs = array(NswSigns(p).toIndexedSeq.map(lit): _*)
       when(sdotl(col("embedding"), signs) > 0, lit(1L << p)).otherwise(0L)
     }.reduce(_ + _)
   }
@@ -352,25 +359,21 @@ object LlmExtras {
     * top-[[NswM]] exact edges ([[nswKnn]]) ∪ the 2 hash shortcuts per
     * node that `shortcuts` wires from the bucketed members, symmetrized.
     * llm_ann_nsw indexes the full corpus, llm_ann_batch_nsw the even-id
-    * half. The relational beam rounds join it every round, so for them
-    * it is materialized and cached; the driver-side search collects it
-    * once, so there it stays lazy ([[BeamSearch]]). */
-  private def nswAdj(s: SparkSession, d: String, members: DataFrame, onDriver: Boolean)(
-      shortcuts: DataFrame => DataFrame): DataFrame = {
-    def build = {
+    * half. The relational lowering over the ANN gate builds it: its beam
+    * rounds join it every round, so it is materialized and cached. Under
+    * the gate [[AnnIndex.flat]] builds the same edges on the driver. */
+  private[graft] def nswAdj(d: String, members: DataFrame)(
+      shortcuts: DataFrame => DataFrame): DataFrame =
+    materializeIndex {
       val sigs = members.select(col("vec_id"), nswBucket.as("bucket"))
         .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
       undirected(nswKnn(d, sigs, members, Nil), shortcuts(sigs), Nil)
-    }
-    if (onDriver) build
-    else materializeIndex(build)
-      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-  }
+    }.transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
 
   /** The 2 small-world shortcuts per node of `src` (vec_id): target rank
     * hash32(salt||h||':'||s) % n, mapped to a vec_id by `rankToId`
     * (identity on the dense full corpus, 2·r on the even-id half). */
-  private def nswShortcuts(src: DataFrame, salt: String,
+  private[graft] def nswShortcuts(src: DataFrame, salt: String,
       rankToId: Column => Column): DataFrame = {
     val nn = src.agg(count(lit(1)).as("n"))
     src.select(col("vec_id").as("s"))
@@ -388,11 +391,12 @@ object LlmExtras {
     * t), member ranks = (layer, vec_id, rk)). `scSalt` is the shortcut
     * hash salt — "hnsw:sc:" (llm_ann_hnsw), "bhnsw:sc:"
     * (llm_ann_batch_hnsw) or "uhnsw:sc:" (llm_ann_hnsw_upsert), each
-    * key's distinct derandomized wiring. Materialized for the relational
-    * beam rounds only, as [[nswAdj]]. */
-  private def hnswLayers(s: SparkSession, d: String, members: DataFrame,
-      scSalt: String, onDriver: Boolean): (DataFrame, DataFrame) = {
-    def build = {
+    * key's distinct derandomized wiring. The relational lowering over
+    * the ANN gate builds it, materialized as [[nswAdj]]; under the gate
+    * [[AnnIndex.layered]] builds the same layers on the driver. */
+  private[graft] def hnswLayers(d: String, members: DataFrame,
+      scSalt: String): (DataFrame, DataFrame) =
+    materializeIndexPair {
       val hl = hash32(concat(lit("hnsw:lvl:"), col("vec_id").cast("string")))
       val mAll = members.select(col("vec_id"), nswBucket.as("bucket"),
           when(pmod(hl, lit(16)) === 0, 2)
@@ -418,12 +422,10 @@ object LlmExtras {
         .select(col("layer"), col("s2").as("s"), col("t"))
       (undirected(knn, sc, Seq("layer")), ranked)
     }
-    if (onDriver) build else materializeIndexPair(build)
-  }
 
   /** The shared top-layer entry: the layer-2 member of rank
     * hash32(salt) % |layer 2|. */
-  private def hnswEntry(ranked: DataFrame, salt: String): DataFrame = {
+  private[graft] def hnswEntry(ranked: DataFrame, salt: String): DataFrame = {
     val nnl = ranked.groupBy("layer").agg(count(lit(1)).as("n"))
     ranked.where(col("layer") === 2)
       .join(broadcast(nnl.where(col("layer") === 2).select(col("n"))),
@@ -434,20 +436,28 @@ object LlmExtras {
   /** Fixed-width graph beam search over an index, in one of two lowerings
     * that return the same rows.
     *
-    * On the driver (`onDriver`, chosen by [[annUnderGate]]: the index,
-    * the queries and every visited set are then broadcast-sized) one
-    * action collects the adjacency, the members' vectors, the queries and
-    * the seeds, [[LocalBeam]] runs every round in memory, and the visited
-    * set comes back as a DataFrame in the relational rounds' schema.
-    * The per-round cost of the relational lowering on such inputs is jobs,
-    * not data: ~10 scheduler jobs a round over a few hundred rows.
+    * Under the ANN gate ([[annUnderGate]]: the index, the queries and
+    * every visited set are then broadcast-sized) the keys call
+    * [[searchIndex]]: one action collects the index members' (vec_id,
+    * embedding) and the queries, [[AnnIndex]] builds the graph from the
+    * members, [[LocalBeam]] runs every round in memory, and the visited
+    * set comes back as a DataFrame in the relational rounds' schema. On
+    * such inputs the relational lowering's cost is jobs, not data: 30–45
+    * scheduler jobs for the index build and ~10 a round over a few
+    * hundred rows.
     *
-    * Relationally, one checkpointed frontier⋈adjacency round at a time.
-    * Each round checkpoints: leaving a multi-round lineage lazy was
-    * MEASURED catastrophic (llm_ann_hnsw 33 s steady vs 5 — each
-    * downstream consumer re-plans and re-executes the whole un-cut walk,
-    * the localCheckpoint-stats pathology class), so the per-round cut is
-    * load-bearing, not optional. */
+    * Over the gate the keys build the index relationally ([[nswAdj]],
+    * [[hnswLayers]]) and call [[search]] or [[descend]]: one checkpointed
+    * frontier⋈adjacency round at a time. Each round checkpoints: leaving
+    * a multi-round lineage lazy was MEASURED catastrophic (llm_ann_hnsw
+    * 33 s steady vs 5 — each downstream consumer re-plans and re-executes
+    * the whole un-cut walk, the localCheckpoint-stats pathology class),
+    * so the per-round cut is load-bearing, not optional.
+    *
+    * With `onDriver`, [[search]] and [[descend]] run [[LocalBeam]] over
+    * the given adjacency and seed frames instead, collected in one
+    * action with the members and the queries: AnnBeamSpec checks the two
+    * round lowerings against each other on arbitrary graphs that way. */
   private[graft] sealed abstract class BeamSearch(onDriver: Boolean) {
     /** The `b` visited nodes nearest the query (ties by id). */
     def nearest(vis: DataFrame, b: Int): DataFrame
@@ -459,6 +469,9 @@ object LlmExtras {
     protected def queries: DataFrame
     /** `seed`'s (qid, v) pairs. */
     protected def seedPairs(seed: DataFrame): DataFrame
+    /** The qids [[searchIndex]] seeds from the index's entry, given the
+      * collected queries' qids, in qid order. */
+    protected def searched(qids: Array[Long]): Array[Long]
     /** Whether a visited node outside `members` stays visited ([[LocalBeam]]). */
     protected def keepUnscored: Boolean
     /** This search's visited frame from [[LocalBeam]]'s (qid, v, d2) rows. */
@@ -496,6 +509,25 @@ object LlmExtras {
         v2.unionAll(v1).unionAll(v0)
       }
 
+    /** The keys' lowering under the ANN gate: collects `index`'s (vec_id,
+      * embedding) rows and [[queries]] in one action, builds the graph
+      * over them with `build` ([[AnnIndex.flat]], [[AnnIndex.layered]])
+      * and runs `rounds` for each [[searched]] query from the graph's
+      * entry. */
+    def searchIndex(index: DataFrame, build: Array[(Long, Array[Float])] => AnnIndex)(
+        rounds: (LocalBeam, Array[Int]) => Array[Int]): DataFrame = {
+      val (ms, qs) = index.select(lit(true), col("vec_id").cast("long"), col("embedding"),
+          lit(null).cast("array<double>"))
+        .unionAll(queries.select(lit(false), col("qid").cast("long"),
+          lit(null).cast("array<float>"), col("qe")))
+        .collect().partition(_.getBoolean(0))
+      val g = build(ms.map(r => r.getLong(1) -> r.getSeq[Float](2).toArray))
+      val seeds = if (g.entry < 0) Array.empty[Int] else Array(g.entry)
+      runLocal(index.sparkSession, g.ids, g.adj(_), g.vecs,
+        qs.map(r => r.getLong(1) -> r.getSeq[Double](3).toArray).toMap,
+        searched(qs.map(_.getLong(1))).map(_ -> seeds))(rounds)
+    }
+
     /** Collects the layered adjacency `adj` (layer, s, t), [[members]],
       * [[queries]] and `seed` in one action and runs `rounds` for each
       * seeded query, in qid order. */
@@ -519,22 +551,30 @@ object LlmExtras {
       val qs = byTag(2).map(r => r.getLong(1) -> vector(r)).toMap
       val seeded = byTag(3).groupMap(_.getLong(1))(r => at(r.getLong(2))).toArray.sortBy(_._1)
       val ids = index.keys.toArray
-      val memberVecs = Array.tabulate(ids.length)(vecs.getOrElse(_, null))
       val layers = edges.groupBy(_._1).map { case (l, es) =>
         val out = es.groupMap(_._2)(_._3)
         l -> Array.tabulate(ids.length)(out.getOrElse(_, Array.empty[Int]))
       }.withDefaultValue(Array.fill(ids.length)(Array.empty[Int]))
+      runLocal(seed.sparkSession, ids, layers,
+        Array.tabulate(ids.length)(vecs.getOrElse(_, null)), qs, seeded)(rounds)
+    }
+
+    /** Runs `rounds` for each seeded query over the graph [[LocalBeam]]
+      * reads and returns [[visited]] of the (qid, v, d2) rows. */
+    private def runLocal(s: SparkSession, ids: Array[Long], adj: Int => Array[Array[Int]],
+        vecs: Array[Array[Double]], qs: Map[Long, Array[Double]],
+        seeded: Array[(Long, Array[Int])])(
+        rounds: (LocalBeam, Array[Int]) => Array[Int]): DataFrame = {
       // the queries are independent: each runs on its own core into one
       // primitive array of (qid, v, d2) triples
       val out = java.util.stream.IntStream.range(0, seeded.length).parallel().mapToObj { i =>
         val (qid, seeds) = seeded(i)
-        val k = new LocalBeam(ids, layers, memberVecs, qs.getOrElse(qid, null), keepUnscored)
+        val k = new LocalBeam(ids, adj, vecs, qs.getOrElse(qid, null), keepUnscored)
         rounds(k, seeds).flatMap(v => Array(qid, ids(v), k.d2(v)))
       }.toArray(new Array[Array[Long]](_))
       // An RDD of those arrays, not a local relation: the optimizer would
       // evaluate every projection and filter over a batch's ~10⁵ local
       // rows itself. The rows are built in Catalyst's form in the tasks.
-      val s = seed.sparkSession
       visited(org.apache.spark.sql.GraftInternal.internalRows(s,
         s.sparkContext.parallelize(out.toSeq).flatMap(a =>
           Iterator.range(0, a.length, 3).map(i => InternalRow(a(i), a(i + 1), a(i + 2)))),
@@ -542,10 +582,157 @@ object LlmExtras {
     }
   }
 
-  /** [[BeamSearch]]'s rounds in memory, for one query `q` (null: none).
-    * Nodes are numbered densely: `ids(i)` is node i's id, `adj(l)(i)` its
-    * layer-`l` neighbours and `members(i)` its vector, null when i is not
-    * a searched member. A node's distance is graft_sl2 of its vector and
+  /** A graph-ANN index on the driver, numbered densely for [[LocalBeam]]:
+    * node i has vec_id `ids(i)`, vector `vecs(i)` (a member's embedding
+    * as doubles, the `e` the relational lowering reads; null for a node
+    * outside the members) and layer-l neighbours `adj(l)(i)`. The members
+    * come first, by vec_id, then any other node a shortcut or the entry
+    * names. `ranks(l)` lists layer l's members by rank, i.e. by vec_id,
+    * and `entry` is the node every search starts from, -1 for none. */
+  private[graft] final class AnnIndex(val ids: Array[Long], val vecs: Array[Array[Double]],
+      val adj: Array[Array[Array[Int]]], val ranks: Array[Array[Int]], val entry: Int)
+
+  /** The index kernel: the graph [[nswAdj]] or [[hnswLayers]] builds and
+    * the entry each key derives from it, with their exact semantics,
+    * computed in plain Scala from the members' (vec_id, float embedding)
+    * on the driver. Distances, buckets and hashes are the expressions'
+    * mirrors ([[VectorExprs.sl2]], [[VectorExprs.sdotl]],
+    * [[Det.hash32Scala]]), so every tie breaks as in the plans; the
+    * quadratic kNN pool runs per member on the common fork-join pool.
+    * AnnBeamSpec checks both builds against the relational ones row for
+    * row. */
+  private[graft] object AnnIndex {
+    /** [[nswAdj]] with [[nswShortcuts]] of salt `scSalt`: `rankToId` maps
+      * a shortcut's target rank to its vec_id, `entry` the member count to
+      * the seed's vec_id, and an edge survives only into a vec_id that
+      * `keep`s (llm_ann_nsw's guard against re-entering its query). */
+    def flat(members: Array[(Long, Array[Float])], scSalt: String, rankToId: Long => Long,
+        entry: Long => Long, keep: Long => Boolean = _ => true): AnnIndex =
+      build(members, 1, _ => 0, scSalt, (_, r) => rankToId(r), keep)(
+        ranked => if (ranked(0).isEmpty) None else Some(entry(ranked(0).length)))
+
+    /** [[hnswLayers]] with shortcut salt `scSalt`, and [[hnswEntry]] of
+      * `entrySalt`: the layer-2 member of rank hash32(entrySalt) % |layer
+      * 2|, none when layer 2 is empty. */
+    def layered(members: Array[(Long, Array[Float])], scSalt: String,
+        entrySalt: String): AnnIndex =
+      build(members, 3, level, scSalt, (ranked, r) => ranked(r.toInt), _ => true) { ranked =>
+        val top = ranked(2)
+        if (top.isEmpty) None else Some(top((Det.hash32Scala(entrySalt) % top.length).toInt))
+      }
+
+    /** A vec_id's top HNSW layer: 2 when hash32('hnsw:lvl:'||id) % 16 is
+      * 0, else 1 when it is 0 mod 4, else 0. */
+    private def level(id: Long): Int = {
+      val h = Det.hash32Scala(s"hnsw:lvl:$id")
+      if (h % 16 == 0) 2 else if (h % 4 == 0) 1 else 0
+    }
+
+    private def parallel(n: Int)(f: Int => Unit): Unit =
+      java.util.stream.IntStream.range(0, n).parallel().forEach(i => f(i))
+
+    /** `layers` layers of the members at levels ≥ each (`levelOf`), each the
+      * undirected union of its kNN edges and its 2 shortcuts per member
+      * (rank hash32(scSalt||h||':'||id) % |layer|, mapped to a vec_id by
+      * `scTarget` from the layer's ids by rank), kept by target; `entry`
+      * picks the seed's vec_id from every layer's ids by rank. */
+    private def build(members: Array[(Long, Array[Float])], layers: Int, levelOf: Long => Int,
+        scSalt: String, scTarget: (Array[Long], Long) => Long, keep: Long => Boolean)(
+        entry: Array[Array[Long]] => Option[Long]): AnnIndex = {
+      val sorted = members.sortBy(_._1)
+      val n = sorted.length
+      val mIds = sorted.map(_._1)
+      val vecs = new Array[Array[Double]](n)
+      val bucket = new Array[Int](n)
+      val lvl = new Array[Int](n)
+      val sc = Array.ofDim[Long](2, n)
+      parallel(n) { i =>
+        val emb = sorted(i)._2
+        vecs(i) = emb.map(_.toDouble)
+        bucket(i) = (0 until NswPlanes)
+          .map(p => if (VectorExprs.sdotl(emb, NswSigns(p)) > 0) 1 << p else 0).sum
+        lvl(i) = levelOf(mIds(i))
+        for (h <- 0 to 1) sc(h)(i) = Det.hash32Scala(s"$scSalt$h:${mIds(i)}")
+      }
+      val ranks = Array.tabulate(layers)(l => (0 until n).filter(lvl(_) >= l).toArray)
+      val rankIds = ranks.map(_.map(mIds))
+      // every node that is not a member, numbered after the members
+      val others = mutable.LinkedHashMap.empty[Long, Int]
+      def at(id: Long): Int = {
+        val i = java.util.Arrays.binarySearch(mIds, id)
+        if (i >= 0) i else others.getOrElseUpdate(id, n + others.size)
+      }
+      // each layer's edges s → t in both directions, packed s << 32 | t
+      val edges = Array.tabulate(layers) { l =>
+        val in = ranks(l)
+        val knn = nearest(in, bucket, vecs)
+        val e = mutable.ArrayBuilder.make[Long]
+        def link(s: Int, t: Int): Unit = { e += s.toLong << 32 | t; e += t.toLong << 32 | s }
+        for (k <- in.indices) {
+          val s = in(k)
+          knn(k).foreach(link(s, _))
+          for (h <- 0 to 1) {
+            val t = scTarget(rankIds(l), sc(h)(s) % in.length)
+            if (t != mIds(s)) link(s, at(t))
+          }
+        }
+        e.result()
+      }
+      val seed = entry(rankIds).fold(-1)(at)
+      val ids = mIds ++ others.keys
+      val adj = edges.map { e =>
+        val out = e.distinct.filter(st => keep(ids(st.toInt)))
+          .groupMap(st => (st >>> 32).toInt)(_.toInt)
+        Array.tabulate(ids.length)(out.getOrElse(_, Array.empty[Int]))
+      }
+      new AnnIndex(ids, vecs ++ new Array[Array[Double]](others.size), adj, ranks, seed)
+    }
+
+    /** Per member of layer `in` (member indices by vec_id), its [[NswM]]
+      * nearest other members of the layer in its bucket ∪ Hamming-1
+      * buckets by (graft_sl2 d2, vec_id) — [[nswKnn]]. */
+    private def nearest(in: Array[Int], bucket: Array[Int],
+        vecs: Array[Array[Double]]): Array[Array[Int]] = {
+      val byBucket = Array.tabulate(1 << NswPlanes)(b => in.filter(bucket(_) == b))
+      val flips = (0 +: (0 until NswPlanes).map(1 << _)).toArray
+      val out = new Array[Array[Int]](in.length)
+      parallel(in.length) { k =>
+        val s = in(k)
+        val top = new Array[Int](NswM)
+        val topD = new Array[Long](NswM)
+        var m = 0
+        // member indices follow vec_id order, so t < u is the vec_id tie-break
+        def before(d: Long, t: Int, j: Int) = d < topD(j) || (d == topD(j) && t < top(j))
+        for (f <- flips) {
+          val pool = byBucket(bucket(s) ^ f)
+          var i = 0
+          while (i < pool.length) {
+            val t = pool(i)
+            if (t != s) {
+              val d = VectorExprs.sl2(vecs(s), vecs(t))
+              if (m < NswM || before(d, t, NswM - 1)) {
+                var j = if (m < NswM) { m += 1; m - 1 } else NswM - 1
+                while (j > 0 && before(d, t, j - 1)) {
+                  top(j) = top(j - 1); topD(j) = topD(j - 1); j -= 1
+                }
+                top(j) = t
+                topD(j) = d
+              }
+            }
+            i += 1
+          }
+        }
+        out(k) = java.util.Arrays.copyOf(top, m)
+      }
+      out
+    }
+  }
+
+  /** [[BeamSearch]]'s rounds in memory, for one query `q` (null: none):
+    * the driver lowering, which the keys run over an [[AnnIndex]] under
+    * the ANN gate. Nodes are numbered densely: `ids(i)` is node i's id,
+    * `adj(l)(i)` its layer-`l` neighbours and `members(i)` its vector,
+    * null when i is not a searched member. A node's distance is graft_sl2 of its vector and
     * `q` ([[VectorExprs.sl2]], the same integers); a node outside
     * `members` (or any node, without a query) has none and never enters a
     * beam. `keepUnscored` keeps such a node visited, as [[QueryBeam]]'s
@@ -651,6 +838,9 @@ object LlmExtras {
     protected def members: DataFrame = embv
     protected def queries: DataFrame = qArr.select(lit(0L).as("qid"), col("qe"))
     protected def seedPairs(seed: DataFrame): DataFrame = seed.select(lit(0L).as("qid"), col("v"))
+    // qid 0 is searched whether or not its vector was collected, as the
+    // relational rounds expand a seed without one
+    protected def searched(qids: Array[Long]): Array[Long] = Array(0L)
     protected def keepUnscored: Boolean = true
     protected def visited(rows: DataFrame): DataFrame = rows.select("v")
   }
@@ -695,6 +885,7 @@ object LlmExtras {
     protected def members: DataFrame = embv
     protected def queries: DataFrame = qv
     protected def seedPairs(seed: DataFrame): DataFrame = seed.select("qid", "v")
+    protected def searched(qids: Array[Long]): Array[Long] = qids.sorted
     protected def keepUnscored: Boolean = false
     protected def visited(rows: DataFrame): DataFrame = rows
   }
@@ -757,8 +948,9 @@ object LlmExtras {
 
   // The five graph-ANN keys' builders (the design of each is at its key),
   // in the beam-search lowering `onDriver` names ([[BeamSearch]]); the
-  // keys pass [[annUnderGate]]. Indexes are built in-plan per invocation
-  // ([[nswAdj]], [[hnswLayers]]).
+  // keys pass [[annUnderGate]]. Every invocation builds its own index: on
+  // the driver in [[AnnIndex]], or relationally ([[nswAdj]],
+  // [[hnswLayers]]) with relational seeds.
 
   /** llm_ann_nsw: a beam search from a hash-chosen entry over the full
     * corpus's NSW graph; the query is in the graph, so expansion never
@@ -766,17 +958,26 @@ object LlmExtras {
   private[graft] def annNsw(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
     val emb = withE(T.embeddings(s, d))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val adj = nswAdj(s, d, emb, onDriver)(_ => nswShortcuts(emb, "nsw:", identity))
-    // the lazy broadcast n scalar (SCALING.md principle 3)
-    val nn = emb.agg(count(lit(1)).as("n"))
-    val qArr = emb.where(col("vec_id") === 0).select(col("e").as("qe"))
-    val ent = nn.select(
-      when(hash32(lit("nsw:entry:0")) % col("n") =!= 0,
-        hash32(lit("nsw:entry:0")) % col("n"))
-        .otherwise(hash32(lit("nsw:entry:1")) % col("n")).as("v"))
-    val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr, onDriver)
-      .search(if (onDriver) ent else ent.localCheckpoint(), adj.where(col("t") =!= 0),
-        NswSteps, NswBeam)
+    val beam = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")),
+      emb.where(col("vec_id") === 0).select(col("e").as("qe")), onDriver)
+    val vis =
+      if (onDriver) {
+        def entry(n: Long) = {
+          val h = Det.hash32Scala("nsw:entry:0") % n
+          if (h != 0) h else Det.hash32Scala("nsw:entry:1") % n
+        }
+        beam.searchIndex(emb, AnnIndex.flat(_, "nsw:", identity, entry, _ != 0L))(
+          _.search(_, 0, NswSteps, NswBeam))
+      } else {
+        val adj = nswAdj(d, emb)(_ => nswShortcuts(emb, "nsw:", identity))
+        // the lazy broadcast n scalar (SCALING.md principle 3)
+        val nn = emb.agg(count(lit(1)).as("n"))
+        val ent = nn.select(
+          when(hash32(lit("nsw:entry:0")) % col("n") =!= 0,
+            hash32(lit("nsw:entry:0")) % col("n"))
+            .otherwise(hash32(lit("nsw:entry:1")) % col("n")).as("v"))
+        beam.search(ent.localCheckpoint(), adj.where(col("t") =!= 0), NswSteps, NswBeam)
+      }
     val cand = vis.where(col("v") =!= 0).select(col("v").as("vec_id"))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
     AnnRun(vis, queryTopTen(s, d, cand))
@@ -793,16 +994,20 @@ object LlmExtras {
       .select(col("vec_id").as("qid"), col("e").as("qe"),
         col("embedding").as("qemb"))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val adj = nswAdj(s, d, idx, onDriver)(nswShortcuts(_, "bnsw:sc:", lit(2) * _))
-    // the lazy broadcast n scalar (the index half's cardinality)
-    val nn = idx.agg(count(lit(1)).as("n"))
-    val ent = nn.select(
-      (lit(2) * (hash32(lit("bnsw:entry:0")) % col("n"))).as("v"))
     val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
       qs.select(col("qid"), col("qe")), onDriver)
-    val seed = beam.withD2(qs.select(col("qid")).crossJoin(broadcast(ent)))
-    val vis = beam.search(if (onDriver) seed else seed.localCheckpoint(), adj,
-      BnswSteps, BnswBeam)
+    val vis =
+      if (onDriver) beam.searchIndex(idx, AnnIndex.flat(_, "bnsw:sc:", 2 * _,
+        n => 2 * (Det.hash32Scala("bnsw:entry:0") % n)))(_.search(_, 0, BnswSteps, BnswBeam))
+      else {
+        val adj = nswAdj(d, idx)(nswShortcuts(_, "bnsw:sc:", lit(2) * _))
+        // the lazy broadcast n scalar (the index half's cardinality)
+        val nn = idx.agg(count(lit(1)).as("n"))
+        val ent = nn.select(
+          (lit(2) * (hash32(lit("bnsw:entry:0")) % col("n"))).as("v"))
+        val seed = beam.withD2(qs.select(col("qid")).crossJoin(broadcast(ent)))
+        beam.search(seed.localCheckpoint(), adj, BnswSteps, BnswBeam)
+      }
     AnnRun(vis, batchTopTen(d, vis, idx, qs))
   }
 
@@ -811,12 +1016,17 @@ object LlmExtras {
   private[graft] def annHnsw(s: SparkSession, d: String, onDriver: Boolean): AnnRun = {
     val emb = withE(T.embeddings(s, d).where(col("vec_id") =!= 0))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val (adjAll, ranked) = hnswLayers(s, d, emb, "hnsw:sc:", onDriver)
     val qArr = T.embeddings(s, d).where(col("vec_id") === 0)
       .select(transform(col("embedding"), x => x.cast("double")).as("qe"))
-    val vis = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr, onDriver)
-      .descend(hnswEntry(ranked, "hnsw:entry:0"), adjAll,
-        HnswStepsU, HnswBeamU, HnswSteps0, NswBeam)
+    val beam = new QueryBeam(emb.select(col("vec_id").as("v"), col("e")), qArr, onDriver)
+    val vis =
+      if (onDriver) beam.searchIndex(emb, AnnIndex.layered(_, "hnsw:sc:", "hnsw:entry:0"))(
+        _.descend(_, HnswStepsU, HnswBeamU, HnswSteps0, NswBeam))
+      else {
+        val (adjAll, ranked) = hnswLayers(d, emb, "hnsw:sc:")
+        beam.descend(hnswEntry(ranked, "hnsw:entry:0"), adjAll,
+          HnswStepsU, HnswBeamU, HnswSteps0, NswBeam)
+      }
     val cand = vis.repartition(1, col("v")).distinct()
       .select(col("v").as("vec_id"))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
@@ -839,12 +1049,17 @@ object LlmExtras {
       .select(col("vec_id").as("qid"), col("e").as("qe"),
         col("embedding").as("qemb"))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val (adjAll, ranked) = hnswLayers(s, d, idx, "bhnsw:sc:", onDriver)
     val beam = new BatchBeam(d, idx.select(col("vec_id").as("v"), col("e")),
       qs.select(col("qid"), col("qe")), onDriver)
-    val seed2 = beam.withD2(qs.select(col("qid"))
-      .crossJoin(broadcast(hnswEntry(ranked, "bhnsw:entry:0"))))
-    val vis = beam.descend(seed2, adjAll, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
+    val vis =
+      if (onDriver) beam.searchIndex(idx, AnnIndex.layered(_, "bhnsw:sc:", "bhnsw:entry:0"))(
+        _.descend(_, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam))
+      else {
+        val (adjAll, ranked) = hnswLayers(d, idx, "bhnsw:sc:")
+        val seed2 = beam.withD2(qs.select(col("qid"))
+          .crossJoin(broadcast(hnswEntry(ranked, "bhnsw:entry:0"))))
+        beam.descend(seed2, adjAll, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
+      }
     // one exchange: hash(qid) serves this distinct AND the final
     // top-10/n_visited window (round 16/17, guide §2.4)
     AnnRun(vis, batchTopTen(d, vis.select("qid", "v").repartition(col("qid")).distinct(),
@@ -865,15 +1080,20 @@ object LlmExtras {
     val qs = emb.where(col("is_delta") === 1)
       .select(col("vec_id").as("qid"), col("e").as("qe"))
       .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
-    val (adjAll, ranked) = hnswLayers(s, d,
-      withE(T.embeddings(s, d).where(col("vec_id") =!= 0 &&
+    // the base members again, with the raw embedding the index buckets
+    val idx = withE(T.embeddings(s, d).where(col("vec_id") =!= 0 &&
         hash32(concat(lit("upsert:"), col("vec_id").cast("string"))) % 4 =!= 0))
-        .transform(Cached(_)), // multi-consumer cache; lifecycle: Cached scaladoc
-      "uhnsw:sc:", onDriver)
+      .transform(Cached(_)) // multi-consumer cache; lifecycle: Cached scaladoc
     val beam = new BatchBeam(d, base.select(col("vec_id").as("v"), col("e")), qs, onDriver)
-    val seed2 = beam.withD2(qs.select(col("qid"))
-      .crossJoin(broadcast(hnswEntry(ranked, "uhnsw:entry:0"))))
-    val vis = beam.descend(seed2, adjAll, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
+    val vis =
+      if (onDriver) beam.searchIndex(idx, AnnIndex.layered(_, "uhnsw:sc:", "uhnsw:entry:0"))(
+        _.descend(_, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam))
+      else {
+        val (adjAll, ranked) = hnswLayers(d, idx, "uhnsw:sc:")
+        val seed2 = beam.withD2(qs.select(col("qid"))
+          .crossJoin(broadcast(hnswEntry(ranked, "uhnsw:entry:0"))))
+        beam.descend(seed2, adjAll, BhnswStepsU, BhnswBeamU, BhnswSteps0, BnswBeam)
+      }
     // one exchange: hash(qid) serves the (qid, v) dedup (MIN(d2) == the
     // old distinct, d2 a function of (qid, v)) AND the final
     // link/n_visited window (guide §2.4). n_visited rides the SAME window

@@ -4,15 +4,18 @@ import scala.reflect.ClassTag
 import scala.util.Random
 
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, transform}
 
 import graft.operators.LlmExtras
-import graft.operators.LlmExtras.{AnnRun, BatchBeam, QueryBeam}
+import graft.operators.LlmExtras.{AnnIndex, AnnRun, BatchBeam, QueryBeam}
 
 /** The graph-ANN beam search's two lowerings ([[LlmExtras.BeamSearch]])
   * return the same visited rows: the driver-side rounds that run under
   * the ANN gate and the checkpointed relational rounds that run over it.
   * The relational lowering is called directly here, never through the
-  * gate; this spec is the only one that runs it.
+  * gate; this spec is the only one that runs it. Their indexes agree
+  * too: [[AnnIndex]] builds on the driver what the relational
+  * [[LlmExtras.nswAdj]] and [[LlmExtras.hnswLayers]] build.
   *
   * Random inputs the corpus never produces: duplicate vectors (equal d2,
   * so the v tie-break decides), isolated nodes, visited nodes that are not
@@ -118,5 +121,101 @@ class AnnBeamSpec extends SparkSpec {
       spark.catalog.clearCache()
       assert(want.nonEmpty && got == want, s"$key: ${got.size} vs ${want.size} visited rows")
     }
+  }
+
+  /** A random corpus of `n` members with sparse vec_ids (0 among them)
+    * that `keep` admits: 8-d vectors, each one of `distinct` palette
+    * vectors, so most members share a vector with others (d2 ties broken
+    * by vec_id) and most of the 16 sign buckets stay empty. */
+  private def corpus(rnd: Random, n: Int, distinct: Int,
+      keep: Long => Boolean): Seq[(Long, Array[Float])] = {
+    val palette = Seq.fill(distinct)(Array.fill(8)(Seq(-1f, -0.5f, 0f, 0.5f, 1f)(rnd.nextInt(5))))
+    val ids = (0L +: Seq.fill(4 * n)(rnd.nextInt(8 * n).toLong)).distinct.filter(keep).take(n)
+    ids.map(_ -> palette(rnd.nextInt(distinct)))
+  }
+
+  /** (vec_id, embedding) members as the relational builds read them:
+    * (vec_id, e, embedding). */
+  private def withE(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"),
+      col("embedding"))
+  private def members(rows: Seq[(Long, Array[Float])]): DataFrame =
+    withE(frame(rows, "vec_id", "embedding"))
+
+  private def floats(df: DataFrame): Array[(Long, Array[Float])] =
+    df.select("vec_id", "embedding").collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+
+  /** The kernel's graph as (layer, s, t) vec_id rows and its ranks as
+    * (layer, vec_id, rk) rows, each sorted. */
+  private def edges(g: AnnIndex): Seq[Seq[Long]] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    (for ((layer, l) <- g.adj.zipWithIndex.toSeq; (ns, s) <- layer.toSeq.zipWithIndex;
+        t <- ns.toSeq) yield Seq(l.toLong, g.ids(s), g.ids(t))).sorted
+  }
+  private def ranks(g: AnnIndex): Seq[Seq[Long]] = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    (for ((in, l) <- g.ranks.zipWithIndex.toSeq; (i, rk) <- in.toSeq.zipWithIndex)
+      yield Seq(l.toLong, g.ids(i), rk.toLong)).sorted
+  }
+
+  /** Asserts two sorted row lists are equal, naming only their differences. */
+  private def same(got: Seq[Seq[Long]], want: Seq[Seq[Long]], what: String): Unit = {
+    val (extra, missing) = (got.diff(want), want.diff(got))
+    assert(extra.isEmpty && missing.isEmpty, s"$what: ${got.size} vs ${want.size} rows")
+  }
+
+  test("the index kernel builds the relational flat and layered graphs, ranks and entry") {
+    val hnswTop = (id: Long) => Det.hash32Scala(s"hnsw:lvl:$id") % 16 == 0
+    val rnd = new Random(20261020L)
+    // ties and empty buckets; then no member on layer 2, so no entry
+    val a = corpus(rnd, 90, 5, _ => true)
+    val b = corpus(rnd, 70, 12, !hnswTop(_))
+    assert(a.exists(m => hnswTop(m._1)) && !b.exists(m => hnswTop(m._1)))
+    val emb = Tables.embeddings(spark, sfDir)
+    val upsertBase = emb.where(col("vec_id") =!= 0 &&
+      Det.hash32(org.apache.spark.sql.functions.concat(lit("upsert:"),
+        col("vec_id").cast("string"))) % 4 =!= 0)
+    def real(df: DataFrame) = withE(df)
+    // flat: (members, shortcut salt, both rank-map forms, llm_ann_nsw's guard)
+    val flat: Seq[(String, DataFrame, String, Long => Long,
+        org.apache.spark.sql.Column => org.apache.spark.sql.Column, Boolean)] = Seq(
+      ("random nsw", members(a), "nsw:", identity, identity, true),
+      ("random bnsw", members(b), "bnsw:sc:", 2 * _, lit(2) * _, false),
+      ("llm_ann_nsw", real(emb), "nsw:", identity, identity, true),
+      ("llm_ann_batch_nsw", real(emb.where(col("vec_id") % 2 === 0)), "bnsw:sc:", 2 * _,
+        lit(2) * _, false))
+    for ((what, m, salt, rankToId, rankToIdCol, guard) <- flat) {
+      val g = AnnIndex.flat(floats(m), salt, rankToId, _ => 0L, t => !guard || t != 0L)
+      val adj = LlmExtras.nswAdj(sfDir, m)(LlmExtras.nswShortcuts(_, salt, rankToIdCol))
+      val want = rows(adj.where(!lit(guard) || col("t") =!= 0)
+        .select(lit(0L), col("s"), col("t")))
+      spark.catalog.clearCache()
+      assert(want.nonEmpty)
+      same(edges(g), want, s"$what: flat adjacency")
+    }
+    // layered: (members, shortcut salt, entry salt)
+    val layered = Seq(("random hnsw", members(a), "hnsw:sc:", "hnsw:entry:0"),
+      ("random bhnsw, no layer 2", members(b), "bhnsw:sc:", "bhnsw:entry:0"),
+      ("llm_ann_hnsw", real(emb.where(col("vec_id") =!= 0)), "hnsw:sc:", "hnsw:entry:0"),
+      ("llm_ann_batch_hnsw", real(emb.where(col("vec_id") % 2 === 0)), "bhnsw:sc:",
+        "bhnsw:entry:0"),
+      ("llm_ann_hnsw_upsert", real(upsertBase), "uhnsw:sc:", "uhnsw:entry:0"))
+    for ((what, m, scSalt, entrySalt) <- layered) {
+      val g = AnnIndex.layered(floats(m), scSalt, entrySalt)
+      val (adj, ranked) = LlmExtras.hnswLayers(sfDir, m, scSalt)
+      same(edges(g), rows(adj.select(col("layer").cast("long"), col("s"), col("t"))),
+        s"$what: layered adjacency")
+      same(ranks(g), rows(ranked.select(col("layer").cast("long"), col("vec_id"), col("rk"))),
+        s"$what: ranks")
+      same(if (g.entry < 0) Nil else Seq(Seq(g.ids(g.entry))),
+        rows(LlmExtras.hnswEntry(ranked, entrySalt)), s"$what: entry")
+      spark.catalog.clearCache()
+    }
+    // with no entry, the driver search visits nothing
+    val bm = members(b)
+    val q = frame(Seq(7L -> Array(0.5, 0.5)), "qid", "qe")
+    val vis = new BatchBeam(sfDir, bm.select(col("vec_id").as("v"), col("e")), q, onDriver = true)
+      .searchIndex(bm, AnnIndex.layered(_, "bhnsw:sc:", "bhnsw:entry:0"))(_.descend(_, 1, 1, 2, 4))
+    assert(vis.count() == 0)
   }
 }

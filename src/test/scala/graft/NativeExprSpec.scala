@@ -157,10 +157,10 @@ class NativeExprSpec extends SparkSpec {
     }
   }
 
-  test("dot, sl2 and sl2e10 equal their Scala mirrors bit for bit on the edge inputs") {
-    // the driver-side callers (the graph-ANN beam search) compute with the
-    // mirrors what the plans compute with the expressions; a null element
-    // reads as 0, as the Catalyst arrays store it
+  test("dot, sdotl, sl2 and sl2e10 equal their Scala mirrors bit for bit") {
+    // the driver-side callers (the graph-ANN index kernel and beam search)
+    // compute with the mirrors what the plans compute with the
+    // expressions; a null element reads as 0, as the Catalyst arrays store it
     def floats(v: Any) = v.asInstanceOf[scala.collection.Seq[Any]]
       .map { case null => 0f; case f: Float => f }.toArray
     def doubles(v: Any) = v.asInstanceOf[scala.collection.Seq[Any]]
@@ -169,11 +169,12 @@ class NativeExprSpec extends SparkSpec {
       if (a == null || b == null) null else f(of(a), of(b))
     val want = vectors.collect().toSeq.map { r =>
       bits(Row(mirror(VectorExprs.dot(_: Array[Float], _: Array[Float]), floats)(r(0), r(1)),
+        mirror(VectorExprs.sdotl(_: Array[Float], _: Array[Float]), floats)(r(0), r(1)),
         mirror(VectorExprs.sl2(_: Array[Double], _: Array[Double]), doubles)(r(2), r(3)),
         mirror(VectorExprs.sl2e10(_: Array[Double], _: Array[Double]), doubles)(r(2), r(3))))
     }
-    val cols = Seq(VectorExprs.dot(col("fa"), col("fb")), VectorExprs.sl2(col("da"), col("db")),
-      VectorExprs.sl2e10(col("da"), col("db")))
+    val cols = Seq(VectorExprs.dot(col("fa"), col("fb")), VectorExprs.sdotl(col("fa"), col("fb")),
+      VectorExprs.sl2(col("da"), col("db")), VectorExprs.sl2e10(col("da"), col("db")))
     val (gen, interp) = bothModes(vectors, cols)
     assert(gen == Right(want), s"codegen=$gen mirrors=$want")
     assert(interp == Right(want), s"interpreted=$interp mirrors=$want")
